@@ -194,14 +194,16 @@ def build_sidecar(
     rel_dir: str,
     file_entries: list[dict],
     columns: list[str],
+    schema,
 ) -> None:
     """Build bloom sidecars for a commit's freshly written files and stamp
     each entry with ``bloom: {sc, cols, kinds}``. ``rel_dir`` is the
     commit's ``data/<commit-id>`` directory; the sidecar lands in
-    ``_blooms/<commit-id>``. Columns absent from the written schema, or
-    of a non-indexable type (float/bool/timestamp — see the soundness
-    rules above), are skipped: their absence keeps files conservative,
-    never wrong."""
+    ``_blooms/<commit-id>``. ``schema`` is the StructType the files were
+    written with; reading with it costs no schema-inference job. Columns
+    absent from the written schema, or of a non-indexable type
+    (float/bool/timestamp — see the soundness rules above), are skipped:
+    their absence keeps files conservative, never wrong."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import (
         BinaryType,
@@ -215,8 +217,7 @@ def build_sidecar(
     if not file_entries or not columns:
         return
     out_dir = os.path.join(table_dir, rel_dir)
-    df = spark.read.parquet(out_dir)
-    types = {f.name: f.dataType.typeName() for f in df.schema.fields}
+    types = {f.name: f.dataType.typeName() for f in schema.fields}
     kinds = {
         c: _KINDS[types[c]]
         for c in columns
@@ -225,7 +226,7 @@ def build_sidecar(
     if not kinds:
         return
     present = sorted(kinds)
-    schema = StructType(
+    out_schema = StructType(
         [
             StructField("file", StringType()),
             StructField("col", StringType()),
@@ -251,9 +252,11 @@ def build_sidecar(
     commit_id = os.path.basename(rel_dir)
     sc_rel = os.path.join(BLOOM_DIR, commit_id)
     (
-        df.select(F.input_file_name().alias("__f"), *present)
+        spark.read.schema(schema)
+        .parquet(out_dir)
+        .select(F.input_file_name().alias("__f"), *present)
         .groupBy("__f")
-        .applyInPandas(_per_file, schema)
+        .applyInPandas(_per_file, out_schema)
         .write.mode("overwrite")
         .parquet(os.path.join(table_dir, sc_rel))
     )

@@ -110,6 +110,11 @@ def values_df(spark: SparkSession, rows: list, schema_ddl: str) -> DataFrame:
     with NO job and NO Python workers (micro-bench: 696 ms -> 217 ms per
     broadcast-join materialization).
 
+    The rule for small driver-side frames in this package: driver lists
+    go through ``values_df``, empty frames through ``empty_df``, not
+    through ``spark.createDataFrame`` of a Python list
+    (tests/test_local_frames.py scans the source for the empty form).
+
     ``schema_ddl`` uses simple comma-separated ``name type`` pairs (no
     parameterized types). Values may be str/int/float/bool/None; each
     column is cast to its declared type."""
@@ -128,7 +133,7 @@ def values_df(spark: SparkSession, rows: list, schema_ddl: str) -> DataFrame:
             depth -= ch in ")>"
             cur += ch
     if not rows:
-        return spark.createDataFrame([], schema_ddl)
+        return empty_df(spark, schema_ddl)
 
     def lit(v, typ: str) -> str:
         if v is None:
@@ -154,6 +159,32 @@ def values_df(spark: SparkSession, rows: list, schema_ddl: str) -> DataFrame:
     )
     names = ", ".join(f"c{i}" for i in range(len(fields)))
     return spark.sql(f"SELECT {cols} FROM VALUES {vals} AS T({names})")
+
+
+def empty_df(spark: SparkSession, schema: T.StructType | str) -> DataFrame:
+    """Typed empty DataFrame: an empty JVM LocalRelation with exactly
+    ``schema`` (names, types and nullability; a DDL string is parsed
+    first).
+
+    The rule for small driver-side frames in this package: empty frames
+    go through ``empty_df``, driver lists through ``values_df``.
+    ``spark.createDataFrame`` of an empty list is a Python RDD over the
+    default parallelism, so every job that touches it (a ``count()``, a
+    union branch, a broadcast build) sends tasks through
+    ``pyspark.daemon`` workers although there is no row to ship:
+    ~0.3-0.4 s per ``count()`` on a 4-core box, against ~0.05-0.1 s here.
+    An empty LocalRelation needs no Python worker, and the optimizer sees
+    that it is empty, so unions and joins with it are pruned at planning
+    time."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    js = spark._jsparkSession
+    return DataFrame(
+        js.createDataFrame(
+            spark._jvm.java.util.ArrayList(), js.parseDataType(schema.json())
+        ),
+        spark,
+    )
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

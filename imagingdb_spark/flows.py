@@ -26,6 +26,7 @@ from imagingdb_spark.api import (
     select_frames_subset,
     validate_serial,
 )
+from imagingdb_spark.catalog import values_df
 from imagingdb_spark.ingest import (
     frame_file_name,
     idempotent_append,
@@ -174,10 +175,8 @@ def insert_frames(
     }
     for r in new_ds.select("dataset_serial", "id").collect():
         ds_ids[r["dataset_serial"]] = r["id"]
-    ds_map = spark.createDataFrame(
-        list(ds_ids.items()), "dataset_serial string, dataset_id long"
-    ) if ds_ids else spark.createDataFrame(
-        [], "dataset_serial string, dataset_id long"
+    ds_map = values_df(
+        spark, list(ds_ids.items()), "dataset_serial string, dataset_id long"
     )
 
     # A4: per-dataset global metadata from the actual frame rows
@@ -229,7 +228,8 @@ def insert_frames(
     }
     for r in new_fg.select("dataset_id", "id").collect():
         fg_ids[r["dataset_id"]] = r["id"]
-    serial_to_fg = datasets.sparkSession.createDataFrame(
+    serial_to_fg = values_df(
+        spark,
         [(s, fg_ids[d]) for s, d in ds_ids.items() if d in fg_ids],
         "dataset_serial string, frames_global_id long",
     )
@@ -300,7 +300,7 @@ def insert_frames_atomic(
     three deltas anti-join empty and no new version publishes."""
     from imagingdb_spark import snapcatalog as C
     from imagingdb_spark.api import serial_to_date_time
-    from imagingdb_spark.catalog import IMAGING_SCHEMAS
+    from imagingdb_spark.catalog import IMAGING_SCHEMAS, empty_df
 
     _guard_legacy_catalog(catalog_dir)
     spark = datasets.sparkSession
@@ -327,7 +327,7 @@ def insert_frames_atomic(
             return (
                 v
                 if v is not None
-                else spark.createDataFrame([], IMAGING_SCHEMAS[name])
+                else empty_df(spark, IMAGING_SCHEMAS[name])
             )
 
         ds_view, fg_view, fr_view = (
@@ -365,8 +365,8 @@ def insert_frames_atomic(
         }
         for r in new_ds.select("dataset_serial", "id").collect():
             ds_ids[r["dataset_serial"]] = r["id"]
-        ds_map = spark.createDataFrame(
-            list(ds_ids.items()) or [],
+        ds_map = values_df(
+            spark, list(ds_ids.items()),
             "dataset_serial string, dataset_id long",
         )
         mxf = fg_view.agg(F.coalesce(F.max("id"), F.lit(0))).collect()[0][0]
@@ -399,7 +399,8 @@ def insert_frames_atomic(
         }
         for r in new_fg.select("dataset_id", "id").collect():
             fg_ids[r["dataset_id"]] = r["id"]
-        serial_to_fg = spark.createDataFrame(
+        serial_to_fg = values_df(
+            spark,
             [(s, fg_ids[d]) for s, d in ds_ids.items() if d in fg_ids],
             "dataset_serial string, frames_global_id long",
         )
@@ -450,7 +451,7 @@ def insert_file_atomic(
     twin of insert_frames_atomic."""
     from imagingdb_spark import snapcatalog as C
     from imagingdb_spark.api import serial_to_date_time
-    from imagingdb_spark.catalog import IMAGING_SCHEMAS
+    from imagingdb_spark.catalog import IMAGING_SCHEMAS, empty_df
 
     _guard_legacy_catalog(catalog_dir)
     spark = new_files.sparkSession
@@ -465,7 +466,7 @@ def insert_file_atomic(
             return (
                 v
                 if v is not None
-                else spark.createDataFrame([], IMAGING_SCHEMAS[name])
+                else empty_df(spark, IMAGING_SCHEMAS[name])
             )
 
         ds_view, fgl_view = view("data_set"), view("file_global")
@@ -502,8 +503,8 @@ def insert_file_atomic(
         }
         for r in new_ds.select("dataset_serial", "id").collect():
             ds_ids[r["dataset_serial"]] = r["id"]
-        ds_map = spark.createDataFrame(
-            list(ds_ids.items()) or [],
+        ds_map = values_df(
+            spark, list(ds_ids.items()),
             "dataset_serial string, dataset_id long",
         )
         mxf = fgl_view.agg(F.coalesce(F.max("id"), F.lit(0))).collect()[0][0]

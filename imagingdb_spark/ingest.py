@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from imagingdb_spark.api import serial_to_date_time, validate_serial
+from imagingdb_spark.catalog import values_df
 
 
 def read_manifest(spark: SparkSession, path: str) -> DataFrame:
@@ -209,8 +210,8 @@ def insert_file(
     }
     for r in appended_ds.select("dataset_serial", "id").collect():
         ds_ids[r["dataset_serial"]] = r["id"]
-    ds_map = spark.createDataFrame(
-        list(ds_ids.items()), "dataset_serial string, dataset_id long"
+    ds_map = values_df(
+        spark, list(ds_ids.items()), "dataset_serial string, dataset_id long"
     )
 
     def _fg_build(existing: DataFrame) -> DataFrame:

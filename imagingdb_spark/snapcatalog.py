@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 from imagingdb_spark import snapshots as S
+from imagingdb_spark.catalog import empty_df
 from imagingdb_spark.snapshots import SnapshotConflict
 
 COMMITS_DIR = "_commits"
@@ -175,7 +176,7 @@ def read_table_at(
     m = commit["tables"].get(name)
     if m is None:
         if schema is not None:
-            return spark.createDataFrame([], schema)
+            return empty_df(spark, schema)
         raise FileNotFoundError(
             f"catalog {catalog_dir} v{commit.get('version')} has no table "
             f"{name!r}"
@@ -223,7 +224,7 @@ def catalog_views(
         out[name] = (
             _manifest_df(spark, catalog_dir, name, m)
             if m is not None
-            else spark.createDataFrame([], schema)
+            else empty_df(spark, schema)
         )
     return out
 
@@ -323,7 +324,11 @@ def catalog_commit(
                 shutil.rmtree(
                     os.path.join(tdir, rel_dir), ignore_errors=True
                 )
-                deltas[name] = spark.createDataFrame([], schema)
+                # typed as the tip stores it (every field nullable), the
+                # schema a non-empty delta reads back from its files
+                deltas[name] = empty_df(
+                    spark, StructType.fromJson(json.loads(schema_json))
+                )
                 if bm is None:
                     # first appearance with an empty delta: record the
                     # typed empty manifest so readers get the schema
@@ -337,6 +342,7 @@ def catalog_commit(
                 boverride
                 if boverride is not None
                 else (bm.get("blooms") if bm else None),
+                deduped.schema,
             )
             cr: list[str] = []
             base_groups, legacy_delta = S._base_delta(bm)
@@ -422,7 +428,7 @@ def migrate_catalog(
             elif SN.snapshot_exists(snap):
                 out[name] = SN.snapshot_read(spark, snap)
             else:
-                out[name] = spark.createDataFrame([], schema)
+                out[name] = empty_df(spark, schema)
         return out
 
     v, _ = catalog_commit(spark, dest_dir, build, keys)

@@ -80,6 +80,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from imagingdb_spark.catalog import empty_df
+
 MANIFEST_DIR = "_manifests"
 GROUPS_DIR = "groups"  # manifest-group files, under MANIFEST_DIR
 DATA_DIR = "data"
@@ -784,11 +786,16 @@ def _build_blooms(
     rel_dir: str,
     new_files: list[dict],
     cols: list[str] | None,
+    schema: StructType,
 ) -> None:
+    """Bloom sidecars for one commit's new files; ``schema`` is the
+    schema the files were written with (no inference job on read)."""
     if cols:
         from imagingdb_spark import blooms
 
-        blooms.build_sidecar(spark, table_dir, rel_dir, new_files, cols)
+        blooms.build_sidecar(
+            spark, table_dir, rel_dir, new_files, cols, schema
+        )
 
 
 # ---------------------------------------------------------------------------
@@ -977,7 +984,7 @@ def _read_entries(
     falls back to a shuffled anti-join instead of a driver-size-bounded
     broadcast."""
     if not entries:
-        return spark.createDataFrame([], schema)
+        return empty_df(spark, schema)
     plain = [
         fe for fe in entries if not fe.get("dv") and not fe.get("eq")
     ]
@@ -1143,7 +1150,9 @@ def snapshot_commit(
     # and leave nothing behind
     schema_json = _canon_schema_json(df.schema)
     new_files, new_rows, rel_dir = _write_data_files(df, table_dir)
-    _build_blooms(spark, table_dir, rel_dir, new_files, eff_blooms)
+    _build_blooms(
+        spark, table_dir, rel_dir, new_files, eff_blooms, df.schema
+    )
     created: list[str] = []  # group files this attempt wrote
     for _ in range(max_retries):
         vs = _versions(table_dir)
@@ -1336,6 +1345,7 @@ def snapshot_idempotent_append_delta(
         _build_blooms(
             spark, table_dir, rel_dir, files,
             base.get("blooms") if base else None,
+            deduped.schema,
         )
         if rows == 0 and base is not None:
             # whole batch already present: converged, nothing to publish
@@ -1343,7 +1353,7 @@ def snapshot_idempotent_append_delta(
             # as vacuum debris)
             shutil.rmtree(os.path.join(table_dir, rel_dir), ignore_errors=True)
             _drop_sidecar(table_dir, rel_dir)
-            return parent, spark.createDataFrame([], schema)
+            return parent, empty_df(spark, schema)
         base_groups, legacy_delta = _base_delta(base)
         groups = _child_groups(
             table_dir, base_groups, legacy_delta + files, created
@@ -1362,7 +1372,7 @@ def snapshot_idempotent_append_delta(
                     *[os.path.join(table_dir, f["path"]) for f in files]
                 )
                 if files
-                else spark.createDataFrame([], schema)
+                else empty_df(spark, schema)
             )
             return parent + 1, delta
         except SnapshotConflict:
@@ -1755,7 +1765,10 @@ def snapshot_rmw(
         # validate (reserved __dv_* names fail here) before bytes land
         out_schema_json = _canon_schema_json(out.schema)
         new_files, new_rows, rel_dir = _write_data_files(out, table_dir)
-        _build_blooms(spark, table_dir, rel_dir, new_files, m.get("blooms"))
+        _build_blooms(
+            spark, table_dir, rel_dir, new_files, m.get("blooms"),
+            out.schema,
+        )
         groups = _child_groups(table_dir, [], new_files, created)
         manifest = _next_manifest(
             m, mode, groups, new_rows, out_schema_json, txn
@@ -1955,7 +1968,10 @@ def snapshot_apply_keyed(
             )
             if n != 0
         ]
-        _build_blooms(spark, table_dir, rel_dir, nonempty, m.get("blooms"))
+        _build_blooms(
+            spark, table_dir, rel_dir, nonempty, m.get("blooms"),
+            out.schema,
+        )
         groups = _child_groups(table_dir, ref_groups, keep + nonempty, created)
         manifest = _next_manifest(
             m, mode, groups, m["rows"] - cand_live + new_rows,
@@ -2270,9 +2286,8 @@ def snapshot_upsert_eq(
             cnt = {r["__dv_path"]: (r["live"], r["matched"]) for r in rows_cnt}
         rows_matched = sum(v[1] for v in cnt.values())
         # batch lands as fresh files (column order realigned)
-        new_files, new_rows, rel_dir = _write_data_files(
-            source.select(*schema.fieldNames()), table_dir
-        )
+        batch = source.select(*schema.fieldNames())
+        new_files, new_rows, rel_dir = _write_data_files(batch, table_dir)
         nonempty = [
             fe
             for fe, (_s, n) in zip(
@@ -2291,7 +2306,10 @@ def snapshot_upsert_eq(
             plan.update(audit)
             plan.update(rows_replaced=0, files_eq=0, files_dropped=0)
             return tip
-        _build_blooms(spark, table_dir, rel_dir, nonempty, m.get("blooms"))
+        _build_blooms(
+            spark, table_dir, rel_dir, nonempty, m.get("blooms"),
+            batch.schema,
+        )
         eq_rel = None
         new_cand: list[dict] = []
         files_eq = 0
@@ -2424,7 +2442,9 @@ def snapshot_compact(
             f"compaction rewrite of {table_dir} changed rows "
             f"({m['rows']} -> {new_rows}); nothing was published"
         )
-    _build_blooms(spark, table_dir, rel_dir, new_files, m.get("blooms"))
+    _build_blooms(
+        spark, table_dir, rel_dir, new_files, m.get("blooms"), df.schema
+    )
     created: list[str] = []
     groups = _child_groups(table_dir, [], new_files, created)
     manifest = _next_manifest(
@@ -3109,7 +3129,10 @@ def _delete_rewrite(
         )
         if n != 0
     ]
-    _build_blooms(spark, table_dir, rel_dir, nonempty, m.get("blooms"))
+    _build_blooms(
+        spark, table_dir, rel_dir, nonempty, m.get("blooms"),
+        survivors_df.schema,
+    )
     groups = _child_groups(table_dir, ref_groups, keep + nonempty, created)
     manifest = _next_manifest(
         m, "delete", groups, m["rows"] - rows_deleted, m["schema"], txn
@@ -3255,9 +3278,8 @@ def _update_rewrite(
             )
         else:
             cols.append(F.col(f.name))
-    new_files, new_rows, rel_dir = _write_data_files(
-        src.select(*cols), table_dir
-    )
+    updated = src.select(*cols)
+    new_files, new_rows, rel_dir = _write_data_files(updated, table_dir)
     if new_rows != cand_rows:
         # row-count-preserving invariant: publish nothing, surface loudly
         shutil.rmtree(os.path.join(table_dir, rel_dir), ignore_errors=True)
@@ -3275,7 +3297,10 @@ def _update_rewrite(
         )
         if n != 0
     ]
-    _build_blooms(spark, table_dir, rel_dir, nonempty, m.get("blooms"))
+    _build_blooms(
+        spark, table_dir, rel_dir, nonempty, m.get("blooms"),
+        updated.schema,
+    )
     groups = _child_groups(table_dir, ref_groups, keep + nonempty, created)
     manifest = _next_manifest(
         m, "update", groups, m["rows"], m["schema"], txn
@@ -3417,7 +3442,7 @@ def _dv_delta_rows(
             rw_pos = rw_pos.exceptAll(_dv_union(spark, table_dir, old_pairs))
         new_pos = rw_pos if new_pos is None else new_pos.unionByName(rw_pos)
     if new_pos is None:  # every changed ref kept its chain (n-only drift)
-        return spark.createDataFrame([], schema)
+        return empty_df(spark, schema)
     pos = new_pos.select(
         F.col("path").alias("__dv_path"), F.col("pos").alias("__dv_pos")
     )
@@ -3579,7 +3604,7 @@ def snapshot_changes(
             files_added=len(entries),
         )
     if not entries:
-        return spark.createDataFrame([], schema)
+        return empty_df(spark, schema)
     return spark.read.schema(schema).parquet(
         *[os.path.join(table_dir, fe["path"]) for fe in entries]
     )
@@ -3773,8 +3798,8 @@ def _commit_row_changes(
 def _cdf_empty(spark: SparkSession, end_schema: StructType) -> DataFrame:
     from pyspark.sql.types import IntegerType, StringType, StructField
 
-    return spark.createDataFrame(
-        [],
+    return empty_df(
+        spark,
         StructType(
             list(end_schema.fields)
             + [

@@ -24,6 +24,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
+from imagingdb_spark.catalog import empty_df
+
+
 def read_events_stream(
     spark: SparkSession, sf_dir: str, schema: T.StructType | None = None
 ) -> DataFrame:
@@ -1448,7 +1451,7 @@ def streaming_dedup_gate(
                         where=[("doc_id", "in", cdocs)],
                     )
                     if cdocs
-                    else spark.createDataFrame([], batch_tok.schema)
+                    else empty_df(spark, batch_tok.schema)
                 )
             else:
                 corpus_tok = spark.read.parquet(idx_tokset_path)
@@ -2427,9 +2430,9 @@ def _cdc_empty_state(
     spark: SparkSession, batch_df: DataFrame, key: str, attrs: list[str]
 ) -> DataFrame:
     """Typed empty CDC state: (key, attrs..., last_seq=0)."""
-    return spark.createDataFrame(
-        [], batch_df.select(key, *attrs).schema
-    ).withColumn("last_seq", F.lit(0).cast("bigint"))
+    return empty_df(spark, batch_df.select(key, *attrs).schema).withColumn(
+        "last_seq", F.lit(0).cast("bigint")
+    )
 
 
 def _cdc_next_state(

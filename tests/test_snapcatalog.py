@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import threading
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -558,6 +559,127 @@ class TestAtomicUpload:
         views = C.catalog_views(spark, cat_dir, IMAGING_SCHEMAS)
         assert views["frames"].count() == 0
         assert views["file_global"].count() == 1
+
+
+class TestInsertFramesAtomic:
+    """flows.insert_frames_atomic called directly (no blob store, no
+    splitter): two datasets in one upload, a replay of it, then a third
+    dataset whose parent is the first. Pins the surrogate ids, the
+    data_set.id -> frames_global.dataset_id -> frames.frames_global_id
+    chain, the replay's empty publish and the delta schemas."""
+
+    DS_DDL = (
+        "dataset_serial string, description string, microscope string, "
+        "parent_dataset_id string, storage_dir string, bit_depth string, "
+        "im_width int, im_height int, im_colors int, metadata_json string"
+    )
+    FR_DDL = (
+        "dataset_serial string, channel_idx int, slice_idx int, "
+        "time_idx int, pos_idx int, channel_name string, file_name string, "
+        "sha256 string, metadata_json string"
+    )
+    SERIALS = (
+        "TEST-2005-06-09-20-00-00-0001",
+        "TEST-2005-06-10-20-00-00-0001",
+        "TEST-2005-06-11-20-00-00-0001",
+    )
+
+    @classmethod
+    def _inputs(cls, spark, serials, parent="none"):
+        ds, fr = [], []
+        for s in serials:
+            ds.append((s, f"upload {s}", "scope1", parent, f"raw/{s}",
+                       "uint16", 8, 8, 1, "{}"))
+            for c in range(2):
+                for z in (5, 6, 7):
+                    name = f"im_c{c:03d}_z{z:03d}_t000_p000.png"
+                    fr.append((s, c, z, 0, 0, f"ch{c}", name,
+                               f"{s}/{name}", "{}"))
+
+        def frame(rows, ddl):
+            # Arrow-backed: a Python-list frame would be re-read by
+            # Python workers in every job of the commit
+            names = [c.split()[0] for c in ddl.split(",")]
+            pdf = pd.DataFrame(rows, columns=names)
+            return spark.createDataFrame(pdf, ddl)
+
+        return frame(ds, cls.DS_DDL), frame(fr, cls.FR_DDL)
+
+    @pytest.fixture(scope="class")
+    def run(self, spark, tmp_path_factory):
+        cat = str(tmp_path_factory.mktemp("atomic") / "cat")
+        blooms = {"frames": ["sha256"]}
+        steps = []
+        for serials, parent in (
+            (self.SERIALS[:2], "none"),
+            (self.SERIALS[:2], "none"),  # replay
+            (self.SERIALS[2:], self.SERIALS[0]),
+        ):
+            deltas = flows.insert_frames_atomic(
+                *self._inputs(spark, serials, parent), cat,
+                bloom_columns=blooms,
+            )
+            steps.append((deltas, C.catalog_versions(cat)))
+        return cat, steps
+
+    def test_ids_chain_and_versions(self, spark, run):
+        cat, steps = run
+        assert [v for _, v in steps] == [[1], [1], [1, 2]]
+        a, b, c = self.SERIALS
+        ds = sorted(
+            (r["id"], r["dataset_serial"], r["parent_id"])
+            for r in C.catalog_read(spark, cat, "data_set").collect()
+        )
+        assert ds == [(1, a, None), (2, b, None), (3, c, 1)]
+        fg = sorted(
+            (r["id"], r["dataset_id"], r["nbr_frames"], r["nbr_slices"],
+             r["nbr_channels"])
+            for r in C.catalog_read(spark, cat, "frames_global").collect()
+        )
+        assert fg == [(1, 1, 6, 3, 2), (2, 2, 6, 3, 2), (3, 3, 6, 3, 2)]
+        fr = sorted(
+            (r["id"], r["frames_global_id"], r["sha256"])
+            for r in C.catalog_read(spark, cat, "frames").collect()
+        )
+        names = sorted(
+            f"im_c{ch:03d}_z{z:03d}_t000_p000.png"
+            for ch in range(2) for z in (5, 6, 7)
+        )
+        # ids follow (dataset_serial, file_name) order within a commit
+        assert fr == [
+            (i * 6 + j + 1, i + 1, f"{s}/{n}")
+            for i, s in enumerate(self.SERIALS)
+            for j, n in enumerate(names)
+        ]
+
+    def test_deltas(self, spark, run):
+        cat, steps = run
+        counts = [
+            tuple(d.count() for d in deltas) for deltas, _ in steps
+        ]
+        assert counts == [(2, 2, 12), (0, 0, 0), (1, 1, 6)]
+        tip = {
+            n: C.catalog_read(spark, cat, n).schema
+            for n in ("data_set", "frames_global", "frames")
+        }
+        for deltas, _ in steps:
+            for name, d in zip(("data_set", "frames_global", "frames"),
+                               deltas):
+                assert d.schema == tip[name], name
+
+    def test_all_pruned_point_read(self, spark, run):
+        cat, _ = run
+        # inside every file's [min, max]: only the blooms can drop it
+        absent = [("sha256", "=", f"{self.SERIALS[0]}/im_c000_z005_x")]
+        m = C.catalog_manifest(cat)["tables"]["frames"]
+        plan: dict = {}
+        assert not S._resolve_pruned(
+            C._table_dir(cat, "frames"), m, absent, plan
+        )
+        assert plan["files_bloom_dropped"] >= 1
+        got = C.catalog_read(spark, cat, "frames", where=absent)
+        assert got.count() == 0
+        assert got.schema == C.catalog_read(spark, cat, "frames").schema
 
 
 class TestCatalogBloomIndex:
