@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from imagingdb_spark.catalog import eager_checkpoint, table
-from imagingdb_spark.operators.text import tokens_col
+from imagingdb_spark.operators.text import py_tokens, tokens_col
 from imagingdb_spark.registry import query
 
 # 16 hashes in 8 bands x 2 rows: the LSH S-curve midpoint is
@@ -196,10 +196,7 @@ def shingle_frame(
 
     def gen(batches):
         for pdf in batches:
-            toks = [
-                t.lower().split() if isinstance(t, str) else []
-                for t in pdf["text"]
-            ]
+            toks = [py_tokens(t) for t in pdf["text"]]
             out = pdf[["doc_id", *extra]].copy()
             sh = _shingle_batch(toks, k)
             out["shingles"] = sh

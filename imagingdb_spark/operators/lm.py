@@ -26,7 +26,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from imagingdb_spark.catalog import eager_checkpoint, table, values_df
-from imagingdb_spark.operators.text import tokens_col
+from imagingdb_spark.operators.text import py_tokens, tokens_col
 from imagingdb_spark.registry import query
 
 
@@ -44,12 +44,11 @@ def doc_tok_counts_arrow(d: DataFrame, cols: list[str]) -> DataFrame:
     exchange, and the vocabulary aggregate still map-side-combines as
     before. Two corpus-scale exchanges become one doc-count-sized one.
 
-    Tokenization parity: ``t.lower().split()`` — the exact rule the
-    oracle-green dedup family's Arrow pass uses (str.split() drops
-    empties like array_remove(split(lower, '\\s+'), '') does; parity
-    with the DuckDB oracles is pinned by the value hashes of every
-    consumer at sf0.001/0.01/0.1). Counter iteration order is first
-    occurrence — deterministic.
+    Tokenization parity: ``text.py_tokens``, the Python form of
+    ``tokens_col`` (ASCII-whitespace split, empties dropped), which the
+    dedup family's Arrow pass uses too; tests/test_tokenizer_parity.py
+    pins the two equal. Counter iteration order is first occurrence —
+    deterministic.
 
     Same parallelism guard as dedup.shingle_frame: a small parquet's
     2-split scan would serialize the Python pass, so under-split local
@@ -73,10 +72,7 @@ def doc_tok_counts_arrow(d: DataFrame, cols: list[str]) -> DataFrame:
         from collections import Counter
 
         for pdf in batches:
-            counters = [
-                Counter(t.lower().split()) if isinstance(t, str) else Counter()
-                for t in pdf["text"]
-            ]
+            counters = [Counter(py_tokens(t)) for t in pdf["text"]]
             lens = np.fromiter(
                 (len(c) for c in counters), dtype=np.int64, count=len(counters)
             )
@@ -933,7 +929,7 @@ def bpe_encode_frame(
         for pdf in batches:
             n_words, n_sub = [], []
             for text in pdf["text"]:
-                words = text.lower().split() if isinstance(text, str) else []
+                words = py_tokens(text)
                 total = 0
                 for w in words:
                     hit = memo.get(w)

@@ -10,6 +10,8 @@ shared by every query here (and mirrored exactly in the oracles):
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -30,6 +32,21 @@ def tokens_col(text: Column) -> Column:
     strings at the array boundaries (leading/trailing whitespace or an
     empty input), and array_remove drops every "" wherever it sits."""
     return F.array_remove(F.split(F.lower(text), r"\s+"), "")
+
+
+# Java's regex ``\s``: ASCII whitespace only.
+_ASCII_WS = re.compile(r"[ \t\n\x0b\f\r]+")
+
+
+def py_tokens(text: str | None) -> list[str]:
+    r"""``tokens_col`` for Python-side (Arrow) passes: lowercase, split on
+    ASCII whitespace, no empties, [] for NULL. ``str.split()`` is not the
+    same rule: it also splits on Unicode whitespace (NBSP, U+2028,
+    U+3000, U+0085, ...), which ``\s`` does not match
+    (tests/test_tokenizer_parity.py pins the two sides equal)."""
+    if not isinstance(text, str):
+        return []
+    return [t for t in _ASCII_WS.split(text.lower()) if t]
 
 
 @query(

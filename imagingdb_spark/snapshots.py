@@ -848,8 +848,9 @@ def _dv_union(
     DataFrameReader.parquet call is a py4j round trip + JVM file-index
     build (~40-80 ms measured), pure driver time. Keys carry the exact
     (pair-set) identity, so two legs share a frame ONLY when their
-    resolved refs are identical — never across differing dv chains."""
-    key = ("dv", tuple(sorted(pairs)))
+    resolved refs are identical — never across differing dv chains. The
+    key carries ``table_dir`` too: relative paths repeat across tables."""
+    key = ("dv", table_dir, tuple(sorted(pairs)))
     if scan_cache is not None and key in scan_cache:
         return scan_cache[key]
     from pyspark.sql import functions as F
@@ -880,7 +881,7 @@ def _eq_union(
     candidate entry of its commit). Expanded size = Σ_entry ref.n by
     construction — what the broadcast ceiling is checked against.
     ``scan_cache``: same exact-pair-set memo as ``_dv_union``."""
-    key = ("eq", tuple(sorted(pairs)))
+    key = ("eq", table_dir, tuple(sorted(pairs)))
     if scan_cache is not None and key in scan_cache:
         return scan_cache[key]
     from pyspark.sql import functions as F
@@ -992,10 +993,12 @@ def _read_entries(
 
     def _scan(fes: list[dict]) -> DataFrame:
         # memoized per caller-supplied cache (r12): two legs of one
-        # multi-read query resolving the SAME file list (same schema —
-        # the key carries both) share one reader/file-index build
+        # multi-read query resolving the SAME files of the SAME table
+        # (same schema — the key carries all three) share one
+        # reader/file-index build
         key = (
             "scan",
+            table_dir,
             schema.json(),
             tuple(sorted(fe["path"] for fe in fes)),
         )
@@ -1530,11 +1533,12 @@ def snapshot_read(
     files a selective predicate touches.
 
     ``scan_cache`` (r12): optional per-CALLER dict memoizing reader
-    construction (file scans by exact path list + schema, dv/eq sidecar
-    unions by exact ref set). A query that issues several reads of one
-    table (x_snapshot_scan's seven legs) passes one dict so identical
-    resolutions share one py4j reader build; semantics are unchanged —
-    the memo key is the full identity of what would be constructed."""
+    construction (file scans by table dir + exact path list + schema,
+    dv/eq sidecar unions by table dir + exact ref set). A query that
+    issues several reads of one table (x_snapshot_scan's seven legs)
+    passes one dict so identical resolutions share one py4j reader
+    build; semantics are unchanged — the memo key is the full identity
+    of what would be constructed."""
     # group files resolve INSIDE the expire-race retry: a concurrent
     # expire+vacuum between the manifest read and the group read must
     # re-resolve (latest mode) exactly like a vanished manifest does

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
-from imagingdb_spark.catalog import empty_df
+from imagingdb_spark.catalog import empty_df, parquet_schema
 
 
 def read_events_stream(
@@ -47,7 +47,7 @@ def read_events_stream(
     batch_schema = (
         schema
         if schema is not None
-        else spark.read.parquet(f"{sf_dir}/events.parquet").schema
+        else parquet_schema(spark, f"{sf_dir}/events.parquet")
     )
     # the file stream source requires a directory; glob-filter to the events
     # table (sf_dir holds the other tables' parquet too)

@@ -100,24 +100,41 @@ import re as _re
 
 def _slow_bases() -> set[str]:
     out = set()
-    try:
-        with open(Path(__file__).parent / "slow_tests.txt") as f:
-            for line in f:
-                line = line.strip()
-                if line and not line.startswith("#"):
-                    out.add(line)
-    except OSError:
-        pass
+    with open(Path(__file__).parent / "slow_tests.txt") as f:
+        for line in f:
+            line = line.strip()
+            if line and not line.startswith("#"):
+                out.add(line)
     return out
 
 
 def pytest_collection_modifyitems(config, items):
     slow = _slow_bases()
-    if not slow:
-        return
+    root = Path(__file__).resolve().parent.parent
+    matched = set()
+    collected_files = set()
     for item in items:
+        # the manifest's ids are repo-root-relative; item.nodeid is
+        # rootdir-relative, so rebuild the id from the file path
+        rel = item.path.resolve().relative_to(root).as_posix()
+        nid = rel + "::" + item.nodeid.split("::", 1)[1]
+        collected_files.add(rel)
         # exact node id first (single slow params of an otherwise-fast
         # parametrized test), then the param-stripped base (every param
         # of a slow test inherits the mark)
-        if item.nodeid in slow or _re.sub(r"\[.*\]$", "", item.nodeid) in slow:
-            item.add_marker(pytest.mark.slow)
+        for key in (nid, _re.sub(r"\[.*\]$", "", nid)):
+            if key in slow:
+                item.add_marker(pytest.mark.slow)
+                matched.add(key)
+                break
+    if any("::" in a for a in config.args):
+        return  # node-id selection: a listed file is only partly collected
+    listed_files = {e.split("::", 1)[0] for e in slow}
+    matched_files = {e.split("::", 1)[0] for e in matched}
+    unmatched = sorted((collected_files & listed_files) - matched_files)
+    if unmatched:
+        raise pytest.UsageError(
+            "tests/slow_tests.txt lists tests in "
+            + ", ".join(unmatched)
+            + " but none of them matched a collected test"
+        )

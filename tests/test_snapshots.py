@@ -3857,3 +3857,57 @@ class TestPropagatePerColumnNetEffect:
         assert out["targets"].get(emb) is None or (
             out["targets"][emb]["rows_deleted"] == 0
         )
+
+
+class TestScanCacheKeysCarryTableDir:
+    """Two tables with identical schemas and identical relative file
+    names (one is a byte copy of the other, then rewritten) share one
+    ``scan_cache`` dict: each read must still return its own rows, for the
+    plain scan, the dv sidecar union and the eq sidecar union."""
+
+    def test_shared_cache_keeps_tables_apart(self, spark, tmp_path):
+        import glob
+        import shutil
+
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+        from pyspark.sql import functions as F
+
+        a, b = str(tmp_path / "a"), str(tmp_path / "b")
+        S.snapshot_commit(
+            spark, a,
+            spark.range(10)
+            .select(F.col("id").alias("k"), (F.col("id") * 10).alias("v"))
+            .coalesce(1),
+        )
+        S.snapshot_delete(spark, a, [("k", "=", 3)], mode="dv")
+        S.snapshot_upsert_eq(
+            spark, a, spark.createDataFrame([(5, 555)], "k long, v long"), "k"
+        )
+        # no .crc files: the rewritten parquet would fail their checksums
+        shutil.copytree(a, b, ignore=shutil.ignore_patterns("*.crc"))
+        # b: every key +100, and its dv sidecar deletes row 4, not row 3
+        for f in glob.glob(f"{b}/**/*.parquet", recursive=True):
+            t = pq.read_table(f)
+            for col, delta in (("k", 100), ("key", 100), ("pos", 1)):
+                if col in t.column_names:
+                    i = t.column_names.index(col)
+                    t = t.set_column(i, col, pc.add(t[col], delta))
+            pq.write_table(t, f)
+
+        def rows(table_dir, cache=None):
+            return sorted(
+                tuple(r) for r in S.snapshot_read(
+                    spark, table_dir, scan_cache=cache
+                ).collect()
+            )
+
+        want_a, want_b = rows(a), rows(b)
+        assert want_a != want_b
+        assert (103, 30) in want_b and (104, 40) not in want_b
+        assert (105, 555) in want_b
+        cache: dict = {}
+        assert rows(a, cache) == want_a
+        assert rows(b, cache) == want_b
+        assert {k[0] for k in cache} == {"scan", "dv", "eq"}
+        assert {k[1] for k in cache} == {a, b}
