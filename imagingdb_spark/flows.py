@@ -277,6 +277,121 @@ def _guard_legacy_catalog(catalog_dir: str) -> None:
             )
 
 
+def _tip_view(spark: SparkSession, views, name: str) -> DataFrame:
+    """A builder's view of table ``name``; a typed empty frame when the
+    catalog tip has no such table yet."""
+    from imagingdb_spark.catalog import IMAGING_SCHEMAS, empty_df
+
+    v = views.get(name)
+    return v if v is not None else empty_df(spark, IMAGING_SCHEMAS[name])
+
+
+def _high_water(views, name: str) -> int:
+    """The id table ``name`` allocates above: the largest id any file of
+    the tip manifest the builder's views were resolved from has ever
+    held, from its group refs' ``id`` bounds (0 for an absent table).
+    A ``max(id)`` aggregate over the view stands in when a ref carries
+    no ``id`` bound (stats are best-effort; legacy flat manifests have
+    no refs)."""
+    from imagingdb_spark import snapshots as S
+
+    hw = S.manifest_upper_bound(views.manifests.get(name), "id")
+    if hw is None:
+        hw = views[name].agg(F.coalesce(F.max("id"), F.lit(0))).collect()[0][0]
+    return hw
+
+
+def _allocate_upload(
+    views,
+    batch: DataFrame,
+    child: str,
+    child_cols: list[str],
+    frames: bool,
+    requires: str | None = None,
+) -> tuple[DataFrame, DataFrame, dict[str, int]]:
+    """The id half of an atomic upload builder: ONE Spark collect, then
+    the driver.
+
+    ``batch`` holds one or more rows per dataset_serial: description,
+    microscope, parent_dataset_id and the ``child`` table's columns
+    (``child_cols`` minus ``id``/``dataset_id``, in table order). The
+    collect returns each batch row with its serial's existing data_set
+    id, its existing ``child`` id and its resolved parent_id; the driver
+    keeps one row per serial. New data_set and ``child`` ids go out in
+    dataset_serial order above each table's high-water mark
+    (``_high_water``), exactly one per serial; a serial whose
+    ``requires`` column is null gets no ``child`` row. ``views`` is the
+    ``snapcatalog.CatalogViews`` the commit handed the builder.
+
+    Returns (data_set delta, child delta, {serial: child id} for every
+    serial that has a child row, new or existing). The deltas are
+    LocalRelations of the rows the driver holds, typed from the lookup
+    plan's schema, so writing them re-runs no lookup."""
+    from imagingdb_spark.api import serial_to_date_time
+
+    spark = batch.sparkSession
+    ds_view = _tip_view(spark, views, "data_set")
+    keyed = resolve_parent_ids(
+        batch.withColumn(
+            "parent_serial", normalize_parent(F.col("parent_dataset_id"))
+        ).drop("parent_dataset_id"),
+        ds_view,
+    )
+    lookup = keyed.join(
+        ds_view.select("dataset_serial", F.col("id").alias("dataset_id")),
+        "dataset_serial",
+        "left",
+    ).join(
+        _tip_view(spark, views, child).select(
+            "dataset_id", F.col("id").alias("child_id")
+        ),
+        "dataset_id",
+        "left",
+    )
+    ds_id, child_id = _high_water(views, "data_set"), _high_water(views, child)
+    # a serial named twice keeps one of its rows, as the commit's
+    # dropDuplicates would; deduplicating here costs no shuffle
+    serials = {r["dataset_serial"]: r.asDict() for r in lookup.collect()}
+    ds_rows, child_rows, child_ids = [], [], {}
+    for _, d in sorted(serials.items()):
+        if d["dataset_id"] is None:
+            ds_id += 1
+            d["dataset_id"] = ds_id
+            ds_rows.append(d)
+        if d["child_id"] is None and (requires is None or d[requires] is not None):
+            child_id += 1
+            d["child_id"] = child_id
+            child_rows.append(d)
+        if d["child_id"] is not None:
+            child_ids[d["dataset_serial"]] = d["child_id"]
+
+    def local(rows: list[dict], cols: list[str], id_from: str) -> DataFrame:
+        # the lookup plan types every column; ``id`` is read from id_from
+        src = [id_from if c == "id" else c for c in cols]
+        ddl = ", ".join(
+            f"{c} {lookup.schema[s].dataType.simpleString()}"
+            for c, s in zip(cols, src)
+        )
+        return values_df(
+            spark, [tuple(d[s] for s in src) for d in rows], ddl
+        )
+
+    ds_delta = local(
+        ds_rows,
+        ["dataset_serial", "description", "microscope", "parent_id", "id"],
+        "dataset_id",
+    ).select(
+        "dataset_serial",
+        "description",
+        "microscope",
+        F.lit(frames).alias("frames"),
+        serial_to_date_time(F.col("dataset_serial")).alias("date_time"),
+        "parent_id",
+        "id",
+    )
+    return ds_delta, local(child_rows, child_cols, "child_id"), child_ids
+
+
 def insert_frames_atomic(
     datasets: DataFrame,
     frames_rows: DataFrame,
@@ -292,119 +407,65 @@ def insert_frames_atomic(
     readers resolving through the catalog tip see either none of the
     upload's rows in any table or all of them in every table.
 
-    The three builders run against the SAME pinned catalog-tip views
-    inside the commit retry loop, so the cross-table surrogate-id chain
-    (ds id → frames_global.dataset_id → frames.frames_global_id) is
-    serializable exactly like the per-table builder path — a losing racer
-    rebuilds every table from the winner's tip. Replay converges: all
-    three deltas anti-join empty and no new version publishes."""
+    The builder runs against the SAME pinned catalog-tip views inside the
+    commit retry loop, so the cross-table surrogate-id chain (ds id →
+    frames_global.dataset_id → frames.frames_global_id) is serializable
+    exactly like the per-table builder path — a losing racer rebuilds
+    every table from the winner's tip. Replay converges: all three deltas
+    anti-join empty and no new version publishes.
+
+    Ids: one lookup per commit attempt (``_allocate_upload``) finds which
+    serials already have data_set and frames_global rows; each serial
+    without one gets exactly one new id, in dataset_serial order, above
+    the table's high-water mark, and frames ids follow in
+    (dataset_serial, file_name) order. The high-water mark is the tip
+    manifest's ``id`` upper bound. While no live file carries a deletion
+    vector, that bound equals ``max(live id)``, so ids are ``max(live
+    id) + position``. After ``catalog_delete(mode="dv")`` hides the highest
+    rows of a file that stays live, the bound is above the live max:
+    ids then skip the hidden ones and are not reused, as the reference's
+    Postgres sequence behaves."""
     from imagingdb_spark import snapcatalog as C
-    from imagingdb_spark.api import serial_to_date_time
-    from imagingdb_spark.catalog import IMAGING_SCHEMAS, empty_df
+    from imagingdb_spark.catalog import IMAGING_SCHEMAS
 
     _guard_legacy_catalog(catalog_dir)
     spark = datasets.sparkSession
-    w = Window.partitionBy(F.lit(0)).orderBy("dataset_serial")
     wf = Window.partitionBy(F.lit(0)).orderBy("dataset_serial", "file_name")
-    ds_fields = [
-        "dataset_serial", "description", "microscope", "frames",
-        "date_time", "parent_id", "id",
-    ]
+    # size(collect_set) counts distinct values as countDistinct does, in
+    # one aggregation: four countDistincts expand every frame row 5x and
+    # shuffle twice
     summary = frames_rows.groupBy("dataset_serial").agg(
-        F.count(F.lit(1)).alias("nbr_frames"),
-        F.countDistinct("slice_idx").alias("nbr_slices"),
-        F.countDistinct("channel_idx").alias("nbr_channels"),
-        F.countDistinct("time_idx").alias("nbr_timepoints"),
-        F.countDistinct("pos_idx").alias("nbr_positions"),
+        F.count(F.lit(1)).cast("int").alias("nbr_frames"),
+        *[
+            F.size(F.collect_set(c)).alias(n)
+            for c, n in (
+                ("slice_idx", "nbr_slices"),
+                ("channel_idx", "nbr_channels"),
+                ("time_idx", "nbr_timepoints"),
+                ("pos_idx", "nbr_positions"),
+            )
+        ],
     )
-    batch_serials = [
-        r[0] for r in datasets.select("dataset_serial").distinct().collect()
-    ]
+    # a dataset without frames gets no frames_global row (nbr_frames null)
+    batch = datasets.join(summary, "dataset_serial", "left").select(
+        "dataset_serial", "description", "microscope", "parent_dataset_id",
+        "nbr_frames", "im_width", "im_height", "nbr_slices", "nbr_channels",
+        "im_colors", "nbr_timepoints", "nbr_positions", "bit_depth",
+        "storage_dir", "metadata_json",
+    )
 
-    def build(views: dict[str, DataFrame]) -> dict[str, DataFrame]:
-        def view(name: str) -> DataFrame:
-            v = views.get(name)
-            return (
-                v
-                if v is not None
-                else empty_df(spark, IMAGING_SCHEMAS[name])
-            )
-
-        ds_view, fg_view, fr_view = (
-            view("data_set"), view("frames_global"), view("frames")
+    def build(views) -> dict[str, DataFrame]:
+        new_ds, new_fg, fg_ids = _allocate_upload(
+            views, batch, "frames_global",
+            IMAGING_SCHEMAS["frames_global"].fieldNames(),
+            frames=True, requires="nbr_frames",
         )
-        rows = datasets.select(
-            "dataset_serial",
-            "description",
-            "microscope",
-            F.lit(True).alias("frames"),
-            serial_to_date_time(F.col("dataset_serial")).alias("date_time"),
-            normalize_parent(F.col("parent_dataset_id")).alias(
-                "parent_serial"
-            ),
-        )
-        rows = resolve_parent_ids(rows, ds_view)
-        mx = ds_view.agg(F.coalesce(F.max("id"), F.lit(0))).collect()[0][0]
-        # anti-join HERE (not only in catalog_commit's guard) so the id
-        # mappings below are built from exactly the rows that will land
-        new_ds = (
-            rows.join(
-                ds_view.select("dataset_serial"), "dataset_serial",
-                "left_anti",
-            )
-            .withColumn(
-                "id", (F.row_number().over(w) + F.lit(mx)).cast("long")
-            )
-            .select(*ds_fields)
-        )
-        ds_ids = {
-            r["dataset_serial"]: r["id"]
-            for r in ds_view.filter(
-                F.col("dataset_serial").isin(batch_serials)
-            ).select("dataset_serial", "id").collect()
-        }
-        for r in new_ds.select("dataset_serial", "id").collect():
-            ds_ids[r["dataset_serial"]] = r["id"]
-        ds_map = values_df(
-            spark, list(ds_ids.items()),
-            "dataset_serial string, dataset_id long",
-        )
-        mxf = fg_view.agg(F.coalesce(F.max("id"), F.lit(0))).collect()[0][0]
-        new_fg = (
-            datasets.join(summary, "dataset_serial")
-            .join(F.broadcast(ds_map), "dataset_serial")
-            .join(
-                fg_view.select("dataset_id"), "dataset_id", "left_anti"
-            )
-            .withColumn(
-                "id", (F.row_number().over(w) + F.lit(mxf)).cast("long")
-            )
-            .select(
-                "id",
-                F.col("nbr_frames").cast("int").alias("nbr_frames"),
-                "im_width", "im_height",
-                F.col("nbr_slices").cast("int").alias("nbr_slices"),
-                F.col("nbr_channels").cast("int").alias("nbr_channels"),
-                "im_colors",
-                F.col("nbr_timepoints").cast("int").alias("nbr_timepoints"),
-                F.col("nbr_positions").cast("int").alias("nbr_positions"),
-                "bit_depth", "storage_dir", "metadata_json", "dataset_id",
-            )
-        )
-        fg_ids = {
-            r["dataset_id"]: r["id"]
-            for r in fg_view.filter(
-                F.col("dataset_id").isin(list(ds_ids.values()) or [-1])
-            ).select("dataset_id", "id").collect()
-        }
-        for r in new_fg.select("dataset_id", "id").collect():
-            fg_ids[r["dataset_id"]] = r["id"]
         serial_to_fg = values_df(
-            spark,
-            [(s, fg_ids[d]) for s, d in ds_ids.items() if d in fg_ids],
+            spark, sorted(fg_ids.items()),
             "dataset_serial string, frames_global_id long",
         )
-        mxr = fr_view.agg(F.coalesce(F.max("id"), F.lit(0))).collect()[0][0]
+        fr_view = _tip_view(spark, views, "frames")
+        mxr = _high_water(views, "frames")
         new_fr = (
             frames_rows.join(F.broadcast(serial_to_fg), "dataset_serial")
             .join(
@@ -448,85 +509,26 @@ def insert_file_atomic(
 ) -> tuple[DataFrame, DataFrame]:
     """ingest.insert_file's two-table transaction (DataSet + FileGlobal,
     db_operations.py:225-274) as ONE atomic catalog commit — the file-type
-    twin of insert_frames_atomic."""
+    twin of insert_frames_atomic, with the same id allocation: one
+    data_set and one file_global id per serial."""
     from imagingdb_spark import snapcatalog as C
-    from imagingdb_spark.api import serial_to_date_time
-    from imagingdb_spark.catalog import IMAGING_SCHEMAS, empty_df
+    from imagingdb_spark.catalog import IMAGING_SCHEMAS
 
     _guard_legacy_catalog(catalog_dir)
-    spark = new_files.sparkSession
-    w = Window.partitionBy(F.lit(0)).orderBy("dataset_serial")
-    batch_serials = [
-        r[0] for r in new_files.select("dataset_serial").distinct().collect()
-    ]
+    batch = new_files.select(
+        "dataset_serial", "description", "microscope", "parent_dataset_id",
+        "storage_dir", "file_name", "metadata_json", "sha256",
+    )
 
-    def build(views: dict[str, DataFrame]) -> dict[str, DataFrame]:
-        def view(name: str) -> DataFrame:
-            v = views.get(name)
-            return (
-                v
-                if v is not None
-                else empty_df(spark, IMAGING_SCHEMAS[name])
-            )
-
-        ds_view, fgl_view = view("data_set"), view("file_global")
-        rows = new_files.select(
-            "dataset_serial",
-            "description",
-            F.col("microscope"),
-            F.lit(False).alias("frames"),
-            serial_to_date_time(F.col("dataset_serial")).alias("date_time"),
-            normalize_parent(F.col("parent_dataset_id")).alias(
-                "parent_serial"
-            ),
-        )
-        rows = resolve_parent_ids(rows, ds_view)
-        mx = ds_view.agg(F.coalesce(F.max("id"), F.lit(0))).collect()[0][0]
-        new_ds = (
-            rows.join(
-                ds_view.select("dataset_serial"), "dataset_serial",
-                "left_anti",
-            )
-            .withColumn(
-                "id", (F.row_number().over(w) + F.lit(mx)).cast("long")
-            )
-            .select(
-                "dataset_serial", "description", "microscope", "frames",
-                "date_time", "parent_id", "id",
-            )
-        )
-        ds_ids = {
-            r["dataset_serial"]: r["id"]
-            for r in ds_view.filter(
-                F.col("dataset_serial").isin(batch_serials)
-            ).select("dataset_serial", "id").collect()
-        }
-        for r in new_ds.select("dataset_serial", "id").collect():
-            ds_ids[r["dataset_serial"]] = r["id"]
-        ds_map = values_df(
-            spark, list(ds_ids.items()),
-            "dataset_serial string, dataset_id long",
-        )
-        mxf = fgl_view.agg(F.coalesce(F.max("id"), F.lit(0))).collect()[0][0]
-        new_fgl = (
-            new_files.select(
-                "dataset_serial", "storage_dir", "file_name",
-                "metadata_json", "sha256",
-            )
-            .join(F.broadcast(ds_map), "dataset_serial")
-            .join(fgl_view.select("dataset_id"), "dataset_id", "left_anti")
-            .withColumn(
-                "id", (F.row_number().over(w) + F.lit(mxf)).cast("long")
-            )
-            .select(
-                "id", "storage_dir", "file_name", "metadata_json",
-                "dataset_id", "sha256",
-            )
+    def build(views) -> dict[str, DataFrame]:
+        new_ds, new_fgl, _ = _allocate_upload(
+            views, batch, "file_global",
+            IMAGING_SCHEMAS["file_global"].fieldNames(), frames=False,
         )
         return {"data_set": new_ds, "file_global": new_fgl}
 
     _, deltas = C.catalog_commit(
-        spark,
+        new_files.sparkSession,
         catalog_dir,
         build,
         keys={"data_set": ["dataset_serial"], "file_global": ["dataset_id"]},
@@ -856,7 +858,7 @@ def download_dataset(
     file_global). `storage_root` prefixes storage_dir for the blob fetch
     (the reference's mount_point / access_point)."""
     ok = (
-        spark.createDataFrame([(dataset_serial,)], "s string")
+        values_df(spark, [(dataset_serial,)], "s string")
         .select(validate_serial(F.col("s")).alias("ok"))
         .collect()[0]["ok"]
     )

@@ -131,18 +131,6 @@ def fake_decoder(payload: bytes, bit_depth: str) -> "np.ndarray":
     return arr if arr.size else np.zeros(1, dtype=dtype)
 
 
-def read_binary_frames(spark, path: str, pattern: str = "*.png") -> DataFrame:
-    """S6: binaryFile source — each object becomes (path, modificationTime,
-    length, content). The storage-layer get (local_storage.py:153-164 /
-    s3_storage.py:163-176) distributed across tasks instead of a
-    ThreadPoolExecutor (data_storage.py:243-253)."""
-    return (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", pattern)
-        .load(path)
-    )
-
-
 def frame_features(
     frames: DataFrame,
     decoder: Callable[[bytes, str], "np.ndarray"] = decode_png,

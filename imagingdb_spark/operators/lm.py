@@ -1050,17 +1050,35 @@ def x_perplexity_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     # createDataFrame-built boundary frames, now VALUES LocalRelations).
     dt = dt.persist()
     v = dt.groupBy("lang", "tok").agg(F.sum("c").alias("cnt")).persist()
-    tot_rows = [
-        (r["lang"], float(r["t"]))
-        for r in v.groupBy("lang").agg(F.sum("cnt").alias("t")).collect()
-    ]
-    tot = values_df(spark, tot_rows, "lang string, total double")
-    # F.broadcast(v) is deliberate, not AQE's call (guide §3.1): v is the
+    totals = v.groupBy("lang").agg(
+        F.sum("cnt").alias("t"),
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.length("tok")).alias("tok_len"),
+    ).collect()
+    tot = values_df(
+        spark,
+        [(r["lang"], float(r["t"])) for r in totals],
+        "lang string, total double",
+    )
+    # Broadcasting v is deliberate, not AQE's call (guide §3.1): v is the
     # per-language VOCABULARY — Heaps-law-sized, megabytes at 100 TB (the
     # x_tfidf df_tab argument) — and only a broadcast preserves dt's
     # map-side doc locality for the per-doc partial aggregation above.
+    # It is forced only while v's size, estimated from the same collect,
+    # fits the session's broadcast threshold (negative: off); a larger
+    # vocabulary takes a plain join rather than an oversized broadcast.
+    # Estimate per row: the token and language lengths plus an UnsafeRow's
+    # fixed part (null bitset + three 8-byte slots).
+    vocab_bytes = sum(
+        (r["tok_len"] or 0) + r["n"] * (32 + len(r["lang"] or ""))
+        for r in totals
+    )
+    threshold = (
+        spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    )
+    vocab = F.broadcast(v) if vocab_bytes <= threshold else v
     scored = (
-        dt.join(F.broadcast(v), ["lang", "tok"])
+        dt.join(vocab, ["lang", "tok"])
         .join(F.broadcast(tot), "lang")
         .groupBy("doc_id", "lang")
         .agg(

@@ -229,6 +229,18 @@ def catalog_views(
     return out
 
 
+class CatalogViews(dict):
+    """``{table: DataFrame}`` as ``catalog_commit`` hands it to a builder,
+    plus ``manifests``: the ``{table: manifest}`` of the catalog tip the
+    views were resolved from. A builder reads bounds such as
+    ``snapshots.manifest_upper_bound`` off these instead of resolving
+    the tip again, which could see a newer commit than its views."""
+
+    def __init__(self, views: dict, manifests: dict[str, dict]):
+        super().__init__(views)
+        self.manifests = manifests
+
+
 def catalog_commit(
     spark: SparkSession,
     catalog_dir: str,
@@ -242,6 +254,8 @@ def catalog_commit(
     ``build(views)`` receives the current catalog-tip view of every table
     seen so far (``None``-free: only tables present in the tip appear;
     first-run callers see ``{}``) and returns ``{table: new_rows_df}``.
+    ``views`` is a ``CatalogViews``: its ``manifests`` are the tip
+    manifests the views read.
     It is re-invoked against the EXACT tip inside every retry, so
     cross-table derived values — surrogate ids allocated from one table
     and baked into another's rows — recompute against the state the
@@ -286,10 +300,13 @@ def catalog_commit(
                     "(SnapshotTarget) or migrate the table into a catalog "
                     "commit first."
                 )
-        views = {
-            name: _manifest_df(spark, catalog_dir, name, m)
-            for name, m in tables_base.items()
-        }
+        views = CatalogViews(
+            {
+                name: _manifest_df(spark, catalog_dir, name, m)
+                for name, m in tables_base.items()
+            },
+            tables_base,
+        )
         new_rows = build(views)
         unknown = set(new_rows) - set(keys)
         if unknown:

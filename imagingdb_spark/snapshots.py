@@ -564,6 +564,31 @@ def _group_summary(files: list[dict]) -> dict:
     return out
 
 
+def manifest_upper_bound(m: dict | None, col: str):
+    """Largest value of the non-negative numeric column ``col`` (a
+    surrogate id) over every file a manifest references, read from its
+    group refs' merged stats without opening a group or a data file: 0
+    for an absent table (``m`` None) or one without files. None when a
+    ref has no bound for ``col`` (stats are best-effort) or ``m`` is a
+    legacy flat manifest without group refs; the caller then aggregates.
+
+    The bound covers rows a deletion vector has hidden, since their file
+    stays referenced; a file whose every row is dead leaves the manifest,
+    and its bound with it."""
+    if m is None:
+        return 0
+    groups = m.get("groups")
+    if groups is None:
+        return None
+    out = 0
+    for g in groups:
+        r = (g.get("stats") or {}).get(col)
+        if not r:
+            return None
+        out = max(out, r[1])
+    return out
+
+
 def _write_group(table_dir: str, files: list[dict]) -> dict:
     """Write one immutable manifest-group file (tmp + fsync + rename; the
     name is a fresh uuid so there is no slot to race for) and return its

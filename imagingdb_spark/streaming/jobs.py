@@ -777,16 +777,6 @@ DOCS_RAW_SCHEMA = T.StructType(
 )
 
 
-def read_docs_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-based stream over the documents parquet (Kafka swap-in at
-    production, same downstream plan)."""
-    return (
-        spark.readStream.schema(DOCS_RAW_SCHEMA)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
-
-
 ISIN_SCREEN_MAX = 100_000  # present-id screens above this size fall back
 #                            to a broadcast anti-join (an IN-list this big
 #                            would bloat the plan; below it, a map-side

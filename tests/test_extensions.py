@@ -2516,6 +2516,40 @@ class TestPerplexityBucket:
         with pytest.raises(ValueError, match="NULL"):
             ntile3_by_cutoffs(bad, "lang", "avg_logprob", "doc_id")
 
+    def test_vocab_broadcast_gated_on_threshold(self, spark, tmp_path):
+        """The vocabulary join is broadcast only while its estimated size
+        fits spark.sql.autoBroadcastJoinThreshold; below the estimate it
+        is a plain join with the same rows."""
+        import re
+
+        from imagingdb_spark.operators.lm import x_perplexity_bucket
+
+        rows = [
+            (i, f"tok{i % 7} tok{i % 3} common", "en" if i % 2 else "fr")
+            for i in range(30)
+        ]
+        d = self._write(spark, tmp_path, rows)
+
+        def run():
+            spark.catalog.clearCache()  # scored's cache would carry the join
+            df = x_perplexity_bucket(spark, d)
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            joins = set(re.findall(r"(\w+) \[lang#\d+, tok#\d+\]", plan))
+            return joins, sorted(map(tuple, df.collect()))
+
+        joins, out = run()
+        assert joins == {"BroadcastHashJoin"}
+        key = "spark.sql.autoBroadcastJoinThreshold"
+        old = spark.conf.get(key)
+        spark.conf.set(key, "1")
+        try:
+            low_joins, low_out = run()
+        finally:
+            spark.conf.set(key, old)
+            spark.catalog.clearCache()
+        assert "BroadcastHashJoin" not in low_joins and low_joins
+        assert low_out == out
+
     def test_registered_plan_has_no_corpus_window(self, spark, tmp_path):
         """The registered query's executed plan must contain NO Window
         operator at all — the tie-split window runs only inside the

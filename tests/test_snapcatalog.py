@@ -8,7 +8,9 @@ catalog readers seeing either no dataset or the whole dataset."""
 
 from __future__ import annotations
 
+import shutil
 import threading
+import uuid
 
 import pandas as pd
 import pytest
@@ -680,6 +682,216 @@ class TestInsertFramesAtomic:
         got = C.catalog_read(spark, cat, "frames", where=absent)
         assert got.count() == 0
         assert got.schema == C.catalog_read(spark, cat, "frames").schema
+
+
+def _jobs_in_group(spark, fn) -> int:
+    """Spark jobs ``fn`` submits, AQE stage jobs included, counted by the
+    status tracker in a fresh job group."""
+    sc = spark.sparkContext
+    gid = f"snapcatalog-{uuid.uuid4().hex}"
+    sc.setJobGroup(gid, "snapcatalog job count")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+class TestUploadIdAllocation:
+    """Id allocation of the atomic upload builders: one lookup collect per
+    commit attempt, new ids handed out on the driver above high-water
+    marks read from the tip manifest's ``id`` bounds. The pinned ids are
+    the ones max(id) + row_number allocation gives for the same uploads."""
+
+    S0, S1, S2 = TestInsertFramesAtomic.SERIALS
+    S3 = "TEST-2005-06-12-20-00-00-0001"
+    FILE_DDL = (
+        "dataset_serial string, description string, microscope string, "
+        "parent_dataset_id string, storage_dir string, file_name string, "
+        "metadata_json string, sha256 string"
+    )
+
+    @classmethod
+    def _files(cls, spark, rows):
+        names = [c.split()[0] for c in cls.FILE_DDL.split(",")]
+        return spark.createDataFrame(
+            pd.DataFrame(
+                [
+                    (s, f"file {s}", "scope1", "none", f"raw/{s}", name,
+                     "{}", f"{s}/{name}")
+                    for s, name in rows
+                ],
+                columns=names,
+            ),
+            cls.FILE_DDL,
+        )
+
+    @staticmethod
+    def _tables(spark, cat):
+        def rows(name, *cols):
+            if name not in C.catalog_manifest(cat)["tables"]:
+                return []
+            return sorted(
+                tuple(r[c] for c in cols)
+                for r in C.catalog_read(spark, cat, name).collect()
+            )
+
+        return {
+            "data_set": rows(
+                "data_set", "id", "dataset_serial", "parent_id", "frames"
+            ),
+            "frames_global": rows("frames_global", "id", "dataset_id"),
+            "file_global": rows("file_global", "id", "dataset_id"),
+            "frames": rows("frames", "id", "frames_global_id"),
+        }
+
+    @staticmethod
+    def _assert_no_orphans(t):
+        ds = {r[0] for r in t["data_set"]}
+        fg = {r[0] for r in t["frames_global"]}
+        assert {r[1] for r in t["frames_global"]} <= ds
+        assert {r[1] for r in t["file_global"]} <= ds
+        assert {r[1] for r in t["frames"]} <= fg
+        for rows in t.values():
+            ids = [r[0] for r in rows]
+            assert len(ids) == len(set(ids))
+
+    @staticmethod
+    def _strip_id_bounds(cat):
+        """Drop the ``id`` bound from every group ref of the tip commit."""
+        import json
+        import os
+
+        v = C.catalog_versions(cat)[-1]
+        path = os.path.join(cat, C.COMMITS_DIR, f"v{v:08d}.json")
+        with open(path) as f:
+            commit = json.load(f)
+        for m in commit["tables"].values():
+            for g in m["groups"]:
+                (g.get("stats") or {}).pop("id", None)
+        with open(path, "w") as f:
+            json.dump(commit, f)
+
+    @pytest.fixture(scope="class")
+    def seq(self, spark, tmp_path_factory):
+        """Two datasets, their replay, a third with the first as parent;
+        then, on the catalog and on a copy without ``id`` bounds, a
+        dataset whose data_set row exists (a file upload) but whose
+        frames_global row does not."""
+        root = tmp_path_factory.mktemp("ids")
+        cat, stripped = str(root / "cat"), str(root / "stripped")
+        inputs = TestInsertFramesAtomic._inputs
+        for serials, parent in (
+            ((self.S0, self.S1), "none"),
+            ((self.S0, self.S1), "none"),
+            ((self.S2,), self.S0),
+        ):
+            flows.insert_frames_atomic(*inputs(spark, serials, parent), cat)
+        shutil.copytree(cat, stripped)
+        self._strip_id_bounds(stripped)
+        for c in (cat, stripped):
+            flows.insert_file_atomic(
+                self._files(spark, [(self.S3, "a.tif")]), c
+            )
+            flows.insert_frames_atomic(*inputs(spark, [self.S3]), c)
+        return cat, stripped
+
+    def test_ids_across_uploads(self, spark, seq):
+        cat, _ = seq
+        assert C.catalog_versions(cat) == [1, 2, 3, 4]
+        t = self._tables(spark, cat)
+        assert t["data_set"] == [
+            (1, self.S0, None, True),
+            (2, self.S1, None, True),
+            (3, self.S2, 1, True),
+            (4, self.S3, None, False),
+        ]
+        assert t["frames_global"] == [(1, 1), (2, 2), (3, 3), (4, 4)]
+        assert t["file_global"] == [(1, 4)]
+        assert t["frames"] == [(i, (i - 1) // 6 + 1) for i in range(1, 25)]
+        m = C.catalog_manifest(cat)["tables"]
+        assert [
+            S.manifest_upper_bound(m.get(n), "id")
+            for n in ("data_set", "frames_global", "frames", "file_global")
+        ] == [4, 4, 24, 1]
+        assert S.manifest_upper_bound(None, "id") == 0
+
+    def test_missing_id_bounds_fall_back_to_same_ids(self, spark, seq):
+        cat, stripped = seq
+        m = C.catalog_manifest(stripped)["tables"]
+        for name in ("data_set", "frames_global", "frames"):
+            assert S.manifest_upper_bound(m[name], "id") is None
+        assert self._tables(spark, stripped) == self._tables(spark, cat)
+
+    def test_serial_named_twice_gets_one_id(self, spark, tmp_path):
+        """Before, every input row took an id and the commit kept an
+        arbitrary one of the duplicates: data_set ids {1, 3}, with a
+        frames_global row pointing at the unwritten dataset 2."""
+        cat = str(tmp_path / "cat")
+        ds, fr = TestInsertFramesAtomic._inputs(spark, [self.S0, self.S1])
+        ds = ds.unionByName(ds.filter(F.col("dataset_serial") == self.S0))
+        fr = fr.filter(F.col("channel_idx") == 0)  # 3 frames per serial
+        flows.insert_frames_atomic(ds, fr, cat)
+        t = self._tables(spark, cat)
+        self._assert_no_orphans(t)
+        assert [r[:2] for r in t["data_set"]] == [(1, self.S0), (2, self.S1)]
+        assert t["frames_global"] == [(1, 1), (2, 2)]
+        assert t["frames"] == [(i, (i - 1) // 3 + 1) for i in range(1, 7)]
+
+    def test_file_serial_named_twice_gets_one_id(self, spark, tmp_path):
+        cat = str(tmp_path / "cat")
+        flows.insert_file_atomic(
+            self._files(
+                spark,
+                [(self.S0, "a.tif"), (self.S0, "b.tif"), (self.S1, "c.tif")],
+            ),
+            cat,
+        )
+        t = self._tables(spark, cat)
+        self._assert_no_orphans(t)
+        assert [r[:2] for r in t["data_set"]] == [(1, self.S0), (2, self.S1)]
+        assert t["file_global"] == [(1, 1), (2, 2)]
+
+    def test_dv_deleted_ids_are_not_reused(self, spark, tmp_path):
+        cat = str(tmp_path / "cat")
+        inputs = TestInsertFramesAtomic._inputs
+        flows.insert_frames_atomic(*inputs(spark, [self.S0, self.S1]), cat)
+        out = C.catalog_delete(
+            spark,
+            cat,
+            {
+                "data_set": [("dataset_serial", "=", self.S1)],
+                "frames_global": [("dataset_id", "=", 2)],
+                "frames": [("frames_global_id", "=", 2)],
+            },
+            mode="dv",
+        )
+        # the deleted rows share their files with the first dataset's, so
+        # the files, and their id bounds, stay in the manifests
+        for name in ("data_set", "frames_global", "frames"):
+            audit = out["tables"][name]
+            assert audit["files_dv"] >= 1 and audit["files_dropped"] == 0
+        flows.insert_frames_atomic(*inputs(spark, [self.S2]), cat)
+        t = self._tables(spark, cat)
+        self._assert_no_orphans(t)
+        assert [r[:2] for r in t["data_set"]] == [(1, self.S0), (3, self.S2)]
+        assert t["frames_global"] == [(1, 1), (3, 3)]
+        assert t["frames"] == [(i, 1) for i in range(1, 7)] + [
+            (i, 3) for i in range(13, 19)
+        ]
+
+    def test_commit_and_replay_job_counts(self, spark, tmp_path):
+        cat = str(tmp_path / "cat")
+        inputs = TestInsertFramesAtomic._inputs
+        flows.insert_frames_atomic(*inputs(spark, [self.S0]), cat)
+        new, replay = inputs(spark, [self.S1]), inputs(spark, [self.S1])
+        assert _jobs_in_group(
+            spark, lambda: flows.insert_frames_atomic(*new, cat)
+        ) <= 21
+        assert _jobs_in_group(
+            spark, lambda: flows.insert_frames_atomic(*replay, cat)
+        ) <= 15
+        assert C.catalog_versions(cat) == [1, 2]
 
 
 class TestCatalogBloomIndex:
