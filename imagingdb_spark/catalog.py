@@ -257,6 +257,36 @@ def eager_checkpoint(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True)
 
 
+def run_concurrently(spark: SparkSession, fns: list) -> list:
+    """Run each no-argument callable in ``fns`` on its own driver thread
+    and return their results in order — the fan-out for independent
+    Spark jobs (a commit's per-table landings, a gate's appends) whose
+    1-2 task jobs would otherwise leave most cores idle back to back.
+
+    Every target is wrapped on the CALLER's thread by
+    ``pyspark.inheritable_thread_target(spark)``, so the jobs it submits
+    carry the caller's job group, description and session tags: under
+    PySpark's default pinned-thread mode a plain pool thread runs its
+    jobs in no group at all. Each target is wrapped separately because
+    the wrapper hands its one cloned property set to the thread it runs
+    on, and threads sharing one set would race on the SQL execution id.
+
+    Waits for EVERY thread, then raises the first error in ``fns``
+    order; a caller cleaning up after a failure therefore never races a
+    sibling that is still writing."""
+    if not fns:
+        return []
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    targets = [inheritable_thread_target(spark)(fn) for fn in fns]
+    with ThreadPoolExecutor(max_workers=len(targets)) as pool:
+        futures = [pool.submit(t) for t in targets]
+    # the pool has waited for every thread before the first result()
+    return [fut.result() for fut in futures]
+
+
 def values_df(spark: SparkSession, rows: list, schema_ddl: str) -> DataFrame:
     """Small driver-local DataFrame as an inline VALUES table (LocalRelation).
 

@@ -122,6 +122,10 @@ def insert_frames(
     from imagingdb_spark.api import serial_to_date_time
 
     paths = paths or {}
+    # one row, hence one data_set and one frames_global id, per serial:
+    # a serial named twice would otherwise take two row_number ids and
+    # the commit's dropDuplicates keep one, leaving a gap
+    datasets = datasets.dropDuplicates(["dataset_serial"])
     w = Window.partitionBy(F.lit(0)).orderBy("dataset_serial")  # catalog-batch-sized
 
     # Row construction is BUILDER-shaped (a function of the table's

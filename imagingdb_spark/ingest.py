@@ -167,6 +167,9 @@ def insert_file(
     file_global_rows)."""
     from pyspark.sql import Window
 
+    # one data_set and one file_global id per serial (the gap rule
+    # flows.insert_frames documents)
+    new_files = new_files.dropDuplicates(["dataset_serial"])
     w = Window.partitionBy(F.lit(0)).orderBy("dataset_serial")  # catalog-batch-sized: one task is fine
 
     # builder-shaped so the snapshot path re-allocates ids against the

@@ -28,14 +28,12 @@ not to Arrow-vectorized batch math over fixed-width numeric arrays.
 
 from __future__ import annotations
 
-from concurrent.futures import ThreadPoolExecutor
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from imagingdb_spark.catalog import table
+from imagingdb_spark.catalog import run_concurrently, table
 from imagingdb_spark.registry import query
 
 QUERY_VEC_ID = 0  # the probe vector for top-k queries
@@ -1654,18 +1652,12 @@ def x_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     rest the corpus is (cell, codes): 8 bytes/vector scanned instead of
     the float32 vectors — the ADC pass is I/O-bound on 1/64th the bytes."""
     e = table(spark, sf_dir, "embeddings")
-    # the probe fetch is independent of training: submit it from a driver
-    # thread so its tiny job back-fills the training jobs' idle tail
-    # (guide §2.6 — overlap independent jobs) instead of serializing a
-    # full scheduling round trip after them. try/finally (ADVICE r11):
-    # a failure inside training must not leak the pool/background job.
-    probe_pool = ThreadPoolExecutor(max_workers=1)
-    try:
-        qvec_future = probe_pool.submit(_collect_probe, e)
-        # sample-sharing below is only sound while the two trainers draw
-        # the same deterministic rows AND select the same seed rows
-        assert IVF_TRAIN_MOD == PQ_TRAIN_MOD
-        assert IVF_K == PQ_K
+    # sample-sharing below is only sound while the two trainers draw
+    # the same deterministic rows AND select the same seed rows
+    assert IVF_TRAIN_MOD == PQ_TRAIN_MOD
+    assert IVF_K == PQ_K
+
+    def _train():
         # ONE persisted training sample AND ONE seed collect shared by
         # BOTH trainers (r12, guide §1.4 — fewer driver round trips):
         # the seed ordering (xxhash64(vec_id, 1), vec_id) is a function
@@ -1722,10 +1714,15 @@ def x_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
             )  # (M, K, dsub) residual
         finally:
             sample.unpersist()
+        return centroids, c_sq, codebooks
 
-        qvec = qvec_future.result()
-    finally:
-        probe_pool.shutdown(wait=False, cancel_futures=True)
+    # the probe fetch is independent of training: run the two on driver
+    # threads so its tiny job back-fills the training jobs' idle tail
+    # (guide §2.6 — overlap independent jobs) instead of serializing a
+    # full scheduling round trip after them
+    qvec, (centroids, c_sq, codebooks) = run_concurrently(
+        spark, [lambda: _collect_probe(e), _train]
+    )
     d2 = ((centroids - qvec) ** 2).sum(axis=1)
     probe_cells = [int(c) for c in np.argsort(d2)[:IVF_PROBE]]
     dsub = qvec.shape[0] // PQ_ANN_M

@@ -40,6 +40,7 @@ commit.)
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
@@ -49,7 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 from imagingdb_spark import snapshots as S
-from imagingdb_spark.catalog import empty_df
+from imagingdb_spark.catalog import empty_df, run_concurrently
 from imagingdb_spark.snapshots import SnapshotConflict
 
 COMMITS_DIR = "_commits"
@@ -241,6 +242,32 @@ class CatalogViews(dict):
         self.manifests = manifests
 
 
+def _known_empty(df: DataFrame) -> bool:
+    """True when the optimizer has already reduced ``df`` to an empty
+    LocalRelation (an empty driver-built delta, guarded or not): writing
+    it would run a job only to land a file with no rows."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    return (
+        plan.getClass().getSimpleName() == "LocalRelation"
+        and plan.data().isEmpty()
+    )
+
+
+def _drop_attempt(
+    catalog_dir: str,
+    created: dict[str, list[str]],
+    datadirs: list[tuple[str, str]],
+) -> None:
+    """Eagerly drop what an unpublished commit attempt landed: its group
+    files, data dirs and their bloom sidecars (no-debris discipline;
+    vacuum is the crash backstop)."""
+    for name, cr in created.items():
+        S._drop_groups(_table_dir(catalog_dir, name), cr)
+    for tdir, rel_dir in datadirs:
+        shutil.rmtree(os.path.join(tdir, rel_dir), ignore_errors=True)
+        S._drop_sidecar(tdir, rel_dir)
+
+
 def catalog_commit(
     spark: SparkSession,
     catalog_dir: str,
@@ -278,6 +305,23 @@ def catalog_commit(
     analog of snapshot_commit's parameter): this commit sets the
     property on those tables' manifests and builds point-lookup bloom
     sidecars for their new files; later commits inherit per table.
+
+    Threads: tip resolution, the views and the builder run on the
+    caller's thread. Each table the builder returned then lands on its
+    own driver thread (``catalog.run_concurrently``, which keeps the
+    caller's job group on every job): the dedup/schema/anti-join guard,
+    the data-file write (skipped when the optimizer has reduced the
+    delta to an empty LocalRelation), the bloom sidecar, the group file
+    and the delta read-back. No table's landing reads another's. The
+    manifests are assembled and the single publish link is made back on
+    the caller's thread, after every table thread has finished.
+
+    Cleanup: data dirs, sidecars and group files are recorded as soon as
+    they exist. If any table's landing raises, every thread is waited
+    for, everything the attempt recorded is dropped, exactly as on a
+    lost publish race, and the first error is re-raised. An error from
+    the publish link itself other than a lost race leaves its files to
+    catalog_vacuum: the link may already have landed.
     """
     for _ in range(max_retries):
         vs = catalog_versions(catalog_dir)
@@ -311,12 +355,15 @@ def catalog_commit(
         unknown = set(new_rows) - set(keys)
         if unknown:
             raise ValueError(f"no key columns declared for tables {unknown}")
-        new_tables = dict(tables_base)
-        deltas: dict[str, DataFrame] = {}
-        created: dict[str, list[str]] = {}
-        datadirs: list[str] = []
-        total_new = 0
-        for name, rows_df in new_rows.items():
+        # what this attempt has put on disk, recorded the moment it exists
+        # so a failed or lost attempt can drop it (each table's thread
+        # touches only its own ``created`` entry; list.append is atomic)
+        created: dict[str, list[str]] = {name: [] for name in new_rows}
+        datadirs: list[tuple[str, str]] = []
+
+        def land(name: str, rows_df: DataFrame):
+            """One table's guard, data files, bloom sidecar, group file
+            and delta read-back: (delta, manifest or None, rows)."""
             kcols = keys[name]
             rows_df = rows_df.dropDuplicates(kcols)
             schema = rows_df.schema
@@ -334,26 +381,35 @@ def catalog_commit(
             else:
                 deduped = rows_df
             tdir = _table_dir(catalog_dir, name)
-            os.makedirs(tdir, exist_ok=True)
             boverride = (bloom_columns or {}).get(name)
-            files, n, rel_dir = S._write_data_files(deduped, tdir)
+            if _known_empty(deduped):
+                files, n = [], 0
+            else:
+                os.makedirs(tdir, exist_ok=True)
+                files, n, rel_dir = S._write_data_files(deduped, tdir)
+                if n == 0:
+                    shutil.rmtree(
+                        os.path.join(tdir, rel_dir), ignore_errors=True
+                    )
+                else:
+                    datadirs.append((tdir, rel_dir))
             if n == 0:
-                shutil.rmtree(
-                    os.path.join(tdir, rel_dir), ignore_errors=True
-                )
                 # typed as the tip stores it (every field nullable), the
                 # schema a non-empty delta reads back from its files
-                deltas[name] = empty_df(
+                delta = empty_df(
                     spark, StructType.fromJson(json.loads(schema_json))
                 )
-                if bm is None:
-                    # first appearance with an empty delta: record the
-                    # typed empty manifest so readers get the schema
-                    new_tables[name] = S._next_manifest(
+                # first appearance with an empty delta: record the typed
+                # empty manifest so readers get the schema
+                manifest = (
+                    S._next_manifest(
                         None, "append", [], 0, schema_json,
                         blooms=boverride,
                     )
-                continue
+                    if bm is None
+                    else None
+                )
+                return delta, manifest, 0
             S._build_blooms(
                 spark, tdir, rel_dir, files,
                 boverride
@@ -361,13 +417,11 @@ def catalog_commit(
                 else (bm.get("blooms") if bm else None),
                 deduped.schema,
             )
-            cr: list[str] = []
             base_groups, legacy_delta = S._base_delta(bm)
             groups = S._child_groups(
-                tdir, base_groups, legacy_delta + files, cr
+                tdir, base_groups, legacy_delta + files, created[name]
             )
-            created[name] = cr
-            new_tables[name] = S._next_manifest(
+            manifest = S._next_manifest(
                 bm,
                 "append",
                 groups,
@@ -375,10 +429,30 @@ def catalog_commit(
                 schema_json,
                 blooms=boverride,
             )
-            deltas[name] = spark.read.schema(schema).parquet(
+            delta = spark.read.schema(schema).parquet(
                 *[os.path.join(tdir, f["path"]) for f in files]
             )
-            datadirs.append((tdir, rel_dir))
+            return delta, manifest, n
+
+        try:
+            landed = run_concurrently(
+                spark,
+                [
+                    functools.partial(land, name, rows_df)
+                    for name, rows_df in new_rows.items()
+                ],
+            )
+        except Exception:
+            # every thread has stopped: drop the tables that did land
+            _drop_attempt(catalog_dir, created, datadirs)
+            raise
+        new_tables = dict(tables_base)
+        deltas: dict[str, DataFrame] = {}
+        total_new = 0
+        for name, (delta, manifest, n) in zip(new_rows, landed):
+            deltas[name] = delta
+            if manifest is not None:
+                new_tables[name] = manifest
             total_new += n
         if total_new == 0 and set(new_tables) == set(tables_base):
             # fully converged replay: nothing written, nothing published
@@ -395,13 +469,7 @@ def catalog_commit(
             # lost the race: this attempt's groups and data dirs are
             # dropped eagerly (no-debris discipline; vacuum is the crash
             # backstop) and the builder re-runs against the winner's tip
-            for name, cr in created.items():
-                S._drop_groups(_table_dir(catalog_dir, name), cr)
-            for tdir, rel_dir in datadirs:
-                shutil.rmtree(
-                    os.path.join(tdir, rel_dir), ignore_errors=True
-                )
-                S._drop_sidecar(tdir, rel_dir)
+            _drop_attempt(catalog_dir, created, datadirs)
             continue
     raise SnapshotConflict(
         f"catalog commit to {catalog_dir} lost {max_retries} straight races"

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
-from imagingdb_spark.catalog import empty_df, parquet_schema
+from imagingdb_spark.catalog import empty_df, parquet_schema, run_concurrently
 
 
 def read_events_stream(
@@ -1352,8 +1352,6 @@ def streaming_dedup_gate(
         return _gate_coalesce(df, append_partitions)
 
     def gate(batch_df: DataFrame, batch_id: int) -> None:
-        from concurrent.futures import ThreadPoolExecutor
-
         spark = batch_df.sparkSession
         plain_tables = [corpus_path, matches_path] + (
             [] if snap_idx else [idx_tokset_path, idx_prefix_path]
@@ -1536,9 +1534,7 @@ def streaming_dedup_gate(
                     _put_tok,
                     _put_pref,
                 ]
-                with ThreadPoolExecutor(max_workers=4) as pool:
-                    for fut in [pool.submit(w) for w in writes]:
-                        fut.result()
+                run_concurrently(spark, writes)
             finally:
                 pairs.unpersist()
                 batch_tok.unpersist()
@@ -1749,7 +1745,6 @@ def streaming_embedding_gate(
     def gate(batch_df: DataFrame, batch_id: int) -> None:
         import os
         import shutil
-        from concurrent.futures import ThreadPoolExecutor
 
         spark = batch_df.sparkSession
         for p in (corpus_path, matches_path):
@@ -1857,9 +1852,7 @@ def streaming_embedding_gate(
                     lambda: _co(pairs).write.mode("append").parquet(matches_path),
                     lambda: _co(novel).write.mode("append").parquet(corpus_path),
                 ]
-                with ThreadPoolExecutor(max_workers=2) as pool:
-                    for fut in [pool.submit(w) for w in writes]:
-                        fut.result()
+                run_concurrently(spark, writes)
             finally:
                 pairs.unpersist()
             if compact_every and batch_id > 0 and batch_id % compact_every == 0:
@@ -2030,8 +2023,6 @@ def _streaming_fingerprint_gate(
         return _gate_coalesce(df, append_partitions)
 
     def gate(batch_df: DataFrame, batch_id: int) -> None:
-        from concurrent.futures import ThreadPoolExecutor
-
         spark = batch_df.sparkSession
         plain_tables = [corpus_path, matches_path] + (
             [] if snap_idx else [idx_bands_path]
@@ -2159,9 +2150,7 @@ def _streaming_fingerprint_gate(
                         batch_id,
                     ),
                 ]
-                with ThreadPoolExecutor(max_workers=3) as pool:
-                    for fut in [pool.submit(w) for w in writes]:
-                        fut.result()
+                run_concurrently(spark, writes)
             finally:
                 pairs.unpersist()
                 batch_ids.unpersist()

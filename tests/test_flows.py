@@ -961,3 +961,92 @@ class TestCatalogSliceSkipping:
         # full views returned: the caller's own not-found surface fires
         assert sl["data_set"].count() == 1  # the one uploaded dataset
         assert sl["frames"].count() == 6
+
+
+class TestDuplicateSerialIds:
+    """A serial named twice in one batch gets ONE data_set id and one
+    frames_global (file_global) id on the plain and the SnapshotTarget
+    path, as on the atomic path: ids {1, 2}, no gap."""
+
+    S0 = "DUPS-2008-04-01-12-00-00-0001"
+    S1 = "DUPS-2008-04-02-12-00-00-0001"
+
+    @staticmethod
+    def _catalog(spark, tmp_path, snapshot):
+        from imagingdb_spark.catalog import IMAGING_SCHEMAS, empty_df
+        from imagingdb_spark.ingest import SnapshotTarget
+
+        cat = {n: empty_df(spark, s) for n, s in IMAGING_SCHEMAS.items()}
+        targets = (
+            {n: SnapshotTarget(str(tmp_path / "cat" / n)) for n in cat}
+            if snapshot
+            else {}
+        )
+        return cat, targets
+
+    @pytest.mark.parametrize("snapshot", [False, True])
+    def test_frames_serial_named_twice(self, spark, tmp_path, snapshot):
+        cat, targets = self._catalog(spark, tmp_path, snapshot)
+        ds = spark.createDataFrame(
+            [
+                (s, "dup", "scope9", "none", f"raw_frames/{s}", "uint16",
+                 8, 8, 1, "{}")
+                for s in (self.S0, self.S1, self.S0)
+            ],
+            "dataset_serial string, description string, microscope string, "
+            "parent_dataset_id string, storage_dir string, bit_depth string, "
+            "im_width int, im_height int, im_colors int, metadata_json string",
+        )
+        fr = spark.createDataFrame(
+            [
+                (s, 0, z, 0, 0, "ch0", f"im_c000_z{z:03d}_t000_p000.png",
+                 f"{s}/{z}", "{}")
+                for s in (self.S0, self.S1)
+                for z in range(3)
+            ],
+            "dataset_serial string, channel_idx int, slice_idx int, "
+            "time_idx int, pos_idx int, channel_name string, file_name string, "
+            "sha256 string, metadata_json string",
+        )
+        new_ds, new_fg, new_fr = flows.insert_frames(
+            ds, fr, cat["data_set"], cat["frames_global"], cat["frames"],
+            targets,
+        )
+        assert sorted(
+            (r["id"], r["dataset_serial"]) for r in new_ds.collect()
+        ) == [(1, self.S0), (2, self.S1)]
+        assert sorted(
+            (r["id"], r["dataset_id"], r["nbr_frames"])
+            for r in new_fg.collect()
+        ) == [(1, 1, 3), (2, 2, 3)]
+        assert sorted(
+            (r["id"], r["frames_global_id"]) for r in new_fr.collect()
+        ) == [(i, (i - 1) // 3 + 1) for i in range(1, 7)]
+
+    @pytest.mark.parametrize("snapshot", [False, True])
+    def test_file_serial_named_twice(self, spark, tmp_path, snapshot):
+        from imagingdb_spark.ingest import insert_file
+
+        cat, targets = self._catalog(spark, tmp_path, snapshot)
+        files = spark.createDataFrame(
+            [
+                (s, "dup", "scope9", "none", f"raw_files/{s}", name, "{}",
+                 f"{s}/{name}")
+                for s, name in (
+                    (self.S0, "a.tif"), (self.S1, "c.tif"), (self.S0, "b.tif")
+                )
+            ],
+            "dataset_serial string, description string, microscope string, "
+            "parent_dataset_id string, storage_dir string, file_name string, "
+            "metadata_json string, sha256 string",
+        )
+        new_ds, new_fgl = insert_file(
+            files, cat["data_set"], cat["file_global"],
+            targets.get("data_set"), targets.get("file_global"),
+        )
+        assert sorted(
+            (r["id"], r["dataset_serial"]) for r in new_ds.collect()
+        ) == [(1, self.S0), (2, self.S1)]
+        assert sorted(
+            (r["id"], r["dataset_id"]) for r in new_fgl.collect()
+        ) == [(1, 1), (2, 2)]

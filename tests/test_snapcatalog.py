@@ -49,7 +49,9 @@ def _src_file(tmp_path, name="stack.tif"):
     return str(p)
 
 
-def _upload(spark, src, tmp_path, cat_dir, serial=UP_SERIAL):
+def _upload(
+    spark, src, tmp_path, cat_dir, serial=UP_SERIAL, bloom_columns=None
+):
     man = spark.createDataFrame(
         [(serial, src, "Testing", "none")],
         "dataset_serial string, file_name string, description string, "
@@ -66,7 +68,7 @@ def _upload(spark, src, tmp_path, cat_dir, serial=UP_SERIAL):
         global_meta={
             "im_width": 8, "im_height": 8, "nbr_channels": 2, "nbr_slices": 3,
         },
-        paths=CatalogTarget(cat_dir),
+        paths=CatalogTarget(cat_dir, bloom_columns),
     )
 
 
@@ -110,6 +112,40 @@ class TestCatalogCommitPrimitive:
         v2, deltas = self._commit_pair(spark, cat, [(1, "a")], [(1, 10)])
         assert v2 == 1  # tip unchanged: fully converged replay
         assert deltas["ta"].count() == 0 and deltas["tb"].count() == 0
+        assert C.catalog_versions(cat) == [1]
+
+    def test_known_empty_delta_writes_nothing(self, spark, tmp_path):
+        """A delta the optimizer reduces to an empty LocalRelation lands
+        no file and no directory; its first appearance still records a
+        typed empty manifest, and a commit of nothing else runs no job."""
+        import os
+
+        from imagingdb_spark.catalog import empty_df, values_df
+
+        cat = str(tmp_path / "cat")
+        ddl = "k long, v string"
+        v, deltas = C.catalog_commit(
+            spark,
+            cat,
+            lambda views: {
+                "ta": values_df(spark, [(1, "a")], ddl),
+                "te": empty_df(spark, ddl),
+            },
+            keys={"ta": ["k"], "te": ["k"]},
+        )
+        assert v == 1
+        m = C.catalog_manifest(cat)["tables"]["te"]
+        assert m["rows"] == 0 and m["groups"] == []
+        assert not os.path.exists(os.path.join(cat, "te"))
+        assert deltas["te"].schema == C.catalog_read(spark, cat, "te").schema
+        assert deltas["te"].count() == 0
+        assert _jobs_in_group(
+            spark,
+            lambda: C.catalog_commit(
+                spark, cat, lambda views: {"te": empty_df(spark, ddl)},
+                keys={"te": ["k"]},
+            ),
+        ) == 0
         assert C.catalog_versions(cat) == [1]
 
     def test_pruned_read_equals_filtered_scan(self, spark, tmp_path):
@@ -363,36 +399,54 @@ class TestAtomicUpload:
     ):
         """THE closing of the torn window: crash after 1, 2, or 3 tables'
         data files are written — and at the publish link itself — and a
-        catalog reader sees NO trace of the upload each time."""
+        catalog reader sees NO trace of the upload each time. A crash
+        while landing a table also leaves no data dir, bloom sidecar or
+        group file of the tables that did land: the commit drops them
+        before re-raising, without waiting for vacuum."""
+        import glob
+        import os
+
         import imagingdb_spark.snapshots as S
 
         cat_dir = str(tmp_path / "cat")
         src = _src_file(tmp_path)
+        blooms = {"frames": ["sha256"]}
 
         real_write = S._write_data_files
         real_publish = C._publish_commit
 
         def crash_after_n_tables(n):
+            # the tables land on concurrent threads: count under a lock
             calls = {"n": 0}
+            lock = threading.Lock()
 
             def crashing(df, table_dir):
-                if calls["n"] >= n:
-                    raise RuntimeError("simulated crash mid-transaction")
-                calls["n"] += 1
+                with lock:
+                    if calls["n"] >= n:
+                        raise RuntimeError("simulated crash mid-transaction")
+                    calls["n"] += 1
                 return real_write(df, table_dir)
 
             return crashing
+
+        def debris():
+            return [
+                p
+                for pat in ("*/data/*", "*/_blooms/*", "*/_manifests/groups/*")
+                for p in glob.glob(os.path.join(cat_dir, pat))
+            ]
 
         for n_ok in (0, 1, 2):
             monkeypatch.setattr(
                 S, "_write_data_files", crash_after_n_tables(n_ok)
             )
             with pytest.raises(RuntimeError, match="simulated crash"):
-                _upload(spark, src, tmp_path, cat_dir)
+                _upload(spark, src, tmp_path, cat_dir, bloom_columns=blooms)
             monkeypatch.setattr(S, "_write_data_files", real_write)
             # NOTHING visible — not even the dataset row (contrast with
             # TestTornUploadHealing, where the per-table path exposes it)
             assert C.catalog_versions(cat_dir) == []
+            assert debris() == [], n_ok
 
         # crash at the publish link itself: still nothing visible
         def boom(*a, **kw):
@@ -697,6 +751,27 @@ def _jobs_in_group(spark, fn) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(gid))
 
 
+def _marker_job(spark) -> int:
+    """Id of one job run in a job group of its own. The status tracker
+    fills from the listener bus, which delivers job starts in id order:
+    once the marker shows, every earlier job shows too."""
+    import time
+
+    sc = spark.sparkContext
+    gid = f"marker-{uuid.uuid4().hex}"
+    sc.setJobGroup(gid, "marker job")
+    try:
+        spark.range(1).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    for _ in range(100):
+        ids = sc.statusTracker().getJobIdsForGroup(gid)
+        if ids:
+            return max(ids)
+        time.sleep(0.1)
+    raise AssertionError("marker job never reached the status tracker")
+
+
 class TestUploadIdAllocation:
     """Id allocation of the atomic upload builders: one lookup collect per
     commit attempt, new ids handed out on the driver above high-water
@@ -890,8 +965,33 @@ class TestUploadIdAllocation:
         ) <= 21
         assert _jobs_in_group(
             spark, lambda: flows.insert_frames_atomic(*replay, cat)
-        ) <= 15
+        ) <= 13
         assert C.catalog_versions(cat) == [1, 2]
+
+    def test_commit_jobs_stay_in_caller_group(self, spark, tmp_path):
+        """Every job a new upload and its replay submit, from the caller's
+        thread or a table's landing thread, runs in the caller's job
+        group: the job ids strictly between two marker jobs are exactly
+        the group's. A job escaping the group lowers the counts above, so
+        their bounds cannot catch it."""
+        cat = str(tmp_path / "cat")
+        inputs = TestInsertFramesAtomic._inputs
+        new, replay = inputs(spark, [self.S0]), inputs(spark, [self.S0])
+        sc = spark.sparkContext
+        gid = f"snapcatalog-{uuid.uuid4().hex}"
+        lo = _marker_job(spark)
+        sc.setJobGroup(gid, "upload and replay")
+        try:
+            flows.insert_frames_atomic(
+                *new, cat, bloom_columns={"frames": ["sha256"]}
+            )
+            flows.insert_frames_atomic(*replay, cat)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        hi = _marker_job(spark)
+        assert C.catalog_versions(cat) == [1]
+        in_group = set(sc.statusTracker().getJobIdsForGroup(gid))
+        assert in_group and set(range(lo + 1, hi)) == in_group
 
 
 class TestCatalogBloomIndex:
