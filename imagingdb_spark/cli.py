@@ -70,16 +70,16 @@ def assert_date_order(start_date: str, end_date: str) -> None:
 
 
 def load_catalog(spark: SparkSession, catalog_dir: str) -> dict[str, DataFrame]:
-    """Read the four catalog tables. Snapshot-backed tables (the default
-    for catalogs this CLI creates — ``<catalog_dir>/<name>`` snapshot
-    dirs) read snapshot-isolated; legacy plain-parquet catalogs
-    (``<catalog_dir>/<name>.parquet``) keep reading as before; a table
-    that exists in neither form (fresh catalog) is an empty DataFrame
-    with the declared schema — the `Base.metadata.create_all` analogue
-    (db_operations.py:29). An ATOMIC catalog (written via
-    ingest.CatalogTarget — one multi-table commit object per upload)
-    resolves all four tables from ONE catalog tip, so the returned views
-    are mutually consistent by construction."""
+    """Read the four catalog tables. An ATOMIC catalog (what this CLI
+    writes, via ingest.CatalogTarget — one multi-table commit object per
+    upload) resolves all four tables from ONE catalog tip, so the
+    returned views are mutually consistent by construction. Older
+    per-table catalogs keep reading: standalone ``<catalog_dir>/<name>``
+    snapshot tables snapshot-isolated, legacy plain-parquet
+    ``<catalog_dir>/<name>.parquet`` files as before; a table that
+    exists in neither form (fresh catalog) is an empty DataFrame with
+    the declared schema — the `Base.metadata.create_all` analogue
+    (db_operations.py:29)."""
     from imagingdb_spark import snapcatalog as C
     from imagingdb_spark import snapshots as S
 
@@ -180,23 +180,6 @@ def load_catalog_slice(
     return out
 
 
-def catalog_targets(catalog_dir: str) -> dict[str, object]:
-    """Write targets for the four catalog tables: legacy plain-parquet
-    tables keep appending in place (never split one table's state across
-    two formats); everything else — including a fresh catalog — lands on
-    snapshot tables for the serializable, transactional ingest the
-    reference's Postgres commit scope provides."""
-    out: dict[str, object] = {}
-    for name in IMAGING_SCHEMAS:
-        p = Path(catalog_dir) / f"{name}.parquet"
-        out[name] = (
-            str(p)
-            if p.exists()
-            else ingest.SnapshotTarget(str(Path(catalog_dir) / name))
-        )
-    return out
-
-
 def query_data(
     login: str,
     project_id: str | None = None,
@@ -245,8 +228,11 @@ def upload_data(
     spark: SparkSession | None = None,
 ) -> None:
     """cli/data_uploader.py:61-256 as a CLI: manifest CSV + upload config
-    → flows.upload_dataset, catalog persisted under the login's
-    catalog_dir, blobs under its storage_root. Prints one line per
+    → flows.upload_dataset, catalog committed atomically
+    (ingest.CatalogTarget) under the login's catalog_dir, blobs under
+    its storage_root. A catalog_dir holding per-table snapshot tables
+    or legacy ``<name>.parquet`` files is refused: move it into a fresh
+    catalog with snapcatalog.migrate_catalog first. Prints one line per
     uploaded dataset (the reference's per-row prints,
     data_uploader.py:234-254)."""
     cfg = read_login(login)
@@ -257,16 +243,16 @@ def upload_data(
     _check_required(conf, CONFIG_SCHEMA, "config file")
     spark = spark or get_spark("imagingdb-cli")
     manifest = ingest.read_manifest(spark, csv)
-    catalog = load_catalog(spark, cfg["catalog_dir"])
     upload_type = conf["upload_type"].lower()
+    # the atomic commit resolves its own views from the catalog tip
     result = flows.upload_dataset(
         spark,
         manifest,
-        catalog,
+        None,
         storage_root=cfg["storage_root"],
         upload_type="frames" if upload_type == "frames" else "file",
         microscope=conf.get("microscope"),
-        paths=catalog_targets(cfg["catalog_dir"]),
+        paths=ingest.CatalogTarget(cfg["catalog_dir"]),
         overwrite=overwrite,
     )
     for r in result["data_set"].select("dataset_serial").collect():

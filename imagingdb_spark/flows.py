@@ -4,8 +4,10 @@ switching from the reference actually calls.
 
 - query flow   → api.get_datasets (already one function; SURVEY §3.1)
 - download flow → download_dataset (cli/data_downloader.py:106-229)
-- upload flow   → insert_frames batch twin (db_operations.py:150-223) +
-  ingest.insert_file (un-split path); splitters live in sources.py.
+- upload flow   → upload_dataset: insert_frames_atomic / insert_file_atomic
+  (one atomic catalog commit, db_operations.py:14-38, 150-274), or their
+  plain-parquet twins insert_frames / ingest.insert_file, which run the
+  same builders; splitters live in sources.py.
 
 Error parity: invalid id → AssertionError("Invalid ID…"); existing dest
 dir → FileExistsError; mixed channel types → TypeError; missing dataset →
@@ -77,23 +79,6 @@ def coerce_channels(channels):
         return channels
 
 
-def _table_view(spark: SparkSession, fallback: DataFrame, target) -> DataFrame:
-    """The current truth of a catalog table AFTER this flow's own commit:
-    the snapshot tip when the target is a snapshot table — which includes
-    any row a TORN prior attempt left behind, not just what this run
-    inserted — else the caller's view. The torn-upload healing below
-    hinges on this distinction: a replay's delta is empty precisely when
-    the parent row already landed, and only the tip can say so."""
-    from imagingdb_spark.ingest import SnapshotTarget
-    from imagingdb_spark.snapshots import snapshot_exists, snapshot_read
-
-    if isinstance(target, SnapshotTarget) and snapshot_exists(
-        target.table_dir
-    ):
-        return snapshot_read(spark, target.table_dir)
-    return fallback
-
-
 def insert_frames(
     datasets: DataFrame,
     frames_rows: DataFrame,
@@ -106,7 +91,7 @@ def insert_frames(
     MANY datasets at once: one DataSet row (frames=True) + one FramesGlobal
     row + N Frames rows per dataset, staged together and appended
     idempotently (the reference's single transaction → anti-join guard on
-    dataset_serial for all three tables, so a re-run converges).
+    each table's natural key, so a re-run converges).
 
     `datasets` columns: dataset_serial, description, microscope,
     parent_dataset_id, storage_dir, bit_depth, im_width, im_height,
@@ -114,153 +99,23 @@ def insert_frames(
     `frames_rows` columns: dataset_serial, channel_idx, slice_idx,
     time_idx, pos_idx, channel_name, file_name, sha256, metadata_json.
 
-    The per-dataset global summary (nbr_frames + countDistinct per index
-    dim, file_splitter.py:127-148) is computed here from frames_rows —
-    one grouped aggregation, map-side partial, instead of the reference's
-    imperative per-dataset loop. Surrogate ids are max(existing)+row_number
-    (catalog-sized window; single-writer batch semantics)."""
-    from imagingdb_spark.api import serial_to_date_time
+    The rows come from the builder insert_frames_atomic commits
+    (``_frames_upload``), run once against the caller's views, so both
+    paths hand out the same ids; each delta is then appended to its
+    `paths` entry (plain parquet, single-writer batch semantics). For
+    the all-or-nothing commit use insert_frames_atomic."""
+    from imagingdb_spark.snapcatalog import CatalogViews
 
     paths = paths or {}
-    # one row, hence one data_set and one frames_global id, per serial:
-    # a serial named twice would otherwise take two row_number ids and
-    # the commit's dropDuplicates keep one, leaving a gap
-    datasets = datasets.dropDuplicates(["dataset_serial"])
-    w = Window.partitionBy(F.lit(0)).orderBy("dataset_serial")  # catalog-batch-sized
-
-    # Row construction is BUILDER-shaped (a function of the table's
-    # current view): on the snapshot path the builder re-runs against the
-    # exact tip inside the commit retry, so surrogate-id allocation is
-    # serializable — two concurrent uploads of DIFFERENT serials no
-    # longer both bake max(id)+1 into colliding ids (round-7 review
-    # finding). Plain-parquet callers get the identical single-run
-    # semantics they always had.
-    def _ds_build(existing: DataFrame) -> DataFrame:
-        rows = datasets.select(
-            "dataset_serial",
-            "description",
-            "microscope",
-            F.lit(True).alias("frames"),
-            serial_to_date_time(F.col("dataset_serial")).alias("date_time"),
-            normalize_parent(F.col("parent_dataset_id")).alias("parent_serial"),
-        )
-        rows = resolve_parent_ids(rows, existing)
-        mx = existing.agg(F.coalesce(F.max("id"), F.lit(0))).collect()[0][0]
-        return rows.withColumn(
-            "id", (F.row_number().over(w) + F.lit(mx)).cast("long")
-        )
-
-    ds_fields = [
-        "dataset_serial", "description", "microscope", "frames",
-        "date_time", "parent_id", "id",
-    ]
-    new_ds = idempotent_append(
-        _ds_build, data_set, ["dataset_serial"], paths.get("data_set")
-    ).select(*ds_fields)
-
-    # serial -> ds id for EVERY batch serial, from post-commit truth:
-    # this run's delta plus rows already catalogued — including a parent
-    # row a TORN prior attempt committed before crashing. Without the
-    # healing term a replay's empty ds delta would starve the child
-    # builds and the dataset would stay frames-less forever (the torn
-    # window the reference's single Postgres transaction never has; here
-    # the repair is convergence, not atomicity). Batch-sized driver
-    # mapping, like the max-id scalars.
-    spark = datasets.sparkSession
-    batch_serials = [
-        r[0] for r in datasets.select("dataset_serial").distinct().collect()
-    ]
-    ds_view = _table_view(spark, data_set, paths.get("data_set"))
-    ds_ids = {
-        r["dataset_serial"]: r["id"]
-        for r in ds_view.filter(
-            F.col("dataset_serial").isin(batch_serials)
-        ).select("dataset_serial", "id").collect()
-    }
-    for r in new_ds.select("dataset_serial", "id").collect():
-        ds_ids[r["dataset_serial"]] = r["id"]
-    ds_map = values_df(
-        spark, list(ds_ids.items()), "dataset_serial string, dataset_id long"
+    views = CatalogViews(
+        {"data_set": data_set, "frames_global": frames_global, "frames": frames},
+        {},
     )
-
-    # A4: per-dataset global metadata from the actual frame rows
-    summary = frames_rows.groupBy("dataset_serial").agg(
-        F.count(F.lit(1)).alias("nbr_frames"),
-        F.countDistinct("slice_idx").alias("nbr_slices"),
-        F.countDistinct("channel_idx").alias("nbr_channels"),
-        F.countDistinct("time_idx").alias("nbr_timepoints"),
-        F.countDistinct("pos_idx").alias("nbr_positions"),
+    deltas = _frames_upload(views, datasets, frames_rows)
+    return tuple(
+        idempotent_append(deltas[n], views[n], keys, paths.get(n))
+        for n, keys in FRAMES_KEYS.items()
     )
-
-    def _fg_build(existing: DataFrame) -> DataFrame:
-        mx = existing.agg(F.coalesce(F.max("id"), F.lit(0))).collect()[0][0]
-        return (
-            datasets.join(summary, "dataset_serial")
-            .join(F.broadcast(ds_map), "dataset_serial")
-            .withColumn(
-                "id", (F.row_number().over(w) + F.lit(mx)).cast("long")
-            )
-            .select(
-                "id",
-                F.col("nbr_frames").cast("int").alias("nbr_frames"),
-                "im_width", "im_height",
-                F.col("nbr_slices").cast("int").alias("nbr_slices"),
-                F.col("nbr_channels").cast("int").alias("nbr_channels"),
-                "im_colors",
-                F.col("nbr_timepoints").cast("int").alias("nbr_timepoints"),
-                F.col("nbr_positions").cast("int").alias("nbr_positions"),
-                "bit_depth", "storage_dir", "metadata_json", "dataset_id",
-            )
-        )
-
-    new_fg = idempotent_append(
-        _fg_build, frames_global, ["dataset_id"], paths.get("frames_global")
-    )
-
-    # serial -> frames_global id from post-commit truth (delta + tip),
-    # same healing rule as ds_map: a replay whose fg rows already landed
-    # still maps the frames correctly. Materialized driver-side — batch-
-    # sized, and a lazy plan here would weave new_ds and new_fg lineage
-    # into the returned frames frame, tripping Spark's ambiguous-self-
-    # join detection when callers re-join the three outputs
-    fg_view = _table_view(spark, frames_global, paths.get("frames_global"))
-    fg_ids = {
-        r["dataset_id"]: r["id"]
-        for r in fg_view.filter(
-            F.col("dataset_id").isin(list(ds_ids.values()) or [-1])
-        ).select("dataset_id", "id").collect()
-    }
-    for r in new_fg.select("dataset_id", "id").collect():
-        fg_ids[r["dataset_id"]] = r["id"]
-    serial_to_fg = values_df(
-        spark,
-        [(s, fg_ids[d]) for s, d in ds_ids.items() if d in fg_ids],
-        "dataset_serial string, frames_global_id long",
-    )
-    wf = Window.partitionBy(F.lit(0)).orderBy("dataset_serial", "file_name")  # batch-sized
-
-    def _fr_build(existing: DataFrame) -> DataFrame:
-        mx = existing.agg(F.coalesce(F.max("id"), F.lit(0))).collect()[0][0]
-        return (
-            frames_rows.join(
-                serial_to_fg.select("dataset_serial", "frames_global_id"),
-                "dataset_serial",
-            )
-            .withColumn(
-                "id", (F.row_number().over(wf) + F.lit(mx)).cast("long")
-            )
-            .select(
-                "id", "channel_idx", "slice_idx", "time_idx", "pos_idx",
-                "channel_name", "file_name", "sha256", "metadata_json",
-                "frames_global_id",
-            )
-        )
-
-    new_fr = idempotent_append(
-        _fr_build, frames, ["frames_global_id", "file_name"],
-        paths.get("frames"),
-    )
-    return new_ds, new_fg, new_fr
 
 
 def _guard_legacy_catalog(catalog_dir: str) -> None:
@@ -276,8 +131,8 @@ def _guard_legacy_catalog(catalog_dir: str) -> None:
             raise ValueError(
                 f"{p} exists: this directory already holds a legacy "
                 "plain-parquet catalog; an atomic CatalogTarget commit "
-                "would shadow it. Use the per-table paths, or migrate "
-                "the catalog first."
+                "would shadow it. Move it into a fresh atomic catalog "
+                "with snapcatalog.migrate_catalog first."
             )
 
 
@@ -291,15 +146,19 @@ def _tip_view(spark: SparkSession, views, name: str) -> DataFrame:
 
 
 def _high_water(views, name: str) -> int:
-    """The id table ``name`` allocates above: the largest id any file of
-    the tip manifest the builder's views were resolved from has ever
-    held, from its group refs' ``id`` bounds (0 for an absent table).
-    A ``max(id)`` aggregate over the view stands in when a ref carries
-    no ``id`` bound (stats are best-effort; legacy flat manifests have
-    no refs)."""
+    """The id table ``name`` allocates above: 0 for a table absent from
+    the builder's views, else the largest id any file of the tip
+    manifest the views were resolved from has ever held, from its group
+    refs' ``id`` bounds. A ``max(id)`` aggregate over the view stands in
+    when there is no manifest (views a caller handed insert_frames /
+    insert_file), a ref carries no ``id`` bound (stats are best-effort)
+    or the manifest is legacy flat (no refs)."""
     from imagingdb_spark import snapshots as S
 
-    hw = S.manifest_upper_bound(views.manifests.get(name), "id")
+    if name not in views:
+        return 0
+    m = views.manifests.get(name)
+    hw = None if m is None else S.manifest_upper_bound(m, "id")
     if hw is None:
         hw = views[name].agg(F.coalesce(F.max("id"), F.lit(0))).collect()[0][0]
     return hw
@@ -396,45 +255,24 @@ def _allocate_upload(
     return ds_delta, local(child_rows, child_cols, "child_id"), child_ids
 
 
-def insert_frames_atomic(
-    datasets: DataFrame,
-    frames_rows: DataFrame,
-    catalog_dir: str,
-    bloom_columns: dict[str, list[str]] | None = None,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """insert_frames with the reference's FULL transaction scope: one
-    DataSet + one FramesGlobal + N Frames rows per dataset staged together
-    and published in ONE atomic catalog commit (snapcatalog.catalog_commit
-    — the single-hard-link analogue of db_operations.py:14-38's single
-    Postgres transaction). The torn windows insert_frames documents (a
-    crash between its three per-table commits) do not exist on this path:
-    readers resolving through the catalog tip see either none of the
-    upload's rows in any table or all of them in every table.
+FRAMES_KEYS = {
+    "data_set": ["dataset_serial"],
+    "frames_global": ["dataset_id"],
+    "frames": ["frames_global_id", "file_name"],
+}
+FILE_KEYS = {"data_set": ["dataset_serial"], "file_global": ["dataset_id"]}
 
-    The builder runs against the SAME pinned catalog-tip views inside the
-    commit retry loop, so the cross-table surrogate-id chain (ds id →
-    frames_global.dataset_id → frames.frames_global_id) is serializable
-    exactly like the per-table builder path — a losing racer rebuilds
-    every table from the winner's tip. Replay converges: all three deltas
-    anti-join empty and no new version publishes.
 
-    Ids: one lookup per commit attempt (``_allocate_upload``) finds which
-    serials already have data_set and frames_global rows; each serial
-    without one gets exactly one new id, in dataset_serial order, above
-    the table's high-water mark, and frames ids follow in
-    (dataset_serial, file_name) order. The high-water mark is the tip
-    manifest's ``id`` upper bound. While no live file carries a deletion
-    vector, that bound equals ``max(live id)``, so ids are ``max(live
-    id) + position``. After ``catalog_delete(mode="dv")`` hides the highest
-    rows of a file that stays live, the bound is above the live max:
-    ids then skip the hidden ones and are not reused, as the reference's
-    Postgres sequence behaves."""
-    from imagingdb_spark import snapcatalog as C
+def _frames_upload(
+    views, datasets: DataFrame, frames_rows: DataFrame
+) -> dict[str, DataFrame]:
+    """The frames upload builder: the data_set, frames_global and frames
+    deltas of ``datasets``/``frames_rows`` against ``views`` (a
+    ``snapcatalog.CatalogViews``). insert_frames_atomic commits it;
+    insert_frames runs it once against the caller's views."""
     from imagingdb_spark.catalog import IMAGING_SCHEMAS
 
-    _guard_legacy_catalog(catalog_dir)
     spark = datasets.sparkSession
-    wf = Window.partitionBy(F.lit(0)).orderBy("dataset_serial", "file_name")
     # size(collect_set) counts distinct values as countDistinct does, in
     # one aggregation: four countDistincts expand every frame row 5x and
     # shuffle twice
@@ -457,50 +295,97 @@ def insert_frames_atomic(
         "im_colors", "nbr_timepoints", "nbr_positions", "bit_depth",
         "storage_dir", "metadata_json",
     )
+    new_ds, new_fg, fg_ids = _allocate_upload(
+        views, batch, "frames_global",
+        IMAGING_SCHEMAS["frames_global"].fieldNames(),
+        frames=True, requires="nbr_frames",
+    )
+    serial_to_fg = values_df(
+        spark, sorted(fg_ids.items()),
+        "dataset_serial string, frames_global_id long",
+    )
+    wf = Window.partitionBy(F.lit(0)).orderBy("dataset_serial", "file_name")
+    new_fr = (
+        frames_rows.join(F.broadcast(serial_to_fg), "dataset_serial")
+        .join(
+            _tip_view(spark, views, "frames").select(
+                "frames_global_id", "file_name"
+            ),
+            ["frames_global_id", "file_name"],
+            "left_anti",
+        )
+        .withColumn(
+            "id",
+            (F.row_number().over(wf) + F.lit(_high_water(views, "frames")))
+            .cast("long"),
+        )
+        .select(
+            "id", "channel_idx", "slice_idx", "time_idx", "pos_idx",
+            "channel_name", "file_name", "sha256", "metadata_json",
+            "frames_global_id",
+        )
+    )
+    return {"data_set": new_ds, "frames_global": new_fg, "frames": new_fr}
 
-    def build(views) -> dict[str, DataFrame]:
-        new_ds, new_fg, fg_ids = _allocate_upload(
-            views, batch, "frames_global",
-            IMAGING_SCHEMAS["frames_global"].fieldNames(),
-            frames=True, requires="nbr_frames",
-        )
-        serial_to_fg = values_df(
-            spark, sorted(fg_ids.items()),
-            "dataset_serial string, frames_global_id long",
-        )
-        fr_view = _tip_view(spark, views, "frames")
-        mxr = _high_water(views, "frames")
-        new_fr = (
-            frames_rows.join(F.broadcast(serial_to_fg), "dataset_serial")
-            .join(
-                fr_view.select("frames_global_id", "file_name"),
-                ["frames_global_id", "file_name"],
-                "left_anti",
-            )
-            .withColumn(
-                "id", (F.row_number().over(wf) + F.lit(mxr)).cast("long")
-            )
-            .select(
-                "id", "channel_idx", "slice_idx", "time_idx", "pos_idx",
-                "channel_name", "file_name", "sha256", "metadata_json",
-                "frames_global_id",
-            )
-        )
-        return {
-            "data_set": new_ds,
-            "frames_global": new_fg,
-            "frames": new_fr,
-        }
 
+def _file_upload(views, new_files: DataFrame) -> dict[str, DataFrame]:
+    """The file upload builder: the data_set and file_global deltas of
+    ``new_files`` against ``views``, one data_set and one file_global id
+    per serial. insert_file_atomic commits it; ingest.insert_file runs it
+    once against the caller's views."""
+    from imagingdb_spark.catalog import IMAGING_SCHEMAS
+
+    batch = new_files.select(
+        "dataset_serial", "description", "microscope", "parent_dataset_id",
+        "storage_dir", "file_name", "metadata_json", "sha256",
+    )
+    new_ds, new_fgl, _ = _allocate_upload(
+        views, batch, "file_global",
+        IMAGING_SCHEMAS["file_global"].fieldNames(), frames=False,
+    )
+    return {"data_set": new_ds, "file_global": new_fgl}
+
+
+def insert_frames_atomic(
+    datasets: DataFrame,
+    frames_rows: DataFrame,
+    catalog_dir: str,
+    bloom_columns: dict[str, list[str]] | None = None,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """insert_frames with the reference's FULL transaction scope: one
+    DataSet + one FramesGlobal + N Frames rows per dataset staged together
+    and published in ONE atomic catalog commit (snapcatalog.catalog_commit
+    — the single-hard-link analogue of db_operations.py:14-38's single
+    Postgres transaction): readers resolving through the catalog tip see
+    either none of the upload's rows in any table or all of them in every
+    table.
+
+    The builder (``_frames_upload``) runs against the SAME pinned
+    catalog-tip views inside the commit retry loop, so the cross-table
+    surrogate-id chain (ds id → frames_global.dataset_id →
+    frames.frames_global_id) is serializable: a losing racer rebuilds
+    every table from the winner's tip. Replay converges: all three deltas
+    anti-join empty and no new version publishes.
+
+    Ids: one lookup per commit attempt (``_allocate_upload``) finds which
+    serials already have data_set and frames_global rows; each serial
+    without one gets exactly one new id, in dataset_serial order, above
+    the table's high-water mark, and frames ids follow in
+    (dataset_serial, file_name) order. The high-water mark is the tip
+    manifest's ``id`` upper bound. While no live file carries a deletion
+    vector, that bound equals ``max(live id)``, so ids are ``max(live
+    id) + position``. After ``catalog_delete(mode="dv")`` hides the highest
+    rows of a file that stays live, the bound is above the live max:
+    ids then skip the hidden ones and are not reused, as the reference's
+    Postgres sequence behaves."""
+    from imagingdb_spark import snapcatalog as C
+
+    _guard_legacy_catalog(catalog_dir)
     _, deltas = C.catalog_commit(
-        spark,
+        datasets.sparkSession,
         catalog_dir,
-        build,
-        keys={
-            "data_set": ["dataset_serial"],
-            "frames_global": ["dataset_id"],
-            "frames": ["frames_global_id", "file_name"],
-        },
+        lambda views: _frames_upload(views, datasets, frames_rows),
+        keys=FRAMES_KEYS,
         bloom_columns=bloom_columns,
     )
     return deltas["data_set"], deltas["frames_global"], deltas["frames"]
@@ -516,26 +401,13 @@ def insert_file_atomic(
     twin of insert_frames_atomic, with the same id allocation: one
     data_set and one file_global id per serial."""
     from imagingdb_spark import snapcatalog as C
-    from imagingdb_spark.catalog import IMAGING_SCHEMAS
 
     _guard_legacy_catalog(catalog_dir)
-    batch = new_files.select(
-        "dataset_serial", "description", "microscope", "parent_dataset_id",
-        "storage_dir", "file_name", "metadata_json", "sha256",
-    )
-
-    def build(views) -> dict[str, DataFrame]:
-        new_ds, new_fgl, _ = _allocate_upload(
-            views, batch, "file_global",
-            IMAGING_SCHEMAS["file_global"].fieldNames(), frames=False,
-        )
-        return {"data_set": new_ds, "file_global": new_fgl}
-
     _, deltas = C.catalog_commit(
         new_files.sparkSession,
         catalog_dir,
-        build,
-        keys={"data_set": ["dataset_serial"], "file_global": ["dataset_id"]},
+        lambda views: _file_upload(views, new_files),
+        keys=FILE_KEYS,
         bloom_columns=bloom_columns,
     )
     return deltas["data_set"], deltas["file_global"]
@@ -544,7 +416,7 @@ def insert_file_atomic(
 def upload_dataset(
     spark: SparkSession,
     manifest: DataFrame,
-    catalog: dict[str, DataFrame],
+    catalog: dict[str, DataFrame] | None,
     storage_root: str,
     upload_type: str = "frames",
     page_reader=None,
@@ -589,7 +461,12 @@ def upload_dataset(
     don't re-decode (the payload rides executor memory/disk for the
     duration of the upload batch — dataset-batch-sized, not corpus-sized),
     and catalog appends are anti-join guarded. `paths` (table name →
-    parquet path) persists the three catalog tables. `backend_factory`
+    parquet path) persists the catalog tables, appending to the views in
+    `catalog` (table name → DataFrame). A `paths` that is one
+    ingest.CatalogTarget instead commits every table in one atomic
+    catalog commit (insert_frames_atomic / insert_file_atomic), which
+    resolves its own views from the catalog tip: `catalog` is then
+    ignored and may be None. `backend_factory`
     overrides the blob store (the reference's local-vs-S3 storage_class
     switch, data_uploader.py:127-134): pass e.g.
     ``lambda: sinks.S3Backend(bucket, client_factory)`` and
@@ -626,8 +503,8 @@ def upload_dataset(
     )
     gm = dict(DEFAULT_GLOBAL_META)
     gm.update(global_meta or {})
-    # paths may be the per-table dict (plain parquet / SnapshotTarget) or
-    # ONE CatalogTarget routing every catalog insert through the atomic
+    # paths may be the per-table dict of plain parquet paths or ONE
+    # CatalogTarget routing every catalog insert through the atomic
     # multi-table commit (the reference's full transaction scope)
     from imagingdb_spark.ingest import CatalogTarget
 

@@ -1,15 +1,17 @@
 """Ingest: the reference's upload path (cli/data_uploader.py:61-256 →
 db_operations.insert_frames:150-223) re-expressed as batch dataflow.
 
-The reference's transactional staging (SQLAlchemy session, single commit,
-rollback on assert — db_operations.py:14-38) has no Parquet equivalent;
-the replacement contract is IDEMPOTENT APPEND: an anti-join on the natural
-key drops rows already present, so re-running a failed ingest converges
-instead of duplicating. On a bare parquet path this is weaker isolation
-than Postgres (concurrent writers can both pass the check); for tables
-that need the Postgres-grade guarantee, snapshots.snapshot_idempotent_append
-recomputes the anti-join against the exact snapshot version it commits
-onto, so concurrent overlapping ingests converge to exactly-once by key.
+The reference stages each upload in one Postgres transaction (SQLAlchemy
+session, single commit, rollback on assert — db_operations.py:14-38).
+Its twin here is the atomic catalog commit (``CatalogTarget`` →
+flows.insert_frames_atomic / insert_file_atomic → snapcatalog.catalog_commit):
+every table of an upload publishes in one link, and the anti-join on the
+natural key is recomputed against the exact catalog tip the commit lands
+on, so concurrent overlapping uploads converge to exactly-once by key.
+The plain-parquet path (insert_file, flows.insert_frames) keeps the
+weaker IDEMPOTENT APPEND contract: an anti-join on the natural key drops
+rows already present, so re-running a failed ingest converges instead of
+duplicating, but concurrent writers can both pass the check.
 """
 
 from __future__ import annotations
@@ -18,7 +20,6 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from imagingdb_spark.api import serial_to_date_time, validate_serial
-from imagingdb_spark.catalog import values_df
 
 
 def read_manifest(spark: SparkSession, path: str) -> DataFrame:
@@ -158,120 +159,41 @@ def insert_file(
     222-256 / file_splitter.py:82-93 — or via with_sha256 when the payload
     rides the DataFrame).
 
-    The reference's uniqueness assert + staged two-row transaction
-    (db_operations.py:247-252, session.add x2) becomes the idempotent
-    anti-join append on both tables; surrogate ids are allocated as
-    max(existing)+row_number — a 1-row driver-side agg on the
-    catalog-sized table, matching Postgres autoincrement semantics for
-    single-writer batch ingest. Returns the appended (data_set_rows,
-    file_global_rows)."""
-    from pyspark.sql import Window
+    The rows come from the builder flows.insert_file_atomic commits, run
+    once against the caller's views (the same ids: one data_set and one
+    file_global id per serial, above each table's max(id)); the
+    reference's uniqueness assert becomes the idempotent anti-join
+    append on both tables, written to the given paths. Returns the
+    appended (data_set_rows, file_global_rows)."""
+    from imagingdb_spark.flows import FILE_KEYS, _file_upload
+    from imagingdb_spark.snapcatalog import CatalogViews
 
-    # one data_set and one file_global id per serial (the gap rule
-    # flows.insert_frames documents)
-    new_files = new_files.dropDuplicates(["dataset_serial"])
-    w = Window.partitionBy(F.lit(0)).orderBy("dataset_serial")  # catalog-batch-sized: one task is fine
-
-    # builder-shaped so the snapshot path re-allocates ids against the
-    # exact committed-onto tip (see idempotent_append); plain path is
-    # single-run as before
-    def _ds_build(existing: DataFrame) -> DataFrame:
-        rows = new_files.select(
-            "dataset_serial",
-            "description",
-            F.col("microscope"),
-            F.lit(False).alias("frames"),
-            serial_to_date_time(F.col("dataset_serial")).alias("date_time"),
-            normalize_parent(F.col("parent_dataset_id")).alias("parent_serial"),
-        )
-        rows = resolve_parent_ids(rows, existing)
-        mx = existing.agg(F.coalesce(F.max("id"), F.lit(0))).collect()[0][0]
-        return rows.withColumn(
-            "id", (F.row_number().over(w) + F.lit(mx)).cast("long")
-        )
-
-    appended_ds = idempotent_append(
-        _ds_build, data_set, ["dataset_serial"], data_set_path
+    views = CatalogViews({"data_set": data_set, "file_global": file_global}, {})
+    deltas = _file_upload(views, new_files)
+    return (
+        idempotent_append(
+            deltas["data_set"], data_set, FILE_KEYS["data_set"], data_set_path
+        ),
+        idempotent_append(
+            deltas["file_global"], file_global, FILE_KEYS["file_global"],
+            file_global_path,
+        ),
     )
-
-    # serial -> ds id from post-commit truth (delta + tip): a TORN prior
-    # attempt's parent row still maps its file_global child, so a re-run
-    # repairs the crash window between the two commits (the healing rule
-    # flows.insert_frames documents). Batch-sized driver mapping.
-    from imagingdb_spark.flows import _table_view
-
-    spark = new_files.sparkSession
-    batch_serials = [
-        r[0] for r in new_files.select("dataset_serial").distinct().collect()
-    ]
-    ds_view = _table_view(spark, data_set, data_set_path)
-    ds_ids = {
-        r["dataset_serial"]: r["id"]
-        for r in ds_view.filter(
-            F.col("dataset_serial").isin(batch_serials)
-        ).select("dataset_serial", "id").collect()
-    }
-    for r in appended_ds.select("dataset_serial", "id").collect():
-        ds_ids[r["dataset_serial"]] = r["id"]
-    ds_map = values_df(
-        spark, list(ds_ids.items()), "dataset_serial string, dataset_id long"
-    )
-
-    def _fg_build(existing: DataFrame) -> DataFrame:
-        mx = existing.agg(F.coalesce(F.max("id"), F.lit(0))).collect()[0][0]
-        return (
-            new_files.select(
-                "dataset_serial", "storage_dir", "file_name",
-                "metadata_json", "sha256",
-            )
-            .join(F.broadcast(ds_map), "dataset_serial")
-            .withColumn(
-                "id", (F.row_number().over(w) + F.lit(mx)).cast("long")
-            )
-            .select(
-                "id", "storage_dir", "file_name", "metadata_json",
-                "dataset_id", "sha256",
-            )
-        )
-
-    appended_fg = idempotent_append(
-        _fg_build, file_global, ["dataset_id"], file_global_path
-    )
-    return appended_ds, appended_fg
-
-
-class SnapshotTarget:
-    """Marker routing a catalog append through the snapshot table format
-    (snapshots.snapshot_idempotent_append_delta) instead of a plain
-    parquet `mode("append")` write. Pass instances in the `paths` dict of
-    flows.upload_dataset / insert_frames / ingest.insert_file to get the
-    serializable, exactly-once-by-key guarantee the reference's Postgres
-    transaction scope provides (db_operations.py:14-38): the anti-join is
-    recomputed against the exact snapshot tip the commit publishes onto,
-    so two concurrent uploads of the same serial land exactly one
-    dataset. Surrogate-id ALLOCATION keeps single-writer-batch semantics
-    (max+row_number over the view the caller read) — the serializable
-    guard is on the natural key."""
-
-    def __init__(self, table_dir: str):
-        self.table_dir = table_dir
-
-    def __repr__(self) -> str:  # shows up in paths-dict debugging
-        return f"SnapshotTarget({self.table_dir!r})"
 
 
 class CatalogTarget:
     """Marker routing an upload's catalog inserts through ONE atomic
     multi-table commit (snapcatalog.catalog_commit) instead of
-    per-table snapshot commits. Pass an instance AS the whole ``paths``
-    argument of flows.upload_dataset / insert_frames / insert_file to get
-    the reference's full transaction scope (db_operations.py:14-38 — one
-    Postgres transaction spans data_set + frames_global + frames): a
+    plain-parquet appends. Pass an instance AS the whole ``paths``
+    argument of flows.upload_dataset to get the reference's full
+    transaction scope (db_operations.py:14-38 — one Postgres
+    transaction spans data_set + frames_global + frames): a
     crash at ANY point leaves readers (snapcatalog.catalog_read) seeing
     either no dataset or the whole dataset, because all tables' manifests
-    publish in one hard-link. The per-table SnapshotTarget path remains
-    for callers that want independent tables plus convergent torn-upload
-    repair.
+    publish in one hard-link. It is the only snapshot-backed write path;
+    a directory already holding per-table snapshot tables or legacy
+    ``<name>.parquet`` files is refused until snapcatalog.migrate_catalog
+    has moved it into a fresh catalog.
 
     ``bloom_columns`` (table → columns) additionally sets the bloom
     point-lookup index property on those catalog tables (blooms.py):
@@ -294,54 +216,27 @@ class CatalogTarget:
 
 
 def idempotent_append(
-    new_rows,  # DataFrame | Callable[[DataFrame], DataFrame]
+    new_rows: DataFrame,
     existing: DataFrame,
     key_cols: list[str],
-    target_path: str | SnapshotTarget | None = None,
+    target_path: str | None = None,
 ) -> DataFrame:
     """S7/D1: anti-join-guarded append — the uniqueness assert + staged
     commit (db_operations.py:111-117, 176-181, 14-38) as idempotent batch
     append. Returns the deduplicated new rows; writes parquet when
     target_path is given.
 
-    ``new_rows`` may be a BUILDER ``build(existing) -> DataFrame`` for
-    rows derived from the table's current state (surrogate-id allocation,
-    parent resolution). On the plain path it runs once against the passed
-    `existing`; on the snapshot path it re-runs against the EXACT tip
-    inside the commit retry loop, which is what makes id allocation
-    serializable — two concurrent ingests of different serials would
-    otherwise both bake max(id)+1 into their rows and commit colliding
-    surrogate ids.
-
-    target_path as a SnapshotTarget upgrades the append to the
-    serializable snapshot variant: the returned frame is then the delta
-    that actually COMMITTED (anti-join recomputed against the published-
-    onto tip inside the commit loop), not the pre-commit view — a
-    concurrent writer landing the same keys makes it empty, which is the
-    convergence downstream inserts need.
-
     Scale: the anti-join shuffles on the key unless the existing-keys side
     is small enough for AQE to broadcast; for a catalog keyed by
     dataset_serial that side is one row per dataset — always broadcastable.
-    dropDuplicates(key) guards against dup keys WITHIN the incoming batch."""
-    build = new_rows if callable(new_rows) else None
-    if isinstance(target_path, SnapshotTarget):
-        from imagingdb_spark.snapshots import snapshot_idempotent_append_delta
-
-        # fresh table (tip None): the builder sees the caller's typed
-        # empty/legacy view so schemas and max(id) still resolve
-        rows_arg = (
-            (lambda tip: build(tip if tip is not None else existing))
-            if build is not None
-            else new_rows
-        )
-        _, delta = snapshot_idempotent_append_delta(
-            existing.sparkSession, target_path.table_dir, rows_arg, key_cols
-        )
-        return delta
-    rows_df = build(existing) if build is not None else new_rows
-    deduped = rows_df.dropDuplicates(key_cols).join(
-        existing.select(*key_cols), key_cols, "left_anti"
+    dropDuplicates(key) guards against dup keys WITHIN the incoming batch.
+    The rows keep ``new_rows``' column order (a join on key names would
+    move the keys first), so a delta appended to a snapshot table carries
+    the table's schema."""
+    deduped = (
+        new_rows.dropDuplicates(key_cols)
+        .join(existing.select(*key_cols), key_cols, "left_anti")
+        .select(*new_rows.columns)
     )
     if target_path is not None:
         deduped.write.mode("append").parquet(target_path)

@@ -5,12 +5,11 @@ data_set + frames_global + frames (db_operations.py:14-38, 150-223): a
 crash at any point rolls the whole insert back, so readers never see a
 dataset without its frames. The per-table snapshot format
 (imagingdb_spark/snapshots.py) gives each table that guarantee
-individually, but a flow committing three tables one after another still
-has torn windows between the commits — healed convergently on replay
-(flows._table_view), yet visible to a reader who arrives in the window.
+individually; three per-table commits one after another would still
+leave windows in which a reader sees a dataset without its frames.
 
-This module lifts the snapshot manifest ONE level to close that window
-outright: a catalog commit is a single JSON object mapping table name →
+This module lifts the snapshot manifest ONE level to close those windows:
+a catalog commit is a single JSON object mapping table name →
 that table's full manifest (the same group-ref manifest shape
 snapshots._next_manifest produces), published with the same dot-temp +
 fsync + hard-link put-if-absent discipline as a per-table manifest. The
@@ -331,8 +330,7 @@ def catalog_commit(
         # refuse to SHADOW a standalone per-table snapshot table living in
         # the same directory: a first atomic commit would silently hide
         # its committed rows from every catalog reader and interleave new
-        # data files into its dirs — the caller must keep the per-table
-        # path or migrate explicitly
+        # data files into its dirs — the caller must migrate explicitly
         for name in keys:
             if name not in tables_base and S.snapshot_exists(
                 _table_dir(catalog_dir, name)
@@ -340,9 +338,8 @@ def catalog_commit(
                 raise ValueError(
                     f"{_table_dir(catalog_dir, name)} already holds a "
                     "standalone snapshot table; an atomic catalog commit "
-                    "would shadow its rows. Keep the per-table path "
-                    "(SnapshotTarget) or migrate the table into a catalog "
-                    "commit first."
+                    "would shadow its rows. Move it into a fresh atomic "
+                    "catalog with snapcatalog.migrate_catalog first."
                 )
         views = CatalogViews(
             {

@@ -1314,46 +1314,25 @@ def snapshot_idempotent_append(
 def snapshot_idempotent_append_delta(
     spark: SparkSession,
     table_dir: str,
-    new_rows,  # DataFrame | Callable[[DataFrame | None], DataFrame]
+    new_rows: DataFrame,
     key_cols: list[str],
     max_retries: int = 5,
 ) -> tuple[int, DataFrame]:
     """snapshot_idempotent_append, returning (tip version, the rows THIS
     call actually committed) — the committed delta read back from the
-    commit's own data files, which is what a composed ingest flow joins
-    its child-table rows against (flows.insert_frames): on a replay or a
-    lost same-key race the delta is the typed EMPTY frame, so downstream
-    inserts converge to nothing instead of re-deriving from the stale
-    pre-commit view.
-
-    ``new_rows`` may be a CALLABLE ``build(tip_df | None) -> DataFrame``:
-    it is re-invoked with the exact tip snapshot inside every retry, so
-    rows DERIVED from the table's current state — surrogate ids allocated
-    as max(existing)+row_number, parent-id resolution — recompute against
-    the tip the commit actually publishes onto. A static DataFrame only
-    serializes the natural key; two concurrent ingests of DIFFERENT keys
-    that both baked max(id)+1 into their rows would otherwise both
-    commit colliding ids (the round-7 review finding). With the builder,
-    the loser's retry rebuilds from the winner's tip and allocates past
-    it."""
-    build = new_rows if callable(new_rows) else None
-    if build is None:
-        static_rows = new_rows.dropDuplicates(key_cols)
-        schema = static_rows.schema
-        schema_json = _canon_schema_json(schema)
+    commit's own data files: on a replay or a lost same-key race it is
+    the typed EMPTY frame, so a caller chaining further appends off it
+    converges to nothing instead of re-deriving from the stale
+    pre-commit view. Rows derived from several tables' state (surrogate
+    ids, parent ids) belong in one snapcatalog.catalog_commit, whose
+    builder re-runs against the exact tip of every table."""
+    rows_df = new_rows.dropDuplicates(key_cols)
+    schema = rows_df.schema
+    schema_json = _canon_schema_json(schema)
     created: list[str] = []
     for _ in range(max_retries):
         vs = _versions(table_dir)
         parent = vs[-1] if vs else 0
-        existing = (
-            snapshot_read(spark, table_dir, parent) if parent else None
-        )
-        if build is not None:
-            rows_df = build(existing).dropDuplicates(key_cols)
-            schema = rows_df.schema
-            schema_json = _canon_schema_json(schema)
-        else:
-            rows_df = static_rows
         if parent:
             base = _read_manifest_raw(table_dir, parent)
             if "groups" not in base:
@@ -1363,7 +1342,9 @@ def snapshot_idempotent_append_delta(
                     f"append schema differs from {table_dir} tip v{parent}"
                 )
             deduped = rows_df.join(
-                existing.select(*key_cols), key_cols, "left_anti"
+                snapshot_read(spark, table_dir, parent).select(*key_cols),
+                key_cols,
+                "left_anti",
             )
         else:
             base = None

@@ -136,6 +136,9 @@ class TestUploadDownloadRoundTrip:
         )
         out = capsys.readouterr().out
         assert f"File info for {self.UP_SERIAL} inserted in DB" in out
+        # one atomic catalog commit, no per-table snapshot manifests
+        assert (cat / "_commits" / "v00000001.json").exists()
+        assert not list(cat.glob("*/_manifests/v*.json"))
 
         cli.query_data(login=str(login), project_id="CLI", spark=spark)
         assert capsys.readouterr().out.strip() == (
@@ -157,6 +160,56 @@ class TestUploadDownloadRoundTrip:
         # 4 frame PNGs + frames_meta.csv + global metadata json
         assert sum(n.endswith(".png") for n in got) == 4
         assert any("frames_meta" in n for n in got)
+
+
+class TestUploadRefusesPerTableCatalog:
+    """The CLI writes atomic catalogs only: a catalog_dir already holding
+    a standalone snapshot table or a legacy ``<name>.parquet`` table is
+    refused with a pointer to snapcatalog.migrate_catalog, and no catalog
+    commit is published."""
+
+    @pytest.mark.parametrize("legacy", ["snapshot", "parquet"])
+    def test_refused_and_nothing_published(self, spark, tmp_path, legacy):
+        from imagingdb_spark import snapcatalog as C
+        from imagingdb_spark import snapshots as S
+
+        cat = tmp_path / "catalog"
+        cat.mkdir()
+        serial, dt = SERIALS[0]
+        rows = spark.createDataFrame(
+            [(1, serial, "desc", "scope A", True, dt, None)], DATA_SET_SCHEMA
+        )
+        if legacy == "snapshot":
+            S.snapshot_commit(spark, str(cat / "data_set"), rows)
+        else:
+            rows.write.parquet(str(cat / "data_set.parquet"))
+        login = tmp_path / "login.json"
+        login.write_text(
+            json.dumps(
+                {"catalog_dir": str(cat), "storage_root": str(tmp_path / "store")}
+            )
+        )
+        src = tmp_path / "raw.lif"
+        src.write_bytes(b"raw-file-bytes")
+        manifest = tmp_path / "manifest.csv"
+        manifest.write_text(
+            "dataset_id,file_name,description,parent_dataset_id\n"
+            f"CLI-2024-03-01-12-00-00-0002,{src},CLI test,none\n"
+        )
+        config = tmp_path / "config.json"
+        config.write_text(
+            json.dumps({"upload_type": "file", "microscope": "scope-cli"})
+        )
+
+        with pytest.raises(ValueError, match="migrate_catalog"):
+            cli.upload_data(
+                csv=str(manifest), login=str(login), config=str(config),
+                spark=spark,
+            )
+        assert C.catalog_versions(str(cat)) == []
+        assert not (cat / "_commits").exists()
+        assert [r["dataset_serial"] for r in cli.load_catalog(
+            spark, str(cat))["data_set"].collect()] == [serial]
 
 
 class TestParseArgs:

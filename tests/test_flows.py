@@ -563,36 +563,28 @@ class TestBatchUpload:
 
 
 class TestSnapshotBackedCatalog:
-    """VERDICT r6 item 2: the composed upload flow on SNAPSHOT catalog
-    tables — the serializable guarantee the reference's transaction scope
-    provides (db_operations.py:14-38, staged inserts + single commit),
-    now end-to-end instead of only in the streaming jobs."""
+    """VERDICT r6 item 2: the composed upload flow on a snapshot-backed
+    catalog — the serializable guarantee the reference's transaction
+    scope provides (db_operations.py:14-38, staged inserts + single
+    commit), through one atomic catalog commit per upload."""
 
-    def _fresh(self, spark, tmp_path):
-        from imagingdb_spark.catalog import IMAGING_SCHEMAS
-        from imagingdb_spark.ingest import SnapshotTarget
+    @staticmethod
+    def _upload(spark, src_file, tmp_path, serial=UP_SERIAL):
+        from imagingdb_spark.ingest import CatalogTarget
 
-        cat = {n: spark.createDataFrame([], s)
-               for n, s in IMAGING_SCHEMAS.items()}
-        targets = {n: SnapshotTarget(str(tmp_path / "cat" / n))
-                   for n in IMAGING_SCHEMAS}
-        return cat, targets
-
-    def _upload(self, spark, src_file, tmp_path, cat, targets,
-                serial=UP_SERIAL):
         man = spark.createDataFrame(
             [(serial, src_file, "Testing", "none")],
             "dataset_serial string, file_name string, description string, "
             "parent_dataset_id string",
         )
         return flows.upload_dataset(
-            spark, man, cat,
+            spark, man, None,
             storage_root=str(tmp_path / "store"),
             upload_type="frames",
             page_reader=_fake_page_reader,
             global_meta={"im_width": 8, "im_height": 8,
                          "nbr_channels": 2, "nbr_slices": 3},
-            paths=targets,
+            paths=CatalogTarget(str(tmp_path / "cat")),
         )
 
     @pytest.fixture()
@@ -608,27 +600,23 @@ class TestSnapshotBackedCatalog:
     def test_upload_query_download_on_snapshot_tables(
         self, spark, src_file, tmp_path
     ):
-        from imagingdb_spark import snapshots as S
+        from imagingdb_spark import snapcatalog as C
+        from imagingdb_spark.catalog import IMAGING_SCHEMAS
 
-        cat, targets = self._fresh(spark, tmp_path)
-        out = self._upload(spark, src_file, tmp_path, cat, targets)
+        out = self._upload(spark, src_file, tmp_path)
         assert out["data_set"].count() == 1
         assert out["frames"].count() == 6
 
-        # the committed catalog IS snapshot tables: atomic versions exist
-        ds_dir = targets["data_set"].table_dir
-        assert S.snapshot_exists(ds_dir)
-        committed = {
-            n: S.snapshot_read(spark, targets[n].table_dir)
-            for n in ("data_set", "frames_global", "frames")
-        }
+        # the committed catalog IS snapshot tables, published in one commit
+        cat_dir = str(tmp_path / "cat")
+        assert C.catalog_versions(cat_dir) == [1]
+        committed = C.catalog_views(spark, cat_dir, IMAGING_SCHEMAS)
         assert committed["data_set"].count() == 1
         assert committed["frames"].count() == 6
 
-        # query + download against the snapshot-read catalog
+        # query + download against the catalog views
         dest = tmp_path / "dl"
         dest.mkdir()
-        committed["file_global"] = cat["file_global"]
         storage_dir, names = flows.download_dataset(
             spark, committed, UP_SERIAL, str(dest),
             storage_root=str(tmp_path / "store"),
@@ -636,32 +624,27 @@ class TestSnapshotBackedCatalog:
         assert len(names) == 6
 
         # replay converges: no new version, no new rows
-        v_before = S.snapshot_versions(ds_dir)[-1]["version"]
-        out2 = self._upload(
-            spark, src_file, tmp_path,
-            {**committed, "file_global": cat["file_global"]}, targets,
-        )
+        out2 = self._upload(spark, src_file, tmp_path)
         assert out2["data_set"].count() == 0
         assert out2["frames"].count() == 0
-        assert S.snapshot_versions(ds_dir)[-1]["version"] == v_before
+        assert C.catalog_versions(cat_dir) == [1]
 
     def test_concurrent_same_serial_uploads_land_one_dataset(
         self, spark, src_file, tmp_path
     ):
         """Two concurrent upload_dataset calls with the SAME serial: the
-        snapshot-pinned anti-join makes exactly one dataset land — the
-        race the plain-parquet anti-join documents it cannot close (both
+        tip-pinned anti-join makes exactly one dataset land — the race
+        the plain-parquet anti-join documents it cannot close (both
         writers can pass the check before either writes)."""
         import threading
 
-        from imagingdb_spark import snapshots as S
+        from imagingdb_spark import snapcatalog as C
 
-        cat, targets = self._fresh(spark, tmp_path)
         errs = []
 
         def run():
             try:
-                self._upload(spark, src_file, tmp_path, cat, targets)
+                self._upload(spark, src_file, tmp_path)
             except Exception as e:  # noqa: BLE001 — surfaced below
                 errs.append(e)
 
@@ -672,28 +655,26 @@ class TestSnapshotBackedCatalog:
             t.join()
         assert not errs, errs
 
-        ds = S.snapshot_read(spark, targets["data_set"].table_dir)
+        cat_dir = str(tmp_path / "cat")
+        ds = C.catalog_read(spark, cat_dir, "data_set")
         assert ds.count() == 1  # exactly one dataset row
         assert ds.collect()[0]["dataset_serial"] == UP_SERIAL
-        fg = S.snapshot_read(spark, targets["frames_global"].table_dir)
-        assert fg.count() == 1
-        fr = S.snapshot_read(spark, targets["frames"].table_dir)
-        assert fr.count() == 6  # one set of frames, not two
+        assert C.catalog_read(spark, cat_dir, "frames_global").count() == 1
+        # one set of frames, not two
+        assert C.catalog_read(spark, cat_dir, "frames").count() == 6
 
 
 class TestConcurrentDistinctSerials:
     """Round-7 review finding: two concurrent uploads of DIFFERENT serials
     used to both read max(id) from the same stale view and commit
-    colliding surrogate ids, silently cross-linking datasets. With
-    builder-shaped appends the loser's retry re-allocates against the
-    winner's tip."""
+    colliding surrogate ids, silently cross-linking datasets. The atomic
+    commit's builder re-runs against the winner's tip, so the loser
+    re-allocates above it."""
 
     def test_two_serials_land_with_distinct_ids(self, spark, tmp_path):
         import threading
 
-        from imagingdb_spark import snapshots as S
-        from imagingdb_spark.catalog import IMAGING_SCHEMAS
-        from imagingdb_spark.ingest import SnapshotTarget
+        from imagingdb_spark import snapcatalog as C
 
         payload = b"".join(
             bytes([c * 16 + z]) * PAGE_BYTES
@@ -701,29 +682,14 @@ class TestConcurrentDistinctSerials:
         )
         src = tmp_path / "stack.tif"
         src.write_bytes(payload)
-        cat = {n: spark.createDataFrame([], s)
-               for n, s in IMAGING_SCHEMAS.items()}
-        targets = {n: SnapshotTarget(str(tmp_path / "cat" / n))
-                   for n in IMAGING_SCHEMAS}
         serials = ["RACE-2005-06-09-20-00-00-1000",
                    "RACE-2005-06-09-20-00-00-2000"]
         errs = []
 
         def run(serial):
             try:
-                man = spark.createDataFrame(
-                    [(serial, str(src), "Testing", "none")],
-                    "dataset_serial string, file_name string, "
-                    "description string, parent_dataset_id string",
-                )
-                flows.upload_dataset(
-                    spark, man, cat,
-                    storage_root=str(tmp_path / "store"),
-                    upload_type="frames",
-                    page_reader=_fake_page_reader,
-                    global_meta={"im_width": 8, "im_height": 8,
-                                 "nbr_channels": 2, "nbr_slices": 3},
-                    paths=targets,
+                TestSnapshotBackedCatalog._upload(
+                    spark, str(src), tmp_path, serial
                 )
             except Exception as e:  # noqa: BLE001 — surfaced below
                 errs.append(e)
@@ -735,17 +701,17 @@ class TestConcurrentDistinctSerials:
             t.join()
         assert not errs, errs
 
-        ds = S.snapshot_read(spark, targets["data_set"].table_dir).collect()
+        cat_dir = str(tmp_path / "cat")
+        ds = C.catalog_read(spark, cat_dir, "data_set").collect()
         assert sorted(r["dataset_serial"] for r in ds) == sorted(serials)
         ids = [r["id"] for r in ds]
         assert len(set(ids)) == 2, f"surrogate ids collided: {ids}"
         # referential integrity: each frames_global row links to exactly
         # one dataset, and each dataset's frames resolve unambiguously
-        fg = S.snapshot_read(
-            spark, targets["frames_global"].table_dir).collect()
+        fg = C.catalog_read(spark, cat_dir, "frames_global").collect()
         assert sorted(r["dataset_id"] for r in fg) == sorted(ids)
         assert len({r["id"] for r in fg}) == 2
-        fr = S.snapshot_read(spark, targets["frames"].table_dir).collect()
+        fr = C.catalog_read(spark, cat_dir, "frames").collect()
         assert len(fr) == 12  # 6 frames per dataset, none cross-linked
         by_fg = {}
         for r in fr:
@@ -754,150 +720,25 @@ class TestConcurrentDistinctSerials:
         assert len({r["id"] for r in fr}) == 12  # frame ids unique too
 
 
-class TestTornUploadHealing:
-    """A crash BETWEEN the three per-table snapshot commits leaves a torn
-    catalog (the window the reference's single Postgres transaction never
-    has). The repair contract is CONVERGENCE: re-running the upload must
-    complete the missing children by mapping through the committed tips,
-    not skip them because the parent's anti-join came back empty."""
-
-    def _setup(self, spark, tmp_path):
-        from imagingdb_spark.catalog import IMAGING_SCHEMAS
-        from imagingdb_spark.ingest import SnapshotTarget
-
-        payload = b"".join(
-            bytes([c * 16 + z]) * PAGE_BYTES
-            for z in range(3) for c in range(2)
-        )
-        src = tmp_path / "stack.tif"
-        src.write_bytes(payload)
-        cat = {n: spark.createDataFrame([], s)
-               for n, s in IMAGING_SCHEMAS.items()}
-        targets = {n: SnapshotTarget(str(tmp_path / "cat" / n))
-                   for n in IMAGING_SCHEMAS}
-        man = spark.createDataFrame(
-            [(UP_SERIAL, str(src), "Testing", "none")],
-            "dataset_serial string, file_name string, description string, "
-            "parent_dataset_id string",
-        )
-        return cat, targets, man
-
-    def _upload(self, spark, man, cat, targets, tmp_path):
-        return flows.upload_dataset(
-            spark, man, cat,
-            storage_root=str(tmp_path / "store"),
-            upload_type="frames",
-            page_reader=_fake_page_reader,
-            global_meta={"im_width": 8, "im_height": 8,
-                         "nbr_channels": 2, "nbr_slices": 3},
-            paths=targets,
-        )
-
-    def _crash_after(self, monkeypatch, n_commits):
-        """Patch the flow's append seam to crash after n successful
-        table commits — the exact torn windows."""
-        from imagingdb_spark import flows as FL
-
-        real = FL.idempotent_append
-        calls = {"n": 0}
-
-        def crashing(*a, **kw):
-            if calls["n"] >= n_commits:
-                raise RuntimeError("simulated crash between table commits")
-            calls["n"] += 1
-            return real(*a, **kw)
-
-        monkeypatch.setattr(FL, "idempotent_append", crashing)
-        return lambda: monkeypatch.setattr(FL, "idempotent_append", real)
-
-    def _assert_complete(self, spark, targets):
-        from imagingdb_spark import snapshots as S
-
-        ds = S.snapshot_read(spark, targets["data_set"].table_dir).collect()
-        fg = S.snapshot_read(
-            spark, targets["frames_global"].table_dir).collect()
-        fr = S.snapshot_read(spark, targets["frames"].table_dir).collect()
-        assert len(ds) == 1 and len(fg) == 1 and len(fr) == 6
-        assert fg[0]["dataset_id"] == ds[0]["id"]
-        assert all(r["frames_global_id"] == fg[0]["id"] for r in fr)
-        assert fg[0]["nbr_frames"] == 6
-
-    def _reloaded(self, spark, targets):
-        """What a restarted process sees: the snapshot tips."""
-        from imagingdb_spark import snapshots as S
-        from imagingdb_spark.catalog import IMAGING_SCHEMAS
-
-        out = {}
-        for n, schema in IMAGING_SCHEMAS.items():
-            d = targets[n].table_dir
-            out[n] = (S.snapshot_read(spark, d) if S.snapshot_exists(d)
-                      else spark.createDataFrame([], schema))
-        return out
-
-    def test_crash_after_dataset_commit_heals_on_rerun(
-        self, spark, tmp_path, monkeypatch
-    ):
-        import pytest as _pytest
-
-        cat, targets, man = self._setup(spark, tmp_path)
-        restore = self._crash_after(monkeypatch, 1)  # ds lands, fg doesn't
-        with _pytest.raises(RuntimeError, match="simulated crash"):
-            self._upload(spark, man, cat, targets, tmp_path)
-        restore()
-        # torn: dataset exists, no frames_global / frames
-        from imagingdb_spark import snapshots as S
-        assert S.snapshot_read(
-            spark, targets["data_set"].table_dir).count() == 1
-        assert not S.snapshot_exists(targets["frames_global"].table_dir) or \
-            S.snapshot_read(
-                spark, targets["frames_global"].table_dir).count() == 0
-
-        out = self._upload(
-            spark, man, self._reloaded(spark, targets), targets, tmp_path)
-        assert out["data_set"].count() == 0          # parent already there
-        assert out["frames_global"].count() == 1     # child HEALED
-        assert out["frames"].count() == 6
-        self._assert_complete(spark, targets)
-
-    def test_crash_after_frames_global_commit_heals_on_rerun(
-        self, spark, tmp_path, monkeypatch
-    ):
-        import pytest as _pytest
-
-        cat, targets, man = self._setup(spark, tmp_path)
-        restore = self._crash_after(monkeypatch, 2)  # ds+fg land, frames don't
-        with _pytest.raises(RuntimeError, match="simulated crash"):
-            self._upload(spark, man, cat, targets, tmp_path)
-        restore()
-
-        out = self._upload(
-            spark, man, self._reloaded(spark, targets), targets, tmp_path)
-        assert out["data_set"].count() == 0
-        assert out["frames_global"].count() == 0
-        assert out["frames"].count() == 6            # frames HEALED
-        self._assert_complete(spark, targets)
-
-
 class TestCatalogSliceSkipping:
-    """cli.load_catalog_slice: a serial point lookup over a snapshot
-    catalog reads O(1) manifest files per table (uploads commit per
-    dataset, so footer stats isolate each dataset's files) and returns
-    exactly the full views filtered to that dataset."""
+    """cli.load_catalog_slice: a serial point lookup over a per-table
+    snapshot catalog reads O(1) manifest files per table (one append per
+    table and dataset, so footer stats isolate each dataset's files) and
+    returns exactly the full views filtered to that dataset."""
 
     def _setup(self, spark, tmp_path, n_datasets=3):
+        """One plain upload per dataset against the current tips, then
+        one snapshot_idempotent_append per table."""
+        from imagingdb_spark import snapshots as S
+        from imagingdb_spark.cli import load_catalog
+
         payload = b"".join(
             bytes([c * 16 + z]) * PAGE_BYTES
             for z in range(3) for c in range(2)
         )
         src = tmp_path / "stack.tif"
         src.write_bytes(payload)
-        from imagingdb_spark.catalog import IMAGING_SCHEMAS
-        from imagingdb_spark.ingest import SnapshotTarget
-
-        cat = {n: spark.createDataFrame([], s)
-               for n, s in IMAGING_SCHEMAS.items()}
-        targets = {n: SnapshotTarget(str(tmp_path / "cat" / n))
-                   for n in IMAGING_SCHEMAS}
+        cat_dir = str(tmp_path / "cat")
         serials = [
             f"TEST-2005-06-0{i + 1}-20-00-00-1000" for i in range(n_datasets)
         ]
@@ -907,22 +748,25 @@ class TestCatalogSliceSkipping:
                 "dataset_serial string, file_name string, description string, "
                 "parent_dataset_id string",
             )
-            flows.upload_dataset(
-                spark, man, cat,
+            out = flows.upload_dataset(
+                spark, man, load_catalog(spark, cat_dir),
                 storage_root=str(tmp_path / "store"),
                 upload_type="frames",
                 page_reader=_fake_page_reader,
                 global_meta={"im_width": 8, "im_height": 8,
                              "nbr_channels": 2, "nbr_slices": 3},
-                paths=targets,
             )
-        return str(tmp_path / "cat"), serials, targets
+            for name, keys in flows.FRAMES_KEYS.items():
+                S.snapshot_idempotent_append(
+                    spark, f"{cat_dir}/{name}", out[name], keys
+                )
+        return cat_dir, serials
 
     def test_slice_equals_filtered_full_and_prunes(self, spark, tmp_path):
         from imagingdb_spark import snapshots as S
         from imagingdb_spark.cli import load_catalog, load_catalog_slice
 
-        cat_dir, serials, targets = self._setup(spark, tmp_path)
+        cat_dir, serials = self._setup(spark, tmp_path)
         target = serials[1]
         full = load_catalog(spark, cat_dir)
         sl = load_catalog_slice(spark, cat_dir, target)
@@ -946,7 +790,7 @@ class TestCatalogSliceSkipping:
         # manifest-level evidence: the point lookup kept a strict subset
         # of the frames table's files (one upload's files, not three)
         plan = S.snapshot_scan_plan(
-            targets["frames"].table_dir, [("frames_global_id", "=", fg_id)]
+            f"{cat_dir}/frames", [("frames_global_id", "=", fg_id)]
         )
         assert plan["files_kept"] < plan["files_total"]
         assert plan["files_kept"] >= 1
@@ -954,7 +798,7 @@ class TestCatalogSliceSkipping:
     def test_missing_serial_falls_back_to_full_views(self, spark, tmp_path):
         from imagingdb_spark.cli import load_catalog_slice
 
-        cat_dir, serials, _ = self._setup(spark, tmp_path, n_datasets=1)
+        cat_dir, serials = self._setup(spark, tmp_path, n_datasets=1)
         sl = load_catalog_slice(
             spark, cat_dir, "TEST-2099-01-01-00-00-00-0001"
         )
@@ -963,39 +807,46 @@ class TestCatalogSliceSkipping:
         assert sl["frames"].count() == 6
 
 
+DS_DDL = (
+    "dataset_serial string, description string, microscope string, "
+    "parent_dataset_id string, storage_dir string, bit_depth string, "
+    "im_width int, im_height int, im_colors int, metadata_json string"
+)
+FRAMES_DDL = (
+    "dataset_serial string, channel_idx int, slice_idx int, time_idx int, "
+    "pos_idx int, channel_name string, file_name string, sha256 string, "
+    "metadata_json string"
+)
+FILES_DDL = (
+    "dataset_serial string, description string, microscope string, "
+    "parent_dataset_id string, storage_dir string, file_name string, "
+    "metadata_json string, sha256 string"
+)
+
+
 class TestDuplicateSerialIds:
     """A serial named twice in one batch gets ONE data_set id and one
-    frames_global (file_global) id on the plain and the SnapshotTarget
-    path, as on the atomic path: ids {1, 2}, no gap."""
+    frames_global (file_global) id on the plain path, as on the atomic
+    path: ids {1, 2}, no gap."""
 
     S0 = "DUPS-2008-04-01-12-00-00-0001"
     S1 = "DUPS-2008-04-02-12-00-00-0001"
 
     @staticmethod
-    def _catalog(spark, tmp_path, snapshot):
+    def _catalog(spark):
         from imagingdb_spark.catalog import IMAGING_SCHEMAS, empty_df
-        from imagingdb_spark.ingest import SnapshotTarget
 
-        cat = {n: empty_df(spark, s) for n, s in IMAGING_SCHEMAS.items()}
-        targets = (
-            {n: SnapshotTarget(str(tmp_path / "cat" / n)) for n in cat}
-            if snapshot
-            else {}
-        )
-        return cat, targets
+        return {n: empty_df(spark, s) for n, s in IMAGING_SCHEMAS.items()}
 
-    @pytest.mark.parametrize("snapshot", [False, True])
-    def test_frames_serial_named_twice(self, spark, tmp_path, snapshot):
-        cat, targets = self._catalog(spark, tmp_path, snapshot)
+    def test_frames_serial_named_twice(self, spark):
+        cat = self._catalog(spark)
         ds = spark.createDataFrame(
             [
                 (s, "dup", "scope9", "none", f"raw_frames/{s}", "uint16",
                  8, 8, 1, "{}")
                 for s in (self.S0, self.S1, self.S0)
             ],
-            "dataset_serial string, description string, microscope string, "
-            "parent_dataset_id string, storage_dir string, bit_depth string, "
-            "im_width int, im_height int, im_colors int, metadata_json string",
+            DS_DDL,
         )
         fr = spark.createDataFrame(
             [
@@ -1004,13 +855,10 @@ class TestDuplicateSerialIds:
                 for s in (self.S0, self.S1)
                 for z in range(3)
             ],
-            "dataset_serial string, channel_idx int, slice_idx int, "
-            "time_idx int, pos_idx int, channel_name string, file_name string, "
-            "sha256 string, metadata_json string",
+            FRAMES_DDL,
         )
         new_ds, new_fg, new_fr = flows.insert_frames(
             ds, fr, cat["data_set"], cat["frames_global"], cat["frames"],
-            targets,
         )
         assert sorted(
             (r["id"], r["dataset_serial"]) for r in new_ds.collect()
@@ -1023,11 +871,10 @@ class TestDuplicateSerialIds:
             (r["id"], r["frames_global_id"]) for r in new_fr.collect()
         ) == [(i, (i - 1) // 3 + 1) for i in range(1, 7)]
 
-    @pytest.mark.parametrize("snapshot", [False, True])
-    def test_file_serial_named_twice(self, spark, tmp_path, snapshot):
+    def test_file_serial_named_twice(self, spark):
         from imagingdb_spark.ingest import insert_file
 
-        cat, targets = self._catalog(spark, tmp_path, snapshot)
+        cat = self._catalog(spark)
         files = spark.createDataFrame(
             [
                 (s, "dup", "scope9", "none", f"raw_files/{s}", name, "{}",
@@ -1036,13 +883,10 @@ class TestDuplicateSerialIds:
                     (self.S0, "a.tif"), (self.S1, "c.tif"), (self.S0, "b.tif")
                 )
             ],
-            "dataset_serial string, description string, microscope string, "
-            "parent_dataset_id string, storage_dir string, file_name string, "
-            "metadata_json string, sha256 string",
+            FILES_DDL,
         )
         new_ds, new_fgl = insert_file(
-            files, cat["data_set"], cat["file_global"],
-            targets.get("data_set"), targets.get("file_global"),
+            files, cat["data_set"], cat["file_global"]
         )
         assert sorted(
             (r["id"], r["dataset_serial"]) for r in new_ds.collect()
@@ -1050,3 +894,117 @@ class TestDuplicateSerialIds:
         assert sorted(
             (r["id"], r["dataset_id"]) for r in new_fgl.collect()
         ) == [(1, 1), (2, 2)]
+
+
+class TestOneIdRule:
+    """insert_frames / ingest.insert_file run the builders their atomic
+    twins commit, so the same uploads get the same ids on both paths: a
+    first upload of two serials, then a batch mixing an existing serial
+    with two new ones, one of them named twice. The existing serial takes
+    no id, the repeated one takes one: no gap."""
+
+    S = [f"RULE-2008-04-0{i}-12-00-00-0001" for i in range(1, 5)]
+
+    def _batches(self):
+        s0, s1, s2, s3 = self.S
+        # (serial, parent serial): s2 names s0 as its parent
+        return [
+            [(s0, "none"), (s1, "none")],
+            [(s0, "none"), (s2, s0), (s3, "none"), (s3, "none")],
+        ]
+
+    @staticmethod
+    def _plain_views(spark, paths):
+        from imagingdb_spark.catalog import IMAGING_SCHEMAS, empty_df
+
+        return {
+            n: spark.read.parquet(p) if os.path.exists(p)
+            else empty_df(spark, IMAGING_SCHEMAS[n])
+            for n, p in paths.items()
+        }
+
+    @staticmethod
+    def _same_tables(spark, paths, cat_dir, cols):
+        from imagingdb_spark import snapcatalog as C
+
+        out = {}
+        for n, c in cols.items():
+            plain_df = spark.read.parquet(paths[n])
+            atomic_df = C.catalog_read(spark, cat_dir, n)
+            # same column order too, so a plain delta can seed a table
+            assert plain_df.columns == atomic_df.columns, n
+            plain = sorted(tuple(r[k] for k in c) for r in plain_df.collect())
+            atomic = sorted(tuple(r[k] for k in c) for r in atomic_df.collect())
+            assert plain == atomic, n
+            out[n] = plain
+        return out
+
+    def test_frames_paths_allocate_alike(self, spark, tmp_path):
+        paths = {n: str(tmp_path / f"{n}.parquet") for n in flows.FRAMES_KEYS}
+        cat_dir = str(tmp_path / "cat")
+        for batch in self._batches():
+            ds = spark.createDataFrame(
+                [
+                    (s, "rule", "scope9", parent, f"raw_frames/{s}",
+                     "uint16", 8, 8, 1, "{}")
+                    for s, parent in batch
+                ],
+                DS_DDL,
+            )
+            fr = spark.createDataFrame(
+                [
+                    (s, 0, z, 0, 0, "ch0", f"im_c000_z{z:03d}_t000_p000.png",
+                     f"{s}/{z}", "{}")
+                    for s in dict.fromkeys(s for s, _ in batch)
+                    for z in range(2)
+                ],
+                FRAMES_DDL,
+            )
+            v = self._plain_views(spark, paths)
+            flows.insert_frames(
+                ds, fr, v["data_set"], v["frames_global"], v["frames"], paths
+            )
+            flows.insert_frames_atomic(ds, fr, cat_dir)
+        got = self._same_tables(spark, paths, cat_dir, {
+            "data_set": ["id", "dataset_serial", "parent_id"],
+            "frames_global": ["id", "dataset_id", "nbr_frames"],
+            "frames": ["id", "frames_global_id", "file_name"],
+        })
+        assert got["data_set"] == [
+            (1, self.S[0], None), (2, self.S[1], None),
+            (3, self.S[2], 1), (4, self.S[3], None),
+        ]
+        assert got["frames_global"] == [(i, i, 2) for i in range(1, 5)]
+        assert [r[:2] for r in got["frames"]] == [
+            (i, (i + 1) // 2) for i in range(1, 9)
+        ]
+
+    def test_file_paths_allocate_alike(self, spark, tmp_path):
+        from imagingdb_spark.ingest import insert_file
+
+        paths = {n: str(tmp_path / f"{n}.parquet") for n in flows.FILE_KEYS}
+        cat_dir = str(tmp_path / "cat")
+        for batch in self._batches():
+            files = spark.createDataFrame(
+                [
+                    (s, "rule", "scope9", parent, f"raw_files/{s}",
+                     f"f{i}.tif", "{}", f"{s}/{i}")
+                    for i, (s, parent) in enumerate(batch)
+                ],
+                FILES_DDL,
+            )
+            v = self._plain_views(spark, paths)
+            insert_file(
+                files, v["data_set"], v["file_global"],
+                paths["data_set"], paths["file_global"],
+            )
+            flows.insert_file_atomic(files, cat_dir)
+        got = self._same_tables(spark, paths, cat_dir, {
+            "data_set": ["id", "dataset_serial", "parent_id"],
+            "file_global": ["id", "dataset_id"],
+        })
+        assert got["data_set"] == [
+            (1, self.S[0], None), (2, self.S[1], None),
+            (3, self.S[2], 1), (4, self.S[3], None),
+        ]
+        assert got["file_global"] == [(i, i) for i in range(1, 5)]

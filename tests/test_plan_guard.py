@@ -24,7 +24,6 @@ with the CLI audit and tools/gen_query_index.py).
 
 from __future__ import annotations
 
-import re
 import sys
 from pathlib import Path
 
@@ -38,19 +37,12 @@ from explain_audit import (  # noqa: E402
     unpartitioned_unbounded_windows,
 )
 
+from bench import HEADLINE  # noqa: E402
 from imagingdb_spark import registry  # noqa: E402
 
 PLANS = Path("/root/repo/tools/plans")
 SF_DIR = "/root/testdata/sf0.01"  # MUST match the archive's SF: join
 # strategy selection reads file-size stats, so counts are SF-dependent
-
-
-def _headline() -> list[str]:
-    """bench.py's HEADLINE list, parsed from source so the two can't
-    drift (bench.py has import-time side effects we don't want here)."""
-    src = Path("/root/repo/bench.py").read_text()
-    body = re.search(r"HEADLINE = \[(.*?)\]", src, re.S).group(1)
-    return re.findall(r'"([^"]+)"', body)
 
 
 def _hazards(plan: str) -> list[str]:
@@ -75,7 +67,7 @@ class TestArchiveClean:
         assert not failures, failures
 
     def test_headline_queries_have_archived_plans(self):
-        missing = [q for q in _headline() if not (PLANS / f"{q}.txt").exists()]
+        missing = [q for q in HEADLINE if not (PLANS / f"{q}.txt").exists()]
         assert not missing, missing
 
 
@@ -84,7 +76,7 @@ def live_plans(spark):
     """Formatted plan for every headline query, built once."""
     registry.load_all()
     out = {}
-    for name in _headline():
+    for name in HEADLINE:
         df = registry.QUERIES[name](spark, SF_DIR)
         out[name] = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"

@@ -1,10 +1,9 @@
 """Catalog-level atomic multi-table commits (imagingdb_spark/snapcatalog.py):
 the reference's full transaction scope — one Postgres transaction spanning
 data_set + frames_global + frames (db_operations.py:14-38, 150-223) — as a
-single hard-link publish over snapshot-table manifests. The per-table torn
-windows TestTornUploadHealing pins (kept as regression tests for the
-SnapshotTarget path) are UNREACHABLE here: a crash at any point leaves
-catalog readers seeing either no dataset or the whole dataset."""
+single hard-link publish over snapshot-table manifests: a crash at any
+point leaves catalog readers seeing either no dataset or the whole
+dataset, never a dataset without its frames."""
 
 from __future__ import annotations
 
@@ -490,11 +489,10 @@ class TestAtomicUpload:
         assert landed == 1  # exactly one writer's delta is non-empty
 
     def test_migrate_per_table_catalog_to_atomic(self, spark, tmp_path):
-        """migrate_catalog: an upload made onto per-table SnapshotTargets
-        moves into a fresh atomic catalog with identical content, uploads
-        continue there atomically, and the source stays intact."""
+        """migrate_catalog: an upload appended to per-table snapshot
+        tables moves into a fresh atomic catalog with identical content,
+        uploads continue there atomically, and the source stays intact."""
         from imagingdb_spark.catalog import IMAGING_SCHEMAS
-        from imagingdb_spark.ingest import SnapshotTarget
 
         src_dir = str(tmp_path / "old")
         src = _src_file(tmp_path)
@@ -506,16 +504,18 @@ class TestAtomicUpload:
         cat = {
             n: spark.createDataFrame([], s) for n, s in IMAGING_SCHEMAS.items()
         }
-        flows.upload_dataset(
+        out = flows.upload_dataset(
             spark, man, cat,
             storage_root=str(tmp_path / "store"),
             upload_type="frames",
             page_reader=_fake_page_reader,
             global_meta={"im_width": 8, "im_height": 8,
                          "nbr_channels": 2, "nbr_slices": 3},
-            paths={n: SnapshotTarget(f"{src_dir}/{n}")
-                   for n in IMAGING_SCHEMAS},
         )
+        for name, keys in flows.FRAMES_KEYS.items():
+            S.snapshot_idempotent_append(
+                spark, f"{src_dir}/{name}", out[name], keys
+            )
         dest = str(tmp_path / "new")
         keys = {
             "data_set": ["dataset_serial"],
@@ -529,8 +529,6 @@ class TestAtomicUpload:
         assert C.catalog_read(spark, dest, "frames").count() == 6
         assert C.catalog_read(spark, dest, "file_global").count() == 0
         # source untouched
-        from imagingdb_spark import snapshots as S
-
         assert S.snapshot_read(spark, f"{src_dir}/frames").count() == 6
         # uploads continue on the atomic catalog
         out = _upload(spark, src, tmp_path, dest, serial=UP_SERIAL2)

@@ -24,6 +24,7 @@ import time
 
 sys.path.insert(0, "/root/repo")
 
+from bench import HEADLINE
 from imagingdb_spark import registry
 from imagingdb_spark.session import get_spark
 
@@ -37,7 +38,7 @@ def main() -> None:
     args = ap.parse_args()
 
     registry.load_all()
-    names = args.queries or _headline()
+    names = args.queries or HEADLINE
     spark = get_spark("profile")
     sc = spark.sparkContext
 
@@ -82,15 +83,6 @@ def main() -> None:
             file=sys.stderr,
         )
     print(json.dumps({"sink": args.sink, "sf": args.sf, "queries": out}))
-
-
-def _headline() -> list[str]:
-    import re
-    from pathlib import Path
-
-    src = Path("/root/repo/bench.py").read_text()
-    body = re.search(r"HEADLINE = \[(.*?)\]", src, re.S).group(1)
-    return re.findall(r'"([^"]+)"', body)
 
 
 if __name__ == "__main__":
