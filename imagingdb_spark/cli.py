@@ -5,8 +5,9 @@ as one argparse program with subcommands over the Spark/Parquet engine.
 The reference's ``--login`` JSON holds Postgres credentials validated
 against CREDENTIALS_SCHEMA (utils/db_utils.py:25-38); the Spark-native
 twin is a login JSON validated against LOGIN_SCHEMA below: the catalog is
-a directory of parquet tables, the blob store a filesystem/objectstore
-root — same one-file handle to "where the data lives", no secrets.
+an atomic snapshot catalog directory (snapcatalog.py), the blob store a
+filesystem/objectstore root — same one-file handle to "where the data
+lives", no secrets.
 
 Output contracts match the reference's golden stdout tests verbatim
 (tests/cli/query_data_tests.py:106-131: the count line + enumerated
@@ -17,14 +18,12 @@ from __future__ import annotations
 
 import argparse
 import json
-import sys
 from datetime import datetime
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
 from imagingdb_spark import api, flows, ingest
-from imagingdb_spark.catalog import IMAGING_SCHEMAS, empty_df
+from imagingdb_spark.catalog import IMAGING_SCHEMAS
 from imagingdb_spark.jsonio import CONFIG_SCHEMA
 from imagingdb_spark.session import get_spark
 
@@ -70,32 +69,19 @@ def assert_date_order(start_date: str, end_date: str) -> None:
 
 
 def load_catalog(spark: SparkSession, catalog_dir: str) -> dict[str, DataFrame]:
-    """Read the four catalog tables. An ATOMIC catalog (what this CLI
-    writes, via ingest.CatalogTarget — one multi-table commit object per
-    upload) resolves all four tables from ONE catalog tip, so the
-    returned views are mutually consistent by construction. Older
-    per-table catalogs keep reading: standalone ``<catalog_dir>/<name>``
-    snapshot tables snapshot-isolated, legacy plain-parquet
-    ``<catalog_dir>/<name>.parquet`` files as before; a table that
-    exists in neither form (fresh catalog) is an empty DataFrame with
-    the declared schema — the `Base.metadata.create_all` analogue
-    (db_operations.py:29)."""
+    """Read the four catalog tables of the atomic catalog at
+    ``catalog_dir`` (what this CLI writes: one multi-table commit object
+    per upload) from ONE catalog tip, so the returned views are mutually
+    consistent by construction. A table the tip does not hold (fresh
+    catalog) is an empty DataFrame with the declared schema — the
+    `Base.metadata.create_all` analogue (db_operations.py:29). A
+    directory holding per-table snapshot tables or legacy
+    ``<name>.parquet`` files is refused: move it into a fresh catalog
+    with snapcatalog.migrate_catalog first."""
     from imagingdb_spark import snapcatalog as C
-    from imagingdb_spark import snapshots as S
 
-    if C.catalog_exists(catalog_dir):
-        return C.catalog_views(spark, catalog_dir, IMAGING_SCHEMAS)
-    out: dict[str, DataFrame] = {}
-    for name, schema in IMAGING_SCHEMAS.items():
-        p = Path(catalog_dir) / f"{name}.parquet"
-        snap = Path(catalog_dir) / name
-        if p.exists():
-            out[name] = spark.read.schema(schema).parquet(str(p))
-        elif S.snapshot_exists(str(snap)):
-            out[name] = S.snapshot_read(spark, str(snap))
-        else:
-            out[name] = empty_df(spark, schema)
-    return out
+    C.refuse_per_table_catalog(catalog_dir, IMAGING_SCHEMAS)
+    return C.catalog_views(spark, catalog_dir, IMAGING_SCHEMAS)
 
 
 def load_catalog_slice(
@@ -103,7 +89,7 @@ def load_catalog_slice(
 ) -> dict[str, DataFrame]:
     """Pruned catalog views containing exactly ONE dataset's rows — the
     data-skipping fast path for serial point lookups (download, frame
-    queries). Uploads commit per dataset, so every snapshot data file
+    queries). Uploads commit per dataset, so every catalog data file
     holds one dataset's rows and its footer stats bound the serial / the
     surrogate ids tightly: the manifest prunes to O(1) files per table no
     matter how many datasets the catalog holds (the reference's analogue
@@ -113,69 +99,44 @@ def load_catalog_slice(
     Resolution is a two-hop driver-side walk (each hop collects the
     dataset-sized key set of the PREVIOUS table — 1 row per hop, the
     documented collect exception): serial → data_set.id → frames_global /
-    file_global by dataset_id → frames by frames_global_id. Legacy
-    plain-parquet tables fall back to the same filters without pruning;
-    results are always exactly the full view filtered to the dataset.
-    Full (unpruned) views are built LAZILY — only for tables that need a
-    fallback — so the found-serial fast path never resolves any table's
-    full manifest file list (at ~800k entries that resolution is itself
-    the cost this function exists to avoid)."""
+    file_global by dataset_id → frames by frames_global_id. Every table
+    resolves from the SAME pinned catalog tip; results are always
+    exactly the full view filtered to the dataset. An absent serial gets
+    the full views of that tip, so the caller's own error surface fires.
+    Per-table catalog directories are refused as by load_catalog."""
     from imagingdb_spark import snapcatalog as C
-    from imagingdb_spark import snapshots as S
 
-    atomic = C.catalog_exists(catalog_dir)
-    commit = C.catalog_manifest(catalog_dir) if atomic else None
+    C.refuse_per_table_catalog(catalog_dir, IMAGING_SCHEMAS)
+    try:
+        commit = C.catalog_manifest(catalog_dir)
+    except FileNotFoundError:  # fresh catalog: every table typed empty
+        commit = {"tables": {}}
 
-    def _full(name: str) -> DataFrame:
-        if atomic:
-            return C.read_table_at(
-                spark, catalog_dir, commit, name,
-                schema=IMAGING_SCHEMAS[name],
-            )
-        p = Path(catalog_dir) / f"{name}.parquet"
-        snap = Path(catalog_dir) / name
-        if p.exists():
-            return spark.read.schema(IMAGING_SCHEMAS[name]).parquet(str(p))
-        if S.snapshot_exists(str(snap)):
-            return S.snapshot_read(spark, str(snap))
-        return empty_df(spark, IMAGING_SCHEMAS[name])
-
-    def _pruned(name: str, where: list) -> DataFrame:
-        if atomic:
-            # pruned read against the SAME pinned catalog tip every
-            # other table of this slice resolves from
-            return C.read_table_at(
-                spark, catalog_dir, commit, name, where,
-                schema=IMAGING_SCHEMAS[name],
-            )
-        snap = Path(catalog_dir) / name
-        legacy = Path(catalog_dir) / f"{name}.parquet"
-        if not legacy.exists() and S.snapshot_exists(str(snap)):
-            return S.snapshot_read(spark, str(snap), where=where)
-        # same semantics, no pruning — reuse the snapshot module's
-        # triple→Column builder (F.col/F.lit, no string interpolation)
-        return _full(name).filter(S.where_to_column(where))
+    def table(name: str, where: list | None = None) -> DataFrame:
+        return C.read_table_at(
+            spark, catalog_dir, commit, name, where,
+            schema=IMAGING_SCHEMAS[name],
+        )
 
     out: dict[str, DataFrame] = {}
-    out["data_set"] = _pruned(
+    out["data_set"] = table(
         "data_set", [("dataset_serial", "=", dataset_serial)]
     )
     ds_ids = [r["id"] for r in out["data_set"].select("id").collect()]
     if len(ds_ids) != 1:
         # absent or (impossibly) duplicated serial: hand back the full
         # views so the caller's own error surface fires unchanged
-        return load_catalog(spark, catalog_dir)
-    out["frames_global"] = _pruned(
+        return {name: table(name) for name in IMAGING_SCHEMAS}
+    out["frames_global"] = table(
         "frames_global", [("dataset_id", "=", ds_ids[0])]
     )
-    out["file_global"] = _pruned(
+    out["file_global"] = table(
         "file_global", [("dataset_id", "=", ds_ids[0])]
     )
     fg_ids = [r["id"] for r in out["frames_global"].select("id").collect()]
-    out["frames"] = (
-        _pruned("frames", [("frames_global_id", "=", fg_ids[0])])
-        if len(fg_ids) == 1
-        else _full("frames")
+    out["frames"] = table(
+        "frames",
+        [("frames_global_id", "=", fg_ids[0])] if len(fg_ids) == 1 else None,
     )
     return out
 
@@ -228,11 +189,11 @@ def upload_data(
     spark: SparkSession | None = None,
 ) -> None:
     """cli/data_uploader.py:61-256 as a CLI: manifest CSV + upload config
-    → flows.upload_dataset, catalog committed atomically
-    (ingest.CatalogTarget) under the login's catalog_dir, blobs under
-    its storage_root. A catalog_dir holding per-table snapshot tables
-    or legacy ``<name>.parquet`` files is refused: move it into a fresh
-    catalog with snapcatalog.migrate_catalog first. Prints one line per
+    → flows.upload_dataset, catalog committed atomically under the
+    login's catalog_dir, blobs under its storage_root. A catalog_dir
+    holding per-table snapshot tables or legacy ``<name>.parquet`` files
+    is refused before any blob is written: move it into a fresh catalog
+    with snapcatalog.migrate_catalog first. Prints one line per
     uploaded dataset (the reference's per-row prints,
     data_uploader.py:234-254)."""
     cfg = read_login(login)
@@ -244,15 +205,13 @@ def upload_data(
     spark = spark or get_spark("imagingdb-cli")
     manifest = ingest.read_manifest(spark, csv)
     upload_type = conf["upload_type"].lower()
-    # the atomic commit resolves its own views from the catalog tip
     result = flows.upload_dataset(
         spark,
         manifest,
-        None,
+        cfg["catalog_dir"],
         storage_root=cfg["storage_root"],
         upload_type="frames" if upload_type == "frames" else "file",
         microscope=conf.get("microscope"),
-        paths=ingest.CatalogTarget(cfg["catalog_dir"]),
         overwrite=overwrite,
     )
     for r in result["data_set"].select("dataset_serial").collect():

@@ -5,9 +5,8 @@ switching from the reference actually calls.
 - query flow   → api.get_datasets (already one function; SURVEY §3.1)
 - download flow → download_dataset (cli/data_downloader.py:106-229)
 - upload flow   → upload_dataset: insert_frames_atomic / insert_file_atomic
-  (one atomic catalog commit, db_operations.py:14-38, 150-274), or their
-  plain-parquet twins insert_frames / ingest.insert_file, which run the
-  same builders; splitters live in sources.py.
+  (one atomic catalog commit, db_operations.py:14-38, 150-274);
+  splitters live in sources.py.
 
 Error parity: invalid id → AssertionError("Invalid ID…"); existing dest
 dir → FileExistsError; mixed channel types → TypeError; missing dataset →
@@ -31,8 +30,6 @@ from imagingdb_spark.api import (
 from imagingdb_spark.catalog import values_df
 from imagingdb_spark.ingest import (
     frame_file_name,
-    idempotent_append,
-    insert_file,
     normalize_parent,
     resolve_parent_ids,
     validate_manifest,
@@ -79,63 +76,6 @@ def coerce_channels(channels):
         return channels
 
 
-def insert_frames(
-    datasets: DataFrame,
-    frames_rows: DataFrame,
-    data_set: DataFrame,
-    frames_global: DataFrame,
-    frames: DataFrame,
-    paths: dict[str, str] | None = None,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """`insert_frames` (db_operations.py:150-223) as batch dataflow over
-    MANY datasets at once: one DataSet row (frames=True) + one FramesGlobal
-    row + N Frames rows per dataset, staged together and appended
-    idempotently (the reference's single transaction → anti-join guard on
-    each table's natural key, so a re-run converges).
-
-    `datasets` columns: dataset_serial, description, microscope,
-    parent_dataset_id, storage_dir, bit_depth, im_width, im_height,
-    im_colors, metadata_json.
-    `frames_rows` columns: dataset_serial, channel_idx, slice_idx,
-    time_idx, pos_idx, channel_name, file_name, sha256, metadata_json.
-
-    The rows come from the builder insert_frames_atomic commits
-    (``_frames_upload``), run once against the caller's views, so both
-    paths hand out the same ids; each delta is then appended to its
-    `paths` entry (plain parquet, single-writer batch semantics). For
-    the all-or-nothing commit use insert_frames_atomic."""
-    from imagingdb_spark.snapcatalog import CatalogViews
-
-    paths = paths or {}
-    views = CatalogViews(
-        {"data_set": data_set, "frames_global": frames_global, "frames": frames},
-        {},
-    )
-    deltas = _frames_upload(views, datasets, frames_rows)
-    return tuple(
-        idempotent_append(deltas[n], views[n], keys, paths.get(n))
-        for n, keys in FRAMES_KEYS.items()
-    )
-
-
-def _guard_legacy_catalog(catalog_dir: str) -> None:
-    """An atomic catalog commit must never SHADOW an existing catalog in
-    the same directory: catalog readers would silently lose every
-    pre-existing dataset (snapcatalog guards the per-table snapshot form
-    itself; this guards the legacy ``<name>.parquet`` form)."""
-    from imagingdb_spark.catalog import IMAGING_SCHEMAS
-
-    for name in IMAGING_SCHEMAS:
-        p = os.path.join(catalog_dir, f"{name}.parquet")
-        if os.path.exists(p):
-            raise ValueError(
-                f"{p} exists: this directory already holds a legacy "
-                "plain-parquet catalog; an atomic CatalogTarget commit "
-                "would shadow it. Move it into a fresh atomic catalog "
-                "with snapcatalog.migrate_catalog first."
-            )
-
-
 def _tip_view(spark: SparkSession, views, name: str) -> DataFrame:
     """A builder's view of table ``name``; a typed empty frame when the
     catalog tip has no such table yet."""
@@ -146,19 +86,17 @@ def _tip_view(spark: SparkSession, views, name: str) -> DataFrame:
 
 
 def _high_water(views, name: str) -> int:
-    """The id table ``name`` allocates above: 0 for a table absent from
-    the builder's views, else the largest id any file of the tip
-    manifest the views were resolved from has ever held, from its group
-    refs' ``id`` bounds. A ``max(id)`` aggregate over the view stands in
-    when there is no manifest (views a caller handed insert_frames /
-    insert_file), a ref carries no ``id`` bound (stats are best-effort)
-    or the manifest is legacy flat (no refs)."""
+    """The id table ``name`` allocates above: 0 for a table the catalog
+    tip does not hold yet, else the largest id any file of the tip
+    manifest has ever held, from its group refs' ``id`` bounds. A
+    ``max(id)`` aggregate over the view stands in when a ref carries no
+    ``id`` bound (stats are best-effort) or the manifest is legacy flat
+    (no refs)."""
     from imagingdb_spark import snapshots as S
 
     if name not in views:
         return 0
-    m = views.manifests.get(name)
-    hw = None if m is None else S.manifest_upper_bound(m, "id")
+    hw = S.manifest_upper_bound(views.manifests[name], "id")
     if hw is None:
         hw = views[name].agg(F.coalesce(F.max("id"), F.lit(0))).collect()[0][0]
     return hw
@@ -268,8 +206,7 @@ def _frames_upload(
 ) -> dict[str, DataFrame]:
     """The frames upload builder: the data_set, frames_global and frames
     deltas of ``datasets``/``frames_rows`` against ``views`` (a
-    ``snapcatalog.CatalogViews``). insert_frames_atomic commits it;
-    insert_frames runs it once against the caller's views."""
+    ``snapcatalog.CatalogViews``), as insert_frames_atomic commits it."""
     from imagingdb_spark.catalog import IMAGING_SCHEMAS
 
     spark = datasets.sparkSession
@@ -331,8 +268,7 @@ def _frames_upload(
 def _file_upload(views, new_files: DataFrame) -> dict[str, DataFrame]:
     """The file upload builder: the data_set and file_global deltas of
     ``new_files`` against ``views``, one data_set and one file_global id
-    per serial. insert_file_atomic commits it; ingest.insert_file runs it
-    once against the caller's views."""
+    per serial, as insert_file_atomic commits it."""
     from imagingdb_spark.catalog import IMAGING_SCHEMAS
 
     batch = new_files.select(
@@ -352,13 +288,20 @@ def insert_frames_atomic(
     catalog_dir: str,
     bloom_columns: dict[str, list[str]] | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """insert_frames with the reference's FULL transaction scope: one
+    """`insert_frames` (db_operations.py:150-223) as batch dataflow over
+    MANY datasets at once, with the reference's FULL transaction scope: one
     DataSet + one FramesGlobal + N Frames rows per dataset staged together
     and published in ONE atomic catalog commit (snapcatalog.catalog_commit
     — the single-hard-link analogue of db_operations.py:14-38's single
     Postgres transaction): readers resolving through the catalog tip see
     either none of the upload's rows in any table or all of them in every
     table.
+
+    `datasets` columns: dataset_serial, description, microscope,
+    parent_dataset_id, storage_dir, bit_depth, im_width, im_height,
+    im_colors, metadata_json.
+    `frames_rows` columns: dataset_serial, channel_idx, slice_idx,
+    time_idx, pos_idx, channel_name, file_name, sha256, metadata_json.
 
     The builder (``_frames_upload``) runs against the SAME pinned
     catalog-tip views inside the commit retry loop, so the cross-table
@@ -380,7 +323,6 @@ def insert_frames_atomic(
     Postgres sequence behaves."""
     from imagingdb_spark import snapcatalog as C
 
-    _guard_legacy_catalog(catalog_dir)
     _, deltas = C.catalog_commit(
         datasets.sparkSession,
         catalog_dir,
@@ -396,13 +338,17 @@ def insert_file_atomic(
     catalog_dir: str,
     bloom_columns: dict[str, list[str]] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """ingest.insert_file's two-table transaction (DataSet + FileGlobal,
-    db_operations.py:225-274) as ONE atomic catalog commit — the file-type
-    twin of insert_frames_atomic, with the same id allocation: one
-    data_set and one file_global id per serial."""
+    """`insert_file` (db_operations.py:225-274), the un-split upload
+    path's two-table transaction (DataSet + FileGlobal), as ONE atomic
+    catalog commit — the file-type twin of insert_frames_atomic, with
+    the same id allocation: one data_set and one file_global id per
+    serial.
+
+    `new_files` columns: dataset_serial, description, microscope,
+    parent_dataset_id, storage_dir, file_name, metadata_json, sha256
+    (computed upstream over the raw file, data_uploader.py:222-256)."""
     from imagingdb_spark import snapcatalog as C
 
-    _guard_legacy_catalog(catalog_dir)
     _, deltas = C.catalog_commit(
         new_files.sparkSession,
         catalog_dir,
@@ -416,7 +362,7 @@ def insert_file_atomic(
 def upload_dataset(
     spark: SparkSession,
     manifest: DataFrame,
-    catalog: dict[str, DataFrame] | None,
+    catalog_dir: str,
     storage_root: str,
     upload_type: str = "frames",
     page_reader=None,
@@ -424,9 +370,9 @@ def upload_dataset(
     microscope: str | None = None,
     global_json: str = "{}",
     channel_names: list[str] | None = None,
-    paths: dict[str, str] | None = None,
     overwrite: bool = False,
     backend_factory=None,
+    bloom_columns: dict[str, list[str]] | None = None,
 ) -> dict[str, DataFrame]:
     """The reference's one-call upload flow `upload_data_and_update_db`
     (cli/data_uploader.py:61-256) composed end-to-end: manifest row →
@@ -443,32 +389,34 @@ def upload_dataset(
       seam), each page sha256'd map-side, named
       `im_c###_z###_t###_p###.png` (file_splitter.py:114-125), published
       to `<storage_root>/raw_frames/<serial>/` via the idempotent blob
-      sink, and catalogued with flows.insert_frames (DataSet +
+      sink, and catalogued with insert_frames_atomic (DataSet +
       FramesGlobal + Frames rows).
     - **file**: the source file is stored as-is under
       `<storage_root>/raw_files/<serial>/` with a whole-file sha256 and
-      catalogued with ingest.insert_file (DataSet + FileGlobal rows);
+      catalogued with insert_file_atomic (DataSet + FileGlobal rows);
       metadata_json records {"file_origin": src} (data_uploader.py:240).
 
+    The catalog insert is ONE atomic commit into the catalog at
+    `catalog_dir` (the reference's single transaction,
+    db_operations.py:14-38), which resolves its views from the catalog
+    tip. A `catalog_dir` holding per-table snapshot tables or legacy
+    ``<name>.parquet`` files is refused before any blob is written
+    (snapcatalog.refuse_per_table_catalog). `bloom_columns` (table →
+    columns) sets the bloom point-lookup index on those catalog tables,
+    e.g. ``{"frames": ["sha256"]}`` for sha256 probes (blooms.py).
+
     Idempotency: both the blob sink (existence-skip) and the catalog
-    appends (anti-join on serial) converge on re-run — the reference's
-    `assert_unique_id` + overwrite flag become convergent semantics; pass
-    `overwrite=True` only to force blob rewrite.
+    commit (anti-join on each table's key) converge on re-run — the
+    reference's `assert_unique_id` + overwrite flag become convergent
+    semantics; pass `overwrite=True` only to force blob rewrite.
 
     Scale shape: the split+hash runs as one Arrow-batched mapInPandas over
     a binaryFile scan (one task per source file ≥ one split each), the
     frame rows are persisted ONCE so the blob write and the catalog insert
     don't re-decode (the payload rides executor memory/disk for the
-    duration of the upload batch — dataset-batch-sized, not corpus-sized),
-    and catalog appends are anti-join guarded. `paths` (table name →
-    parquet path) persists the catalog tables, appending to the views in
-    `catalog` (table name → DataFrame). A `paths` that is one
-    ingest.CatalogTarget instead commits every table in one atomic
-    catalog commit (insert_frames_atomic / insert_file_atomic), which
-    resolves its own views from the catalog tip: `catalog` is then
-    ignored and may be None. `backend_factory`
-    overrides the blob store (the reference's local-vs-S3 storage_class
-    switch, data_uploader.py:127-134): pass e.g.
+    duration of the upload batch — dataset-batch-sized, not corpus-sized).
+    `backend_factory` overrides the blob store (the reference's
+    local-vs-S3 storage_class switch, data_uploader.py:127-134): pass e.g.
     ``lambda: sinks.S3Backend(bucket, client_factory)`` and
     `storage_root` is ignored for the blob write.
 
@@ -478,6 +426,10 @@ def upload_dataset(
     assert upload_type in {"file", "frames"}, (
         f"upload_type should be 'file' or 'frames', not {upload_type}"
     )
+    from imagingdb_spark.catalog import IMAGING_SCHEMAS
+    from imagingdb_spark.snapcatalog import refuse_per_table_catalog
+
+    refuse_per_table_catalog(catalog_dir, IMAGING_SCHEMAS)
     bad = validate_manifest(manifest).select("dataset_serial").collect()
     if bad:  # manifest is catalog-batch-sized; collect is bounded
         raise AssertionError(f"Invalid ID: {bad[0]['dataset_serial']}")
@@ -503,13 +455,6 @@ def upload_dataset(
     )
     gm = dict(DEFAULT_GLOBAL_META)
     gm.update(global_meta or {})
-    # paths may be the per-table dict of plain parquet paths or ONE
-    # CatalogTarget routing every catalog insert through the atomic
-    # multi-table commit (the reference's full transaction scope)
-    from imagingdb_spark.ingest import CatalogTarget
-
-    atomic = paths if isinstance(paths, CatalogTarget) else None
-    paths = {} if atomic is not None or paths is None else paths
 
     if upload_type == "file":
         files = (
@@ -517,7 +462,9 @@ def upload_dataset(
             .select(
                 "dataset_serial",
                 "description",
-                F.lit(microscope).alias("microscope"),
+                # typed when None too: a void column fails the catalog
+                # tip's schema check against a named microscope
+                F.lit(microscope).cast("string").alias("microscope"),
                 "parent_dataset_id",
                 "storage_dir",
                 basename(F.col("src_path")).alias("file_name"),
@@ -540,20 +487,9 @@ def upload_dataset(
                 overwrite=overwrite,
                 backend_factory=backend_factory,
             )
-            if atomic is not None:
-                new_ds, new_fg = insert_file_atomic(
-                    files.drop("payload"),
-                    atomic.catalog_dir,
-                    bloom_columns=atomic.bloom_columns,
-                )
-            else:
-                new_ds, new_fg = insert_file(
-                    files.drop("payload"),
-                    catalog["data_set"],
-                    catalog["file_global"],
-                    paths.get("data_set"),
-                    paths.get("file_global"),
-                )
+            new_ds, new_fg = insert_file_atomic(
+                files.drop("payload"), catalog_dir, bloom_columns=bloom_columns
+            )
             return {"data_set": new_ds, "file_global": new_fg}
         finally:
             files.unpersist()
@@ -631,7 +567,7 @@ def upload_dataset(
         datasets = man.select(
             "dataset_serial",
             "description",
-            F.lit(microscope).alias("microscope"),
+            F.lit(microscope).cast("string").alias("microscope"),
             "parent_dataset_id",
             "storage_dir",
             F.lit(gm["bit_depth"]).alias("bit_depth"),
@@ -640,22 +576,12 @@ def upload_dataset(
             F.lit(gm["im_colors"]).cast("int").alias("im_colors"),
             F.lit(global_json).alias("metadata_json"),
         )
-        if atomic is not None:
-            new_ds, new_fg, new_fr = insert_frames_atomic(
-                datasets,
-                framed.drop("storage_dir", "payload"),
-                atomic.catalog_dir,
-                bloom_columns=atomic.bloom_columns,
-            )
-        else:
-            new_ds, new_fg, new_fr = insert_frames(
-                datasets,
-                framed.drop("storage_dir", "payload"),
-                catalog["data_set"],
-                catalog["frames_global"],
-                catalog["frames"],
-                paths,
-            )
+        new_ds, new_fg, new_fr = insert_frames_atomic(
+            datasets,
+            framed.drop("storage_dir", "payload"),
+            catalog_dir,
+            bloom_columns=bloom_columns,
+        )
         return {"data_set": new_ds, "frames_global": new_fg, "frames": new_fr}
     finally:
         framed.unpersist()

@@ -3,15 +3,14 @@ db_operations.insert_frames:150-223) re-expressed as batch dataflow.
 
 The reference stages each upload in one Postgres transaction (SQLAlchemy
 session, single commit, rollback on assert — db_operations.py:14-38).
-Its twin here is the atomic catalog commit (``CatalogTarget`` →
+Its twin here is the atomic catalog commit (flows.upload_dataset →
 flows.insert_frames_atomic / insert_file_atomic → snapcatalog.catalog_commit):
 every table of an upload publishes in one link, and the anti-join on the
 natural key is recomputed against the exact catalog tip the commit lands
 on, so concurrent overlapping uploads converge to exactly-once by key.
-The plain-parquet path (insert_file, flows.insert_frames) keeps the
-weaker IDEMPOTENT APPEND contract: an anti-join on the natural key drops
-rows already present, so re-running a failed ingest converges instead of
-duplicating, but concurrent writers can both pass the check.
+This module holds the row-level pieces those builders share: manifest
+reading and validation, parent normalization and resolution, frame
+naming and checksums.
 """
 
 from __future__ import annotations
@@ -140,104 +139,3 @@ def resolve_parent_ids(new_rows: DataFrame, data_set: DataFrame) -> DataFrame:
         )
     )
     return new_rows.join(parents, "parent_serial", "left").drop("parent_serial")
-
-
-def insert_file(
-    new_files: DataFrame,
-    data_set: DataFrame,
-    file_global: DataFrame,
-    data_set_path: str | None = None,
-    file_global_path: str | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """`insert_file` (db_operations.py:225-274): the un-split upload path —
-    file stored as-is, one DataSet row (frames=False) + one FileGlobal row
-    (storage_dir, file_name, metadata_json, sha256) per file, batch form.
-
-    `new_files` columns: dataset_serial, description, microscope,
-    parent_dataset_id, storage_dir, file_name, metadata_json, sha256
-    (the sha256 computed upstream over the raw file, data_uploader.py:
-    222-256 / file_splitter.py:82-93 — or via with_sha256 when the payload
-    rides the DataFrame).
-
-    The rows come from the builder flows.insert_file_atomic commits, run
-    once against the caller's views (the same ids: one data_set and one
-    file_global id per serial, above each table's max(id)); the
-    reference's uniqueness assert becomes the idempotent anti-join
-    append on both tables, written to the given paths. Returns the
-    appended (data_set_rows, file_global_rows)."""
-    from imagingdb_spark.flows import FILE_KEYS, _file_upload
-    from imagingdb_spark.snapcatalog import CatalogViews
-
-    views = CatalogViews({"data_set": data_set, "file_global": file_global}, {})
-    deltas = _file_upload(views, new_files)
-    return (
-        idempotent_append(
-            deltas["data_set"], data_set, FILE_KEYS["data_set"], data_set_path
-        ),
-        idempotent_append(
-            deltas["file_global"], file_global, FILE_KEYS["file_global"],
-            file_global_path,
-        ),
-    )
-
-
-class CatalogTarget:
-    """Marker routing an upload's catalog inserts through ONE atomic
-    multi-table commit (snapcatalog.catalog_commit) instead of
-    plain-parquet appends. Pass an instance AS the whole ``paths``
-    argument of flows.upload_dataset to get the reference's full
-    transaction scope (db_operations.py:14-38 — one Postgres
-    transaction spans data_set + frames_global + frames): a
-    crash at ANY point leaves readers (snapcatalog.catalog_read) seeing
-    either no dataset or the whole dataset, because all tables' manifests
-    publish in one hard-link. It is the only snapshot-backed write path;
-    a directory already holding per-table snapshot tables or legacy
-    ``<name>.parquet`` files is refused until snapcatalog.migrate_catalog
-    has moved it into a fresh catalog.
-
-    ``bloom_columns`` (table → columns) additionally sets the bloom
-    point-lookup index property on those catalog tables (blooms.py):
-    e.g. ``{"frames": ["sha256"]}`` makes every later
-    ``catalog_read(..., "frames", where=[("sha256", "=", h)])`` a
-    file-skipping probe — the Postgres-b-tree lookup shape
-    (db_operations.py filter_by sha256) on an append-ordered table
-    whose min/max stats cannot prune."""
-
-    def __init__(
-        self,
-        catalog_dir: str,
-        bloom_columns: dict[str, list[str]] | None = None,
-    ):
-        self.catalog_dir = catalog_dir
-        self.bloom_columns = bloom_columns
-
-    def __repr__(self) -> str:
-        return f"CatalogTarget({self.catalog_dir!r})"
-
-
-def idempotent_append(
-    new_rows: DataFrame,
-    existing: DataFrame,
-    key_cols: list[str],
-    target_path: str | None = None,
-) -> DataFrame:
-    """S7/D1: anti-join-guarded append — the uniqueness assert + staged
-    commit (db_operations.py:111-117, 176-181, 14-38) as idempotent batch
-    append. Returns the deduplicated new rows; writes parquet when
-    target_path is given.
-
-    Scale: the anti-join shuffles on the key unless the existing-keys side
-    is small enough for AQE to broadcast; for a catalog keyed by
-    dataset_serial that side is one row per dataset — always broadcastable.
-    dropDuplicates(key) guards against dup keys WITHIN the incoming batch.
-    The rows keep ``new_rows``' column order (a join on key names would
-    move the keys first), so a delta appended to a snapshot table carries
-    the table's schema."""
-    deduped = (
-        new_rows.dropDuplicates(key_cols)
-        .join(existing.select(*key_cols), key_cols, "left_anti")
-        .select(*new_rows.columns)
-    )
-    if target_path is not None:
-        deduped.write.mode("append").parquet(target_path)
-    return deduped

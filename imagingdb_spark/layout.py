@@ -5,7 +5,7 @@ PNG per frame, local_storage.py:85-136).
 Two operations matter at scale:
 
 - **Small-file compaction.** Streaming ingest (streaming/jobs.py gate) and
-  per-batch idempotent appends (ingest.idempotent_append) each land one
+  per-batch plain-parquet appends each land one
   file per task per trigger; after a day a table holds millions of KB-sized
   files and every scan pays per-file open/footer costs (and the driver pays
   listing). Compaction rewrites the table into ~target-sized files.

@@ -156,7 +156,8 @@ def p_project(spark: SparkSession, sf_dir: str) -> DataFrame:
 def f_not_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P8: existence/uniqueness check — the reference asserts count==0 before
     insert (db_operations.py:111-117). Distributed form: left-anti join, the
-    same primitive the ingest path uses for idempotent append (ingest.py).
+    same primitive the catalog commit uses for idempotent append
+    (snapcatalog.catalog_commit).
     The anti join shuffles on the key unless one side broadcasts; AQE picks
     broadcast when the probe side is small."""
     cust = table(spark, sf_dir, "customer")

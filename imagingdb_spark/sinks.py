@@ -4,7 +4,8 @@ sink, as distributed writes.
 Reference shapes: frames_meta → CSV + global meta → JSON on download
 (data_downloader.py:201-215); PNG frames written via thread/process pools
 (local_storage.py:85-136, s3_storage.py:72-145); catalog inserts staged in a
-transaction (db_operations.py:150-223 → ingest.idempotent_append).
+transaction (db_operations.py:150-223 → one atomic catalog commit,
+flows.insert_frames_atomic).
 
 Spark replaces the pools with task parallelism: a blob write is
 foreachPartition over (file_name, payload) rows, each task writing its

@@ -135,6 +135,29 @@ def _table_dir(catalog_dir: str, name: str) -> str:
     return os.path.join(catalog_dir, name)
 
 
+def refuse_per_table_catalog(catalog_dir: str, names) -> None:
+    """Raise ValueError when ``catalog_dir`` holds any of the tables
+    ``names`` in a per-table form: a standalone snapshot table
+    ``<catalog_dir>/<name>`` or a legacy plain-parquet
+    ``<catalog_dir>/<name>.parquet``. An atomic commit there would
+    shadow the table's rows and an atomic read would miss them; only
+    migrate_catalog reads those forms."""
+    for name in names:
+        snap = _table_dir(catalog_dir, name)
+        legacy = os.path.join(catalog_dir, f"{name}.parquet")
+        if S.snapshot_exists(snap):
+            found = f"{snap} holds a standalone snapshot table"
+        elif os.path.exists(legacy):
+            found = f"{legacy} holds a legacy plain-parquet table"
+        else:
+            continue
+        raise ValueError(
+            f"{found}; the atomic catalog would shadow its rows. Move it "
+            "into a fresh atomic catalog with snapcatalog.migrate_catalog "
+            "first."
+        )
+
+
 def _manifest_df(
     spark: SparkSession,
     catalog_dir: str,
@@ -290,9 +313,13 @@ def catalog_commit(
 
     Per table, rows are deduplicated on ``keys[name]`` and anti-joined
     against the tip view, so a replay (same upload re-run) or a lost
-    same-key race converges to an empty delta. When EVERY table's delta
-    is empty and no new table appears, nothing is published and the tip
-    version is returned unchanged.
+    same-key race converges to an empty delta. A delta holding the tip's
+    columns in another order is written in the tip's order; any other
+    schema difference is refused. A table's first commit refuses a
+    per-table form of it in the same directory
+    (refuse_per_table_catalog). When EVERY table's delta is empty and no
+    new table appears, nothing is published and the tip version is
+    returned unchanged.
 
     Returns ``(version, {table: committed_delta_df})``. Crash SAFETY is
     the point: data files and group files written before the publish link
@@ -327,20 +354,11 @@ def catalog_commit(
         parent = vs[-1] if vs else 0
         base = _read_commit(catalog_dir, parent) if parent else None
         tables_base: dict[str, dict] = dict(base["tables"]) if base else {}
-        # refuse to SHADOW a standalone per-table snapshot table living in
-        # the same directory: a first atomic commit would silently hide
-        # its committed rows from every catalog reader and interleave new
-        # data files into its dirs — the caller must migrate explicitly
-        for name in keys:
-            if name not in tables_base and S.snapshot_exists(
-                _table_dir(catalog_dir, name)
-            ):
-                raise ValueError(
-                    f"{_table_dir(catalog_dir, name)} already holds a "
-                    "standalone snapshot table; an atomic catalog commit "
-                    "would shadow its rows. Move it into a fresh atomic "
-                    "catalog with snapcatalog.migrate_catalog first."
-                )
+        # a table's first commit would hide a per-table form of it living
+        # in the same directory and interleave new data files into its dirs
+        refuse_per_table_catalog(
+            catalog_dir, [n for n in keys if n not in tables_base]
+        )
         views = CatalogViews(
             {
                 name: _manifest_df(spark, catalog_dir, name, m)
@@ -362,10 +380,20 @@ def catalog_commit(
             """One table's guard, data files, bloom sidecar, group file
             and delta read-back: (delta, manifest or None, rows)."""
             kcols = keys[name]
+            bm = tables_base.get(name)
+            if bm is not None:
+                tip_cols = StructType.fromJson(
+                    json.loads(bm["schema"])
+                ).fieldNames()
+                if rows_df.columns != tip_cols and sorted(
+                    rows_df.columns
+                ) == sorted(tip_cols):
+                    # the tip's columns in another order (a table migrated
+                    # from a per-table form keeps its source's order)
+                    rows_df = rows_df.select(*tip_cols)
             rows_df = rows_df.dropDuplicates(kcols)
             schema = rows_df.schema
             schema_json = S._canon_schema_json(schema)
-            bm = tables_base.get(name)
             if bm is not None:
                 if S._canon_schema_json(bm["schema"]) != schema_json:
                     raise ValueError(
@@ -483,14 +511,13 @@ def migrate_catalog(
     """Migrate a per-table catalog (standalone snapshot tables and/or
     legacy ``<name>.parquet`` files under ``src_dir``) into a FRESH
     atomic catalog at ``dest_dir`` — the actionable path behind
-    catalog_commit's refuse-to-shadow guard. Every table's current
+    refuse_per_table_catalog, and the only reader of those forms.
+    Every table's current
     content lands in ONE catalog commit (v1), so the destination starts
     with the cross-table consistency guarantee already holding; absent
     source tables become typed empty tables. The source is READ ONLY —
-    cut over by pointing writers at ``CatalogTarget(dest_dir)`` and
+    cut over by pointing writers and readers at ``dest_dir`` and
     retiring the source when satisfied. Returns the committed version."""
-    import os as _os
-
     if os.path.abspath(src_dir) == os.path.abspath(dest_dir):
         raise ValueError(
             "migration needs a fresh destination directory (the source's "
@@ -498,17 +525,16 @@ def migrate_catalog(
         )
     if catalog_exists(dest_dir):
         raise ValueError(f"{dest_dir} already holds an atomic catalog")
-    from imagingdb_spark import snapshots as SN
 
     def build(views):
         out = {}
         for name, schema in tables.items():
-            legacy = _os.path.join(src_dir, f"{name}.parquet")
-            snap = _os.path.join(src_dir, name)
-            if _os.path.exists(legacy):
+            legacy = os.path.join(src_dir, f"{name}.parquet")
+            snap = _table_dir(src_dir, name)
+            if os.path.exists(legacy):
                 out[name] = spark.read.schema(schema).parquet(legacy)
-            elif SN.snapshot_exists(snap):
-                out[name] = SN.snapshot_read(spark, snap)
+            elif S.snapshot_exists(snap):
+                out[name] = S.snapshot_read(spark, snap)
             else:
                 out[name] = empty_df(spark, schema)
         return out
@@ -775,13 +801,7 @@ def catalog_delete(
             # a foreign commit won: deletes are read-dependent claims —
             # drop every table's rewrite eagerly and re-resolve at the
             # winner's tip
-            for name, cr in created_by.items():
-                S._drop_groups(_table_dir(catalog_dir, name), cr)
-            for tdir, rel_dir in datadirs:
-                shutil.rmtree(
-                    os.path.join(tdir, rel_dir), ignore_errors=True
-                )
-                S._drop_sidecar(tdir, rel_dir)
+            _drop_attempt(catalog_dir, created_by, datadirs)
             continue
     raise SnapshotConflict(
         f"catalog delete in {catalog_dir} lost {max_retries} straight races"

@@ -1292,11 +1292,11 @@ def snapshot_idempotent_append(
     key_cols: list[str],
     max_retries: int = 5,
 ) -> int:
-    """Serializable idempotent append — the Postgres-grade guarantee
-    ingest.idempotent_append documents it cannot give with bare parquet
-    (two concurrent writers can both pass the anti-join check and double-
-    insert). Here the anti-join is recomputed against the EXACT tip the
-    commit publishes onto: if another commit wins the version race, the
+    """Serializable idempotent append — the Postgres-grade guarantee an
+    anti-join-guarded append to bare parquet cannot give (two concurrent
+    writers can both pass the anti-join check and double-insert). Here
+    the anti-join is recomputed against the EXACT tip the commit
+    publishes onto: if another commit wins the version race, the
     stale delta is discarded (vacuum debris), the anti-join re-runs
     against the new tip, and the delta is rewritten — so concurrent
     ingests of overlapping batches converge to exactly-once by keys.

@@ -231,52 +231,6 @@ def attribution_join(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
     )
 
 
-def streaming_catalog_append(
-    events: DataFrame,
-    target_path: str,
-    key_cols: list[str],
-    checkpoint_dir: str,
-    watermark: str = "10 minutes",
-) -> StreamingQuery:
-    """Continuous catalog ingest: stream → watermark dedup → per-micro-batch
-    IDEMPOTENT append into the parquet catalog — the streaming twin of the
-    reference's staged transactional insert (db_operations.py:150-223 via
-    ingest.idempotent_append).
-
-    Two dedup layers, both needed:
-    - dropDuplicatesWithinWatermark: cross-batch duplicates inside the
-      watermark horizon, state bounded by the horizon.
-    - the foreachBatch anti-join vs the CURRENT target: replayed batches
-      after a restart (foreachBatch is at-least-once) and duplicates older
-      than the horizon. Re-reading the target per batch is catalog-appro-
-      priate (key set is small); a fact-scale sink would use a table
-      format's MERGE instead.
-    Checkpointing makes restarts resume from the last committed offset."""
-    from imagingdb_spark.ingest import idempotent_append
-
-    deduped = events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        key_cols
-    )
-
-    def append_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        try:
-            existing = spark.read.parquet(target_path)
-        except Exception:  # first batch: target does not exist yet
-            batch_df.dropDuplicates(key_cols).write.mode("append").parquet(
-                target_path
-            )
-            return
-        idempotent_append(batch_df, existing, key_cols, target_path)
-
-    return (
-        deduped.writeStream.foreachBatch(append_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
-    )
-
-
 def streaming_catalog_append_snapshot(
     events: DataFrame,
     table_dir: str,
@@ -287,16 +241,20 @@ def streaming_catalog_append_snapshot(
     cluster_col: str | None = None,
     max_avg_overlap: float = 2.0,
 ) -> StreamingQuery:
-    """streaming_catalog_append upgraded onto the snapshot table format —
-    the "a fact-scale sink would use a table format's MERGE instead"
-    caveat above, closed in-repo: each micro-batch lands through
+    """Continuous catalog ingest: stream → watermark dedup →
+    per-micro-batch append into a snapshot table — the streaming twin of
+    the reference's staged transactional insert (db_operations.py:
+    150-223). Each micro-batch lands through
     snapshots.snapshot_idempotent_append, so the per-batch key check is
     SERIALIZABLE (anti-join recomputed against the exact committed-onto
-    version — concurrent writers to the same table cannot double-insert a
-    key, which the bare-parquet variant documents it cannot prevent),
-    every batch is an atomic manifest commit (readers never see a torn
-    append), and the commit log doubles as the ingest audit trail.
-    Watermark dedup still bounds in-flight state exactly as above.
+    version — concurrent writers to the same table cannot double-insert
+    a key), replayed batches after a restart (foreachBatch is
+    at-least-once) converge, every batch is an atomic manifest commit
+    (readers never see a torn append), and the commit log doubles as the
+    ingest audit trail. dropDuplicatesWithinWatermark drops cross-batch
+    duplicates inside the watermark horizon, with state bounded by the
+    horizon; checkpointing makes restarts resume from the last committed
+    offset.
 
     ``maintain_every=N`` with ``cluster_col`` adds the layout-health tick
     (same cadence discipline as the dedup gates' index compaction): every

@@ -26,16 +26,19 @@ SERIALS = [
 
 @pytest.fixture()
 def login_file(spark, tmp_path):
-    """A catalog dir holding the reference test's four datasets + the
-    login JSON pointing at it."""
+    """An atomic catalog dir holding the reference test's four datasets
+    (one catalog commit) + the login JSON pointing at it."""
+    from imagingdb_spark import snapcatalog as C
+
     rows = [
         (i + 1, serial, f"desc {i}", "scope A", True, dt, None)
         for i, (serial, dt) in enumerate(SERIALS)
     ]
     cat = tmp_path / "catalog"
-    cat.mkdir()
-    spark.createDataFrame(rows, DATA_SET_SCHEMA).coalesce(1).write.parquet(
-        str(cat / "data_set.parquet")
+    C.catalog_commit(
+        spark, str(cat),
+        lambda views: {"data_set": spark.createDataFrame(rows, DATA_SET_SCHEMA)},
+        keys={"data_set": ["dataset_serial"]},
     )
     login = tmp_path / "login.json"
     login.write_text(
@@ -165,8 +168,8 @@ class TestUploadDownloadRoundTrip:
 class TestUploadRefusesPerTableCatalog:
     """The CLI writes atomic catalogs only: a catalog_dir already holding
     a standalone snapshot table or a legacy ``<name>.parquet`` table is
-    refused with a pointer to snapcatalog.migrate_catalog, and no catalog
-    commit is published."""
+    refused with a pointer to snapcatalog.migrate_catalog before any blob
+    is written, and no catalog commit is published."""
 
     @pytest.mark.parametrize("legacy", ["snapshot", "parquet"])
     def test_refused_and_nothing_published(self, spark, tmp_path, legacy):
@@ -208,8 +211,57 @@ class TestUploadRefusesPerTableCatalog:
             )
         assert C.catalog_versions(str(cat)) == []
         assert not (cat / "_commits").exists()
-        assert [r["dataset_serial"] for r in cli.load_catalog(
-            spark, str(cat))["data_set"].collect()] == [serial]
+        assert not (tmp_path / "store").exists()
+        existing = (
+            S.snapshot_read(spark, str(cat / "data_set"))
+            if legacy == "snapshot"
+            else spark.read.parquet(str(cat / "data_set.parquet"))
+        )
+        assert [r["dataset_serial"] for r in existing.collect()] == [serial]
+
+
+class TestReadRefusesPerTableCatalog:
+    """cli.load_catalog and load_catalog_slice read atomic catalogs only:
+    a directory holding the ``imaging`` tables as standalone snapshot
+    tables or as legacy ``<name>.parquet`` files is refused with a
+    pointer to snapcatalog.migrate_catalog, and both read the catalog
+    migrate_catalog makes of it."""
+
+    @pytest.mark.parametrize("legacy", ["snapshot", "parquet"])
+    def test_refused_then_read_after_migrate(self, spark, imaging, tmp_path,
+                                             legacy):
+        from imagingdb_spark import flows
+        from imagingdb_spark import snapcatalog as C
+        from imagingdb_spark import snapshots as S
+        from imagingdb_spark.catalog import IMAGING_SCHEMAS
+
+        src = tmp_path / "old"
+        for name, df in imaging.items():
+            if legacy == "snapshot":
+                S.snapshot_commit(spark, str(src / name), df)
+            else:
+                df.write.parquet(str(src / f"{name}.parquet"))
+        serial = "TEST-2005-10-09-20-00-00-0001"
+        with pytest.raises(ValueError, match="migrate_catalog"):
+            cli.load_catalog(spark, str(src))
+        with pytest.raises(ValueError, match="migrate_catalog"):
+            cli.load_catalog_slice(spark, str(src), serial)
+
+        dest = str(tmp_path / "new")
+        assert C.migrate_catalog(
+            spark, str(src), dest, IMAGING_SCHEMAS,
+            {**flows.FRAMES_KEYS, **flows.FILE_KEYS},
+        ) == 1
+        full = cli.load_catalog(spark, dest)
+        for name, df in imaging.items():
+            want = sorted(map(tuple, df.select(*df.columns).collect()))
+            got = sorted(map(tuple, full[name].select(*df.columns).collect()))
+            assert got == want, name
+        sl = cli.load_catalog_slice(spark, dest, serial)
+        assert [r["id"] for r in sl["data_set"].collect()] == [1]
+        assert [r["id"] for r in sl["frames_global"].collect()] == [1]
+        assert sl["frames"].count() == 6
+        assert sl["file_global"].count() == 0
 
 
 class TestParseArgs:

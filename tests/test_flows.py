@@ -1,8 +1,10 @@
 """End-to-end lifecycle flow tests (SURVEY.md §3): batch insert_frames
-(db_operations.py:150-223), download_dataset (cli/data_downloader.py:
-106-229) with the reference's error surface, and the distributed blob
-fetch — mirroring tests/cli/data_downloader_tests.py and
-tests/database/db_operations_tests.py round trips."""
+(db_operations.py:150-223) as one atomic catalog commit, the composed
+upload flow, download_dataset (cli/data_downloader.py:106-229) with the
+reference's error surface, and the distributed blob fetch — mirroring
+tests/cli/data_downloader_tests.py and tests/database/
+db_operations_tests.py round trips. Uploads land in an atomic catalog
+seeded from the ``imaging`` tables (the ``imaging_catalog`` fixture)."""
 
 import os
 
@@ -10,6 +12,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from imagingdb_spark import flows
+from imagingdb_spark import snapcatalog as C
+from imagingdb_spark.catalog import IMAGING_SCHEMAS
 
 NEW_SERIAL = "FLOW-2008-04-01-12-00-00-0001"
 
@@ -42,10 +46,10 @@ def new_dataset(spark):
 
 
 class TestInsertFrames:
-    def test_three_tables_constructed(self, imaging, new_dataset):
+    def test_three_tables_constructed(self, imaging, imaging_catalog, new_dataset):
         ds, fr = new_dataset
-        new_ds, new_fg, new_fr = flows.insert_frames(
-            ds, fr, imaging["data_set"], imaging["frames_global"], imaging["frames"]
+        new_ds, new_fg, new_fr = flows.insert_frames_atomic(
+            ds, fr, imaging_catalog
         )
         d = new_ds.collect()[0]
         assert d["frames"] is True
@@ -64,7 +68,7 @@ class TestInsertFrames:
         assert all(r["frames_global_id"] == g["id"] for r in frs)
         assert min(r["id"] for r in frs) == imaging["frames"].count() + 1
 
-    def test_idempotent_on_existing_serial(self, imaging, new_dataset):
+    def test_idempotent_on_existing_serial(self, imaging_catalog, new_dataset):
         ds, fr = new_dataset
         dup = ds.withColumn(
             "dataset_serial", F.lit("TEST-2005-10-09-20-00-00-0001")
@@ -72,9 +76,8 @@ class TestInsertFrames:
         dup_fr = fr.withColumn(
             "dataset_serial", F.lit("TEST-2005-10-09-20-00-00-0001")
         )
-        new_ds, new_fg, new_fr = flows.insert_frames(
-            dup, dup_fr, imaging["data_set"], imaging["frames_global"],
-            imaging["frames"],
+        new_ds, new_fg, new_fr = flows.insert_frames_atomic(
+            dup, dup_fr, imaging_catalog
         )
         assert new_ds.count() == 0
         assert new_fg.count() == 0
@@ -204,14 +207,16 @@ class TestUploadDataset:
             "parent_dataset_id string",
         )
 
-    def test_upload_frames_end_to_end(self, spark, imaging, src_file, tmp_path):
+    def test_upload_frames_end_to_end(
+        self, spark, imaging_catalog, src_file, tmp_path
+    ):
         import hashlib
 
         store = str(tmp_path / "store")
         out = flows.upload_dataset(
             spark,
             self._manifest(spark, src_file),
-            imaging,
+            imaging_catalog,
             storage_root=store,
             upload_type="frames",
             page_reader=_fake_page_reader,
@@ -255,13 +260,7 @@ class TestUploadDataset:
         # "query database to find data_set and frames" round trip)
         from imagingdb_spark.api import get_frames_meta
 
-        cat2 = {
-            "data_set": imaging["data_set"].unionByName(out["data_set"]),
-            "frames_global": imaging["frames_global"].unionByName(
-                out["frames_global"]
-            ),
-            "frames": imaging["frames"].unionByName(out["frames"]),
-        }
+        cat2 = C.catalog_views(spark, imaging_catalog, IMAGING_SCHEMAS)
         meta = get_frames_meta(
             cat2["data_set"], cat2["frames_global"], cat2["frames"], UP_SERIAL
         )
@@ -271,7 +270,7 @@ class TestUploadDataset:
         out2 = flows.upload_dataset(
             spark,
             self._manifest(spark, src_file),
-            {**cat2, "file_global": imaging["file_global"]},
+            imaging_catalog,
             storage_root=store,
             upload_type="frames",
             page_reader=_fake_page_reader,
@@ -281,8 +280,11 @@ class TestUploadDataset:
         assert out2["data_set"].count() == 0
         assert out2["frames_global"].count() == 0
         assert out2["frames"].count() == 0
+        assert C.catalog_versions(imaging_catalog) == [1, 2]
 
-    def test_upload_file_end_to_end(self, spark, imaging, src_file, tmp_path):
+    def test_upload_file_end_to_end(
+        self, spark, imaging_catalog, src_file, tmp_path
+    ):
         import hashlib
         import json
 
@@ -291,7 +293,7 @@ class TestUploadDataset:
         out = flows.upload_dataset(
             spark,
             self._manifest(spark, src_file, serial),
-            imaging,
+            imaging_catalog,
             storage_root=store,
             upload_type="file",
         )
@@ -304,32 +306,33 @@ class TestUploadDataset:
         assert fg["storage_dir"] == f"raw_files/{serial}"
         assert json.loads(fg["metadata_json"])["file_origin"] == src_file
         assert fg["dataset_id"] == d["id"]
+        assert (d["id"], fg["id"]) == (5, 2)  # above the seeded tables' ids
         blob = os.path.join(store, f"raw_files/{serial}", "stack.tif")
         assert open(blob, "rb").read() == raw
 
-    def test_invalid_serial_raises(self, spark, imaging, src_file, tmp_path):
+    def test_invalid_serial_raises(self, spark, src_file, tmp_path):
         with pytest.raises(AssertionError, match="Invalid ID"):
             flows.upload_dataset(
                 spark,
                 self._manifest(spark, src_file, "not-a-serial"),
-                imaging,
+                str(tmp_path / "cat"),
                 storage_root=str(tmp_path / "s"),
                 upload_type="file",
             )
 
-    def test_bad_upload_type_raises(self, spark, imaging, src_file, tmp_path):
+    def test_bad_upload_type_raises(self, spark, src_file, tmp_path):
         with pytest.raises(AssertionError, match="upload_type"):
             flows.upload_dataset(
                 spark,
                 self._manifest(spark, src_file),
-                imaging,
+                str(tmp_path / "cat"),
                 storage_root=str(tmp_path / "s"),
                 upload_type="bogus",
             )
 
 
 class TestUploadOverS3:
-    def test_file_upload_through_s3_backend(self, spark, imaging, tmp_path):
+    def test_file_upload_through_s3_backend(self, spark, imaging_catalog, tmp_path):
         """The reference's storage_class switch (data_uploader.py:127-134):
         same flow, blobs land in the object store instead of the FS."""
         import hashlib
@@ -353,7 +356,7 @@ class TestUploadOverS3:
                 "dataset_serial string, file_name string, description string, "
                 "parent_dataset_id string",
             ),
-            imaging,
+            imaging_catalog,
             storage_root="ignored",
             upload_type="file",
             backend_factory=factory,
@@ -367,7 +370,7 @@ class TestUploadOverS3:
 
 
 class TestUploadRealCodecs:
-    def test_tiff_to_png_upload_no_fakes(self, spark, imaging, tmp_path):
+    def test_tiff_to_png_upload_no_fakes(self, spark, imaging_catalog, tmp_path):
         """Round 3: the whole reference upload pipeline with REAL codecs —
         a multi-page TIFF split by the built-in reader, frames re-encoded
         as PNG, stored, catalogued; downloads decode back to the original
@@ -394,7 +397,7 @@ class TestUploadRealCodecs:
                 "dataset_serial string, file_name string, description string, "
                 "parent_dataset_id string",
             ),
-            imaging,
+            imaging_catalog,
             storage_root=store,
             upload_type="frames",
             global_meta={"im_width": 6, "im_height": 8,
@@ -413,7 +416,9 @@ class TestUploadRealCodecs:
 
 
 class TestUploadGridInference:
-    def test_grid_inferred_from_image_description(self, spark, imaging, tmp_path):
+    def test_grid_inferred_from_image_description(
+        self, spark, imaging_catalog, tmp_path
+    ):
         """tif_id behavior (tif_id_splitter.py:111-126): no grid in the
         config -> channels/slices come from the first page's ImageJ
         ImageDescription tag."""
@@ -436,7 +441,7 @@ class TestUploadGridInference:
                 "dataset_serial string, file_name string, description string, "
                 "parent_dataset_id string",
             ),
-            imaging,
+            imaging_catalog,
             storage_root=str(tmp_path / "store"),
             upload_type="frames",
             global_meta={"im_width": 3, "im_height": 3},  # no grid keys
@@ -449,7 +454,7 @@ class TestUploadGridInference:
 
 class TestS3RoundTrip:
     def test_upload_then_download_through_backend(
-        self, spark, imaging, tmp_path
+        self, spark, imaging_catalog, tmp_path
     ):
         """Full object-store lifecycle with real codecs: TIFF upload
         through S3Backend, catalog insert, then download_dataset pulling
@@ -480,21 +485,15 @@ class TestS3RoundTrip:
                 "dataset_serial string, file_name string, description string, "
                 "parent_dataset_id string",
             ),
-            imaging,
+            imaging_catalog,
             storage_root="unused",
             upload_type="frames",
             global_meta={"im_width": 4, "im_height": 4,
                          "nbr_channels": 2, "nbr_slices": 2},
             backend_factory=factory,
         )
-        cat2 = {
-            "data_set": imaging["data_set"].unionByName(out["data_set"]),
-            "frames_global": imaging["frames_global"].unionByName(
-                out["frames_global"]
-            ),
-            "frames": imaging["frames"].unionByName(out["frames"]),
-            "file_global": imaging["file_global"],
-        }
+        assert out["frames"].count() == 4
+        cat2 = C.catalog_views(spark, imaging_catalog, IMAGING_SCHEMAS)
         dest = str(tmp_path / "dl")
         storage_dir, names = flows.download_dataset(
             spark, cat2, serial, dest, backend_factory=factory
@@ -509,7 +508,7 @@ class TestS3RoundTrip:
 
 
 class TestBatchUpload:
-    def test_two_datasets_one_manifest(self, spark, imaging, tmp_path):
+    def test_two_datasets_one_manifest(self, spark, imaging_catalog, tmp_path):
         """Batch-wise semantics: the reference loops the manifest per row
         (data_uploader.py:150); upload_dataset processes ALL rows in one
         dataflow — two datasets, one call, correct per-dataset grouping."""
@@ -538,7 +537,7 @@ class TestBatchUpload:
             "parent_dataset_id string",
         )
         out = flows.upload_dataset(
-            spark, manifest, imaging,
+            spark, manifest, imaging_catalog,
             storage_root=str(tmp_path / "store"),
             upload_type="frames",
             global_meta={"im_width": 3, "im_height": 3,
@@ -570,21 +569,18 @@ class TestSnapshotBackedCatalog:
 
     @staticmethod
     def _upload(spark, src_file, tmp_path, serial=UP_SERIAL):
-        from imagingdb_spark.ingest import CatalogTarget
-
         man = spark.createDataFrame(
             [(serial, src_file, "Testing", "none")],
             "dataset_serial string, file_name string, description string, "
             "parent_dataset_id string",
         )
         return flows.upload_dataset(
-            spark, man, None,
+            spark, man, str(tmp_path / "cat"),
             storage_root=str(tmp_path / "store"),
             upload_type="frames",
             page_reader=_fake_page_reader,
             global_meta={"im_width": 8, "im_height": 8,
                          "nbr_channels": 2, "nbr_slices": 3},
-            paths=CatalogTarget(str(tmp_path / "cat")),
         )
 
     @pytest.fixture()
@@ -600,9 +596,6 @@ class TestSnapshotBackedCatalog:
     def test_upload_query_download_on_snapshot_tables(
         self, spark, src_file, tmp_path
     ):
-        from imagingdb_spark import snapcatalog as C
-        from imagingdb_spark.catalog import IMAGING_SCHEMAS
-
         out = self._upload(spark, src_file, tmp_path)
         assert out["data_set"].count() == 1
         assert out["frames"].count() == 6
@@ -633,12 +626,10 @@ class TestSnapshotBackedCatalog:
         self, spark, src_file, tmp_path
     ):
         """Two concurrent upload_dataset calls with the SAME serial: the
-        tip-pinned anti-join makes exactly one dataset land — the race
-        the plain-parquet anti-join documents it cannot close (both
-        writers can pass the check before either writes)."""
+        tip-pinned anti-join makes exactly one dataset land — the race an
+        anti-join over bare parquet cannot close (both writers can pass
+        the check before either writes)."""
         import threading
-
-        from imagingdb_spark import snapcatalog as C
 
         errs = []
 
@@ -673,8 +664,6 @@ class TestConcurrentDistinctSerials:
 
     def test_two_serials_land_with_distinct_ids(self, spark, tmp_path):
         import threading
-
-        from imagingdb_spark import snapcatalog as C
 
         payload = b"".join(
             bytes([c * 16 + z]) * PAGE_BYTES
@@ -721,17 +710,13 @@ class TestConcurrentDistinctSerials:
 
 
 class TestCatalogSliceSkipping:
-    """cli.load_catalog_slice: a serial point lookup over a per-table
-    snapshot catalog reads O(1) manifest files per table (one append per
-    table and dataset, so footer stats isolate each dataset's files) and
-    returns exactly the full views filtered to that dataset."""
+    """cli.load_catalog_slice: a serial point lookup over an atomic
+    catalog reads O(1) manifest files per table (one commit per dataset,
+    so footer stats isolate each dataset's files) and returns exactly the
+    full views filtered to that dataset."""
 
     def _setup(self, spark, tmp_path, n_datasets=3):
-        """One plain upload per dataset against the current tips, then
-        one snapshot_idempotent_append per table."""
-        from imagingdb_spark import snapshots as S
-        from imagingdb_spark.cli import load_catalog
-
+        """One upload per dataset: one catalog commit each."""
         payload = b"".join(
             bytes([c * 16 + z]) * PAGE_BYTES
             for z in range(3) for c in range(2)
@@ -748,18 +733,14 @@ class TestCatalogSliceSkipping:
                 "dataset_serial string, file_name string, description string, "
                 "parent_dataset_id string",
             )
-            out = flows.upload_dataset(
-                spark, man, load_catalog(spark, cat_dir),
+            flows.upload_dataset(
+                spark, man, cat_dir,
                 storage_root=str(tmp_path / "store"),
                 upload_type="frames",
                 page_reader=_fake_page_reader,
                 global_meta={"im_width": 8, "im_height": 8,
                              "nbr_channels": 2, "nbr_slices": 3},
             )
-            for name, keys in flows.FRAMES_KEYS.items():
-                S.snapshot_idempotent_append(
-                    spark, f"{cat_dir}/{name}", out[name], keys
-                )
         return cat_dir, serials
 
     def test_slice_equals_filtered_full_and_prunes(self, spark, tmp_path):
@@ -789,8 +770,12 @@ class TestCatalogSliceSkipping:
 
         # manifest-level evidence: the point lookup kept a strict subset
         # of the frames table's files (one upload's files, not three)
-        plan = S.snapshot_scan_plan(
-            f"{cat_dir}/frames", [("frames_global_id", "=", fg_id)]
+        plan: dict = {}
+        S._resolve_pruned(
+            C._table_dir(cat_dir, "frames"),
+            C.catalog_manifest(cat_dir)["tables"]["frames"],
+            [("frames_global_id", "=", fg_id)],
+            plan,
         )
         assert plan["files_kept"] < plan["files_total"]
         assert plan["files_kept"] >= 1
@@ -805,6 +790,42 @@ class TestCatalogSliceSkipping:
         # full views returned: the caller's own not-found surface fires
         assert sl["data_set"].count() == 1  # the one uploaded dataset
         assert sl["frames"].count() == 6
+
+
+class TestRefusedUploadWritesNothing:
+    """An upload into a directory holding a per-table catalog is refused
+    before the blob write: no file lands under storage_root and no
+    catalog commit is published."""
+
+    @pytest.mark.parametrize("form", ["snapshot", "parquet"])
+    @pytest.mark.parametrize("upload_type", ["frames", "file"])
+    def test_storage_root_stays_empty(self, spark, imaging, tmp_path,
+                                      upload_type, form):
+        from imagingdb_spark import snapshots as S
+
+        cat = tmp_path / "cat"
+        if form == "snapshot":
+            S.snapshot_commit(spark, str(cat / "data_set"), imaging["data_set"])
+        else:
+            imaging["data_set"].write.parquet(str(cat / "data_set.parquet"))
+        src = tmp_path / "stack.tif"
+        src.write_bytes(bytes(range(6)) * PAGE_BYTES)
+        man = spark.createDataFrame(
+            [(UP_SERIAL, str(src), "refused", "none")],
+            "dataset_serial string, file_name string, description string, "
+            "parent_dataset_id string",
+        )
+        store = tmp_path / "store"
+        with pytest.raises(ValueError, match="migrate_catalog"):
+            flows.upload_dataset(
+                spark, man, str(cat),
+                storage_root=str(store),
+                upload_type=upload_type,
+                page_reader=_fake_page_reader,
+                global_meta={"im_width": 8, "im_height": 8},
+            )
+        assert not store.exists() or not any(store.rglob("*"))
+        assert C.catalog_versions(str(cat)) == []
 
 
 DS_DDL = (
@@ -826,126 +847,42 @@ FILES_DDL = (
 
 class TestDuplicateSerialIds:
     """A serial named twice in one batch gets ONE data_set id and one
-    frames_global (file_global) id on the plain path, as on the atomic
-    path: ids {1, 2}, no gap."""
+    frames_global (file_global) id. A first upload of two serials, then a
+    batch mixing an existing serial with a new child of it and a new
+    serial named twice: the existing serial takes no id, the repeated one
+    takes one, so data_set ids run 1-4 with no gap."""
 
-    S0 = "DUPS-2008-04-01-12-00-00-0001"
-    S1 = "DUPS-2008-04-02-12-00-00-0001"
-
-    @staticmethod
-    def _catalog(spark):
-        from imagingdb_spark.catalog import IMAGING_SCHEMAS, empty_df
-
-        return {n: empty_df(spark, s) for n, s in IMAGING_SCHEMAS.items()}
-
-    def test_frames_serial_named_twice(self, spark):
-        cat = self._catalog(spark)
-        ds = spark.createDataFrame(
-            [
-                (s, "dup", "scope9", "none", f"raw_frames/{s}", "uint16",
-                 8, 8, 1, "{}")
-                for s in (self.S0, self.S1, self.S0)
-            ],
-            DS_DDL,
-        )
-        fr = spark.createDataFrame(
-            [
-                (s, 0, z, 0, 0, "ch0", f"im_c000_z{z:03d}_t000_p000.png",
-                 f"{s}/{z}", "{}")
-                for s in (self.S0, self.S1)
-                for z in range(3)
-            ],
-            FRAMES_DDL,
-        )
-        new_ds, new_fg, new_fr = flows.insert_frames(
-            ds, fr, cat["data_set"], cat["frames_global"], cat["frames"],
-        )
-        assert sorted(
-            (r["id"], r["dataset_serial"]) for r in new_ds.collect()
-        ) == [(1, self.S0), (2, self.S1)]
-        assert sorted(
-            (r["id"], r["dataset_id"], r["nbr_frames"])
-            for r in new_fg.collect()
-        ) == [(1, 1, 3), (2, 2, 3)]
-        assert sorted(
-            (r["id"], r["frames_global_id"]) for r in new_fr.collect()
-        ) == [(i, (i - 1) // 3 + 1) for i in range(1, 7)]
-
-    def test_file_serial_named_twice(self, spark):
-        from imagingdb_spark.ingest import insert_file
-
-        cat = self._catalog(spark)
-        files = spark.createDataFrame(
-            [
-                (s, "dup", "scope9", "none", f"raw_files/{s}", name, "{}",
-                 f"{s}/{name}")
-                for s, name in (
-                    (self.S0, "a.tif"), (self.S1, "c.tif"), (self.S0, "b.tif")
-                )
-            ],
-            FILES_DDL,
-        )
-        new_ds, new_fgl = insert_file(
-            files, cat["data_set"], cat["file_global"]
-        )
-        assert sorted(
-            (r["id"], r["dataset_serial"]) for r in new_ds.collect()
-        ) == [(1, self.S0), (2, self.S1)]
-        assert sorted(
-            (r["id"], r["dataset_id"]) for r in new_fgl.collect()
-        ) == [(1, 1), (2, 2)]
-
-
-class TestOneIdRule:
-    """insert_frames / ingest.insert_file run the builders their atomic
-    twins commit, so the same uploads get the same ids on both paths: a
-    first upload of two serials, then a batch mixing an existing serial
-    with two new ones, one of them named twice. The existing serial takes
-    no id, the repeated one takes one: no gap."""
-
-    S = [f"RULE-2008-04-0{i}-12-00-00-0001" for i in range(1, 5)]
+    S = [f"DUPS-2008-04-0{i}-12-00-00-0001" for i in range(1, 5)]
 
     def _batches(self):
         s0, s1, s2, s3 = self.S
         # (serial, parent serial): s2 names s0 as its parent
         return [
-            [(s0, "none"), (s1, "none")],
+            [(s0, "none"), (s1, "none"), (s0, "none")],
             [(s0, "none"), (s2, s0), (s3, "none"), (s3, "none")],
         ]
 
     @staticmethod
-    def _plain_views(spark, paths):
-        from imagingdb_spark.catalog import IMAGING_SCHEMAS, empty_df
+    def _rows(spark, cat_dir, name, *cols):
+        return sorted(
+            tuple(r[c] for c in cols)
+            for r in C.catalog_read(spark, cat_dir, name).collect()
+        )
 
-        return {
-            n: spark.read.parquet(p) if os.path.exists(p)
-            else empty_df(spark, IMAGING_SCHEMAS[n])
-            for n, p in paths.items()
-        }
+    def _data_set_pinned(self, spark, cat_dir):
+        assert self._rows(
+            spark, cat_dir, "data_set", "id", "dataset_serial", "parent_id"
+        ) == [
+            (1, self.S[0], None), (2, self.S[1], None),
+            (3, self.S[2], 1), (4, self.S[3], None),
+        ]
 
-    @staticmethod
-    def _same_tables(spark, paths, cat_dir, cols):
-        from imagingdb_spark import snapcatalog as C
-
-        out = {}
-        for n, c in cols.items():
-            plain_df = spark.read.parquet(paths[n])
-            atomic_df = C.catalog_read(spark, cat_dir, n)
-            # same column order too, so a plain delta can seed a table
-            assert plain_df.columns == atomic_df.columns, n
-            plain = sorted(tuple(r[k] for k in c) for r in plain_df.collect())
-            atomic = sorted(tuple(r[k] for k in c) for r in atomic_df.collect())
-            assert plain == atomic, n
-            out[n] = plain
-        return out
-
-    def test_frames_paths_allocate_alike(self, spark, tmp_path):
-        paths = {n: str(tmp_path / f"{n}.parquet") for n in flows.FRAMES_KEYS}
+    def test_frames_serial_named_twice(self, spark, tmp_path):
         cat_dir = str(tmp_path / "cat")
         for batch in self._batches():
             ds = spark.createDataFrame(
                 [
-                    (s, "rule", "scope9", parent, f"raw_frames/{s}",
+                    (s, "dup", "scope9", parent, f"raw_frames/{s}",
                      "uint16", 8, 8, 1, "{}")
                     for s, parent in batch
                 ],
@@ -956,55 +893,32 @@ class TestOneIdRule:
                     (s, 0, z, 0, 0, "ch0", f"im_c000_z{z:03d}_t000_p000.png",
                      f"{s}/{z}", "{}")
                     for s in dict.fromkeys(s for s, _ in batch)
-                    for z in range(2)
+                    for z in range(3)
                 ],
                 FRAMES_DDL,
             )
-            v = self._plain_views(spark, paths)
-            flows.insert_frames(
-                ds, fr, v["data_set"], v["frames_global"], v["frames"], paths
-            )
             flows.insert_frames_atomic(ds, fr, cat_dir)
-        got = self._same_tables(spark, paths, cat_dir, {
-            "data_set": ["id", "dataset_serial", "parent_id"],
-            "frames_global": ["id", "dataset_id", "nbr_frames"],
-            "frames": ["id", "frames_global_id", "file_name"],
-        })
-        assert got["data_set"] == [
-            (1, self.S[0], None), (2, self.S[1], None),
-            (3, self.S[2], 1), (4, self.S[3], None),
-        ]
-        assert got["frames_global"] == [(i, i, 2) for i in range(1, 5)]
-        assert [r[:2] for r in got["frames"]] == [
-            (i, (i + 1) // 2) for i in range(1, 9)
-        ]
+        self._data_set_pinned(spark, cat_dir)
+        assert self._rows(
+            spark, cat_dir, "frames_global", "id", "dataset_id", "nbr_frames"
+        ) == [(i, i, 3) for i in range(1, 5)]
+        assert self._rows(
+            spark, cat_dir, "frames", "id", "frames_global_id"
+        ) == [(i, (i - 1) // 3 + 1) for i in range(1, 13)]
 
-    def test_file_paths_allocate_alike(self, spark, tmp_path):
-        from imagingdb_spark.ingest import insert_file
-
-        paths = {n: str(tmp_path / f"{n}.parquet") for n in flows.FILE_KEYS}
+    def test_file_serial_named_twice(self, spark, tmp_path):
         cat_dir = str(tmp_path / "cat")
         for batch in self._batches():
             files = spark.createDataFrame(
                 [
-                    (s, "rule", "scope9", parent, f"raw_files/{s}",
+                    (s, "dup", "scope9", parent, f"raw_files/{s}",
                      f"f{i}.tif", "{}", f"{s}/{i}")
                     for i, (s, parent) in enumerate(batch)
                 ],
                 FILES_DDL,
             )
-            v = self._plain_views(spark, paths)
-            insert_file(
-                files, v["data_set"], v["file_global"],
-                paths["data_set"], paths["file_global"],
-            )
             flows.insert_file_atomic(files, cat_dir)
-        got = self._same_tables(spark, paths, cat_dir, {
-            "data_set": ["id", "dataset_serial", "parent_id"],
-            "file_global": ["id", "dataset_id"],
-        })
-        assert got["data_set"] == [
-            (1, self.S[0], None), (2, self.S[1], None),
-            (3, self.S[2], 1), (4, self.S[3], None),
-        ]
-        assert got["file_global"] == [(i, i) for i in range(1, 5)]
+        self._data_set_pinned(spark, cat_dir)
+        assert self._rows(
+            spark, cat_dir, "file_global", "id", "dataset_id"
+        ) == [(i, i) for i in range(1, 5)]

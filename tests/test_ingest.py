@@ -1,6 +1,8 @@
-"""Ingest-path tests: manifest validation, parent normalization, idempotent
-anti-join append (the reference's transactional insert semantics,
-db_operations.py:111-117 + 150-223, re-modeled per SURVEY.md §7)."""
+"""Ingest-path tests: manifest validation, parent normalization and
+resolution, frame naming and checksums (the row-level pieces of the
+reference's insert path, db_operations.py:111-148 + 150-223, re-modeled
+per SURVEY.md §7; the atomic insert itself is tested in test_flows.py
+and test_snapcatalog.py)."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -69,32 +71,3 @@ def test_with_sha256(spark):
 
     assert got == hashlib.sha256(b"frame-bytes").hexdigest()
 
-
-class TestIdempotentAppend:
-    def test_appends_only_new_keys(self, spark, tmp_path, imaging):
-        target = str(tmp_path / "data_set_parquet")
-        existing = imaging["data_set"].select("dataset_serial", "description")
-        new = spark.createDataFrame(
-            [("MEOW-2006-01-01-08-00-00-0001", "dup of existing"),
-             ("NEW-2020-01-01-00-00-00-0001", "genuinely new"),
-             ("NEW-2020-01-01-00-00-00-0001", "dup within batch")],
-            "dataset_serial string, description string",
-        )
-        appended = ingest.idempotent_append(
-            new, existing, ["dataset_serial"], target_path=target
-        )
-        assert appended.count() == 1  # catalog dup + in-batch dup both dropped
-        assert spark.read.parquet(target).count() == 1
-
-    def test_rerun_converges(self, spark, tmp_path, imaging):
-        target = str(tmp_path / "t2")
-        existing = imaging["data_set"].select("dataset_serial")
-        new = spark.createDataFrame(
-            [("NEW-2021-01-01-00-00-00-0001",)], "dataset_serial string"
-        )
-        ingest.idempotent_append(new, existing, ["dataset_serial"], target)
-        # second run: existing now includes the written rows
-        existing2 = existing.unionByName(spark.read.parquet(target))
-        out2 = ingest.idempotent_append(new, existing2, ["dataset_serial"], target)
-        assert out2.count() == 0
-        assert spark.read.parquet(target).count() == 1  # idempotent

@@ -1,5 +1,6 @@
 """Round-2 parity APIs: get_filenames (db_operations.py:276-325),
-insert_file (db_operations.py:225-274), to_numpy_stack
+insert_file (db_operations.py:225-274, as flows.insert_file_atomic),
+to_numpy_stack
 (data_storage.py:198-241) — assertions mirror the reference's
 tests/database/db_operations_tests.py and
 tests/filestorage/data_storage_tests.py."""
@@ -8,7 +9,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from imagingdb_spark import api, ingest, multimodal
+from imagingdb_spark import api, flows, ingest, multimodal
 
 
 class TestGetFilenames:
@@ -72,10 +73,8 @@ class TestInsertFile:
             "metadata_json string, sha256 string",
         )
 
-    def test_rows_constructed(self, imaging, new_files):
-        ds, fg = ingest.insert_file(
-            new_files, imaging["data_set"], imaging["file_global"]
-        )
+    def test_rows_constructed(self, imaging_catalog, new_files):
+        ds, fg = flows.insert_file_atomic(new_files, imaging_catalog)
         ds_rows = {r["dataset_serial"]: r for r in ds.collect()}
         assert len(ds_rows) == 2
         first = ds_rows["NEWF-2007-03-01-10-00-00-0001"]
@@ -92,13 +91,16 @@ class TestInsertFile:
             "NEWF-2007-03-01-10-00-00-0001"]["id"]
         assert sorted(r["id"] for r in fg_rows.values()) == [2, 3]
 
-    def test_idempotent_on_existing_serial(self, imaging, new_files):
+    def test_idempotent_on_existing_serial(self, imaging_catalog, new_files):
+        from imagingdb_spark import snapcatalog as C
+
         dup = new_files.withColumn(
             "dataset_serial", F.lit("TEST-2005-10-12-20-00-00-0002")
         )
-        ds, fg = ingest.insert_file(dup, imaging["data_set"], imaging["file_global"])
+        ds, fg = flows.insert_file_atomic(dup, imaging_catalog)
         assert ds.count() == 0  # serial already catalogued -> anti-join drops
         assert fg.count() == 0
+        assert C.catalog_versions(imaging_catalog) == [1]  # nothing published
 
 
 class TestValidateGlobalMeta:

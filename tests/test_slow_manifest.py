@@ -1,8 +1,8 @@
 """The slow-tier hook in conftest.py matches ``tests/slow_tests.txt`` by
 repo-relative file path, whatever pytest's rootdir is, and fails
-collection when a listed file is collected but none of its entries
-matched (a rename or path change would otherwise drop the marks
-silently)."""
+collection when an entry of a fully collected file matches no collected
+test (a rename, a path change or a deleted test would otherwise drop
+the mark or leave a stale line silently)."""
 
 from __future__ import annotations
 
@@ -30,10 +30,18 @@ class _Config:
     args = ["tests/"]
 
 
-@pytest.mark.parametrize("rootdir", [ROOT, ROOT / "tests"], ids=["repo", "tests"])
-def test_listed_id_marked_under_any_rootdir(rootdir):
+@pytest.fixture()
+def listed(monkeypatch):
+    """The manifest narrowed to LISTED, so the other entries of its file
+    do not count as stale in these synthetic collections."""
     assert LISTED in conftest._slow_bases()
-    file, name = LISTED.split("::", 1)
+    monkeypatch.setattr(conftest, "_slow_bases", lambda: {LISTED})
+    return LISTED.split("::", 1)
+
+
+@pytest.mark.parametrize("rootdir", [ROOT, ROOT / "tests"], ids=["repo", "tests"])
+def test_listed_id_marked_under_any_rootdir(rootdir, listed):
+    file, name = listed
     slow = _Item(rootdir, file, name + "[param]")
     fast = _Item(rootdir, file, "TestGetDatasets::test_not_listed")
     conftest.pytest_collection_modifyitems(_Config(), [slow, fast])
@@ -41,13 +49,25 @@ def test_listed_id_marked_under_any_rootdir(rootdir):
     assert fast.markers == []
 
 
-def test_listed_file_with_no_match_fails_collection():
+def test_listed_file_with_no_match_fails_collection(listed):
     item = _Item(ROOT, "tests/test_api.py", "TestRenamed::test_gone")
     with pytest.raises(pytest.UsageError, match="tests/test_api.py"):
         conftest.pytest_collection_modifyitems(_Config(), [item])
 
 
-def test_node_id_selection_is_not_checked():
+def test_stale_entry_beside_a_matching_one_fails_collection(monkeypatch, listed):
+    """One matching entry of a file does not excuse another entry of the
+    same file that matches nothing (a deleted test's stale line)."""
+    file, name = listed
+    stale = f"{file}::TestGetDatasets::test_deleted"
+    monkeypatch.setattr(conftest, "_slow_bases", lambda: {LISTED, stale})
+    item = _Item(ROOT, file, name)
+    with pytest.raises(pytest.UsageError, match="test_deleted"):
+        conftest.pytest_collection_modifyitems(_Config(), [item])
+    assert item.markers == ["slow"]
+
+
+def test_node_id_selection_is_not_checked(listed):
     item = _Item(ROOT, "tests/test_api.py", "TestRenamed::test_gone")
     config = _Config()
     config.args = ["tests/test_api.py::TestRenamed::test_gone"]

@@ -19,7 +19,6 @@ from imagingdb_spark import flows
 from imagingdb_spark import snapcatalog as C
 from imagingdb_spark import snapshots as S
 from imagingdb_spark.catalog import IMAGING_SCHEMAS
-from imagingdb_spark.ingest import CatalogTarget
 
 PAGE_BYTES = 64
 UP_SERIAL = "TEST-2005-06-09-20-00-00-1000"
@@ -56,18 +55,17 @@ def _upload(
         "dataset_serial string, file_name string, description string, "
         "parent_dataset_id string",
     )
-    cat = {n: spark.createDataFrame([], s) for n, s in IMAGING_SCHEMAS.items()}
     return flows.upload_dataset(
         spark,
         man,
-        cat,
+        cat_dir,
         storage_root=str(tmp_path / "store"),
         upload_type="frames",
         page_reader=_fake_page_reader,
         global_meta={
             "im_width": 8, "im_height": 8, "nbr_channels": 2, "nbr_slices": 3,
         },
-        paths=CatalogTarget(cat_dir, bloom_columns),
+        bloom_columns=bloom_columns,
     )
 
 
@@ -197,7 +195,6 @@ class TestCatalogCommitPrimitive:
         """A catalog dir already holding a per-table snapshot table (or a
         legacy parquet catalog) must be REFUSED, not silently shadowed —
         readers would otherwise lose every pre-existing row."""
-        from imagingdb_spark import flows
         from imagingdb_spark import snapshots as S
 
         cat = str(tmp_path / "cat")
@@ -219,14 +216,14 @@ class TestCatalogCommitPrimitive:
         # vacuum never touches the standalone table's files either
         assert C.catalog_vacuum(spark, cat) == []
         assert S.snapshot_read(spark, str(tmp_path / "cat" / "ta")).count() == 1
-        # legacy parquet catalogs refuse at the flow entry
+        # a legacy plain-parquet table of the same name is refused too
         leg = tmp_path / "legcat"
-        leg.mkdir()
-        spark.createDataFrame([], "id long").write.parquet(
-            str(leg / "data_set.parquet")
+        spark.createDataFrame([], "k long, v string").write.parquet(
+            str(leg / "ta.parquet")
         )
-        with pytest.raises(ValueError, match="legacy"):
-            flows._guard_legacy_catalog(str(leg))
+        with pytest.raises(ValueError, match="legacy.*migrate_catalog"):
+            C.catalog_commit(spark, str(leg), build, keys={"ta": ["k"]})
+        assert C.catalog_versions(str(leg)) == []
 
     def test_expire_and_vacuum(self, spark, tmp_path):
         cat = str(tmp_path / "cat")
@@ -358,7 +355,7 @@ class TestCatalogSoak:
 
 
 class TestAtomicUpload:
-    """flows.upload_dataset with a CatalogTarget: the e2e transaction."""
+    """flows.upload_dataset into an atomic catalog: the e2e transaction."""
 
     def test_upload_reads_complete_and_replay_converges(
         self, spark, tmp_path
@@ -442,8 +439,7 @@ class TestAtomicUpload:
             with pytest.raises(RuntimeError, match="simulated crash"):
                 _upload(spark, src, tmp_path, cat_dir, bloom_columns=blooms)
             monkeypatch.setattr(S, "_write_data_files", real_write)
-            # NOTHING visible — not even the dataset row (contrast with
-            # TestTornUploadHealing, where the per-table path exposes it)
+            # NOTHING visible — not even the dataset row
             assert C.catalog_versions(cat_dir) == []
             assert debris() == [], n_ok
 
@@ -488,56 +484,48 @@ class TestAtomicUpload:
         landed = sum(1 for o in outs.values() if o["data_set"].count() == 1)
         assert landed == 1  # exactly one writer's delta is non-empty
 
-    def test_migrate_per_table_catalog_to_atomic(self, spark, tmp_path):
-        """migrate_catalog: an upload appended to per-table snapshot
-        tables moves into a fresh atomic catalog with identical content,
-        uploads continue there atomically, and the source stays intact."""
-        from imagingdb_spark.catalog import IMAGING_SCHEMAS
-
-        src_dir = str(tmp_path / "old")
-        src = _src_file(tmp_path)
-        man = spark.createDataFrame(
-            [(UP_SERIAL, src, "Testing", "none")],
-            "dataset_serial string, file_name string, description string, "
-            "parent_dataset_id string",
-        )
-        cat = {
-            n: spark.createDataFrame([], s) for n, s in IMAGING_SCHEMAS.items()
-        }
-        out = flows.upload_dataset(
-            spark, man, cat,
-            storage_root=str(tmp_path / "store"),
-            upload_type="frames",
-            page_reader=_fake_page_reader,
-            global_meta={"im_width": 8, "im_height": 8,
-                         "nbr_channels": 2, "nbr_slices": 3},
-        )
-        for name, keys in flows.FRAMES_KEYS.items():
-            S.snapshot_idempotent_append(
-                spark, f"{src_dir}/{name}", out[name], keys
-            )
+    @pytest.mark.parametrize("legacy", ["snapshot", "parquet"])
+    def test_migrate_per_table_catalog_to_atomic(
+        self, spark, imaging, tmp_path, legacy
+    ):
+        """migrate_catalog: the imaging tables as per-table snapshot
+        tables (or legacy ``<name>.parquet`` files) move into a fresh
+        atomic catalog with identical content, uploads continue there
+        atomically with ids above the migrated ones, and the source stays
+        intact."""
+        src_dir = tmp_path / "old"
+        for name, df in imaging.items():
+            if legacy == "snapshot":
+                S.snapshot_commit(spark, str(src_dir / name), df)
+            else:
+                df.write.parquet(str(src_dir / f"{name}.parquet"))
+        src_dir = str(src_dir)
         dest = str(tmp_path / "new")
-        keys = {
-            "data_set": ["dataset_serial"],
-            "frames_global": ["dataset_id"],
-            "frames": ["frames_global_id", "file_name"],
-            "file_global": ["dataset_id"],
-        }
+        keys = {**flows.FRAMES_KEYS, **flows.FILE_KEYS}
         v = C.migrate_catalog(spark, src_dir, dest, IMAGING_SCHEMAS, keys)
         assert v == 1
-        assert C.catalog_read(spark, dest, "data_set").count() == 1
-        assert C.catalog_read(spark, dest, "frames").count() == 6
-        assert C.catalog_read(spark, dest, "file_global").count() == 0
+        for name, df in imaging.items():
+            assert C.catalog_read(spark, dest, name).count() == df.count()
         # source untouched
-        assert S.snapshot_read(spark, f"{src_dir}/frames").count() == 6
-        # uploads continue on the atomic catalog
+        old = (
+            S.snapshot_read(spark, f"{src_dir}/frames")
+            if legacy == "snapshot"
+            else spark.read.parquet(f"{src_dir}/frames.parquet")
+        )
+        assert old.count() == 18
+        # uploads continue on the atomic catalog, above the migrated ids
+        src = _src_file(tmp_path)
         out = _upload(spark, src, tmp_path, dest, serial=UP_SERIAL2)
+        assert [r["id"] for r in out["data_set"].collect()] == [5]
         assert out["frames"].count() == 6
-        assert C.catalog_read(spark, dest, "frames").count() == 12
-        # replaying the FIRST upload against the migrated catalog
-        # converges (content carried over)
-        out2 = _upload(spark, src, tmp_path, dest, serial=UP_SERIAL)
+        assert C.catalog_read(spark, dest, "frames").count() == 24
+        # replaying an upload of a migrated serial converges (content
+        # carried over)
+        out2 = _upload(
+            spark, src, tmp_path, dest, serial="TEST-2005-10-09-20-00-00-0001"
+        )
         assert out2["data_set"].count() == 0
+        assert out2["frames_global"].count() == 0
         # same-dir migration and double-migration refused
         with pytest.raises(ValueError, match="fresh destination"):
             C.migrate_catalog(spark, src_dir, src_dir, IMAGING_SCHEMAS, keys)
@@ -592,16 +580,12 @@ class TestAtomicUpload:
             "dataset_serial string, file_name string, description string, "
             "parent_dataset_id string",
         )
-        cat = {
-            n: spark.createDataFrame([], s) for n, s in IMAGING_SCHEMAS.items()
-        }
         out = flows.upload_dataset(
             spark,
             man,
-            cat,
+            cat_dir,
             storage_root=str(tmp_path / "store"),
             upload_type="file",
-            paths=CatalogTarget(cat_dir),
         )
         assert out["data_set"].count() == 1
         assert out["file_global"].count() == 1
@@ -1067,7 +1051,7 @@ class TestCatalogBloomIndex:
 
 
 class TestUploadBloomIndex:
-    """CatalogTarget(bloom_columns=...) end to end: an upload sets the
+    """upload_dataset(bloom_columns=...) end to end: an upload sets the
     frames table's sha256 bloom index, and a later sha point lookup
     through catalog_read prunes files (the reference's b-tree
     filter_by(sha256=...) shape, db_operations.py)."""
@@ -1082,14 +1066,10 @@ class TestUploadBloomIndex:
             "dataset_serial string, file_name string, description string, "
             "parent_dataset_id string",
         )
-        cat = {
-            n: spark.createDataFrame([], s)
-            for n, s in IMAGING_SCHEMAS.items()
-        }
         flows.upload_dataset(
             spark,
             man,
-            cat,
+            cat_dir,
             storage_root=str(tmp_path / "store"),
             upload_type="frames",
             page_reader=_fake_page_reader,
@@ -1097,9 +1077,7 @@ class TestUploadBloomIndex:
                 "im_width": 8, "im_height": 8,
                 "nbr_channels": 2, "nbr_slices": 3,
             },
-            paths=CatalogTarget(
-                cat_dir, bloom_columns={"frames": ["sha256"]}
-            ),
+            bloom_columns={"frames": ["sha256"]},
         )
         frames = C.catalog_read(spark, cat_dir, "frames")
         sha = frames.select("sha256").first()["sha256"]

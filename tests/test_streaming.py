@@ -97,30 +97,6 @@ def test_streaming_dedup_drops_in_horizon_dups(spark, events_stream):
         stop_all(spark)
 
 
-def test_streaming_catalog_append_idempotent(spark, events_stream, tmp_path):
-    """Stream -> foreachBatch idempotent append: the target holds each key
-    exactly once even though the job is restarted over the same input
-    (at-least-once replay) — the reference's uniqueness-guarded insert as a
-    continuous pipeline."""
-    target = str(tmp_path / "events_catalog")
-    ck1 = str(tmp_path / "ck1")
-    q = jobs.streaming_catalog_append(events_stream, target, ["event_id"], ck1)
-    q.processAllAvailable()
-    q.stop()
-    n_events = spark.read.parquet(SF_DIR + "/events.parquet").count()
-    got = spark.read.parquet(target)
-    assert got.count() == n_events  # driver events are unique by event_id
-    assert got.select("event_id").distinct().count() == n_events
-
-    # re-run the SAME input with a FRESH checkpoint: every batch replays,
-    # the anti-join must drop all of it
-    ck2 = str(tmp_path / "ck2")
-    q2 = jobs.streaming_catalog_append(events_stream, target, ["event_id"], ck2)
-    q2.processAllAvailable()
-    q2.stop()
-    assert spark.read.parquet(target).count() == n_events
-
-
 def test_streaming_catalog_append_snapshot(spark, events_stream, tmp_path):
     """The snapshot-backed catalog sink: exactly-once by key across a full
     fresh-checkpoint replay, every batch an atomic manifest commit."""
