@@ -181,14 +181,14 @@ def _allocate_upload(
         ds_rows,
         ["dataset_serial", "description", "microscope", "parent_id", "id"],
         "dataset_id",
-    ).select(
+    ).select(  # catalog.DATA_SET_SCHEMA's order
+        "id",
         "dataset_serial",
         "description",
         "microscope",
         F.lit(frames).alias("frames"),
         serial_to_date_time(F.col("dataset_serial")).alias("date_time"),
         "parent_id",
-        "id",
     )
     return ds_delta, local(child_rows, child_cols, "child_id"), child_ids
 

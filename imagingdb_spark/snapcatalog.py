@@ -11,17 +11,21 @@ leave windows in which a reader sees a dataset without its frames.
 This module lifts the snapshot manifest ONE level to close those windows:
 a catalog commit is a single JSON object mapping table name →
 that table's full manifest (the same group-ref manifest shape
-snapshots._next_manifest produces), published with the same dot-temp +
-fsync + hard-link put-if-absent discipline as a per-table manifest. The
-link is the only publication point for every table at once, so readers
-resolving through the catalog tip see either none of an upload's rows or
-all of them — in every table. This is the public Nessie/"multi-table
-transaction" catalog design re-expressed over the existing two-level
-manifest tree; per-table data and group files live in per-table subdirs
-(``<catalog_dir>/<table>/data``, ``.../_manifests/groups``) and are
-written by the SAME helpers the standalone format uses, so footer-stats
-pruning, group skipping, and geometric group coalescing all apply
-unchanged.
+snapshots._next_manifest produces). The link is the only publication
+point for every table at once, so readers resolving through the catalog
+tip see either none of an upload's rows or all of them — in every table.
+This is the public Nessie/"multi-table transaction" catalog design
+re-expressed over the existing two-level manifest tree.
+
+The storage rules are the snapshot format's own code, not a copy of it:
+the ``_commits`` chain is listed, read, published (dot-temp + fsync +
+hard-link put-if-absent), resolved and expired by the snapshots
+``_chain_*`` functions that run every table's ``_manifests`` chain; each
+table's keyed append lands (data files, bloom sidecars, child groups,
+next manifest) through snapshots._land_keyed_append, the landing of
+snapshot_idempotent_append; and catalog_vacuum is snapshots._vacuum run
+over every retained commit's manifests. Footer-stats pruning, group
+skipping and geometric group coalescing therefore apply unchanged.
 
 Scale: a catalog commit object holds one manifest per table, each
 O(MAX_GROUPS) group refs — publishing is O(tables × groups) bytes
@@ -42,8 +46,6 @@ from __future__ import annotations
 import functools
 import json
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -53,7 +55,6 @@ from imagingdb_spark.catalog import empty_df, run_concurrently
 from imagingdb_spark.snapshots import SnapshotConflict
 
 COMMITS_DIR = "_commits"
-_FMT = "v{:08d}.json"
 
 
 def _cdir(catalog_dir: str) -> str:
@@ -66,69 +67,22 @@ def catalog_exists(catalog_dir: str) -> bool:
 
 
 def catalog_versions(catalog_dir: str) -> list[int]:
-    d = _cdir(catalog_dir)
-    if not os.path.isdir(d):
-        return []
-    out = []
-    for n in os.listdir(d):
-        if n.startswith("v") and n.endswith(".json") and not n.startswith("."):
-            try:
-                out.append(int(n[1:-5]))
-            except ValueError:
-                continue
-    return sorted(out)
+    return S._chain_versions(_cdir(catalog_dir))
 
 
 def _read_commit(catalog_dir: str, version: int) -> dict:
-    with open(os.path.join(_cdir(catalog_dir), _FMT.format(version))) as f:
-        return json.load(f)
+    return S._chain_read(_cdir(catalog_dir), version)
 
 
 def _publish_commit(catalog_dir: str, version: int, commit: dict) -> None:
-    """Atomic put-if-absent of one catalog version — byte-for-byte the
-    discipline of snapshots._publish: full JSON to a dot-temp in the same
-    directory, fsync, hard-link into the version slot (EEXIST = lost
-    race), drop the temp. THE one moment every table's new state becomes
-    visible together."""
-    d = _cdir(catalog_dir)
-    os.makedirs(d, exist_ok=True)
-    tmp = os.path.join(d, f".tmp.{uuid.uuid4().hex}")
-    with open(tmp, "w") as f:
-        json.dump(commit, f)
-        f.flush()
-        os.fsync(f.fileno())
-    try:
-        os.link(tmp, os.path.join(d, _FMT.format(version)))
-    except FileExistsError:
-        raise SnapshotConflict(
-            f"catalog version {version} of {catalog_dir} was committed "
-            "concurrently"
-        )
-    finally:
-        os.unlink(tmp)
+    """THE one moment every table's new state becomes visible together."""
+    S._chain_publish(_cdir(catalog_dir), version, commit)
 
 
 def catalog_manifest(catalog_dir: str, version: int | None = None) -> dict:
     """One catalog commit object (latest, or pinned for time travel),
     with the expire-race retry every snapshot reader uses."""
-    for _ in range(3):
-        vs = catalog_versions(catalog_dir)
-        if not vs:
-            raise FileNotFoundError(
-                f"{catalog_dir} has no committed catalog versions"
-            )
-        v = vs[-1] if version is None else version
-        if v not in vs:
-            raise FileNotFoundError(f"{catalog_dir} has no version {v}")
-        try:
-            return _read_commit(catalog_dir, v)
-        except FileNotFoundError:
-            if version is not None:
-                raise
-            continue
-    raise FileNotFoundError(
-        f"{catalog_dir}: tip kept expiring during resolution"
-    )
+    return S._chain_resolve(_cdir(catalog_dir), version)
 
 
 def _table_dir(catalog_dir: str, name: str) -> str:
@@ -166,19 +120,12 @@ def _manifest_df(
     where: list | None = None,
     scan_cache: dict | None = None,
 ) -> DataFrame:
-    """DataFrame for one embedded table manifest — the snapshot_read body
-    over a manifest that came from a catalog commit instead of a
-    per-table version chain. Same group skipping, same footer-stats file
-    pruning, same re-applied residual filter (pruning is an optimization,
-    never the semantics)."""
-    tdir = _table_dir(catalog_dir, name)
-    files = S._resolve_pruned(tdir, m, where)
-    schema = StructType.fromJson(json.loads(m["schema"]))
-    cond = S.where_to_column(where) if where else None
-    # DV-aware (entries carrying positional-delete refs read as their
-    # live rows) — catalog_delete(mode="dv") manifests read correctly
-    df = S._read_entries(spark, tdir, files, schema, scan_cache)
-    return df.filter(cond) if cond is not None else df
+    """DataFrame for one embedded table manifest: snapshot_read's body
+    (snapshots._manifest_read) over a manifest that came from a catalog
+    commit instead of a per-table version chain."""
+    return S._manifest_read(
+        spark, _table_dir(catalog_dir, name), m, where, scan_cache
+    )
 
 
 def read_table_at(
@@ -264,17 +211,6 @@ class CatalogViews(dict):
         self.manifests = manifests
 
 
-def _known_empty(df: DataFrame) -> bool:
-    """True when the optimizer has already reduced ``df`` to an empty
-    LocalRelation (an empty driver-built delta, guarded or not): writing
-    it would run a job only to land a file with no rows."""
-    plan = df._jdf.queryExecution().optimizedPlan()
-    return (
-        plan.getClass().getSimpleName() == "LocalRelation"
-        and plan.data().isEmpty()
-    )
-
-
 def _drop_attempt(
     catalog_dir: str,
     created: dict[str, list[str]],
@@ -286,8 +222,7 @@ def _drop_attempt(
     for name, cr in created.items():
         S._drop_groups(_table_dir(catalog_dir, name), cr)
     for tdir, rel_dir in datadirs:
-        shutil.rmtree(os.path.join(tdir, rel_dir), ignore_errors=True)
-        S._drop_sidecar(tdir, rel_dir)
+        S._drop_delta(tdir, rel_dir)
 
 
 def catalog_commit(
@@ -308,14 +243,17 @@ def catalog_commit(
     It is re-invoked against the EXACT tip inside every retry, so
     cross-table derived values — surrogate ids allocated from one table
     and baked into another's rows — recompute against the state the
-    commit actually publishes onto (the same builder discipline as
-    snapshot_idempotent_append_delta, lifted to the table set).
+    commit actually publishes onto (snapshot_idempotent_append's
+    discipline, lifted to the table set).
 
-    Per table, rows are deduplicated on ``keys[name]`` and anti-joined
-    against the tip view, so a replay (same upload re-run) or a lost
-    same-key race converges to an empty delta. A delta holding the tip's
-    columns in another order is written in the tip's order; any other
-    schema difference is refused. A table's first commit refuses a
+    Each table lands through snapshots._land_keyed_append, the landing
+    of snapshot_idempotent_append: rows are deduplicated on
+    ``keys[name]`` and anti-joined against the tip view, so a replay
+    (same upload re-run) or a lost same-key race converges to an empty
+    delta. A delta holding the tip's columns in another order is written
+    in the tip's order (catalogs published by earlier code store
+    ``data_set`` with ``id`` last); any other schema difference is
+    refused. A table's first commit refuses a
     per-table form of it in the same directory
     (refuse_per_table_catalog). When EVERY table's delta is empty and no
     new table appears, nothing is published and the tip version is
@@ -325,7 +263,7 @@ def catalog_commit(
     the point: data files and group files written before the publish link
     are unreachable debris (catalog_vacuum's job), never visible state —
     a reader through catalog_read sees the parent commit until the single
-    os.link lands, at which instant it sees every table's new state.
+    publish link lands, at which instant it sees every table's new state.
 
     ``bloom_columns`` maps table name -> indexed columns (the per-table
     analog of snapshot_commit's parameter): this commit sets the
@@ -375,95 +313,16 @@ def catalog_commit(
         # touches only its own ``created`` entry; list.append is atomic)
         created: dict[str, list[str]] = {name: [] for name in new_rows}
         datadirs: list[tuple[str, str]] = []
-
-        def land(name: str, rows_df: DataFrame):
-            """One table's guard, data files, bloom sidecar, group file
-            and delta read-back: (delta, manifest or None, rows)."""
-            kcols = keys[name]
-            bm = tables_base.get(name)
-            if bm is not None:
-                tip_cols = StructType.fromJson(
-                    json.loads(bm["schema"])
-                ).fieldNames()
-                if rows_df.columns != tip_cols and sorted(
-                    rows_df.columns
-                ) == sorted(tip_cols):
-                    # the tip's columns in another order (a table migrated
-                    # from a per-table form keeps its source's order)
-                    rows_df = rows_df.select(*tip_cols)
-            rows_df = rows_df.dropDuplicates(kcols)
-            schema = rows_df.schema
-            schema_json = S._canon_schema_json(schema)
-            if bm is not None:
-                if S._canon_schema_json(bm["schema"]) != schema_json:
-                    raise ValueError(
-                        f"append schema differs from catalog tip for "
-                        f"table {name!r}"
-                    )
-                deduped = rows_df.join(
-                    views[name].select(*kcols), kcols, "left_anti"
-                )
-            else:
-                deduped = rows_df
-            tdir = _table_dir(catalog_dir, name)
-            boverride = (bloom_columns or {}).get(name)
-            if _known_empty(deduped):
-                files, n = [], 0
-            else:
-                os.makedirs(tdir, exist_ok=True)
-                files, n, rel_dir = S._write_data_files(deduped, tdir)
-                if n == 0:
-                    shutil.rmtree(
-                        os.path.join(tdir, rel_dir), ignore_errors=True
-                    )
-                else:
-                    datadirs.append((tdir, rel_dir))
-            if n == 0:
-                # typed as the tip stores it (every field nullable), the
-                # schema a non-empty delta reads back from its files
-                delta = empty_df(
-                    spark, StructType.fromJson(json.loads(schema_json))
-                )
-                # first appearance with an empty delta: record the typed
-                # empty manifest so readers get the schema
-                manifest = (
-                    S._next_manifest(
-                        None, "append", [], 0, schema_json,
-                        blooms=boverride,
-                    )
-                    if bm is None
-                    else None
-                )
-                return delta, manifest, 0
-            S._build_blooms(
-                spark, tdir, rel_dir, files,
-                boverride
-                if boverride is not None
-                else (bm.get("blooms") if bm else None),
-                deduped.schema,
-            )
-            base_groups, legacy_delta = S._base_delta(bm)
-            groups = S._child_groups(
-                tdir, base_groups, legacy_delta + files, created[name]
-            )
-            manifest = S._next_manifest(
-                bm,
-                "append",
-                groups,
-                (bm["rows"] if bm else 0) + n,
-                schema_json,
-                blooms=boverride,
-            )
-            delta = spark.read.schema(schema).parquet(
-                *[os.path.join(tdir, f["path"]) for f in files]
-            )
-            return delta, manifest, n
-
         try:
             landed = run_concurrently(
                 spark,
                 [
-                    functools.partial(land, name, rows_df)
+                    functools.partial(
+                        S._land_keyed_append, spark,
+                        _table_dir(catalog_dir, name), rows_df, keys[name],
+                        tables_base.get(name), views.get(name), created[name],
+                        datadirs, (bloom_columns or {}).get(name),
+                    )
                     for name, rows_df in new_rows.items()
                 ],
             )
@@ -513,7 +372,8 @@ def migrate_catalog(
     atomic catalog at ``dest_dir`` — the actionable path behind
     refuse_per_table_catalog, and the only reader of those forms.
     Every table's current
-    content lands in ONE catalog commit (v1), so the destination starts
+    content lands in ONE catalog commit (v1), in the field order of
+    ``tables[name]``, so the destination starts
     with the cross-table consistency guarantee already holding; absent
     source tables become typed empty tables. The source is READ ONLY —
     cut over by pointing writers and readers at ``dest_dir`` and
@@ -534,7 +394,10 @@ def migrate_catalog(
             if os.path.exists(legacy):
                 out[name] = spark.read.schema(schema).parquet(legacy)
             elif S.snapshot_exists(snap):
-                out[name] = S.snapshot_read(spark, snap)
+                # the declared field order, whatever the source stores
+                out[name] = S.snapshot_read(spark, snap).select(
+                    *schema.fieldNames()
+                )
             else:
                 out[name] = empty_df(spark, schema)
         return out
@@ -547,136 +410,31 @@ def catalog_expire(catalog_dir: str, keep_last: int = 1) -> list[int]:
     """Drop catalog commit objects older than the newest ``keep_last``;
     returns the expired version numbers. Data/group files they referenced
     become vacuum candidates exactly like the per-table format."""
-    if keep_last < 1:
-        raise ValueError("keep_last must be >= 1")
-    vs = catalog_versions(catalog_dir)
-    drop = vs[:-keep_last]
-    for v in drop:
-        try:
-            os.unlink(os.path.join(_cdir(catalog_dir), _FMT.format(v)))
-        except FileNotFoundError:
-            pass
-    return drop
+    return S._chain_expire(_cdir(catalog_dir), keep_last)
 
 
 def catalog_vacuum(spark: SparkSession, catalog_dir: str) -> list[str]:
-    """Remove data files and group files not referenced by ANY retained
-    catalog version — the crash-path backstop for aborted/torn attempts
-    (whose writes are invisible by design). Returns removed paths
-    (relative to catalog_dir)."""
-    live_groups: dict[str, set[str]] = {}
-    live_files: dict[str, set[str]] = {}
-    live_sidecars: dict[str, set[str]] = {}
-    live_dvs: dict[str, set[str]] = {}
-    live_eqs: dict[str, set[str]] = {}
-    for v in catalog_versions(catalog_dir):
-        try:
-            commit = _read_commit(catalog_dir, v)
-        except FileNotFoundError:
-            continue
+    """Remove data files, group files, sidecar dirs and dot-temps not
+    referenced by ANY retained catalog version — the crash-path backstop
+    for aborted/torn attempts (whose writes are invisible by design).
+    The sweep is snapshot_vacuum's (snapshots._vacuum), run per table
+    over the manifests every retained commit holds for it. Returns
+    removed paths (relative to catalog_dir)."""
+    tables = {
+        name: []
+        for name in os.listdir(catalog_dir)
+        if name != COMMITS_DIR
+        and os.path.isdir(_table_dir(catalog_dir, name))
+        # a standalone per-table snapshot table sharing the directory:
+        # its own manifest chain defines its live set, and
+        # snapshot_vacuum owns its garbage
+        and not S.snapshot_exists(_table_dir(catalog_dir, name))
+    }
+    for commit in S._chain_retained(_cdir(catalog_dir)):
         for name, m in commit["tables"].items():
-            tdir = _table_dir(catalog_dir, name)
-            gset = live_groups.setdefault(name, set())
-            fset = live_files.setdefault(name, set())
-            scset = live_sidecars.setdefault(name, set())
-            dvset = live_dvs.setdefault(name, set())
-            eqset = live_eqs.setdefault(name, set())
-            if m.get("groups") is not None:
-                for g in m["groups"]:
-                    gset.add(g["name"])
-                for fe in S._resolve_pruned(tdir, m, None):
-                    fset.add(fe["path"])
-                    if fe.get("bloom"):
-                        scset.add(fe["bloom"]["sc"])
-                    if fe.get("dv"):
-                        dvset.update(S._dv_scs(fe["dv"]))
-                    if fe.get("eq"):
-                        eqset.update(S._eq_scs(fe["eq"]))
-            else:  # legacy flat manifest shape (not produced here)
-                for fe in m.get("files", []):
-                    fset.add(fe["path"])
-    removed: list[str] = []
-    for name in os.listdir(catalog_dir):
-        tdir = _table_dir(catalog_dir, name)
-        if name == COMMITS_DIR or not os.path.isdir(tdir):
-            continue
-        if S.snapshot_exists(tdir):
-            # a standalone per-table snapshot table sharing the directory:
-            # its live set is defined by ITS manifest chain, which this
-            # vacuum does not read — never touch it (snapshot_vacuum owns
-            # that table's garbage)
-            continue
-        gdir = S._gdir(tdir)
-        if os.path.isdir(gdir):
-            keep = live_groups.get(name, set())
-            for n in os.listdir(gdir):
-                if n.startswith("g-") and n not in keep:
-                    os.unlink(os.path.join(gdir, n))
-                    removed.append(os.path.join(name, "groups", n))
-        ddir = os.path.join(tdir, S.DATA_DIR)
-        if os.path.isdir(ddir):
-            keep = live_files.get(name, set())
-            for commit_id in os.listdir(ddir):
-                cdir = os.path.join(ddir, commit_id)
-                if not os.path.isdir(cdir):
-                    continue
-                # only DATA files are vacuum candidates — _SUCCESS
-                # markers and .crc sidecars are bookkeeping, never
-                # manifest-referenced, and deleting a live commit's
-                # sidecars would make a clean table look dirty (same
-                # rule as snapshots.snapshot_vacuum)
-                data = [
-                    n
-                    for n in os.listdir(cdir)
-                    if n.endswith(".parquet") and not n.startswith((".", "_"))
-                ]
-                for n in data:
-                    rel = os.path.join(S.DATA_DIR, commit_id, n)
-                    if rel not in keep:
-                        os.unlink(os.path.join(cdir, n))
-                        removed.append(os.path.join(name, rel))
-                if not any(
-                    n.endswith(".parquet") for n in os.listdir(cdir)
-                ):
-                    shutil.rmtree(cdir, ignore_errors=True)
-        # positional-delete sidecar dirs: keep only dirs some retained
-        # entry still anti-applies (same rule as snapshot_vacuum)
-        dvroot = os.path.join(tdir, S.DELETES_DIR)
-        if os.path.isdir(dvroot):
-            keep_dv = live_dvs.get(name, set())
-            for n in os.listdir(dvroot):
-                rel = os.path.join(S.DELETES_DIR, n)
-                if rel not in keep_dv:
-                    shutil.rmtree(
-                        os.path.join(dvroot, n), ignore_errors=True
-                    )
-                    removed.append(os.path.join(name, rel))
-        # equality-delete sidecar dirs: same set-difference rule
-        eqroot = os.path.join(tdir, S.EQDELETES_DIR)
-        if os.path.isdir(eqroot):
-            keep_eq = live_eqs.get(name, set())
-            for n in os.listdir(eqroot):
-                rel = os.path.join(S.EQDELETES_DIR, n)
-                if rel not in keep_eq:
-                    shutil.rmtree(
-                        os.path.join(eqroot, n), ignore_errors=True
-                    )
-                    removed.append(os.path.join(name, rel))
-        # bloom sidecar dirs: same set-difference rule as the per-table
-        # vacuum — keep only dirs some retained entry still probes
-        from imagingdb_spark.blooms import BLOOM_DIR
-
-        broot = os.path.join(tdir, BLOOM_DIR)
-        if os.path.isdir(broot):
-            keep_sc = live_sidecars.get(name, set())
-            for n in os.listdir(broot):
-                rel = os.path.join(BLOOM_DIR, n)
-                if rel not in keep_sc:
-                    shutil.rmtree(
-                        os.path.join(broot, n), ignore_errors=True
-                    )
-                    removed.append(os.path.join(name, rel))
-    return removed
+            if name in tables:
+                tables[name].append(m)
+    return S._vacuum(catalog_dir, COMMITS_DIR, tables)
 
 
 def catalog_delete(

@@ -72,6 +72,7 @@ transaction.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
@@ -204,6 +205,93 @@ def _mdir(table_dir: str) -> str:
     return os.path.join(table_dir, MANIFEST_DIR)
 
 
+# ---------------------------------------------------------------------------
+# The version chain: one directory of immutable ``v<NNNNNNNN>.json``
+# objects, published by put-if-absent. A table's ``_manifests`` holds one
+# manifest per version; an atomic catalog's ``_commits`` (snapcatalog.py)
+# holds one {table: manifest} commit object per version. Both chains are
+# listed, read, published, resolved and expired by these five functions.
+
+
+def _chain_versions(chain_dir: str) -> list[int]:
+    """Retained version numbers of the chain, oldest first."""
+    if not os.path.isdir(chain_dir):
+        return []
+    out = []
+    for n in os.listdir(chain_dir):
+        if n.startswith("v") and n.endswith(".json"):
+            try:
+                out.append(int(n[1:-5]))
+            except ValueError:
+                continue
+    return sorted(out)
+
+
+def _chain_read(chain_dir: str, version: int) -> dict:
+    with open(os.path.join(chain_dir, _FMT.format(version))) as f:
+        return json.load(f)
+
+
+def _chain_publish(chain_dir: str, version: int, obj: dict) -> None:
+    """Atomic put-if-absent of one version: write the full JSON to a
+    dot-temp in the chain directory, fsync, hard-link it to the version
+    slot (atomic; EEXIST = lost race), then drop the temp. Readers can
+    never observe a partially-written version because the link only
+    exists after the temp is complete."""
+    os.makedirs(chain_dir, exist_ok=True)
+    tmp = os.path.join(chain_dir, f".tmp.{uuid.uuid4().hex}")
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+        f.flush()
+        os.fsync(f.fileno())
+    try:
+        os.link(tmp, os.path.join(chain_dir, _FMT.format(version)))
+    except FileExistsError:
+        raise SnapshotConflict(
+            f"version {version} of {chain_dir} was committed concurrently"
+        )
+    finally:
+        os.unlink(tmp)
+
+
+def _chain_resolve(
+    chain_dir: str, version: int | None = None, then=lambda obj: obj
+):
+    """``then(obj)`` of ONE version, the latest or the
+    pinned ``version``, with the expire-race retry shared by every reader:
+    a LATEST read that loses the list-then-open race to a concurrent
+    commit+expire (or whose ``then`` finds a group file vacuumed under
+    it) re-resolves, as the newer tip is by definition retained; a PINNED
+    read of an expired version fails, as it must (see snapshot_expire's
+    retention contract)."""
+    for _ in range(3):
+        vs = _chain_versions(chain_dir)
+        if not vs:
+            raise FileNotFoundError(f"{chain_dir} has no committed versions")
+        v = vs[-1] if version is None else version
+        if v not in vs:
+            raise FileNotFoundError(f"{chain_dir} has no version {v}")
+        try:
+            return then(_chain_read(chain_dir, v))
+        except FileNotFoundError:
+            if version is not None:
+                raise
+    raise FileNotFoundError(f"{chain_dir}: tip kept expiring during resolution")
+
+
+def _chain_expire(chain_dir: str, keep_last: int) -> list[int]:
+    """Unlink every version but the newest ``keep_last``; a version a
+    concurrent expire already removed counts as expired. Returns the
+    expired version numbers."""
+    if keep_last < 1:
+        raise ValueError("keep_last must be >= 1 (the tip must survive)")
+    drop = _chain_versions(chain_dir)[:-keep_last]
+    for v in drop:
+        with contextlib.suppress(FileNotFoundError):
+            os.unlink(os.path.join(chain_dir, _FMT.format(v)))
+    return drop
+
+
 def snapshot_exists(table_dir: str) -> bool:
     """True when the table has at least one committed version — the
     public existence probe (callers should not reach for _versions)."""
@@ -211,17 +299,7 @@ def snapshot_exists(table_dir: str) -> bool:
 
 
 def _versions(table_dir: str) -> list[int]:
-    d = _mdir(table_dir)
-    if not os.path.isdir(d):
-        return []
-    out = []
-    for n in os.listdir(d):
-        if n.startswith("v") and n.endswith(".json") and not n.startswith("."):
-            try:
-                out.append(int(n[1:-5]))
-            except ValueError:
-                continue
-    return sorted(out)
+    return _chain_versions(_mdir(table_dir))
 
 
 def _gdir(table_dir: str) -> str:
@@ -231,9 +309,24 @@ def _gdir(table_dir: str) -> str:
 def _read_manifest_raw(table_dir: str, version: int) -> dict:
     """The PHYSICAL manifest: group refs, not file entries. Internal
     callers that only need counts/txns/schema use this to stay O(groups)
-    instead of paying the full tree resolution."""
-    with open(os.path.join(_mdir(table_dir), _FMT.format(version))) as f:
-        return json.load(f)
+    instead of paying the full tree resolution. A legacy flat manifest
+    (pre-tree, inline ``files``) reads with ``groups`` None."""
+    return _legacy_flat(_chain_read(_mdir(table_dir), version))
+
+
+def _legacy_flat(m: dict) -> dict:
+    m.setdefault("groups", None)
+    return m
+
+
+def _resolve_manifest_raw(
+    table_dir: str, version: int | None, then=lambda m: m
+):
+    """``then(manifest)`` of ONE physical manifest, latest or pinned,
+    under the chain's expire-race retry (_chain_resolve)."""
+    return _chain_resolve(
+        _mdir(table_dir), version, lambda m: then(_legacy_flat(m))
+    )
 
 
 def _read_manifest(table_dir: str, version: int) -> dict:
@@ -243,14 +336,12 @@ def _read_manifest(table_dir: str, version: int) -> dict:
     unchanged with `groups = None`; the next commit folds them into the
     tree."""
     m = _read_manifest_raw(table_dir, version)
-    if m.get("groups") is not None:
+    if m["groups"] is not None:
         m["files"] = [
             fe
             for g in m["groups"]
             for fe in _read_group(table_dir, g["name"])
         ]
-    else:
-        m["groups"] = None
     return m
 
 
@@ -667,26 +758,9 @@ def _base_delta(base: dict | None) -> tuple[list[dict], list[dict]]:
 
 
 def _publish(table_dir: str, version: int, manifest: dict) -> None:
-    """Atomic put-if-absent of one manifest version: write the full JSON
-    to a dot-temp in the same directory, hard-link it to the version
-    slot (atomic; EEXIST = lost race), then drop the temp. Readers can
-    never observe a partially-written manifest because the link only
-    exists after the temp is complete."""
-    d = _mdir(table_dir)
-    os.makedirs(d, exist_ok=True)
-    tmp = os.path.join(d, f".tmp.{uuid.uuid4().hex}")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-        f.flush()
-        os.fsync(f.fileno())
-    try:
-        os.link(tmp, os.path.join(d, _FMT.format(version)))
-    except FileExistsError:
-        raise SnapshotConflict(
-            f"version {version} of {table_dir} was committed concurrently"
-        )
-    finally:
-        os.unlink(tmp)
+    """Publish one manifest version (_chain_publish): every commit path
+    goes through this seam."""
+    _chain_publish(_mdir(table_dir), version, manifest)
 
 
 def _write_data_files(
@@ -803,6 +877,12 @@ def _drop_sidecar(table_dir: str, rel_dir: str) -> None:
         os.path.join(table_dir, BLOOM_DIR, os.path.basename(rel_dir)),
         ignore_errors=True,
     )
+
+
+def _drop_delta(table_dir: str, rel_dir: str) -> None:
+    """Remove an aborted commit's data dir and its bloom sidecar."""
+    shutil.rmtree(os.path.join(table_dir, rel_dir), ignore_errors=True)
+    _drop_sidecar(table_dir, rel_dir)
 
 
 def _build_blooms(
@@ -1188,13 +1268,10 @@ def snapshot_commit(
         # commit paths only need refs/txns/schema/rows — never the
         # resolved file list, which is the whole point of the tree
         base = _read_manifest_raw(table_dir, parent) if parent else None
-        if base is not None and "groups" not in base:
-            base["groups"] = None  # legacy flat manifest
         if _already(base.get("txns", {}) if base else {}):
             # another replica committed this txn between our check and
             # now: drop our identical delta and converge
-            shutil.rmtree(os.path.join(table_dir, rel_dir), ignore_errors=True)
-            _drop_sidecar(table_dir, rel_dir)
+            _drop_delta(table_dir, rel_dir)
             return parent
         commit_schema = schema_json
         if mode == "append" and base:
@@ -1211,10 +1288,7 @@ def snapshot_commit(
                     # abort: drop the already-written delta eagerly, like
                     # every other abort path — a sink retrying a
                     # mis-schemaed batch must not pile up full copies
-                    shutil.rmtree(
-                        os.path.join(table_dir, rel_dir), ignore_errors=True
-                    )
-                    _drop_sidecar(table_dir, rel_dir)
+                    _drop_delta(table_dir, rel_dir)
                     raise ValueError(
                         f"append schema differs from {table_dir} tip "
                         f"v{parent}; additive widening needs "
@@ -1244,10 +1318,7 @@ def snapshot_commit(
                 # commit makes the overwrite a genuine conflict
                 _drop_groups(table_dir, created)
                 if _already(_tip_txns()):
-                    shutil.rmtree(
-                        os.path.join(table_dir, rel_dir), ignore_errors=True
-                    )
-                    _drop_sidecar(table_dir, rel_dir)
+                    _drop_delta(table_dir, rel_dir)
                     return _versions(table_dir)[-1]
                 raise
             # append rebase: re-read tip, relink the same data files
@@ -1296,128 +1367,133 @@ def snapshot_idempotent_append(
     anti-join-guarded append to bare parquet cannot give (two concurrent
     writers can both pass the anti-join check and double-insert). Here
     the anti-join is recomputed against the EXACT tip the commit
-    publishes onto: if another commit wins the version race, the
-    stale delta is discarded (vacuum debris), the anti-join re-runs
-    against the new tip, and the delta is rewritten — so concurrent
-    ingests of overlapping batches converge to exactly-once by keys.
-    Returns the tip version (unchanged when the whole batch was already
-    present). The retry rewrites data files, unlike snapshot_commit's
-    append rebase, precisely because idempotence is a READ-dependent
-    claim: relinking files checked against an older tip would reintroduce
-    the double-insert."""
-    version, _delta = snapshot_idempotent_append_delta(
-        spark, table_dir, new_rows, key_cols, max_retries
-    )
-    return version
-
-
-def snapshot_idempotent_append_delta(
-    spark: SparkSession,
-    table_dir: str,
-    new_rows: DataFrame,
-    key_cols: list[str],
-    max_retries: int = 5,
-) -> tuple[int, DataFrame]:
-    """snapshot_idempotent_append, returning (tip version, the rows THIS
-    call actually committed) — the committed delta read back from the
-    commit's own data files: on a replay or a lost same-key race it is
-    the typed EMPTY frame, so a caller chaining further appends off it
-    converges to nothing instead of re-deriving from the stale
-    pre-commit view. Rows derived from several tables' state (surrogate
-    ids, parent ids) belong in one snapcatalog.catalog_commit, whose
-    builder re-runs against the exact tip of every table."""
-    rows_df = new_rows.dropDuplicates(key_cols)
-    schema = rows_df.schema
-    schema_json = _canon_schema_json(schema)
-    created: list[str] = []
+    publishes onto: if another commit wins the version race, the stale
+    delta is dropped, the anti-join re-runs against the new tip, and the
+    delta is rewritten — so concurrent ingests of overlapping batches
+    converge to exactly-once by keys. Returns the tip version (unchanged
+    when the whole batch was already present). The retry rewrites data
+    files, unlike snapshot_commit's append rebase, precisely because
+    idempotence is a READ-dependent claim: relinking files checked
+    against an older tip would reintroduce the double-insert. Rows
+    derived from several tables' state (surrogate ids, parent ids) belong
+    in one snapcatalog.catalog_commit, whose builder re-runs against the
+    exact tip of every table and lands each table through the same
+    _land_keyed_append."""
     for _ in range(max_retries):
         vs = _versions(table_dir)
         parent = vs[-1] if vs else 0
-        if parent:
-            base = _read_manifest_raw(table_dir, parent)
-            if "groups" not in base:
-                base["groups"] = None  # legacy flat manifest
-            if _canon_schema_json(base["schema"]) != schema_json:
-                raise ValueError(
-                    f"append schema differs from {table_dir} tip v{parent}"
-                )
-            deduped = rows_df.join(
-                snapshot_read(spark, table_dir, parent).select(*key_cols),
-                key_cols,
-                "left_anti",
-            )
-        else:
-            base = None
-            deduped = rows_df
-        os.makedirs(table_dir, exist_ok=True)
-        files, rows, rel_dir = _write_data_files(deduped, table_dir)
-        _build_blooms(
-            spark, table_dir, rel_dir, files,
-            base.get("blooms") if base else None,
-            deduped.schema,
+        base = _read_manifest_raw(table_dir, parent) if parent else None
+        tip = _manifest_read(spark, table_dir, base) if base else None
+        created: list[str] = []
+        datadirs: list[tuple[str, str]] = []
+        _, manifest, _ = _land_keyed_append(
+            spark, table_dir, new_rows, key_cols, base, tip, created, datadirs
         )
-        if rows == 0 and base is not None:
-            # whole batch already present: converged, nothing to publish
-            # (and the just-written empty delta dir is removed, not left
-            # as vacuum debris)
-            shutil.rmtree(os.path.join(table_dir, rel_dir), ignore_errors=True)
-            _drop_sidecar(table_dir, rel_dir)
-            return parent, empty_df(spark, schema)
-        base_groups, legacy_delta = _base_delta(base)
-        groups = _child_groups(
-            table_dir, base_groups, legacy_delta + files, created
-        )
-        manifest = _next_manifest(
-            base,
-            "append",
-            groups,
-            (base["rows"] if base else 0) + rows,
-            schema_json,
-        )
+        if manifest is None:
+            return parent  # whole batch already present: converged
         try:
             _publish(table_dir, parent + 1, manifest)
-            delta = (
-                spark.read.schema(schema).parquet(
-                    *[os.path.join(table_dir, f["path"]) for f in files]
-                )
-                if files
-                else empty_df(spark, schema)
-            )
-            return parent + 1, delta
+            return parent + 1
         except SnapshotConflict:
-            # stale anti-join: recompute against the new tip (the stale
-            # delta's data files stay as vacuum debris, its groups don't)
+            # stale anti-join: drop this attempt and recompute against
+            # the new tip
             _drop_groups(table_dir, created)
-            continue
+            for _, rel_dir in datadirs:
+                _drop_delta(table_dir, rel_dir)
     raise SnapshotConflict(
         f"idempotent append to {table_dir} lost {max_retries} straight races"
     )
 
 
-def _resolve_manifest_raw(table_dir: str, version: int | None) -> dict:
-    """Resolve ONE physical manifest (latest, or the pinned ``version`` for
-    time travel) with the expire-race retry shared by every reader: a
-    LATEST read that loses the list-then-open race to a concurrent
-    commit+expire re-resolves (the newer tip is by definition retained); a
-    PINNED read of an expired version fails, as it must — see
-    snapshot_expire's retention contract."""
-    for _ in range(3):
-        vs = _versions(table_dir)
-        if not vs:
-            raise FileNotFoundError(f"{table_dir} has no committed snapshots")
-        v = vs[-1] if version is None else version
-        if v not in vs:
-            raise FileNotFoundError(f"{table_dir} has no version {v}")
-        try:
-            m = _read_manifest_raw(table_dir, v)
-            if m.get("groups") is None:
-                m["groups"] = None  # legacy flat manifest
-            return m
-        except FileNotFoundError:
-            if version is not None:
-                raise  # pinned version expired: a real error
-            continue  # latest expired between list and open: re-resolve
-    raise FileNotFoundError(f"{table_dir}: tip kept expiring during resolution")
+def _known_empty(df: DataFrame) -> bool:
+    """True when the optimizer has already reduced ``df`` to an empty
+    LocalRelation (an empty driver-built delta, guarded or not): writing
+    it would run a job only to land a file with no rows."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    return (
+        plan.getClass().getSimpleName() == "LocalRelation"
+        and plan.data().isEmpty()
+    )
+
+
+def _land_keyed_append(
+    spark: SparkSession,
+    table_dir: str,
+    rows_df: DataFrame,
+    key_cols: list[str],
+    base: dict | None,
+    tip: DataFrame | None,
+    created: list[str],
+    datadirs: list[tuple[str, str]],
+    blooms: list[str] | None = None,
+) -> tuple[DataFrame, dict | None, int]:
+    """Land one keyed append onto the tip manifest ``base`` (None: the
+    table has no version yet), whose rows ``tip`` reads, WITHOUT
+    publishing: the one landing both snapshot_idempotent_append and
+    snapcatalog.catalog_commit publish. In order: reorder to the tip's
+    column order, drop duplicate keys, check the canonical schema
+    against the tip, anti-join the tip's keys, write the data files
+    (nothing when the optimizer already knows the delta is empty), build
+    the bloom sidecars (``blooms`` sets the table property, None
+    inherits the tip's), write the child group and shape the next
+    manifest. The data dir is recorded in ``datadirs`` and the group
+    files in ``created`` the moment they exist, so the caller can drop
+    an unpublished attempt.
+
+    Returns (the delta read back from its own files, the next manifest,
+    rows landed). An empty delta returns a typed empty frame and no
+    manifest, except on the table's first version, where the manifest
+    records the typed empty table so readers get its schema."""
+    if base is not None:
+        tip_cols = StructType.fromJson(json.loads(base["schema"])).fieldNames()
+        if rows_df.columns != tip_cols and sorted(rows_df.columns) == sorted(
+            tip_cols
+        ):
+            # the tip's columns in another order: catalogs published by
+            # earlier code store data_set with ``id`` last
+            rows_df = rows_df.select(*tip_cols)
+    rows_df = rows_df.dropDuplicates(key_cols)
+    schema = rows_df.schema
+    schema_json = _canon_schema_json(schema)
+    if base is not None:
+        if _canon_schema_json(base["schema"]) != schema_json:
+            raise ValueError(
+                f"append schema differs from {table_dir} tip "
+                f"v{base['version']}"
+            )
+        rows_df = rows_df.join(tip.select(*key_cols), key_cols, "left_anti")
+    n = 0
+    if not _known_empty(rows_df):
+        os.makedirs(table_dir, exist_ok=True)
+        files, n, rel_dir = _write_data_files(rows_df, table_dir)
+        if n == 0:
+            shutil.rmtree(os.path.join(table_dir, rel_dir), ignore_errors=True)
+        else:
+            datadirs.append((table_dir, rel_dir))
+    if n == 0:
+        # typed as the tip stores it (every field nullable), the schema a
+        # non-empty delta reads back from its files
+        delta = empty_df(spark, StructType.fromJson(json.loads(schema_json)))
+        if base is not None:
+            return delta, None, 0
+        return delta, _next_manifest(
+            None, "append", [], 0, schema_json, blooms=blooms
+        ), 0
+    _build_blooms(
+        spark, table_dir, rel_dir, files,
+        blooms if blooms is not None else (base or {}).get("blooms"),
+        rows_df.schema,
+    )
+    base_groups, legacy_delta = _base_delta(base)
+    groups = _child_groups(table_dir, base_groups, legacy_delta + files, created)
+    manifest = _next_manifest(
+        base, "append", groups, (base["rows"] if base else 0) + n,
+        schema_json, blooms=blooms,
+    )
+    delta = spark.read.schema(schema).parquet(
+        *[os.path.join(table_dir, f["path"]) for f in files]
+    )
+    return delta, manifest, n
 
 
 def _resolve_pruned(
@@ -1470,18 +1546,10 @@ def snapshot_scan_plan(
     never the data. This is the observability seam the pruning tests and
     SNAPSHOT_BENCH assert against."""
     plan: dict = {}
-    for _ in range(3):
-        m = _resolve_manifest_raw(table_dir, version)
-        try:
-            _resolve_pruned(table_dir, m, where, plan)
-            return plan
-        except FileNotFoundError:
-            if version is not None:
-                raise
-            continue
-    raise FileNotFoundError(
-        f"{table_dir}: tip kept expiring during resolution"
+    _resolve_manifest_raw(
+        table_dir, version, lambda m: _resolve_pruned(table_dir, m, where, plan)
     )
+    return plan
 
 
 def _where_column(where: list):
@@ -1505,15 +1573,6 @@ def _where_column(where: list):
             term = ops[op](F.col(col), F.lit(value))
         expr = term if expr is None else (expr & term)
     return expr
-
-
-def where_to_column(where: list):
-    """PUBLIC helper: validate a ``(col, op, value)`` triple list and
-    return the equivalent Spark Column (conjunction). This is the stable
-    surface for callers outside this module (e.g. the CLI's legacy-table
-    fallback) — the private _check_where/_where_column pair may be
-    renamed without notice; this function may not."""
-    return _where_column(_check_where(where))
 
 
 def snapshot_read(
@@ -1548,19 +1607,25 @@ def snapshot_read(
     # group files resolve INSIDE the expire-race retry: a concurrent
     # expire+vacuum between the manifest read and the group read must
     # re-resolve (latest mode) exactly like a vanished manifest does
-    for _ in range(3):
-        m = _resolve_manifest_raw(table_dir, version)
-        try:
-            files = _resolve_pruned(table_dir, m, where)
-            break
-        except FileNotFoundError:
-            if version is not None:
-                raise  # pinned version's groups vacuumed: a real error
-            continue
-    else:
-        raise FileNotFoundError(
-            f"{table_dir}: tip kept expiring during resolution"
-        )
+    return _resolve_manifest_raw(
+        table_dir,
+        version,
+        lambda m: _manifest_read(spark, table_dir, m, where, scan_cache),
+    )
+
+
+def _manifest_read(
+    spark: SparkSession,
+    table_dir: str,
+    m: dict,
+    where: list | None = None,
+    scan_cache: dict | None = None,
+) -> DataFrame:
+    """DataFrame of one physical manifest ``m`` of the table at
+    ``table_dir`` (its own chain's, or one a catalog commit holds): the
+    pruned file list read with the predicate re-applied (pruning is an
+    optimization, never the semantics)."""
+    files = _resolve_pruned(table_dir, m, where)
     schema = StructType.fromJson(json.loads(m["schema"]))
     cond = _where_column(_check_where(where)) if where else None
     # DV-aware: files carrying positional-delete refs read minus their
@@ -1611,121 +1676,126 @@ def snapshot_expire(table_dir: str, keep_last: int = 1) -> list[int]:
     versions because it never consults the clock). Latest-readers are
     safe: snapshot_read re-resolves if the tip expires mid-read, and the
     version expire keeps (the tip) always has its files retained."""
-    if keep_last < 1:
-        raise ValueError("keep_last must be >= 1 (the tip must survive)")
-    vs = _versions(table_dir)
-    drop = vs[:-keep_last]
-    for v in drop:
-        os.unlink(os.path.join(_mdir(table_dir), _FMT.format(v)))
-    return drop
+    return _chain_expire(_mdir(table_dir), keep_last)
 
 
 def snapshot_vacuum(spark: SparkSession, table_dir: str) -> list[str]:
     """Delete every file under data/ that NO retained manifest references
     (crash debris from uncommitted writes, overwritten files past their
-    last retained version) plus stale manifest dot-temps. Returns the
-    deleted relative paths. Safe by construction: the retained manifests
-    are the complete reference set, and a concurrent in-flight commit's
-    files only become referenced at its publish — so vacuum must only
-    run when no write is in flight (the same contract as Delta VACUUM's
-    retention window, stated instead of time-based because this module
-    never consults the clock)."""
+    last retained version), the groups, delete sidecars and bloom
+    sidecars no retained manifest references, and stale dot-temps
+    (_vacuum). Returns the deleted relative paths. Safe by construction:
+    the retained manifests are the complete reference set, and a
+    concurrent in-flight commit's files only become referenced at its
+    publish — so vacuum must only run when no write is in flight (the
+    same contract as Delta VACUUM's retention window, stated instead of
+    time-based because this module never consults the clock)."""
+    return _vacuum(
+        table_dir, MANIFEST_DIR, {"": _chain_retained(_mdir(table_dir))}
+    )
+
+
+def _chain_retained(chain_dir: str) -> list[dict]:
+    """Every retained version object of the chain."""
+    out = []
+    for v in _chain_versions(chain_dir):
+        with contextlib.suppress(FileNotFoundError):
+            out.append(_chain_read(chain_dir, v))
+    return out
+
+
+def _live_paths(table_dir: str, manifests: list[dict]) -> set[str]:
+    """Every path, relative to ``table_dir``, that one of ``manifests``
+    references: group files, data files, and the bloom, positional-delete
+    and equality-delete sidecar dirs of their entries. A group shared by
+    several versions is read once (group files are immutable)."""
     live: set[str] = set()
-    live_groups: set[str] = set()
-    live_sidecars: set[str] = set()
-    live_dvs: set[str] = set()
-    live_eqs: set[str] = set()
-    for v in _versions(table_dir):
-        m = _read_manifest(table_dir, v)  # resolved: needs every path
-        live.update(f["path"] for f in m["files"])
-        if m["groups"] is not None:
-            live_groups.update(g["name"] for g in m["groups"])
-        live_sidecars.update(
-            f["bloom"]["sc"] for f in m["files"] if f.get("bloom")
-        )
-        live_dvs.update(
-            sc for f in m["files"] if f.get("dv") for sc in _dv_scs(f["dv"])
-        )
-        live_eqs.update(
-            sc for f in m["files"] if f.get("eq") for sc in _eq_scs(f["eq"])
-        )
-    deleted = []
-    droot = os.path.join(table_dir, DATA_DIR)
-    if os.path.isdir(droot):
-        for commit_id in sorted(os.listdir(droot)):
-            cdir = os.path.join(droot, commit_id)
-            if not os.path.isdir(cdir):
-                continue
-            # only DATA files are vacuum candidates — Spark's _SUCCESS
-            # markers and .crc sidecars are bookkeeping, never manifest-
-            # referenced, and must not make a clean table look dirty
-            data = [
-                n for n in sorted(os.listdir(cdir))
-                if n.endswith(".parquet") and not n.startswith((".", "_"))
-            ]
-            for n in data:
-                rel = os.path.join(DATA_DIR, commit_id, n)
+    for m in manifests:
+        if m.get("groups") is None:  # legacy flat manifest
+            entries = m.get("files", [])
+        else:
+            entries = []
+            for g in m["groups"]:
+                rel = os.path.join(MANIFEST_DIR, GROUPS_DIR, g["name"])
                 if rel not in live:
-                    os.unlink(os.path.join(cdir, n))
-                    crc = os.path.join(cdir, f".{n}.crc")
-                    if os.path.exists(crc):
-                        os.unlink(crc)
-                    deleted.append(rel)
-            # commit dir holds no data files anymore -> only bookkeeping
-            # remains; drop the whole directory
-            if not any(
-                n.endswith(".parquet") and not n.startswith((".", "_"))
-                for n in os.listdir(cdir)
-            ):
-                shutil.rmtree(cdir)
-    mdir = _mdir(table_dir)
-    if os.path.isdir(mdir):
-        for n in sorted(os.listdir(mdir)):
-            if n.startswith(".tmp."):
-                os.unlink(os.path.join(mdir, n))
-                deleted.append(os.path.join(MANIFEST_DIR, n))
-    # manifest-group files no retained version references (expired
-    # versions' exclusive groups, crashed commits' orphans) + group
-    # dot-temps — same set-difference rule as the data files
-    gdir = _gdir(table_dir)
-    if os.path.isdir(gdir):
-        for n in sorted(os.listdir(gdir)):
-            if n.startswith(".tmp.") or (
-                n.startswith("g-") and n not in live_groups
-            ):
-                os.unlink(os.path.join(gdir, n))
-                deleted.append(os.path.join(MANIFEST_DIR, GROUPS_DIR, n))
-    # positional-delete sidecar dirs no retained entry references —
-    # crashed DV deletes' debris, and (the erasure endgame) DVs whose
-    # last referencing version expired after a compact materialized them
-    dvroot = os.path.join(table_dir, DELETES_DIR)
-    if os.path.isdir(dvroot):
-        for n in sorted(os.listdir(dvroot)):
-            rel = os.path.join(DELETES_DIR, n)
-            if rel not in live_dvs:
-                shutil.rmtree(os.path.join(dvroot, n), ignore_errors=True)
-                deleted.append(rel)
-    # equality-delete sidecar dirs: same set-difference rule
-    eqroot = os.path.join(table_dir, EQDELETES_DIR)
-    if os.path.isdir(eqroot):
-        for n in sorted(os.listdir(eqroot)):
-            rel = os.path.join(EQDELETES_DIR, n)
-            if rel not in live_eqs:
-                shutil.rmtree(os.path.join(eqroot, n), ignore_errors=True)
-                deleted.append(rel)
-    # bloom sidecar dirs no retained file entry references (aborted
-    # commits' debris, expired versions' indexes) — same set-difference
-    # rule; a live sidecar survives because its entries still probe it
+                    live.add(rel)
+                    entries.extend(_read_group(table_dir, g["name"]))
+        for fe in entries:
+            live.add(fe["path"])
+            if fe.get("bloom"):
+                live.add(fe["bloom"]["sc"])
+            if fe.get("dv"):
+                live.update(_dv_scs(fe["dv"]))
+            if fe.get("eq"):
+                live.update(_eq_scs(fe["eq"]))
+    return live
+
+
+def _vacuum(
+    root: str, chain: str, tables: dict[str, list[dict]]
+) -> list[str]:
+    """THE vacuum sweep. ``tables`` maps each table dir, relative to
+    ``root`` ("" for a standalone table), to its retained manifests; every
+    table's data files, group files and sidecar dirs outside the live set
+    of those manifests go, and so do the dot-temps a crashed write left
+    in its group dir and in the chain dir ``root/chain``. Returns the
+    removed paths, relative to ``root``."""
     from imagingdb_spark.blooms import BLOOM_DIR
 
-    broot = os.path.join(table_dir, BLOOM_DIR)
-    if os.path.isdir(broot):
-        for n in sorted(os.listdir(broot)):
-            rel = os.path.join(BLOOM_DIR, n)
-            if rel not in live_sidecars:
-                shutil.rmtree(os.path.join(broot, n), ignore_errors=True)
-                deleted.append(rel)
-    return deleted
+    removed: list[str] = []
+
+    def drop(rel: str) -> None:
+        path = os.path.join(root, rel)
+        if os.path.isdir(path):
+            shutil.rmtree(path, ignore_errors=True)
+        else:
+            os.unlink(path)
+        removed.append(rel)
+
+    def ls(rel: str) -> list[str]:
+        path = os.path.join(root, rel)
+        return sorted(os.listdir(path)) if os.path.isdir(path) else []
+
+    def is_data(n: str) -> bool:
+        # only DATA files are vacuum candidates — Spark's _SUCCESS markers
+        # and .crc sidecars are bookkeeping, never manifest-referenced
+        return n.endswith(".parquet") and not n.startswith((".", "_"))
+
+    for name, manifests in tables.items():
+        live = _live_paths(os.path.join(root, name), manifests)
+        droot = os.path.join(name, DATA_DIR)
+        for commit_id in ls(droot):
+            cdir = os.path.join(droot, commit_id)
+            if not os.path.isdir(os.path.join(root, cdir)):
+                continue
+            for n in filter(is_data, ls(cdir)):
+                if os.path.join(DATA_DIR, commit_id, n) not in live:
+                    drop(os.path.join(cdir, n))
+                    crc = os.path.join(root, cdir, f".{n}.crc")
+                    if os.path.exists(crc):
+                        os.unlink(crc)
+            # commit dir holds no data files anymore -> only bookkeeping
+            # remains; drop the whole directory
+            if not any(map(is_data, ls(cdir))):
+                shutil.rmtree(os.path.join(root, cdir), ignore_errors=True)
+        gdir = os.path.join(MANIFEST_DIR, GROUPS_DIR)
+        for n in ls(os.path.join(name, gdir)):
+            if n.startswith(".tmp.") or (
+                n.startswith("g-") and os.path.join(gdir, n) not in live
+            ):
+                drop(os.path.join(name, gdir, n))
+        # sidecar dirs (positional deletes, equality deletes, blooms):
+        # crashed commits' debris, and (the erasure endgame) sidecars
+        # whose last referencing version expired after a compact
+        # materialized them
+        for sdir in (DELETES_DIR, EQDELETES_DIR, BLOOM_DIR):
+            for n in ls(os.path.join(name, sdir)):
+                if os.path.join(sdir, n) not in live:
+                    drop(os.path.join(name, sdir, n))
+    for n in ls(chain):
+        if n.startswith(".tmp."):
+            drop(os.path.join(chain, n))
+    return removed
 
 
 def snapshot_rmw(
@@ -1767,8 +1837,6 @@ def snapshot_rmw(
             raise FileNotFoundError(f"{table_dir} has no committed snapshots")
         tip = vs[-1]
         m = _read_manifest_raw(table_dir, tip)
-        if "groups" not in m:
-            m["groups"] = None  # legacy flat manifest
         if _already(m):
             return tip  # replayed txn: the fold already happened
         out = transform(snapshot_read(spark, table_dir, version=tip))
@@ -1787,8 +1855,7 @@ def snapshot_rmw(
             _publish(table_dir, tip + 1, manifest)
             return tip + 1
         except SnapshotConflict:
-            shutil.rmtree(os.path.join(table_dir, rel_dir), ignore_errors=True)
-            _drop_sidecar(table_dir, rel_dir)
+            _drop_delta(table_dir, rel_dir)
             _drop_groups(table_dir, created)
             continue
     raise SnapshotConflict(
@@ -1909,8 +1976,6 @@ def snapshot_apply_keyed(
             raise FileNotFoundError(f"{table_dir} has no committed snapshots")
         tip = vs[-1]
         m = _read_manifest_raw(table_dir, tip)
-        if "groups" not in m:
-            m["groups"] = None  # legacy flat manifest
         if _already(m):
             return tip  # replayed txn: the apply already happened
         if checked:
@@ -1999,8 +2064,7 @@ def snapshot_apply_keyed(
         except SnapshotConflict:
             # read-dependent claim: drop this attempt's rewrite eagerly
             # and re-resolve candidates against the winner's tip
-            shutil.rmtree(os.path.join(table_dir, rel_dir), ignore_errors=True)
-            _drop_sidecar(table_dir, rel_dir)
+            _drop_delta(table_dir, rel_dir)
             _drop_groups(table_dir, created)
             continue
     raise SnapshotConflict(
@@ -2218,8 +2282,6 @@ def snapshot_upsert_eq(
             raise FileNotFoundError(f"{table_dir} has no committed snapshots")
         tip = vs[-1]
         m = _read_manifest_raw(table_dir, tip)
-        if "groups" not in m:
-            m["groups"] = None
         if _already(m):
             return tip
         schema = StructType.fromJson(json.loads(m["schema"]))
@@ -2369,10 +2431,7 @@ def snapshot_upsert_eq(
             )
             return tip + 1
         except SnapshotConflict:
-            shutil.rmtree(
-                os.path.join(table_dir, rel_dir), ignore_errors=True
-            )
-            _drop_sidecar(table_dir, rel_dir)
+            _drop_delta(table_dir, rel_dir)
             if eq_rel is not None:
                 shutil.rmtree(
                     os.path.join(table_dir, eq_rel), ignore_errors=True
@@ -2497,19 +2556,9 @@ def snapshot_cluster_report(
     # vacuumed between manifest and group reads must re-resolve, not leak
     # FileNotFoundError into the maintenance tick (which swallows only
     # SnapshotConflict)
-    for _ in range(3):
-        m = _resolve_manifest_raw(table_dir, version)
-        try:
-            entries = _resolve_pruned(table_dir, m, None)
-            break
-        except FileNotFoundError:
-            if version is not None:
-                raise
-            continue
-    else:
-        raise FileNotFoundError(
-            f"{table_dir}: tip kept expiring during resolution"
-        )
+    m, entries = _resolve_manifest_raw(
+        table_dir, version, lambda m: (m, _resolve_pruned(table_dir, m, None))
+    )
     if col is None:
         spec = m.get("cluster")
         if not spec:
@@ -2567,19 +2616,9 @@ def snapshot_dv_report(table_dir: str, version: int | None = None) -> dict:
     Returns {files_total, files_dv, files_eq, files_ref, dv_file_frac
     (ref-union fraction), dv_positions, eq_keys, rows,
     dv_position_frac, max_chain}."""
-    for _ in range(3):
-        m = _resolve_manifest_raw(table_dir, version)
-        try:
-            entries = _resolve_pruned(table_dir, m, None)
-            break
-        except FileNotFoundError:
-            if version is not None:
-                raise
-            continue
-    else:
-        raise FileNotFoundError(
-            f"{table_dir}: tip kept expiring during resolution"
-        )
+    m, entries = _resolve_manifest_raw(
+        table_dir, version, lambda m: (m, _resolve_pruned(table_dir, m, None))
+    )
     dved = [fe for fe in entries if fe.get("dv")]
     eqd = [fe for fe in entries if fe.get("eq")]
     refd = [fe for fe in entries if fe.get("dv") or fe.get("eq")]
@@ -2823,8 +2862,6 @@ def snapshot_delete(
             raise FileNotFoundError(f"{table_dir} has no committed snapshots")
         tip = vs[-1]
         m = _read_manifest_raw(table_dir, tip)
-        if "groups" not in m:
-            m["groups"] = None  # legacy flat manifest
         if _already(m):
             return {
                 "version": tip, "rows_deleted": 0, "files_total": None,
@@ -2866,8 +2903,7 @@ def snapshot_delete(
             # read-dependent claim: re-resolve candidates against the
             # winner's tip; this attempt's rewrite (CoW data dir or DV
             # sidecar dir — rel_dir points at whichever) drops eagerly
-            shutil.rmtree(os.path.join(table_dir, rel_dir), ignore_errors=True)
-            _drop_sidecar(table_dir, rel_dir)
+            _drop_delta(table_dir, rel_dir)
             _drop_groups(table_dir, created)
             continue
     raise SnapshotConflict(
@@ -3201,8 +3237,6 @@ def snapshot_update(
             raise FileNotFoundError(f"{table_dir} has no committed snapshots")
         tip = vs[-1]
         m = _read_manifest_raw(table_dir, tip)
-        if "groups" not in m:
-            m["groups"] = None
         if _already(m):
             return {
                 "version": tip, "rows_updated": 0, "files_total": None,
@@ -3220,8 +3254,7 @@ def snapshot_update(
             out["version"] = tip + 1
             return out
         except SnapshotConflict:
-            shutil.rmtree(os.path.join(table_dir, rel_dir), ignore_errors=True)
-            _drop_sidecar(table_dir, rel_dir)
+            _drop_delta(table_dir, rel_dir)
             _drop_groups(table_dir, created)
             continue
     raise SnapshotConflict(
@@ -3587,8 +3620,6 @@ def snapshot_changes(
                 f"{table_dir} version {v} expired before it was consumed; "
                 "retention must cover the changelog cursor lag"
             )
-        if "groups" not in cur:
-            cur["groups"] = None  # legacy flat manifest
         if prev is None:  # v == since_version: the cursor baseline
             prev = cur
             continue
@@ -3885,8 +3916,6 @@ def snapshot_row_changes(
                 f"{table_dir} version {v} expired before it was consumed; "
                 "retention must cover the changelog cursor lag"
             )
-        if "groups" not in cur:
-            cur["groups"] = None
         if prev is None:
             prev = cur
             continue

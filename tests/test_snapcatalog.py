@@ -260,6 +260,83 @@ class TestCatalogCommitPrimitive:
             C.catalog_manifest(cat, version=1)
 
 
+class TestOneVacuum:
+    """snapshot_vacuum and catalog_vacuum are one sweep: a standalone
+    table and a catalog table clear the same debris and report it at its
+    real path."""
+
+    @pytest.mark.parametrize("form", ["standalone", "catalog"])
+    def test_same_debris_swept_at_real_paths(self, spark, tmp_path, form):
+        import glob
+        import os
+
+        # two files, k 0-4 and 5-9: deleting k=1 rewrites only the first,
+        # so the commit dir stays live with one dead file in it
+        rows = spark.range(0, 10).selectExpr(
+            "id AS k", "string(id) AS v"
+        ).repartitionByRange(2, "k")
+        if form == "standalone":
+            root = tdir = str(tmp_path / "t")
+            prefix, chain = "", S.MANIFEST_DIR
+            S.snapshot_commit(spark, tdir, rows)
+            S.snapshot_delete(spark, tdir, [("k", "=", 1)])
+            S.snapshot_expire(tdir, keep_last=1)
+        else:
+            root = str(tmp_path / "cat")
+            tdir = C._table_dir(root, "ta")
+            prefix, chain = "ta", C.COMMITS_DIR
+            C.catalog_commit(
+                spark, root, lambda views: {"ta": rows}, keys={"ta": ["k"]}
+            )
+            C.catalog_delete(spark, root, {"ta": [("k", "=", 1)]})
+            C.catalog_expire(root, keep_last=1)
+        (first,) = [
+            d for d in glob.glob(os.path.join(tdir, S.DATA_DIR, "*"))
+            if len(glob.glob(os.path.join(d, "*.parquet"))) == 2
+        ]
+        dead = sorted(glob.glob(os.path.join(first, "*.parquet")))[0]
+        dead_crc = os.path.join(first, f".{os.path.basename(dead)}.crc")
+        assert os.path.exists(dead_crc)
+        debris = [
+            os.path.join(tdir, S.MANIFEST_DIR, S.GROUPS_DIR, ".tmp.torn"),
+            os.path.join(root, chain, ".tmp.torn"),
+        ]
+        for p in debris:
+            with open(p, "w") as f:
+                f.write("{")
+        removed = (
+            S.snapshot_vacuum(spark, tdir)
+            if form == "standalone"
+            else C.catalog_vacuum(spark, root)
+        )
+        assert os.path.relpath(dead, root) in removed
+        assert not os.path.exists(dead) and not os.path.exists(dead_crc)
+        assert os.path.isdir(first)  # its other file is still live
+        for p in debris:
+            assert os.path.relpath(p, root) in removed
+            assert not os.path.exists(p)
+        # the expired version's group, reported where it lived
+        gdir = os.path.join(prefix, S.MANIFEST_DIR, S.GROUPS_DIR)
+        assert any(
+            p.startswith(os.path.join(gdir, "g-")) for p in removed
+        ), removed
+        assert not any(os.path.exists(os.path.join(root, p)) for p in removed)
+        read = (
+            S.snapshot_read(spark, tdir)
+            if form == "standalone"
+            else C.catalog_read(spark, root, "ta")
+        )
+        assert sorted(r["k"] for r in read.collect()) == [
+            0, 2, 3, 4, 5, 6, 7, 8, 9
+        ]
+        second = (
+            S.snapshot_vacuum(spark, tdir)
+            if form == "standalone"
+            else C.catalog_vacuum(spark, root)
+        )
+        assert second == []
+
+
 class TestCatalogSoak:
     """Randomized multi-writer soak at the CATALOG level — the
     cross-table twin of tests/test_snapshots.py::TestMultiWriterSoak:
@@ -531,6 +608,33 @@ class TestAtomicUpload:
             C.migrate_catalog(spark, src_dir, src_dir, IMAGING_SCHEMAS, keys)
         with pytest.raises(ValueError, match="already holds"):
             C.migrate_catalog(spark, src_dir, dest, IMAGING_SCHEMAS, keys)
+
+    @pytest.mark.parametrize("origin", ["fresh", "migrated"])
+    def test_data_set_columns_in_schema_order(
+        self, spark, imaging, tmp_path, origin
+    ):
+        """data_set reads back in catalog.DATA_SET_SCHEMA's order whether
+        the catalog began with an upload or with migrate_catalog from a
+        snapshot table that stores ``id`` last."""
+        from imagingdb_spark.catalog import DATA_SET_SCHEMA
+
+        cat = str(tmp_path / "cat")
+        if origin == "migrated":
+            src = tmp_path / "old"
+            ds = imaging["data_set"]
+            S.snapshot_commit(
+                spark, str(src / "data_set"), ds.select(*ds.columns[1:], "id")
+            )
+            C.migrate_catalog(
+                spark, str(src), cat, IMAGING_SCHEMAS,
+                {**flows.FRAMES_KEYS, **flows.FILE_KEYS},
+            )
+        _upload(spark, _src_file(tmp_path), tmp_path, cat)
+        want = DATA_SET_SCHEMA.fieldNames()
+        assert C.catalog_read(spark, cat, "data_set").columns == want
+        assert C.catalog_read(spark, cat, "data_set").count() == (
+            5 if origin == "migrated" else 1
+        )
 
     def test_cli_reads_atomic_catalog_and_slice_prunes(self, spark, tmp_path):
         """cli.load_catalog / load_catalog_slice consume an atomic

@@ -883,13 +883,13 @@ class TestSchemaCanonicalization:
         assert v == 3
         assert S.snapshot_read(spark, t).count() == 3
         # the serializable ingest path too (it has no merge_schema escape)
-        v2, delta = S.snapshot_idempotent_append_delta(
+        v2 = S.snapshot_idempotent_append(
             spark, t,
             spark.createDataFrame(
                 [(4, "d", 2.0)], "k long, v string, score double"),
             ["k"],
         )
-        assert v2 == 4 and delta.count() == 1
+        assert v2 == 4 and S.snapshot_read(spark, t).count() == 4
 
     def test_append_to_pre_canonical_manifest(self, spark, tmp_path):
         """A manifest whose schema was stored by OLDER code — compact
@@ -918,10 +918,11 @@ class TestSchemaCanonicalization:
         # both append paths must accept the logically-identical schema
         v = S.snapshot_commit(spark, t, _mk(spark, [(2, "b")]))
         assert v == 2
-        v2, delta = S.snapshot_idempotent_append_delta(
+        v2 = S.snapshot_idempotent_append(
             spark, t, _mk(spark, [(2, "dup"), (3, "c")]), ["k"]
         )
-        assert v2 == 3 and delta.count() == 1  # and the anti-join still ran
+        # and the anti-join still ran: one row landed
+        assert v2 == 3 and S.snapshot_read(spark, t).count() == 3
         assert sorted(r["k"] for r in S.snapshot_read(spark, t).collect()) \
             == [1, 2, 3]
         # a genuinely different type still refuses
@@ -1297,9 +1298,8 @@ class TestClusterMaintenance:
             S.snapshot_read(spark, t, where=[("k", "=", [1, 2])])
         with pytest.raises(ValueError, match="NULL"):
             S.snapshot_read(spark, t, where=[("k", "=", None)])
-        # public helper validates the same way for non-snapshot callers
         with pytest.raises(ValueError, match="scalar literal"):
-            S.where_to_column([("k", "=", {"a": 1})])
+            S.snapshot_read(spark, t, where=[("k", "=", {"a": 1})])
 
     def test_maintain_triggers_only_past_threshold(self, spark, tmp_path):
         t = str(tmp_path / "t")
