@@ -653,39 +653,18 @@ def catalog_changes(
     raise unless ``ignore_changes`` re-delivers. Tables absent from the
     returned dict had no additions. ``plan`` collects
     {commits_walked, groups_opened, files_added}."""
-    vs = catalog_versions(catalog_dir)
-    if not vs:
-        raise FileNotFoundError(
-            f"{catalog_dir} has no committed catalog versions"
-        )
-    end_v = vs[-1] if version is None else version
-    if end_v not in vs:
-        raise FileNotFoundError(f"{catalog_dir} has no version {end_v}")
-    if since_version > end_v:
-        raise ValueError(
-            f"since_version {since_version} is ahead of catalog "
-            f"version {end_v}"
-        )
+    _, window = S._chain_window(
+        _cdir(catalog_dir), since_version, version, {"tables": {}}
+    )
     entries: dict[str, list] = {}
     schemas: dict[str, str] = {}
     commits_walked = 0
     groups_opened = 0
-    prev_tables: dict[str, dict] = {}
-    for v in range(max(1, since_version), end_v + 1):
-        try:
-            commit = _read_commit(catalog_dir, v)
-        except FileNotFoundError:
-            raise FileNotFoundError(
-                f"{catalog_dir} catalog version {v} expired before it "
-                "was consumed; retention must cover the cursor lag"
-            )
-        if v == since_version:
-            prev_tables = commit["tables"]
-            continue
+    for v, prev, commit in window:
         commits_walked += 1
         for name, m in commit["tables"].items():
             schemas[name] = m["schema"]
-            pm = prev_tables.get(name, {"version": 0, "groups": []})
+            pm = prev["tables"].get(name, {"version": 0, "groups": []})
             if m.get("groups") == pm.get("groups"):
                 continue  # table untouched by this commit
             if S.changelog_mode_action(
@@ -701,7 +680,6 @@ def catalog_changes(
                     ^ {g["name"] for g in pm["groups"]}
                 )
             entries.setdefault(name, []).extend(added)
-        prev_tables = commit["tables"]
     if plan is not None:
         plan.update(
             commits_walked=commits_walked,
@@ -750,39 +728,18 @@ def catalog_row_changes(
     walk's group-diff work to the named tables (a consumer following
     two of fifty tables must not pay the other forty-eight's churn)."""
     keys = keys or {}
-    vs = catalog_versions(catalog_dir)
-    if not vs:
-        raise FileNotFoundError(
-            f"{catalog_dir} has no committed catalog versions"
-        )
-    end_v = vs[-1] if version is None else version
-    if end_v not in vs:
-        raise FileNotFoundError(f"{catalog_dir} has no version {end_v}")
-    if since_version > end_v:
-        raise ValueError(
-            f"since_version {since_version} is ahead of catalog "
-            f"version {end_v}"
-        )
-    end_tables = _read_commit(catalog_dir, end_v)["tables"]
+    end, window = S._chain_window(
+        _cdir(catalog_dir), since_version, version, {"tables": {}}
+    )
+    end_v = end["version"]
     end_schemas = {
         name: StructType.fromJson(json.loads(m["schema"]))
-        for name, m in end_tables.items()
+        for name, m in end["tables"].items()
     }
     frames: dict[str, DataFrame] = {}
     commits_walked = 0
     files_read = 0
-    prev_tables: dict[str, dict] = {}
-    for v in range(max(1, since_version), end_v + 1):
-        try:
-            commit = _read_commit(catalog_dir, v)
-        except FileNotFoundError:
-            raise FileNotFoundError(
-                f"{catalog_dir} catalog version {v} expired before it "
-                "was consumed; retention must cover the cursor lag"
-            )
-        if v == since_version:
-            prev_tables = commit["tables"]
-            continue
+    for v, prev, commit in window:
         commits_walked += 1
         # a commit that DROPS a followed table ends the feed's ability
         # to deliver that table's implied deletions — even when the
@@ -792,7 +749,7 @@ def catalog_row_changes(
         # vanish from the feed silently)
         gone = [
             n
-            for n in prev_tables
+            for n in prev["tables"]
             if n not in commit["tables"]
             and (tables is None or n in tables)
         ]
@@ -805,7 +762,7 @@ def catalog_row_changes(
         for name, m in commit["tables"].items():
             if tables is not None and name not in tables:
                 continue  # caller follows a subset: skip foreign churn
-            pm = prev_tables.get(name, {"version": 0, "groups": []})
+            pm = prev["tables"].get(name, {"version": 0, "groups": []})
             if m.get("groups") == pm.get("groups"):
                 continue  # table untouched by this commit
             end_schema = end_schemas.get(name)
@@ -839,7 +796,6 @@ def catalog_row_changes(
                     if name not in frames
                     else frames[name].unionByName(frame)
                 )
-        prev_tables = commit["tables"]
     if plan is not None:
         plan.update(commits_walked=commits_walked, files_read=files_read)
     return frames

@@ -292,6 +292,41 @@ def _chain_expire(chain_dir: str, keep_last: int) -> list[int]:
     return drop
 
 
+def _chain_window(
+    chain_dir: str, since_version: int, version: int | None, empty: dict
+):
+    """The changelog window ``(since_version, version]`` of one chain:
+    resolves the end version (the tip, or the pinned ``version``),
+    refuses a ``since_version`` past it, and returns ``(end, pairs)`` —
+    the end object and a lazy walk yielding ``(v, baseline, obj)`` for
+    each version in the window, ``baseline`` being version ``v - 1``'s
+    object (``empty`` for version 0). A version expired before the walk
+    reaches it raises FileNotFoundError naming the chain dir."""
+    end = _chain_resolve(chain_dir, version)
+    end_v = end["version"]
+    if since_version > end_v:
+        raise ValueError(
+            f"since_version {since_version} is ahead of {chain_dir} "
+            f"version {end_v}"
+        )
+
+    def pairs():
+        prev = empty
+        for v in range(max(1, since_version), end_v + 1):
+            try:
+                cur = _chain_read(chain_dir, v)
+            except FileNotFoundError:
+                raise FileNotFoundError(
+                    f"{chain_dir} version {v} expired before it was "
+                    "consumed; retention must cover the changelog cursor lag"
+                ) from None
+            if v > since_version:
+                yield v, prev, cur
+            prev = cur
+
+    return end, pairs()
+
+
 def snapshot_exists(table_dir: str) -> bool:
     """True when the table has at least one committed version — the
     public existence probe (callers should not reach for _versions)."""
@@ -3597,47 +3632,28 @@ def snapshot_changes(
     columns as NULL. ``plan`` (when given) collects {commits_walked,
     groups_opened, files_added} — the observability seam the stream
     bench asserts flatness against."""
-    end = _resolve_manifest_raw(table_dir, version)
-    end_v = end["version"]
-    if since_version > end_v:
-        raise ValueError(
-            f"since_version {since_version} is ahead of {table_dir} "
-            f"version {end_v}"
-        )
+    end, window = _chain_window(
+        _mdir(table_dir), since_version, version,
+        {"version": 0, "groups": [], "files": []},
+    )
     schema = StructType.fromJson(json.loads(end["schema"]))
     entries: list[dict] = []
     commits_walked = 0
     groups_opened = 0
-    prev: dict | None = None
-    for v in range(since_version, end_v + 1):
-        if v == 0:
-            prev = {"version": 0, "groups": [], "files": []}
-            continue
-        try:
-            cur = _read_manifest_raw(table_dir, v)
-        except FileNotFoundError:
-            raise FileNotFoundError(
-                f"{table_dir} version {v} expired before it was consumed; "
-                "retention must cover the changelog cursor lag"
-            )
-        if prev is None:  # v == since_version: the cursor baseline
-            prev = cur
-            continue
+    for v, prev, cur in window:
         commits_walked += 1
         if changelog_mode_action(
             cur.get("mode"), ignore_deletes, ignore_changes,
             f"{table_dir} v{v}",
         ) == "skip":
-            prev = cur
             continue
         added = _added_entries(table_dir, prev, cur)
-        if cur["groups"] is not None and prev.get("groups") is not None:
+        if cur.get("groups") is not None and prev.get("groups") is not None:
             groups_opened += len(
                 {g["name"] for g in cur["groups"]}
                 ^ {g["name"] for g in prev["groups"]}
             )
         entries.extend(added)
-        prev = cur
     if plan is not None:
         plan.update(
             commits_walked=commits_walked,
@@ -3893,32 +3909,15 @@ def snapshot_row_changes(
 
     Rows read from pre-widening files align to the END schema (new
     columns NULL). ``plan`` collects {commits_walked, files_read}."""
-    end = _resolve_manifest_raw(table_dir, version)
-    end_v = end["version"]
-    if since_version > end_v:
-        raise ValueError(
-            f"since_version {since_version} is ahead of {table_dir} "
-            f"version {end_v}"
-        )
+    end, window = _chain_window(
+        _mdir(table_dir), since_version, version,
+        {"version": 0, "groups": [], "files": []},
+    )
     end_schema = StructType.fromJson(json.loads(end["schema"]))
     out: DataFrame | None = None
     commits_walked = 0
     files_read = 0
-    prev: dict | None = None
-    for v in range(since_version, end_v + 1):
-        if v == 0:
-            prev = {"version": 0, "groups": [], "files": []}
-            continue
-        try:
-            cur = _read_manifest_raw(table_dir, v)
-        except FileNotFoundError:
-            raise FileNotFoundError(
-                f"{table_dir} version {v} expired before it was consumed; "
-                "retention must cover the changelog cursor lag"
-            )
-        if prev is None:
-            prev = cur
-            continue
+    for v, prev, cur in window:
         commits_walked += 1
         frame, fr = _commit_row_changes(
             spark, table_dir, prev, cur, end_schema, v, key,
@@ -3927,7 +3926,6 @@ def snapshot_row_changes(
         files_read += fr
         if frame is not None:
             out = frame if out is None else out.unionByName(frame)
-        prev = cur
     if plan is not None:
         plan.update(commits_walked=commits_walked, files_read=files_read)
     if out is None:

@@ -18,6 +18,7 @@ Kafka + a transactional sink without touching the aggregation code.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -1032,8 +1033,6 @@ def _heal_interrupted_compaction(path: str) -> None:
     never surfaces as a missing corpus (which the gate would misread as
     'first batch' — silent data loss)."""
     import glob as _glob
-    import os
-    import shutil
 
     for t in _glob.glob(path + ".compact.*"):
         shutil.rmtree(t, ignore_errors=True)
@@ -1064,16 +1063,16 @@ def _fs_exists(spark: SparkSession, path: str) -> bool:
 def _present_id_sets(
     spark: SparkSession,
     batch_ids: DataFrame,
-    tables: list[tuple[str, str]],
+    tables: list[tuple[str, DataFrame]],
     id_col: str,
     resident: tuple[str, int] | None = None,
 ) -> dict[str, set]:
     """Per-table sets of batch ids already present in the gates'
     maintained tables, computed in ONE job — WITHOUT shuffling any
-    corpus-scale column: the tables' id columns are scanned under a
-    single tagged union, semi-filtered map-side by the broadcast batch
-    ids (emitting <= len(tables) * |batch| rows), and collected (a
-    batch-bounded collect). One scan job instead of one per table, and
+    corpus-scale column: the id columns of the ``(tag, DataFrame)``
+    tables are scanned under a single tagged union, semi-filtered
+    map-side by the broadcast batch ids (emitting <= len(tables) *
+    |batch| rows), and collected (a batch-bounded collect). One scan job instead of one per table, and
     the downstream appends screen with a free map-side IN filter.
     Shared by the text and pHash gates — the gate-plumbing fix for the
     torn-append screen landed in two of three hand-copied versions
@@ -1087,10 +1086,7 @@ def _present_id_sets(
     this trigger's own torn-append residue (matching it on replay would
     drop within-batch peers a no-crash run keeps)."""
     tagged = None
-    for tag, path in tables:
-        src = (
-            spark.read.parquet(path) if isinstance(path, str) else path
-        )  # a table entry may be a pre-built DataFrame (snapshot reads)
+    for tag, src in tables:
         t = src.select(id_col).withColumn("tbl", F.lit(tag))
         tagged = t if tagged is None else tagged.unionByName(t)
     if resident is not None:
@@ -1157,7 +1153,6 @@ def streaming_dedup_gate(
     checkpoint_dir: str,
     compact_every: int | None = None,
     append_partitions: int | None = 8,
-    index_format: str = "parquet",
     index_target_bytes: int = 256 * 1024,
 ) -> "StreamingQuery | SnapshotFeed":
     """Streaming crawl-ingest dedup gate — the continuous twin of
@@ -1176,58 +1171,53 @@ def streaming_dedup_gate(
     rows next to the corpus (``<corpus>_idx_tokset`` / ``_idx_prefix``)
     and APPENDS only the accepted docs' rows per trigger. The prefix
     theorem holds under any fixed total order (dedup.canonical_toksets),
-    so per-trigger work is: map-side batch prefixes + one scan of the
-    stored index + a candidate-sized verify join — no corpus-wide dfreq
-    groupBy or per-doc re-sort, which was the per-trigger cost that grew
-    with the corpus (SCALING.md note 13; tools/STREAM_BENCH.json records
-    the flat-latency evidence). A pre-seeded corpus without an index gets
-    one bootstrap derivation on first trigger. At 100 TB the index is a
-    token-bucketed table so the candidate join co-locates and batch
-    prefix tokens prune files.
+    so per-trigger work is: map-side batch prefixes + one pruned read of
+    the stored index + a candidate-sized verify join — no corpus-wide
+    dfreq groupBy or per-doc re-sort, which was the per-trigger cost that
+    grew with the corpus (SCALING.md note 13; tools/STREAM_BENCH.json
+    records the flat-latency evidence).
 
-    At-least-once discipline: a trigger performs FOUR non-transactional
-    appends (matches, corpus, tokset index, prefix index) — run as
-    CONCURRENT Spark jobs since round 6, so a crash can leave any SUBSET
-    landed. Every append is therefore individually idempotent by doc_id:
-    self-matches (a replayed doc colliding with its own index entry at
-    jaccard 1.0) are filtered out of the duplicate set, and the corpus /
-    index appends each screen out already-present doc_ids
-    (``_present_sets``: ONE tagged union scan of the three id columns,
-    semi-filtered map-side under the broadcast batch ids and collected
-    batch-bounded — never shuffled, and one job where round 5 spent
-    three). Any torn state heals on the replay the streaming checkpoint
-    guarantees happens before new data: docs in the corpus but missing
-    index rows get them (and vice versa); a torn BOOTSTRAP is detected
-    by the index dirs' _SUCCESS markers (partial overwrite output READS
-    fine, so a read-probe proves nothing) and rebuilds both index tables
-    with overwrite; a missing corpus is detected by an explicit
-    filesystem probe so a transient read error fails the trigger for
-    retry instead of masquerading as 'first batch'. The audit log can
-    still hold a replayed row, which a downstream reader dedups by
-    (new_doc, corpus_doc).
-
-    Maintenance: ``append_partitions`` bounds each micro-batch write's
-    file count (None = leave parallelism alone); ``compact_every=N``
-    folds the per-trigger fragments back to target-sized files every N
-    triggers with layout.compact_parquet's crash-safe rewrite —
-    ``_heal_interrupted_compaction`` at trigger start recovers every
-    mid-swap crash window, so a compaction death never masquerades as a
-    missing corpus.
-
-    ``index_format="snapshot"`` stores BOTH index tables as snapshot
-    tables (the text twin of the fingerprint gates' pruned band index):
-    the prefix index is read per trigger with the batch's prefix-token
-    set (``("token", "in", ...)``), the tokset table with the candidate
+    Both index tables are snapshot tables; that is their one form. The
+    prefix index is read per trigger with the batch's prefix-token set
+    (``("token", "in", ...)``), the tokset table with the candidate
     corpus-doc set discovered from that pruned prefix read — so once the
     periodic compaction has clustered the prefix index on ``token`` and
     the tokset table on ``doc_id``, a trigger opens only the manifest
-    files its batch's tokens/candidates touch instead of scanning the
-    standing corpus' full indexes. Appends are exactly-once via txn
-    markers, the _SUCCESS bootstrap probe disappears, and compaction is
-    the transactional clustered rewrite. Match results are identical in
-    both formats (parity test-pinned); the two extra per-trigger driver
-    collects (batch prefix tokens, candidate doc ids) are batch- and
-    candidate-bounded respectively."""
+    files its batch's tokens/candidates touch. The two extra per-trigger
+    driver collects (batch prefix tokens, candidate doc ids) are batch-
+    and candidate-bounded. The index derives from the corpus: an index
+    dir holding no committed snapshot version — a pre-seeded corpus, a
+    torn bootstrap, or an index left in the old plain-parquet form — is
+    cleared and rebuilt from the corpus with one overwrite commit per
+    table on the next trigger.
+
+    At-least-once discipline: a trigger performs FOUR appends (matches,
+    corpus, tokset index, prefix index) — run as CONCURRENT Spark jobs,
+    so a crash can leave any SUBSET landed. The index
+    appends are atomic snapshot commits, exactly-once per batch_id by
+    txn markers; the corpus and the audit log are plain parquet appends.
+    Every append is individually idempotent by doc_id: self-matches (a
+    replayed doc colliding with its own index entry at jaccard 1.0) are
+    filtered out of the duplicate set, and the corpus / index appends
+    each screen out already-present doc_ids (``_present_sets``: ONE
+    tagged union scan of the three id columns, semi-filtered map-side
+    under the broadcast batch ids and collected batch-bounded — never
+    shuffled). Any torn state heals on the replay the streaming
+    checkpoint guarantees happens before new data: docs in the corpus but
+    missing index rows get them (and vice versa); a missing corpus is
+    detected by an explicit filesystem probe so a transient read error
+    fails the trigger for retry instead of masquerading as 'first
+    batch'. The audit log can still hold a replayed row, which a
+    downstream reader dedups by (new_doc, corpus_doc).
+
+    Maintenance: ``append_partitions`` bounds each micro-batch write's
+    file count (None = leave parallelism alone); ``compact_every=N``
+    every N triggers folds the corpus and audit-log fragments back to
+    target-sized files with layout.compact_parquet's crash-safe rewrite
+    (``_heal_interrupted_compaction`` at trigger start recovers every
+    mid-swap crash window, so a compaction death never masquerades as a
+    missing corpus) and compacts each index table transactionally,
+    clustered on its pruning key into ``index_target_bytes`` files."""
     from imagingdb_spark.operators.dedup import (
         canonical_prefixes,
         canonical_toksets,
@@ -1235,9 +1225,6 @@ def streaming_dedup_gate(
     )
     from imagingdb_spark import snapshots as SN
 
-    if index_format not in ("parquet", "snapshot"):
-        raise ValueError("index_format must be parquet|snapshot")
-    snap_idx = index_format == "snapshot"
     idx_tokset_path = corpus_path + "_idx_tokset"
     idx_prefix_path = corpus_path + "_idx_prefix"
     # txn app id KEYED TO THE CHECKPOINT: batch_ids restart at 0 in a
@@ -1254,50 +1241,38 @@ def streaming_dedup_gate(
     def _write_index(
         toksets: DataFrame, mode: str, batch_id: int | None = None
     ) -> None:
-        prefixes = canonical_prefixes(toksets)
-        if snap_idx:
-            spark = toksets.sparkSession
-            # txn markers ONLY on appends; a bootstrap/rebuild overwrite
-            # must not record the seq or the same trigger's delta append
-            # would be skipped as its own replay
-            SN.snapshot_commit(
-                spark, idx_tokset_path, toksets, mode=mode,
-                txn=(_TOK_APP, batch_id) if mode == "append" else None,
-            )
-            SN.snapshot_commit(
-                spark, idx_prefix_path, prefixes, mode=mode,
-                txn=(_PREF_APP, batch_id) if mode == "append" else None,
-            )
-        else:
-            toksets.write.mode(mode).parquet(idx_tokset_path)
-            prefixes.write.mode(mode).parquet(idx_prefix_path)
+        spark = toksets.sparkSession
+        # txn markers ONLY on appends; a bootstrap/rebuild overwrite
+        # must not record the seq or the same trigger's delta append
+        # would be skipped as its own replay
+        SN.snapshot_commit(
+            spark, idx_tokset_path, toksets, mode=mode,
+            txn=(_TOK_APP, batch_id) if mode == "append" else None,
+        )
+        SN.snapshot_commit(
+            spark, idx_prefix_path, canonical_prefixes(toksets), mode=mode,
+            txn=(_PREF_APP, batch_id) if mode == "append" else None,
+        )
 
     def _present_sets(
         spark: SparkSession,
         batch: DataFrame,
         batch_id: int,
-        batch_id_list: list | None = None,
+        batch_id_list: list,
     ) -> dict[str, set]:
-        if snap_idx:
-            # prune the index sides of the present-set scan by the batch
-            # ids — the tokset table is doc_id-clustered after
-            # compaction, so this opens only the files the batch's ids
-            # could live in (the prefix table is token-clustered, so its
-            # doc_id stats span everything: correct, just unpruned)
-            where = (
-                [("doc_id", "in", batch_id_list)] if batch_id_list else None
-            )
-            tok_src = SN.snapshot_read(spark, idx_tokset_path, where=where)
-            pref_src = SN.snapshot_read(spark, idx_prefix_path, where=where)
-        else:
-            tok_src, pref_src = idx_tokset_path, idx_prefix_path
+        # prune the index sides of the present-set scan by the batch
+        # ids — the tokset table is doc_id-clustered after compaction,
+        # so this opens only the files the batch's ids could live in
+        # (the prefix table is token-clustered, so its doc_id stats span
+        # everything: correct, just unpruned)
+        where = [("doc_id", "in", batch_id_list)] if batch_id_list else None
         return _present_id_sets(
             spark,
             batch.select("doc_id").distinct(),
             [
-                ("c", corpus_path),
-                ("t", tok_src),
-                ("p", pref_src),
+                ("c", spark.read.parquet(corpus_path)),
+                ("t", SN.snapshot_read(spark, idx_tokset_path, where=where)),
+                ("p", SN.snapshot_read(spark, idx_prefix_path, where=where)),
             ],
             "doc_id",
             resident=(corpus_path, batch_id),
@@ -1311,9 +1286,7 @@ def streaming_dedup_gate(
 
     def gate(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        plain_tables = [corpus_path, matches_path] + (
-            [] if snap_idx else [idx_tokset_path, idx_prefix_path]
-        )
+        plain_tables = [corpus_path, matches_path]
         for p in plain_tables:
             _heal_interrupted_compaction(p)
         batch = (
@@ -1336,72 +1309,59 @@ def streaming_dedup_gate(
                 ).write.mode("append").parquet(corpus_path)
                 _write_index(canonical_toksets(batch), "append", batch_id)
                 return
-            # the index is complete only if BOTH overwrite jobs finished:
-            # a killed bootstrap leaves committed task files that READ
-            # fine, so presence of the dir proves nothing — the _SUCCESS
-            # marker (written at job commit) does (plain-parquet mode
-            # only; snapshot manifests cannot tear). Append jobs re-stamp
-            # it; torn APPENDS are instead healed per-doc below (a doc's
-            # rows land in one task file, so doc presence => doc
-            # complete).
-            idx_complete = (
-                SN.snapshot_exists(idx_tokset_path)
-                and SN.snapshot_exists(idx_prefix_path)
-                if snap_idx
-                else _fs_exists(spark, idx_tokset_path + "/_SUCCESS")
-                and _fs_exists(spark, idx_prefix_path + "/_SUCCESS")
-            )
-            if not idx_complete:
-                # pre-seeded corpus with no index yet — or a torn
-                # bootstrap: (re)derive BOTH with overwrite (idempotent)
+            unpublished = [
+                p
+                for p in (idx_tokset_path, idx_prefix_path)
+                if not SN.snapshot_exists(p)
+            ]
+            if unpublished:
+                # pre-seeded corpus with no index yet, a torn bootstrap,
+                # or an old plain-parquet index: clear what holds no
+                # committed version and (re)derive BOTH from the corpus
+                # with overwrite (idempotent). Torn APPENDS are instead
+                # healed per-doc below.
+                for p in unpublished:
+                    shutil.rmtree(p, ignore_errors=True)
                 _write_index(
                     canonical_toksets(spark.read.parquet(corpus_path)),
                     "overwrite",
                 )
             batch_tok = canonical_toksets(batch).persist()
-            if snap_idx:
-                # prefix index pruned to the BATCH's prefix tokens: the
-                # manifest opens only files whose token ranges the batch
-                # touches (once compaction has clustered on token);
-                # tokset table pruned to the CANDIDATE corpus docs that
-                # pruned prefix read discovers. Both driver collects are
-                # batch-/candidate-bounded.
-                new_pref = canonical_prefixes(batch_tok)
-                ptoks = sorted(
-                    r["token"]
-                    for r in new_pref.select("token").distinct().collect()
+            # prefix index pruned to the BATCH's prefix tokens: the
+            # manifest opens only files whose token ranges the batch
+            # touches (once compaction has clustered on token); tokset
+            # table pruned to the CANDIDATE corpus docs that pruned prefix
+            # read discovers. Both driver collects are batch-/candidate-
+            # bounded.
+            new_pref = canonical_prefixes(batch_tok)
+            ptoks = sorted(
+                r["token"]
+                for r in new_pref.select("token").distinct().collect()
+            )
+            corpus_prefix = SN.snapshot_read(
+                spark,
+                idx_prefix_path,
+                where=[("token", "in", ptoks)] if ptoks else None,
+            )
+            cdocs = sorted(
+                r["doc_id"]
+                for r in corpus_prefix.join(
+                    F.broadcast(
+                        new_pref.select("lang", "source", "token").distinct()
+                    ),
+                    ["lang", "source", "token"],
                 )
-                corpus_prefix = SN.snapshot_read(
-                    spark,
-                    idx_prefix_path,
-                    where=[("token", "in", ptoks)] if ptoks else None,
+                .select("doc_id")
+                .distinct()
+                .collect()
+            )
+            corpus_tok = (
+                SN.snapshot_read(
+                    spark, idx_tokset_path, where=[("doc_id", "in", cdocs)]
                 )
-                cdocs = sorted(
-                    r["doc_id"]
-                    for r in corpus_prefix.join(
-                        F.broadcast(
-                            new_pref.select(
-                                "lang", "source", "token"
-                            ).distinct()
-                        ),
-                        ["lang", "source", "token"],
-                    )
-                    .select("doc_id")
-                    .distinct()
-                    .collect()
-                )
-                corpus_tok = (
-                    SN.snapshot_read(
-                        spark,
-                        idx_tokset_path,
-                        where=[("doc_id", "in", cdocs)],
-                    )
-                    if cdocs
-                    else empty_df(spark, batch_tok.schema)
-                )
-            else:
-                corpus_tok = spark.read.parquet(idx_tokset_path)
-                corpus_prefix = spark.read.parquet(idx_prefix_path)
+                if cdocs
+                else empty_df(spark, batch_tok.schema)
+            )
             # present sets come FIRST (pre-append corpus state): they
             # feed the append screens below AND the phantom-id screen
             batch_ids = batch.select("doc_id").distinct().persist()
@@ -1456,30 +1416,6 @@ def streaming_dedup_gate(
                 # with no append order, an index append can land without
                 # the corpus append, and only the screen keeps that
                 # replay from dropping within-batch near-dup peers.
-                def _put_tok():
-                    df = _co(_screen(spark, accepted_tok, present["t"]))
-                    if snap_idx:
-                        SN.snapshot_commit(
-                            spark, idx_tokset_path, df,
-                            txn=(_TOK_APP, batch_id),
-                        )
-                    else:
-                        df.write.mode("append").parquet(idx_tokset_path)
-
-                def _put_pref():
-                    df = _co(
-                        canonical_prefixes(
-                            _screen(spark, accepted_tok, present["p"])
-                        )
-                    )
-                    if snap_idx:
-                        SN.snapshot_commit(
-                            spark, idx_prefix_path, df,
-                            txn=(_PREF_APP, batch_id),
-                        )
-                    else:
-                        df.write.mode("append").parquet(idx_prefix_path)
-
                 writes = [
                     lambda: _co(pairs).write.mode("append").parquet(matches_path),
                     lambda: _co(
@@ -1489,8 +1425,20 @@ def streaming_dedup_gate(
                     )
                     .write.mode("append")
                     .parquet(corpus_path),
-                    _put_tok,
-                    _put_pref,
+                    lambda: SN.snapshot_commit(
+                        spark, idx_tokset_path,
+                        _co(_screen(spark, accepted_tok, present["t"])),
+                        txn=(_TOK_APP, batch_id),
+                    ),
+                    lambda: SN.snapshot_commit(
+                        spark, idx_prefix_path,
+                        _co(
+                            canonical_prefixes(
+                                _screen(spark, accepted_tok, present["p"])
+                            )
+                        ),
+                        txn=(_PREF_APP, batch_id),
+                    ),
                 ]
                 run_concurrently(spark, writes)
             finally:
@@ -1499,30 +1447,27 @@ def streaming_dedup_gate(
                 batch_ids.unpersist()
             if compact_every and batch_id > 0 and batch_id % compact_every == 0:
                 # periodic small-file maintenance: every trigger lands one
-                # fragment per table; fold them back to target-sized files
-                # with the crash-safe rewrite (heal at trigger start
-                # covers a compaction that dies mid-swap)
+                # fragment per table; fold the plain tables back to
+                # target-sized files with the crash-safe rewrite (heal at
+                # trigger start covers a compaction that dies mid-swap),
+                # and the index tables with transactional folds CLUSTERED
+                # on each one's pruning key — what turns the per-trigger
+                # "in" reads into manifest skips
                 from imagingdb_spark.layout import compact_parquet
 
                 for p in plain_tables:
                     if _fs_exists(spark, p):
                         compact_parquet(spark, p)
-                if snap_idx:
-                    # transactional folds CLUSTERED on each table's
-                    # pruning key — what turns the per-trigger "in"
-                    # reads into manifest skips
-                    if SN.snapshot_exists(idx_prefix_path):
-                        SN.snapshot_compact(
-                            spark, idx_prefix_path,
-                            target_file_bytes=index_target_bytes,
-                            cluster_cols=["token"],
-                        )
-                    if SN.snapshot_exists(idx_tokset_path):
-                        SN.snapshot_compact(
-                            spark, idx_tokset_path,
-                            target_file_bytes=index_target_bytes,
-                            cluster_cols=["doc_id"],
-                        )
+                SN.snapshot_compact(
+                    spark, idx_prefix_path,
+                    target_file_bytes=index_target_bytes,
+                    cluster_cols=["token"],
+                )
+                SN.snapshot_compact(
+                    spark, idx_tokset_path,
+                    target_file_bytes=index_target_bytes,
+                    cluster_cols=["doc_id"],
+                )
         finally:
             batch.unpersist()
 
@@ -1847,7 +1792,6 @@ def _streaming_fingerprint_gate(
     compact_every: int | None,
     append_partitions: int | None,
     max_distance: int,
-    index_format: str = "parquet",
     index_target_bytes: int = 256 * 1024,
 ) -> "StreamingQuery | SnapshotFeed":
     """The shared engine behind the image (St10) and audio (St11) ingest
@@ -1864,30 +1808,29 @@ def _streaming_fingerprint_gate(
     (``match_a``, ``match_b``, hamming) append to the audit log and only
     novel rows — with their fingerprint — to the corpus.
 
+    The band index is a snapshot table; that is its one form. Per
+    trigger it is read with ``snapshot_read(..., where=[("bkey", "in",
+    <batch band keys>)])``, so once the maintenance compaction has
+    clustered the index by ``bkey`` (band_idx*256 + band_value — 2048
+    distinct keys), a trigger opens ONLY the manifest groups and files
+    its batch's bands touch instead of scanning every index file
+    (tools/stream_bench_idx.py records files_kept << files_total). Index
+    appends are exactly-once via the snapshot txn marker (one atomic
+    commit per batch_id), and ``compact_every=N`` compacts the index
+    transactionally, clustered on ``bkey``. An index dir holding no
+    committed snapshot version — a pre-seeded corpus, a torn bootstrap,
+    or an index left in the old plain-parquet form — is cleared and
+    rebuilt from the corpus's stored fingerprints with one overwrite
+    commit.
+
     At-least-once discipline (identical for both modalities): the three
     appends run as concurrent jobs and are each individually idempotent
     by ``id_col`` (present-id screens from one tagged union scan);
     replayed rows skip their own index entry and any match whose corpus
     side is in the CURRENT batch (a torn corpus append must not make a
-    replay drop within-batch near-dup peers a no-crash run keeps); a
-    torn index BOOTSTRAP is detected by the _SUCCESS marker and rebuilt
-    with overwrite; ``compact_every=N`` folds per-trigger fragments with
-    the crash-safe rewrite healed at trigger start.
-
-    ``index_format="snapshot"`` stores the band index as a SNAPSHOT table
-    instead of a plain parquet dir — the manifest-stats-pruned corpus
-    read (round-7 verdict item 5): per trigger, the index is read with
-    ``snapshot_read(..., where=[("bkey", "in", <batch band keys>)])``, so
-    once the maintenance compaction has clustered the index by ``bkey``
-    (band_idx*256 + band_value — 2048 distinct keys), a trigger opens
-    ONLY the manifest groups and files its batch's bands touch instead of
-    scanning every index file (tools/stream_bench_phash.py records
-    files_kept << files_total). Index appends become exactly-once via the
-    snapshot txn marker (one atomic commit per batch_id), the _SUCCESS
-    bootstrap probe disappears (manifests are atomic by construction),
-    and compaction is the transactional ``snapshot_compact`` clustered on
-    ``bkey``. Match results are identical in both formats (parity
-    test-pinned)."""
+    replay drop within-batch near-dup peers a no-crash run keeps);
+    ``compact_every=N`` folds the corpus and audit-log fragments with the
+    crash-safe rewrite healed at trigger start."""
     from imagingdb_spark.multimodal import PHASH_BANDS, phash_band_col
     from imagingdb_spark import snapshots as SN
 
@@ -1898,9 +1841,6 @@ def _streaming_fingerprint_gate(
         raise ValueError(
             f"band lookup is lossless only for distance < {PHASH_BANDS}"
         )
-    if index_format not in ("parquet", "snapshot"):
-        raise ValueError(f"index_format must be parquet|snapshot")
-    snap_idx = index_format == "snapshot"
     idx_bands_path = corpus_path + "_idx_bands"
     # checkpoint-keyed txn app id — see streaming_dedup_gate's note: a
     # fresh checkpoint restarts batch_ids at 0 and a fixed app id would
@@ -1908,68 +1848,35 @@ def _streaming_fingerprint_gate(
     _IDX_APP = f"fpgate-{id_col}-{_ckpt_token(checkpoint_dir)}"
 
     def _band_rows(hashed: DataFrame) -> DataFrame:
-        out = hashed.select(
-            id_col, fp_col, F.explode(phash_band_col(fp_col)).alias("b")
-        ).select(id_col, fp_col, "b.band_idx", "b.band_value")
-        if snap_idx:
-            # single integer cluster/prune/join key: 2048 distinct values
-            out = out.withColumn(
+        # bkey: the single integer cluster/prune/join key, 2048 values
+        return (
+            hashed.select(
+                id_col, fp_col, F.explode(phash_band_col(fp_col)).alias("b")
+            )
+            .select(id_col, fp_col, "b.band_idx", "b.band_value")
+            .withColumn(
                 "bkey",
                 (F.col("band_idx") * 256 + F.col("band_value")).cast("long"),
             )
-        return out
-
-    def _read_index(spark: SparkSession, batch_bkeys: list | None) -> DataFrame:
-        if not snap_idx:
-            return spark.read.parquet(idx_bands_path)
-        where = (
-            [("bkey", "in", batch_bkeys)] if batch_bkeys else None
         )
-        return SN.snapshot_read(spark, idx_bands_path, where=where)
-
-    def _index_exists(spark: SparkSession) -> bool:
-        return (
-            SN.snapshot_exists(idx_bands_path)
-            if snap_idx
-            else _fs_exists(spark, idx_bands_path + "/_SUCCESS")
-        )
-
-    def _append_index(df: DataFrame, batch_id: int, mode: str = "append"):
-        if snap_idx:
-            # txn marker ONLY on appends (exactly-once per batch_id); a
-            # bootstrap/rebuild overwrite must NOT record the seq, or the
-            # same trigger's subsequent delta append would be skipped as
-            # its own replay
-            SN.snapshot_commit(
-                df.sparkSession,
-                idx_bands_path,
-                df,
-                mode=mode,
-                txn=(_IDX_APP, batch_id) if mode == "append" else None,
-            )
-        else:
-            df.write.mode(mode).parquet(idx_bands_path)
 
     def _present_sets(
         spark: SparkSession,
         batch_ids: DataFrame,
         batch_id: int,
-        batch_id_list: list | None = None,
+        batch_id_list: list,
     ) -> dict[str, set]:
-        if snap_idx:
-            # prune the band-index side of the present-set scan by the
-            # batch's ids (correct regardless of clustering; skips files
-            # whose id ranges exclude the whole batch)
-            where = (
-                [(id_col, "in", batch_id_list)] if batch_id_list else None
-            )
-            idx_src = SN.snapshot_read(spark, idx_bands_path, where=where)
-        else:
-            idx_src = idx_bands_path
+        # prune the band-index side of the present-set scan by the
+        # batch's ids (correct regardless of clustering; skips files
+        # whose id ranges exclude the whole batch)
+        where = [(id_col, "in", batch_id_list)] if batch_id_list else None
         return _present_id_sets(
             spark,
             batch_ids,
-            [("c", corpus_path), ("b", idx_src)],
+            [
+                ("c", spark.read.parquet(corpus_path)),
+                ("b", SN.snapshot_read(spark, idx_bands_path, where=where)),
+            ],
             id_col,
             resident=(corpus_path, batch_id),
         )
@@ -1982,9 +1889,7 @@ def _streaming_fingerprint_gate(
 
     def gate(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        plain_tables = [corpus_path, matches_path] + (
-            [] if snap_idx else [idx_bands_path]
-        )
+        plain_tables = [corpus_path, matches_path]
         for p in plain_tables:
             _heal_interrupted_compaction(p)
         batch = (
@@ -2004,19 +1909,26 @@ def _streaming_fingerprint_gate(
                 _co(
                     batch.withColumn("_gate_batch", F.lit(batch_id))
                 ).write.mode("append").parquet(corpus_path)
-                _append_index(_co(_band_rows(batch)), batch_id)
+                SN.snapshot_commit(
+                    spark, idx_bands_path, _co(_band_rows(batch)),
+                    txn=(_IDX_APP, batch_id),
+                )
                 return
-            if not _index_exists(spark):
-                # pre-seeded corpus without an index, or a torn bootstrap
-                # (plain-parquet mode only — snapshot manifests cannot
-                # tear): rebuild from the corpus's STORED hashes
-                _append_index(
+            if not SN.snapshot_exists(idx_bands_path):
+                # pre-seeded corpus without an index, a torn bootstrap,
+                # or an old plain-parquet index: clear the dir and
+                # rebuild from the corpus's STORED hashes. No txn marker:
+                # recording the seq would skip this trigger's own delta
+                # append below as its replay
+                shutil.rmtree(idx_bands_path, ignore_errors=True)
+                SN.snapshot_commit(
+                    spark,
+                    idx_bands_path,
                     _band_rows(
                         spark.read.parquet(corpus_path).select(
                             id_col, fp_col
                         )
                     ),
-                    batch_id,
                     mode="overwrite",
                 )
             batch_ids = batch.select(id_col).distinct().persist()
@@ -2026,30 +1938,30 @@ def _streaming_fingerprint_gate(
             present = _present_sets(
                 spark, batch_ids, batch_id, sorted(batch_id_set)
             )
-            band_cols = ["bkey"] if snap_idx else ["band_idx", "band_value"]
             new_bands = _band_rows(batch.select(id_col, fp_col)).select(
                 F.col(id_col).alias(match_a),
                 F.col(fp_col).alias("new_fp"),
-                *band_cols,
+                "bkey",
             )
-            if snap_idx:
-                # the pruning key set for this trigger: batch-bounded
-                # (<= 8 * |batch| of 2048 possible values) — the manifest
-                # read opens only groups/files whose bkey ranges these
-                # touch once compaction has clustered the index on bkey
-                batch_bkeys = sorted(
-                    r["bkey"]
-                    for r in new_bands.select("bkey").distinct().collect()
-                )
-            else:
-                batch_bkeys = None
-            corpus_bands = _read_index(spark, batch_bkeys).select(
+            # the pruning key set for this trigger: batch-bounded
+            # (<= 8 * |batch| of 2048 possible values) — the manifest
+            # read opens only groups/files whose bkey ranges these
+            # touch once compaction has clustered the index on bkey
+            batch_bkeys = sorted(
+                r["bkey"]
+                for r in new_bands.select("bkey").distinct().collect()
+            )
+            corpus_bands = SN.snapshot_read(
+                spark,
+                idx_bands_path,
+                where=[("bkey", "in", batch_bkeys)] if batch_bkeys else None,
+            ).select(
                 F.col(id_col).alias(match_b),
                 F.col(fp_col).alias("corpus_fp"),
-                *band_cols,
+                "bkey",
             )
             pairs = (
-                corpus_bands.join(F.broadcast(new_bands), band_cols)
+                corpus_bands.join(F.broadcast(new_bands), "bkey")
                 .withColumn(
                     "hamming",
                     F.bit_count(
@@ -2097,7 +2009,9 @@ def _streaming_fingerprint_gate(
                     )
                     .write.mode("append")
                     .parquet(corpus_path),
-                    lambda: _append_index(
+                    lambda: SN.snapshot_commit(
+                        spark,
+                        idx_bands_path,
                         _co(
                             _band_rows(
                                 _screen(
@@ -2105,7 +2019,7 @@ def _streaming_fingerprint_gate(
                                 ).select(id_col, fp_col)
                             )
                         ),
-                        batch_id,
+                        txn=(_IDX_APP, batch_id),
                     ),
                 ]
                 run_concurrently(spark, writes)
@@ -2118,17 +2032,16 @@ def _streaming_fingerprint_gate(
                 for p in plain_tables:
                     if _fs_exists(spark, p):
                         compact_parquet(spark, p)
-                if snap_idx and SN.snapshot_exists(idx_bands_path):
-                    # transactional small-file fold CLUSTERED on the
-                    # pruning key — this is what turns the per-trigger
-                    # where=("bkey","in",...) read into a files_kept <<
-                    # files_total manifest skip
-                    SN.snapshot_compact(
-                        spark,
-                        idx_bands_path,
-                        target_file_bytes=index_target_bytes,
-                        cluster_cols=["bkey"],
-                    )
+                # transactional small-file fold CLUSTERED on the pruning
+                # key — this is what turns the per-trigger
+                # where=("bkey","in",...) read into a files_kept <<
+                # files_total manifest skip
+                SN.snapshot_compact(
+                    spark,
+                    idx_bands_path,
+                    target_file_bytes=index_target_bytes,
+                    cluster_cols=["bkey"],
+                )
         finally:
             batch.unpersist()
 
@@ -2143,7 +2056,6 @@ def streaming_phash_gate(
     compact_every: int | None = None,
     append_partitions: int | None = 8,
     max_distance: int | None = None,
-    index_format: str = "parquet",
     index_target_bytes: int = 256 * 1024,
     decoder=None,
     on_decode_error: str = "raise",
@@ -2198,7 +2110,6 @@ def streaming_phash_gate(
         max_distance=(
             PHASH_MAX_DISTANCE if max_distance is None else max_distance
         ),
-        index_format=index_format,
         index_target_bytes=index_target_bytes,
     )
 
@@ -2219,7 +2130,6 @@ def streaming_afp_gate(
     compact_every: int | None = None,
     append_partitions: int | None = 8,
     max_distance: int | None = None,
-    index_format: str = "parquet",
 ) -> "StreamingQuery | SnapshotFeed":
     """St11 — streaming AUDIO-ingest dedup gate: the same engine as the
     image gate, instantiated with the Haitsma–Kalker-style fingerprint
@@ -2248,7 +2158,6 @@ def streaming_afp_gate(
         max_distance=(
             AFP_MAX_DISTANCE if max_distance is None else max_distance
         ),
-        index_format=index_format,
     )
 
 

@@ -3050,13 +3050,45 @@ class TestSnapshotChanges:
         )
         assert got == [(7, "q")]
 
-    def test_expired_cursor_gap_raises(self, spark, tmp_path):
-        t = str(tmp_path / "t")
+    @pytest.mark.parametrize(
+        "reader",
+        [
+            "snapshot_changes",
+            "snapshot_row_changes",
+            "catalog_changes",
+            "catalog_row_changes",
+        ],
+    )
+    def test_expired_cursor_gap_raises(self, spark, tmp_path, reader):
+        """Every changelog reader walks its window through one
+        snapshots._chain_window: a cursor past the end version raises
+        ValueError, and a cursor whose versions expired raises one
+        FileNotFoundError naming the chain dir."""
+        import re
+
+        from imagingdb_spark import snapcatalog as C
+
+        d = str(tmp_path / "t")
+        on_catalog = reader.startswith("catalog")
         for i in range(4):
-            S.snapshot_commit(spark, t, _mk(spark, [(i, "x")]))
-        S.snapshot_expire(t, keep_last=1)
-        with pytest.raises(FileNotFoundError, match="expired before"):
-            S.snapshot_changes(spark, t, 1)
+            if on_catalog:
+                C.catalog_commit(
+                    spark, d,
+                    lambda views, i=i: {"t": _mk(spark, [(i, "x")])},
+                    keys={"t": ["k"]},
+                )
+            else:
+                S.snapshot_commit(spark, d, _mk(spark, [(i, "x")]))
+        read = getattr(C if on_catalog else S, reader)
+        with pytest.raises(ValueError, match="since_version 9 is ahead of"):
+            read(spark, d, 9)
+        (C.catalog_expire if on_catalog else S.snapshot_expire)(d, keep_last=1)
+        chain = os.path.join(d, "_commits" if on_catalog else S.MANIFEST_DIR)
+        with pytest.raises(
+            FileNotFoundError,
+            match=re.escape(chain) + r" version \d+ expired before",
+        ):
+            read(spark, d, 1)
 
     def test_manifest_work_flat_in_version_count(self, spark, tmp_path):
         """THE scale claim: per-poll manifest work tracks the DELTA, not

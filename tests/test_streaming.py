@@ -218,15 +218,15 @@ def test_streaming_dedup_gate_replay_idempotent(spark, tmp_path):
     assert spark.read.parquet(corpus_path).count() == n_after_first
 
 
-def test_streaming_dedup_gate_snapshot_index_parity_and_pruning(
+def test_streaming_dedup_gate_index_pruning_matches_batch_twin(
     spark, tmp_path
 ):
-    """index_format="snapshot" for the TEXT gate: the prefix index is
-    read per trigger pruned to the batch's prefix tokens and the tokset
-    table pruned to the discovered candidate docs. Matches and corpus
-    growth must equal both the plain-parquet gate's and the batch twin's;
-    replay stays idempotent; after the clustered compaction a batch-sized
-    token probe opens files_kept << files_total."""
+    """The TEXT gate's snapshot index: the prefix index is read per
+    trigger pruned to the batch's prefix tokens and the tokset table
+    pruned to the discovered candidate docs. Matches and corpus growth
+    must equal the batch twin's with compaction on every trigger; replay
+    stays idempotent; after the clustered compaction a batch-sized token
+    probe opens files_kept << files_total."""
     from pyspark.sql import functions as F
 
     from imagingdb_spark import snapshots as S
@@ -248,7 +248,7 @@ def test_streaming_dedup_gate_snapshot_index_parity_and_pruning(
         )
         q = jobs.streaming_dedup_gate(
             stream, corpus_path, matches_path, str(tmp_path / ck),
-            compact_every=1, index_format="snapshot",
+            compact_every=1,
             index_target_bytes=256,  # many narrow token-range files so
             # the IN-probe's skip is visible at toy scale (~2.6k rows)
         )
@@ -812,6 +812,8 @@ def test_streaming_dedup_gate_heals_torn_index_append(spark, tmp_path):
     and must backfill the missing index rows — the at-least-once
     self-heal the gate's docstring promises."""
     from pyspark.sql import functions as F
+
+    from imagingdb_spark import snapshots as S
     from imagingdb_spark.operators.dedup import (
         canonical_prefixes,
         canonical_toksets,
@@ -834,9 +836,10 @@ def test_streaming_dedup_gate_heals_torn_index_append(spark, tmp_path):
         accepted.withColumn("_gate_batch", F.lit(0))
     ).write.parquet(corpus_path)
     # ...but the index only covers the pre-batch corpus
-    canonical_toksets(rest).write.parquet(corpus_path + "_idx_tokset")
-    canonical_prefixes(canonical_toksets(rest)).write.parquet(
-        corpus_path + "_idx_prefix"
+    rest_tok = canonical_toksets(rest)
+    S.snapshot_commit(spark, corpus_path + "_idx_tokset", rest_tok)
+    S.snapshot_commit(
+        spark, corpus_path + "_idx_prefix", canonical_prefixes(rest_tok)
     )
     batch_path = str(tmp_path / "incoming")
     batch.coalesce(1).write.parquet(batch_path)
@@ -850,15 +853,14 @@ def test_streaming_dedup_gate_heals_torn_index_append(spark, tmp_path):
     q.stop()
 
     assert spark.read.parquet(corpus_path).count() == n_corpus_before
-    idx_ids = {
-        r["doc_id"]
-        for r in spark.read.parquet(corpus_path + "_idx_tokset").collect()
-    }
+    tok = S.snapshot_read(spark, corpus_path + "_idx_tokset")
     want_ids = {r["doc_id"] for r in rest.unionByName(accepted).collect()}
-    assert idx_ids == want_ids  # backfilled, and no doc indexed twice
+    # backfilled, and no doc indexed twice
+    assert {r["doc_id"] for r in tok.collect()} == want_ids
+    assert tok.count() == len(want_ids)
     pref_ids = {
         r["doc_id"]
-        for r in spark.read.parquet(corpus_path + "_idx_prefix")
+        for r in S.snapshot_read(spark, corpus_path + "_idx_prefix")
         .select("doc_id")
         .distinct()
         .collect()
@@ -867,13 +869,18 @@ def test_streaming_dedup_gate_heals_torn_index_append(spark, tmp_path):
 
 
 def test_streaming_dedup_gate_rebuilds_torn_bootstrap(spark, tmp_path):
-    """Crash window: a bootstrap committed some prefix task files but the
-    job never finished (no _SUCCESS marker) — the directory READS fine,
-    so the gate must detect the tear from the marker, rebuild BOTH index
-    tables with overwrite (no duplicated rows), and still produce exactly
-    the batch twin's matches."""
+    """Crash window: a bootstrap committed the tokset table, and the
+    prefix table's data files landed but its version was never published
+    — the prefix dir holds no committed snapshot version, so the gate
+    must clear it, rebuild BOTH index tables with overwrite (no
+    duplicated rows), and still produce exactly the batch twin's
+    matches."""
     import os
+    import shutil
+
     from pyspark.sql import functions as F
+
+    from imagingdb_spark import snapshots as S
     from imagingdb_spark.operators.dedup import (
         canonical_prefixes,
         canonical_toksets,
@@ -883,14 +890,17 @@ def test_streaming_dedup_gate_rebuilds_torn_bootstrap(spark, tmp_path):
     rest, batch = _gate_fixture_frames(spark)
     corpus_path = str(tmp_path / "corpus")
     rest.write.parquet(corpus_path)
-    canonical_toksets(rest).write.parquet(corpus_path + "_idx_tokset")
-    # partial prefix output: only HALF the docs' rows committed, and the
-    # job-level _SUCCESS marker missing — the readable-but-torn state
+    S.snapshot_commit(
+        spark, corpus_path + "_idx_tokset", canonical_toksets(rest)
+    )
+    # torn prefix table: HALF the docs' rows landed as data files, and the
+    # crash came before the manifest was published
     half = canonical_prefixes(
         canonical_toksets(rest.filter(F.col("doc_id") % 2 == 0))
     )
-    half.write.parquet(corpus_path + "_idx_prefix")
-    os.remove(corpus_path + "_idx_prefix/_SUCCESS")
+    S.snapshot_commit(spark, corpus_path + "_idx_prefix", half)
+    shutil.rmtree(os.path.join(corpus_path + "_idx_prefix", S.MANIFEST_DIR))
+    assert not S.snapshot_exists(corpus_path + "_idx_prefix")
     batch_path = str(tmp_path / "incoming")
     batch.coalesce(1).write.parquet(batch_path)
 
@@ -911,13 +921,13 @@ def test_streaming_dedup_gate_rebuilds_torn_bootstrap(spark, tmp_path):
         for r in x_dedup_incremental(spark, SF_DIR).collect()
     }
     assert got == want and want
-    tok = spark.read.parquet(corpus_path + "_idx_tokset")
+    tok = S.snapshot_read(spark, corpus_path + "_idx_tokset")
     assert tok.count() == tok.select("doc_id").distinct().count()
     # the rebuild + increment must leave the prefix index covering every
     # corpus doc (the half that was missing included)
     pref_ids = {
         r["doc_id"]
-        for r in spark.read.parquet(corpus_path + "_idx_prefix")
+        for r in S.snapshot_read(spark, corpus_path + "_idx_prefix")
         .select("doc_id")
         .distinct()
         .collect()
@@ -1365,9 +1375,11 @@ def test_gate_compaction_mid_stream_preserves_results_and_replay(spark, tmp_path
     micro-batches with compaction every 2 triggers, the corpus/matches
     content must equal a no-compaction run's, the maintained tables must
     hold FEWER files, and a subsequent replay (fresh checkpoint) must
-    still be idempotent — compaction must not disturb the _SUCCESS
-    markers or id screens the healing logic keys on."""
+    still be idempotent — compaction must not disturb the id screens
+    the healing logic keys on."""
     from pyspark.sql import functions as F
+
+    from imagingdb_spark import snapshots as S
 
     docs = spark.read.parquet(SF_DIR + "/documents.parquet").select(
         "doc_id", "text", "lang", "source"
@@ -1414,11 +1426,19 @@ def test_gate_compaction_mid_stream_preserves_results_and_replay(spark, tmp_path
         for r in spark.read.parquet(str(tmp_path / "match_b")).collect()
     }
     assert ma == mb and ma
-    # compaction actually shrank the maintained tables' file counts
-    for tbl in ("corpus", "corpus_idx_tokset", "corpus_idx_prefix"):
-        na = len(spark.read.parquet(str(tmp_path / (tbl.replace("corpus", "corpus_a")))).inputFiles())
-        nb = len(spark.read.parquet(str(tmp_path / (tbl.replace("corpus", "corpus_b")))).inputFiles())
-        assert na < nb, f"{tbl}: compacted {na} !< fragmented {nb}"
+    # compaction actually shrank the maintained tables' file counts (the
+    # index tables' live files are counted from their manifests)
+    na = len(spark.read.parquet(str(tmp_path / "corpus_a")).inputFiles())
+    nb = len(spark.read.parquet(str(tmp_path / "corpus_b")).inputFiles())
+    assert na < nb, f"corpus: compacted {na} !< fragmented {nb}"
+    for suf in ("_idx_tokset", "_idx_prefix"):
+        na, nb = (
+            S.snapshot_scan_plan(str(tmp_path / f"corpus_{r}{suf}"), [])[
+                "files_total"
+            ]
+            for r in ("a", "b")
+        )
+        assert na < nb, f"{suf}: compacted {na} !< fragmented {nb}"
     # replay across the compacted state stays idempotent
     n_before = len(ca)
     run("in_a", str(tmp_path / "corpus_a"), str(tmp_path / "match_a"), "ck_a2", 2)
@@ -1543,6 +1563,24 @@ def _hashed_frames(spark, images):
     )
 
 
+def _band_index(hashed):
+    """The pHash gate's band-index rows for ``hashed`` frames."""
+    from pyspark.sql import functions as F
+
+    from imagingdb_spark import multimodal
+
+    return (
+        hashed.select(
+            "frame_id", "phash",
+            F.explode(multimodal.phash_band_col()).alias("b"),
+        )
+        .select("frame_id", "phash", "b.band_idx", "b.band_value")
+        .withColumn(
+            "bkey", (F.col("band_idx") * 256 + F.col("band_value")).cast("long")
+        )
+    )
+
+
 def _run_phash_gate(spark, tmp_path, batch_path, ck, **kw):
     q = jobs.streaming_phash_gate(
         jobs.read_frames_stream(spark, batch_path),
@@ -1565,6 +1603,7 @@ def test_streaming_phash_gate_matches_and_corpus_growth(spark, tmp_path):
     import numpy as np
 
     from imagingdb_spark import multimodal
+    from imagingdb_spark import snapshots as S
 
     rng = np.random.default_rng(21)
     a, b, c, e = (_smooth_image(rng) for _ in range(4))
@@ -1598,7 +1637,7 @@ def test_streaming_phash_gate_matches_and_corpus_growth(spark, tmp_path):
     # ASCII ('2' < '_'), so NE2 sorts FIRST and is the keeper.
     assert ids == {_fid("CA"), _fid("CB"), _fid("CC"), _fid("NE2")}
 
-    idx = spark.read.parquet(corpus_path + "_idx_bands")
+    idx = S.snapshot_read(spark, corpus_path + "_idx_bands")
     per_frame = {
         r["frame_id"]: r["n"]
         for r in idx.groupBy("frame_id").count().withColumnRenamed(
@@ -1616,6 +1655,7 @@ def test_streaming_phash_gate_replay_idempotent(spark, tmp_path):
     import numpy as np
 
     from imagingdb_spark import multimodal
+    from imagingdb_spark import snapshots as S
 
     rng = np.random.default_rng(22)
     a, b, e = (_smooth_image(rng) for _ in range(3))
@@ -1630,7 +1670,7 @@ def test_streaming_phash_gate_replay_idempotent(spark, tmp_path):
 
     _run_phash_gate(spark, tmp_path, batch_path, "ck1")
     n_corpus = spark.read.parquet(corpus_path).count()
-    n_idx = spark.read.parquet(corpus_path + "_idx_bands").count()
+    n_idx = S.snapshot_read(spark, corpus_path + "_idx_bands").count()
     got1 = {
         (r["new_frame"], r["corpus_frame"])
         for r in spark.read.parquet(str(tmp_path / "fmatches")).collect()
@@ -1638,7 +1678,7 @@ def test_streaming_phash_gate_replay_idempotent(spark, tmp_path):
 
     _run_phash_gate(spark, tmp_path, batch_path, "ck2")
     assert spark.read.parquet(corpus_path).count() == n_corpus
-    assert spark.read.parquet(corpus_path + "_idx_bands").count() == n_idx
+    assert S.snapshot_read(spark, corpus_path + "_idx_bands").count() == n_idx
     got2 = {
         (r["new_frame"], r["corpus_frame"])
         for r in spark.read.parquet(str(tmp_path / "fmatches")).collect()
@@ -1691,30 +1731,32 @@ def test_streaming_phash_gate_bootstrap_then_dedups(spark, tmp_path):
 
 
 def test_streaming_phash_gate_rebuilds_torn_index(spark, tmp_path):
-    """A band index missing its _SUCCESS marker (torn bootstrap) is
-    rebuilt from the corpus's STORED hashes before matching — a frame
-    absent from the torn index must still catch its near-dup."""
+    """A band index whose bootstrap crashed before publishing (data files
+    landed, no committed snapshot version) is cleared and rebuilt from
+    the corpus's STORED hashes before matching — a frame absent from the
+    torn index must still catch its near-dup."""
     import os
+    import shutil
 
     import numpy as np
 
     from pyspark.sql import functions as F
 
     from imagingdb_spark import multimodal
+    from imagingdb_spark import snapshots as S
 
     rng = np.random.default_rng(24)
     a, b = (_smooth_image(rng) for _ in range(2))
     corpus_path = str(tmp_path / "fcorpus")
     hashed = _hashed_frames(spark, [("CA", a), ("CB", b)])
     hashed.write.parquet(corpus_path)
-    # torn index: only CA's bands made it, and no _SUCCESS
+    # torn index: only CA's bands landed, and no version was published
     idx_path = corpus_path + "_idx_bands"
-    hashed.filter(F.col("dataset_serial") == "CA").select(
-        "frame_id", "phash", F.explode(multimodal.phash_band_col()).alias("b")
-    ).select("frame_id", "phash", "b.band_idx", "b.band_value").write.parquet(
-        idx_path
+    S.snapshot_commit(
+        spark, idx_path,
+        _band_index(hashed.filter(F.col("dataset_serial") == "CA")),
     )
-    os.remove(os.path.join(idx_path, "_SUCCESS"))
+    shutil.rmtree(os.path.join(idx_path, S.MANIFEST_DIR))
 
     batch_path = str(tmp_path / "fin")
     spark.createDataFrame(
@@ -1727,11 +1769,10 @@ def test_streaming_phash_gate_rebuilds_torn_index(spark, tmp_path):
         for r in spark.read.parquet(str(tmp_path / "fmatches")).collect()
     }
     assert got == {(_fid("NB"), _fid("CB"))}  # missed without the rebuild
-    idx_ids = {
-        r["frame_id"]
-        for r in spark.read.parquet(idx_path).select("frame_id").collect()
-    }
+    idx = S.snapshot_read(spark, idx_path)
+    idx_ids = {r["frame_id"] for r in idx.select("frame_id").collect()}
     assert idx_ids == {_fid("CA"), _fid("CB")}  # rebuilt complete
+    assert idx.count() == 2 * multimodal.PHASH_BANDS  # torn rows cleared
 
 
 def test_streaming_phash_gate_replay_after_torn_append(spark, tmp_path):
@@ -1748,6 +1789,7 @@ def test_streaming_phash_gate_replay_after_torn_append(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from imagingdb_spark import multimodal
+    from imagingdb_spark import snapshots as S
 
     rng = np.random.default_rng(25)
     a, f = (_smooth_image(rng) for _ in range(2))
@@ -1787,11 +1829,7 @@ def test_streaming_phash_gate_replay_after_torn_append(spark, tmp_path):
     torn.filter(F.col("dataset_serial") == "NG").withColumn(
         "_gate_batch", F.lit(0)
     ).write.mode("append").parquet(corpus_path)
-    torn.select(
-        "frame_id", "phash", F.explode(multimodal.phash_band_col()).alias("b")
-    ).select("frame_id", "phash", "b.band_idx", "b.band_value").write.parquet(
-        idx_path
-    )
+    S.snapshot_commit(spark, idx_path, _band_index(torn))
 
     _run_phash_gate(spark, tmp_path, batch_path, "ck_replay")
     replay_ids = {
@@ -1817,6 +1855,7 @@ def test_phash_gate_compaction_mid_stream_preserves_results(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
+    from imagingdb_spark import snapshots as S
     from imagingdb_spark.multimodal import synth_frames
 
     docs = spark.read.parquet(SF_DIR + "/documents.parquet").select(
@@ -1875,26 +1914,28 @@ def test_phash_gate_compaction_mid_stream_preserves_results(spark, tmp_path):
         for r in spark.read.parquet(str(tmp_path / "fmat_b")).collect()
     }
     assert ma == mb
-    for a_tbl, b_tbl in (
-        ("fcorp_a", "fcorp_b"),
-        ("fcorp_a_idx_bands", "fcorp_b_idx_bands"),
-    ):
-        na = len(spark.read.parquet(str(tmp_path / a_tbl)).inputFiles())
-        nb = len(spark.read.parquet(str(tmp_path / b_tbl)).inputFiles())
-        assert na < nb, f"{a_tbl}: compacted {na} !< fragmented {nb}"
+    na = len(spark.read.parquet(str(tmp_path / "fcorp_a")).inputFiles())
+    nb = len(spark.read.parquet(str(tmp_path / "fcorp_b")).inputFiles())
+    assert na < nb, f"corpus: compacted {na} !< fragmented {nb}"
+    # the band index's live files, counted from its manifest
+    na, nb = (
+        S.snapshot_scan_plan(str(tmp_path / t), [])["files_total"]
+        for t in ("fcorp_a_idx_bands", "fcorp_b_idx_bands")
+    )
+    assert na < nb, f"band index: compacted {na} !< fragmented {nb}"
     n_before = len(ca)
     run("fin_a", str(tmp_path / "fcorp_a"), str(tmp_path / "fmat_a"), "fck_a2", 2)
     assert spark.read.parquet(str(tmp_path / "fcorp_a")).count() == n_before
 
 
-def test_phash_gate_snapshot_index_parity_and_pruning(spark, tmp_path):
-    """index_format="snapshot" (round-7 verdict item 5): the band index
-    lives in a snapshot table, per-trigger reads are manifest-pruned by
-    the batch's bkey set, appends are txn-marked exactly-once, and
-    compaction clusters on bkey. Must produce IDENTICAL corpus + match
-    content to the plain-parquet index, stay idempotent under replay,
-    and — after the clustering compaction — answer a batch-sized bkey
-    probe opening files_kept << files_total."""
+def test_phash_gate_index_pruning_matches_no_compaction_run(spark, tmp_path):
+    """The band index's snapshot table: per-trigger reads are
+    manifest-pruned by the batch's bkey set,
+    appends are txn-marked exactly-once, and compaction clusters on bkey
+    into many small files. Must produce IDENTICAL corpus + match content
+    to a run without compaction, stay idempotent under replay, and —
+    after the clustering compaction — answer a batch-sized bkey probe
+    opening files_kept << files_total."""
     import glob as _g
     import shutil as _sh
 
@@ -1921,7 +1962,7 @@ def test_phash_gate_snapshot_index_parity_and_pruning(spark, tmp_path):
             (tmp_path / batch_dir).mkdir(exist_ok=True)
             _sh.move(src, str(tmp_path / batch_dir / f"b{i:02d}.parquet"))
 
-    def run(batch_dir, corpus, matches, ck, fmt, compact_every=2):
+    def run(batch_dir, corpus, matches, ck, compact_every=2):
         stream = (
             spark.readStream.schema(
                 jobs.read_frames_stream(
@@ -1933,7 +1974,7 @@ def test_phash_gate_snapshot_index_parity_and_pruning(spark, tmp_path):
         )
         q = jobs.streaming_phash_gate(
             stream, corpus, matches, str(tmp_path / ck),
-            compact_every=compact_every, index_format=fmt,
+            compact_every=compact_every,
             index_target_bytes=2048,  # force a many-file clustered layout
         )
         q.processAllAvailable()
@@ -1942,11 +1983,11 @@ def test_phash_gate_snapshot_index_parity_and_pruning(spark, tmp_path):
     feed("sin_a")
     feed("sin_b")
     snap_corpus = str(tmp_path / "scorp_a")
-    run("sin_a", snap_corpus, str(tmp_path / "smat_a"), "sck_a", "snapshot")
+    run("sin_a", snap_corpus, str(tmp_path / "smat_a"), "sck_a")
     run("sin_b", str(tmp_path / "scorp_b"), str(tmp_path / "smat_b"),
-        "sck_b", "parquet")
+        "sck_b", compact_every=None)
 
-    # content parity with the plain-parquet index run
+    # content parity with the run that never compacts
     ca = {
         r["frame_id"]
         for r in spark.read.parquet(snap_corpus).collect()
@@ -1998,7 +2039,7 @@ def test_phash_gate_snapshot_index_parity_and_pruning(spark, tmp_path):
     # and the index commits' txn markers admit no duplicate band rows
     n_corpus = len(ca)
     n_idx = idx.count()
-    run("sin_a", snap_corpus, str(tmp_path / "smat_a"), "sck_a2", "snapshot")
+    run("sin_a", snap_corpus, str(tmp_path / "smat_a"), "sck_a2")
     assert spark.read.parquet(snap_corpus).count() == n_corpus
     assert S.snapshot_read(spark, idx_dir).count() == n_idx
 
@@ -2014,6 +2055,7 @@ def test_dedup_gate_replay_after_torn_corpus_append(spark, tmp_path):
     outcome exactly."""
     import shutil
 
+    from imagingdb_spark import snapshots as S
     from imagingdb_spark.operators.dedup import (
         canonical_prefixes,
         canonical_toksets,
@@ -2026,12 +2068,11 @@ def test_dedup_gate_replay_after_torn_corpus_append(spark, tmp_path):
 
     corpus_path = str(tmp_path / "corpus")
     mk([(1, corpus_text, "en", "src0")]).write.parquet(corpus_path)
-    canonical_toksets(spark.read.parquet(corpus_path)).write.parquet(
-        corpus_path + "_idx_tokset"
+    corpus_tok = canonical_toksets(spark.read.parquet(corpus_path))
+    S.snapshot_commit(spark, corpus_path + "_idx_tokset", corpus_tok)
+    S.snapshot_commit(
+        spark, corpus_path + "_idx_prefix", canonical_prefixes(corpus_tok)
     )
-    canonical_prefixes(
-        canonical_toksets(spark.read.parquet(corpus_path))
-    ).write.parquet(corpus_path + "_idx_prefix")
     pristine = str(tmp_path / "pristine")
     for suf in ("", "_idx_tokset", "_idx_prefix"):
         shutil.copytree(corpus_path + suf, pristine + suf)
@@ -2063,12 +2104,10 @@ def test_dedup_gate_replay_after_torn_corpus_append(spark, tmp_path):
     for suf in ("", "_idx_tokset", "_idx_prefix"):
         shutil.rmtree(corpus_path + suf)
         shutil.copytree(pristine + suf, corpus_path + suf)
-    batch_df = mk(batch)
-    canonical_toksets(batch_df).write.mode("append").parquet(
-        corpus_path + "_idx_tokset"
-    )
-    canonical_prefixes(canonical_toksets(batch_df)).write.mode("append").parquet(
-        corpus_path + "_idx_prefix"
+    batch_tok = canonical_toksets(mk(batch))
+    S.snapshot_commit(spark, corpus_path + "_idx_tokset", batch_tok)
+    S.snapshot_commit(
+        spark, corpus_path + "_idx_prefix", canonical_prefixes(batch_tok)
     )
 
     run("ck_replay")
@@ -2081,6 +2120,113 @@ def test_dedup_gate_replay_after_torn_corpus_append(spark, tmp_path):
     }
     assert replay_ids == clean_ids  # the torn peers made it into the corpus
     assert replay_matches == clean_matches
+
+
+@pytest.mark.parametrize("state", ["complete", "torn"])
+@pytest.mark.parametrize("gate", ["text", "phash"])
+def test_gate_rebuilds_old_plain_parquet_index(spark, tmp_path, gate, state):
+    """An index dir left in the old plain-parquet form — complete, or
+    torn (part of its rows and no _SUCCESS marker) — holds no committed
+    snapshot version, so the gate's bootstrap clears it and rebuilds it
+    from the corpus: after one trigger every index dir is a snapshot
+    table with no top-level part file or _SUCCESS left, and the matches
+    and corpus equal those of a run that started without an index."""
+    import glob
+    import os
+
+    import numpy as np
+
+    from pyspark.sql import functions as F
+
+    from imagingdb_spark import multimodal as M
+    from imagingdb_spark import snapshots as S
+    from imagingdb_spark.operators.dedup import (
+        canonical_prefixes,
+        canonical_toksets,
+    )
+
+    batch_path = str(tmp_path / "incoming")
+    if gate == "text":
+        base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+        mk = lambda rows: spark.createDataFrame(rows, jobs.DOCS_RAW_SCHEMA)
+        corpus = mk([
+            (1, base, "en", "src0"),
+            (2, "one two three four five six seven eight nine ten", "en",
+             "src0"),
+        ])
+        mk([
+            (10, base.replace("kappa", "lambda"), "en", "src0"),
+            (11, "red orange yellow green blue indigo violet", "en", "src0"),
+        ]).coalesce(1).write.parquet(batch_path)
+        toks = canonical_toksets(corpus)
+        old_index = {
+            "_idx_tokset": toks, "_idx_prefix": canonical_prefixes(toks)
+        }
+        id_col, match_cols, first_id = "doc_id", ("new_doc", "corpus_doc"), 1
+
+        def start(corpus_path, ck):
+            return jobs.streaming_dedup_gate(
+                spark.readStream.schema(jobs.DOCS_RAW_SCHEMA).parquet(
+                    batch_path
+                ),
+                corpus_path, corpus_path + "_matches", ck,
+            )
+    else:
+        rng = np.random.default_rng(26)
+        a, b, e = (_smooth_image(rng) for _ in range(3))
+        corpus = _hashed_frames(spark, [("CA", a), ("CB", b)])
+        spark.createDataFrame(
+            _frame_rows([("NA", _noised(a)), ("NE", e)]), M.FRAME_SCHEMA
+        ).coalesce(1).write.parquet(batch_path)
+        # the old form stored no bkey column
+        old_index = {"_idx_bands": _band_index(corpus).drop("bkey")}
+        id_col, match_cols = "frame_id", ("new_frame", "corpus_frame")
+        first_id = _fid("CA")
+
+        def start(corpus_path, ck):
+            return jobs.streaming_phash_gate(
+                jobs.read_frames_stream(spark, batch_path),
+                corpus_path, corpus_path + "_matches", ck,
+            )
+
+    if state == "torn":
+        torn = list(old_index)[-1]
+        old_index[torn] = old_index[torn].filter(F.col(id_col) == first_id)
+
+    def run(name, seed_old_index):
+        corpus_path = str(tmp_path / name)
+        corpus.write.parquet(corpus_path)
+        if seed_old_index:
+            for suf, df in old_index.items():
+                df.write.parquet(corpus_path + suf)
+            if state == "torn":
+                os.remove(os.path.join(corpus_path + torn, "_SUCCESS"))
+        q = start(corpus_path, str(tmp_path / f"ck_{name}"))
+        q.processAllAvailable()
+        q.stop()
+        matches = {
+            tuple(r[c] for c in match_cols)
+            for r in spark.read.parquet(corpus_path + "_matches").collect()
+        }
+        ids = {
+            r[id_col]
+            for r in spark.read.parquet(corpus_path).select(id_col).collect()
+        }
+        index_ids = {}
+        for suf in old_index:
+            idx = corpus_path + suf
+            assert S.snapshot_exists(idx), f"{suf} is not a snapshot table"
+            assert not glob.glob(os.path.join(idx, "part-*.parquet"))
+            assert not os.path.exists(os.path.join(idx, "_SUCCESS"))
+            index_ids[suf] = {
+                r[id_col]
+                for r in S.snapshot_read(spark, idx).select(id_col).collect()
+            }
+        return matches, ids, index_ids
+
+    clean = run("clean", False)
+    assert clean[0]  # the batch holds a near-dup of a corpus row
+    assert run("old", True) == clean
 
 
 # ---------------------------------------------------------------------------
@@ -2139,6 +2285,7 @@ def test_streaming_afp_gate_matches_and_replay(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from imagingdb_spark import multimodal as M
+    from imagingdb_spark import snapshots as S
 
     a, b, c = _mk_clip(31), _mk_clip(32), _mk_clip(33)
     corpus_path = str(tmp_path / "acorpus")
@@ -2178,7 +2325,7 @@ def test_streaming_afp_gate_matches_and_replay(spark, tmp_path):
         for r in spark.read.parquet(corpus_path).select("clip_id").collect()
     }
     assert ids == {"CA", "CB", "NC"}
-    idx = spark.read.parquet(corpus_path + "_idx_bands")
+    idx = S.snapshot_read(spark, corpus_path + "_idx_bands")
     per = {
         r["clip_id"]: r["count"]
         for r in idx.groupBy("clip_id").count().collect()
@@ -2190,7 +2337,7 @@ def test_streaming_afp_gate_matches_and_replay(spark, tmp_path):
     n_idx = idx.count()
     run("ck2")  # replay: idempotent
     assert spark.read.parquet(corpus_path).count() == n_corpus
-    assert spark.read.parquet(corpus_path + "_idx_bands").count() == n_idx
+    assert S.snapshot_read(spark, corpus_path + "_idx_bands").count() == n_idx
     got2 = {
         (r["new_clip"], r["corpus_clip"])
         for r in spark.read.parquet(str(tmp_path / "amatches")).collect()

@@ -1,7 +1,7 @@
 """Manifest-pruned gate-index read evidence (round-7 verdict item 5):
-build a snapshot-format band index of ~1k files clustered on bkey (what
-the pHash/audio gates maintain with index_format="snapshot" plus their
-periodic snapshot_compact), then measure — for a series of micro-batch
+build a snapshot-format band index of ~1k files clustered on bkey (the
+pHash/audio gates' one index form, as their periodic snapshot_compact
+leaves it), then measure — for a series of micro-batch
 sized probes — how many manifest files a trigger's
 ``snapshot_read(..., where=[("bkey", "in", <batch keys>)])`` actually
 opens, and that the pruned match set equals the unpruned one.
