@@ -23,8 +23,10 @@ hard-link put-if-absent), resolved and expired by the snapshots
 ``_chain_*`` functions that run every table's ``_manifests`` chain; each
 table's keyed append lands (data files, bloom sidecars, child groups,
 next manifest) through snapshots._land_keyed_append, the landing of
-snapshot_idempotent_append; and catalog_vacuum is snapshots._vacuum run
-over every retained commit's manifests. Footer-stats pruning, group
+snapshot_idempotent_append; catalog_commit and catalog_delete commit
+through snapshots._pinned_commit, the retry loop of every snapshot
+writer; and catalog_vacuum is snapshots._vacuum run over every retained
+commit's manifests. Footer-stats pruning, group
 skipping and geometric group coalescing therefore apply unchanged.
 
 Scale: a catalog commit object holds one manifest per table, each
@@ -52,7 +54,6 @@ from pyspark.sql.types import StructType
 
 from imagingdb_spark import snapshots as S
 from imagingdb_spark.catalog import empty_df, run_concurrently
-from imagingdb_spark.snapshots import SnapshotConflict
 
 COMMITS_DIR = "_commits"
 
@@ -211,18 +212,15 @@ class CatalogViews(dict):
         self.manifests = manifests
 
 
-def _drop_attempt(
-    catalog_dir: str,
-    created: dict[str, list[str]],
-    datadirs: list[tuple[str, str]],
-) -> None:
-    """Eagerly drop what an unpublished commit attempt landed: its group
-    files, data dirs and their bloom sidecars (no-debris discipline;
-    vacuum is the crash backstop)."""
-    for name, cr in created.items():
-        S._drop_groups(_table_dir(catalog_dir, name), cr)
-    for tdir, rel_dir in datadirs:
-        S._drop_delta(tdir, rel_dir)
+def _catalog_commit(catalog_dir: str, attempt, max_retries: int):
+    """``snapshots._pinned_commit`` over the catalog's ``_commits``
+    chain; ``attempt`` returns the next commit object, or None."""
+    return S._pinned_commit(
+        _cdir(catalog_dir),
+        lambda v: _read_commit(catalog_dir, v),
+        lambda v, commit: _publish_commit(catalog_dir, v, commit),
+        attempt, max_retries=max_retries,
+    )
 
 
 def catalog_commit(
@@ -259,11 +257,9 @@ def catalog_commit(
     new table appears, nothing is published and the tip version is
     returned unchanged.
 
-    Returns ``(version, {table: committed_delta_df})``. Crash SAFETY is
-    the point: data files and group files written before the publish link
-    are unreachable debris (catalog_vacuum's job), never visible state —
-    a reader through catalog_read sees the parent commit until the single
-    publish link lands, at which instant it sees every table's new state.
+    Returns ``(version, {table: committed_delta_df})``. A reader
+    through catalog_read sees the parent commit until the single publish
+    link lands, at which instant it sees every table's new state.
 
     ``bloom_columns`` maps table name -> indexed columns (the per-table
     analog of snapshot_commit's parameter): this commit sets the
@@ -280,17 +276,12 @@ def catalog_commit(
     manifests are assembled and the single publish link is made back on
     the caller's thread, after every table thread has finished.
 
-    Cleanup: data dirs, sidecars and group files are recorded as soon as
-    they exist. If any table's landing raises, every thread is waited
-    for, everything the attempt recorded is dropped, exactly as on a
-    lost publish race, and the first error is re-raised. An error from
-    the publish link itself other than a lost race leaves its files to
-    catalog_vacuum: the link may already have landed.
+    Cleanup is ``snapshots._pinned_commit``'s: every table thread
+    records what it writes in the attempt's one record, and a landing
+    that raises, a converged replay or a lost race drops it whole
+    (``run_concurrently`` waits for every thread before it raises).
     """
-    for _ in range(max_retries):
-        vs = catalog_versions(catalog_dir)
-        parent = vs[-1] if vs else 0
-        base = _read_commit(catalog_dir, parent) if parent else None
+    def attempt(parent, base, record):
         tables_base: dict[str, dict] = dict(base["tables"]) if base else {}
         # a table's first commit would hide a per-table form of it living
         # in the same directory and interleave new data files into its dirs
@@ -308,28 +299,18 @@ def catalog_commit(
         unknown = set(new_rows) - set(keys)
         if unknown:
             raise ValueError(f"no key columns declared for tables {unknown}")
-        # what this attempt has put on disk, recorded the moment it exists
-        # so a failed or lost attempt can drop it (each table's thread
-        # touches only its own ``created`` entry; list.append is atomic)
-        created: dict[str, list[str]] = {name: [] for name in new_rows}
-        datadirs: list[tuple[str, str]] = []
-        try:
-            landed = run_concurrently(
-                spark,
-                [
-                    functools.partial(
-                        S._land_keyed_append, spark,
-                        _table_dir(catalog_dir, name), rows_df, keys[name],
-                        tables_base.get(name), views.get(name), created[name],
-                        datadirs, (bloom_columns or {}).get(name),
-                    )
-                    for name, rows_df in new_rows.items()
-                ],
-            )
-        except Exception:
-            # every thread has stopped: drop the tables that did land
-            _drop_attempt(catalog_dir, created, datadirs)
-            raise
+        landed = run_concurrently(
+            spark,
+            [
+                functools.partial(
+                    S._land_keyed_append, spark,
+                    _table_dir(catalog_dir, name), rows_df, keys[name],
+                    tables_base.get(name), views.get(name), record,
+                    (bloom_columns or {}).get(name),
+                )
+                for name, rows_df in new_rows.items()
+            ],
+        )
         new_tables = dict(tables_base)
         deltas: dict[str, DataFrame] = {}
         total_new = 0
@@ -340,24 +321,12 @@ def catalog_commit(
             total_new += n
         if total_new == 0 and set(new_tables) == set(tables_base):
             # fully converged replay: nothing written, nothing published
-            return parent, deltas
-        commit = {
-            "version": parent + 1,
-            "parent": parent,
-            "tables": new_tables,
-        }
-        try:
-            _publish_commit(catalog_dir, parent + 1, commit)
-            return parent + 1, deltas
-        except SnapshotConflict:
-            # lost the race: this attempt's groups and data dirs are
-            # dropped eagerly (no-debris discipline; vacuum is the crash
-            # backstop) and the builder re-runs against the winner's tip
-            _drop_attempt(catalog_dir, created, datadirs)
-            continue
-    raise SnapshotConflict(
-        f"catalog commit to {catalog_dir} lost {max_retries} straight races"
-    )
+            return None, deltas
+        return {
+            "version": parent + 1, "parent": parent, "tables": new_tables,
+        }, deltas
+
+    return _catalog_commit(catalog_dir, attempt, max_retries)
 
 
 def migrate_catalog(
@@ -457,11 +426,12 @@ def catalog_delete(
     are found by the shared three-stage prune (group stats → footer
     min/max → bloom sidecars) and only those files are rewritten minus
     the matching rows (``snapshots._delete_rewrite`` — identical
-    semantics, including NULL-predicate rows surviving). The new
-    per-table manifests publish under one hard-link, so a crash at ANY
-    point — any table's rewrite, any group write, the publish itself —
-    leaves every table at the pre-delete version; a racing catalog
-    commit forces a full re-resolve of every table's candidates.
+    semantics, including NULL-predicate rows surviving). Each table
+    lands on its own driver thread (``catalog.run_concurrently``, as in
+    catalog_commit), and the new per-table manifests publish under one
+    link through ``snapshots._pinned_commit``: a lost race re-resolves
+    every table's candidates, and a table whose core raises drops the
+    tables already rewritten.
 
     Returns ``{"version": v, "tables": {name: audit_dict}}`` with the
     per-table audit ``snapshot_delete`` returns (rows_deleted,
@@ -503,16 +473,13 @@ def catalog_delete(
                 )
         return out
 
-    if build is None:
-        static_checked = _checked(where)
-    for _ in range(max_retries):
-        vs = catalog_versions(catalog_dir)
-        if not vs:
-            raise FileNotFoundError(
-                f"{catalog_dir} has no committed catalog versions"
-            )
-        parent = vs[-1]
-        base = _read_commit(catalog_dir, parent)
+    static_checked = _checked(where) if build is None else None
+    if not catalog_exists(catalog_dir):
+        raise FileNotFoundError(
+            f"{catalog_dir} has no committed catalog versions"
+        )
+
+    def attempt(parent, base, record):
         tables_base: dict[str, dict] = dict(base["tables"])
         if build is not None:
             views = {
@@ -527,43 +494,30 @@ def catalog_delete(
             raise ValueError(
                 f"catalog {catalog_dir} has no tables {sorted(missing)}"
             )
+        landed = run_concurrently(
+            spark,
+            [
+                functools.partial(
+                    core, spark, _table_dir(catalog_dir, name),
+                    {"groups": None, **tables_base[name]}, w, record,
+                )
+                for name, w in checked.items()
+            ],
+        )
         new_tables = dict(tables_base)
         outs: dict[str, dict] = {}
-        created_by: dict[str, list[str]] = {}
-        datadirs: list[tuple[str, str]] = []
-        changed = False
-        for name, w in checked.items():
-            m = dict(tables_base[name])
-            if "groups" not in m:
-                m["groups"] = None
-            tdir = _table_dir(catalog_dir, name)
-            cr: list[str] = []
-            manifest, rel_dir, out = core(spark, tdir, m, w, cr)
+        for name, (manifest, out) in zip(checked, landed):
             outs[name] = out
             if manifest is not None:
                 new_tables[name] = manifest
-                created_by[name] = cr
-                datadirs.append((tdir, rel_dir))
-                changed = True
-        if not changed:
-            return {"version": parent, "tables": outs}
-        commit = {
-            "version": parent + 1,
-            "parent": parent,
-            "tables": new_tables,
-        }
-        try:
-            _publish_commit(catalog_dir, parent + 1, commit)
-            return {"version": parent + 1, "tables": outs}
-        except SnapshotConflict:
-            # a foreign commit won: deletes are read-dependent claims —
-            # drop every table's rewrite eagerly and re-resolve at the
-            # winner's tip
-            _drop_attempt(catalog_dir, created_by, datadirs)
-            continue
-    raise SnapshotConflict(
-        f"catalog delete in {catalog_dir} lost {max_retries} straight races"
-    )
+        if new_tables == tables_base:
+            return None, outs
+        return {
+            "version": parent + 1, "parent": parent, "tables": new_tables,
+        }, outs
+
+    v, outs = _catalog_commit(catalog_dir, attempt, max_retries)
+    return {"version": v, "tables": outs}
 
 
 def catalog_delete_dataset(

@@ -18,10 +18,12 @@ cannot (layout.compact_parquet's documented gap):
   put-if-absent (object stores expose the same primitive as
   If-None-Match / precondition puts; this module keeps every commit
   behind the single ``_publish`` seam so that swap is one function).
-  Losing appends REBASE (appends commute: relink the same data files
-  onto the newer parent — no data rewrite); losing overwrites and
-  compactions raise ``SnapshotConflict`` because their result depends on
-  the parent they read.
+  Every writer commits through the one retry loop ``_pinned_commit``,
+  which drops a lost or failed attempt's files whole. Losing appends
+  REBASE (appends commute: relink the same data files onto the newer
+  parent — no data rewrite); losing overwrites and compactions raise
+  ``SnapshotConflict`` because their result depends on the parent they
+  read.
 - **Crash safety by construction.** Every mutation is (1) write data
   files, (2) write manifest to a dot-temp, (3) link. A crash anywhere
   leaves either the old table exactly, or the new version exactly —
@@ -81,7 +83,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-from imagingdb_spark.catalog import empty_df
+from imagingdb_spark.catalog import empty_df, values_df
 
 MANIFEST_DIR = "_manifests"
 GROUPS_DIR = "groups"  # manifest-group files, under MANIFEST_DIR
@@ -325,6 +327,125 @@ def _chain_window(
             prev = cur
 
     return end, pairs()
+
+
+def _txn_seen(m: dict | None, txn: tuple[str, int] | None) -> bool:
+    """True when version object ``m`` already records ``txn=(app_id,
+    seq)``: each version carries the highest seq committed per app_id, so
+    a writer replaying a seq at or below it has nothing left to do."""
+    return (
+        txn is not None
+        and m is not None
+        and txn[1] <= m.get("txns", {}).get(txn[0], -1)
+    )
+
+
+class _Attempt:
+    """What one commit attempt has put on disk, each path recorded the
+    moment its write returns, so ``_pinned_commit`` can drop an attempt
+    that does not publish: group files and the data, DV and eq sidecar
+    dirs, each as (table dir, relative path). A data dir takes its bloom
+    sidecar with it. A ``relink`` dir outlives a lost race:
+    snapshot_commit's append writes its data once and links the same
+    files onto each new tip. The per-table landing threads of one
+    catalog attempt share a record; each write is one list append."""
+
+    def __init__(self):
+        self.paths: list[tuple[str, str, bool]] = []
+
+    def group(self, table_dir: str, files: list[dict]) -> dict:
+        ref = _write_group(table_dir, files)
+        self.paths.append(
+            (table_dir, os.path.join(MANIFEST_DIR, GROUPS_DIR, ref["name"]),
+             False)
+        )
+        return ref
+
+    def data(
+        self, df: DataFrame, table_dir: str, relink: bool = False
+    ) -> tuple[list[dict], int, str]:
+        files, rows, rel = _write_data_files(df, table_dir)
+        self.paths.append((table_dir, rel, relink))
+        return files, rows, rel
+
+    def dir(self, table_dir: str, rel: str) -> str:
+        self.paths.append((table_dir, rel, False))
+        return rel
+
+    def drop(self, lost_race: bool = False) -> None:
+        kept = []
+        for table_dir, rel, relink in self.paths:
+            if lost_race and relink:
+                kept.append((table_dir, rel, relink))
+            elif os.path.isdir(os.path.join(table_dir, rel)):
+                _drop_delta(table_dir, rel)
+            else:
+                with contextlib.suppress(FileNotFoundError):
+                    os.unlink(os.path.join(table_dir, rel))
+        self.paths = kept
+
+
+def _pinned_commit(
+    chain_dir: str,
+    read,  # Callable[[int], dict]: one version object of the chain
+    publish,  # Callable[[int, dict], None]: put-if-absent of one version
+    attempt,  # Callable[[int, dict | None, _Attempt], tuple[dict | None, R]]
+    txn: tuple[str, int] | None = None,
+    max_retries: int = 5,
+    pinned: bool = False,
+):
+    """THE optimistic commit loop of every snapshot and catalog writer.
+    Each round resolves the tip ``parent`` (0 and ``base`` None before
+    the first version) and runs ``attempt(parent, base, record)``, which
+    writes what it needs, records each path in ``record`` and returns
+    ``(next version object, result)``; the object is published at
+    ``parent + 1``, so every commit is pinned to the tip its attempt
+    read. Returns ``(version, result)``:
+
+    1. The tip already records ``txn``: the tip and None, nothing
+       written.
+    2. The attempt raises: everything recorded is dropped, the error
+       re-raised.
+    3. The attempt returns no object (nothing to commit): everything
+       recorded is dropped; the tip and the result.
+    4. A lost publish race drops the attempt and re-runs it against the
+       winner's tip, up to ``max_retries`` rounds.
+    5. ``pinned`` writers (overwrite, compact) cannot be re-run: a lost
+       race drops the attempt and raises SnapshotConflict, unless the
+       winner is a replica that recorded the same ``txn``.
+    6. A publish error other than a lost race leaves the files to
+       vacuum: the link may have landed."""
+    record = _Attempt()
+    for _ in range(max_retries):
+        vs = _chain_versions(chain_dir)
+        parent = vs[-1] if vs else 0
+        base = read(parent) if parent else None
+        if _txn_seen(base, txn):
+            record.drop()
+            return parent, None
+        try:
+            obj, result = attempt(parent, base, record)
+        except BaseException:
+            record.drop()
+            raise
+        if obj is None:
+            record.drop()
+            return parent, result
+        try:
+            publish(parent + 1, obj)
+        except SnapshotConflict:
+            record.drop(lost_race=not pinned)
+            if pinned:
+                tip = _chain_versions(chain_dir)[-1]
+                if _txn_seen(read(tip), txn):
+                    return tip, None
+                raise
+            continue
+        return parent + 1, result
+    record.drop()
+    raise SnapshotConflict(
+        f"commit to {chain_dir} lost {max_retries} straight races"
+    )
 
 
 def snapshot_exists(table_dir: str) -> bool:
@@ -740,44 +861,28 @@ def _write_group(table_dir: str, files: list[dict]) -> dict:
     return ref
 
 
-def _drop_groups(table_dir: str, created: list[str]) -> None:
-    """Eagerly remove group files a lost/aborted commit created (the same
-    no-debris discipline the data-file abort paths follow); vacuum is the
-    crash-path backstop."""
-    for name in created:
-        try:
-            os.unlink(os.path.join(_gdir(table_dir), name))
-        except FileNotFoundError:
-            pass
-    created.clear()
-
-
 def _child_groups(
     table_dir: str,
     base_groups: list[dict],
     delta_files: list[dict],
-    created: list[str],
+    record: _Attempt,
 ) -> list[dict]:
     """Groups list for a child commit: the parent's refs untouched + ONE
     new group holding the delta — the O(delta + groups) commit shape.
     When the list would exceed MAX_GROUPS, the smallest groups merge into
     one (geometric/LSM schedule: each entry is rewritten O(log commits)
-    times over the table's life). Created group names are appended to
-    `created` so conflict paths can drop them."""
+    times over the table's life). Every group file written is recorded
+    in the attempt ``record``."""
     groups = list(base_groups)
     if delta_files:
-        ref = _write_group(table_dir, delta_files)
-        created.append(ref["name"])
-        groups.append(ref)
+        groups.append(record.group(table_dir, delta_files))
     if len(groups) > MAX_GROUPS:
         groups.sort(key=lambda g: g["n_files"])
         k = len(groups) - MAX_GROUPS // 2
         merged: list[dict] = []
         for g in groups[:k]:
             merged.extend(_read_group(table_dir, g["name"]))
-        ref = _write_group(table_dir, merged)
-        created.append(ref["name"])
-        groups = groups[k:] + [ref]
+        groups = groups[k:] + [record.group(table_dir, merged)]
     return groups
 
 
@@ -796,6 +901,30 @@ def _publish(table_dir: str, version: int, manifest: dict) -> None:
     """Publish one manifest version (_chain_publish): every commit path
     goes through this seam."""
     _chain_publish(_mdir(table_dir), version, manifest)
+
+
+def _table_commit(
+    table_dir: str,
+    attempt,
+    txn: tuple[str, int] | None = None,
+    max_retries: int = 5,
+    pinned: bool = False,
+):
+    """``_pinned_commit`` over the table's own ``_manifests`` chain."""
+    return _pinned_commit(
+        _mdir(table_dir),
+        lambda v: _read_manifest_raw(table_dir, v),
+        lambda v, m: _publish(table_dir, v, m),
+        attempt, txn, max_retries, pinned,
+    )
+
+
+def _tip_version(table_dir: str) -> int:
+    """The table's latest version; FileNotFoundError when it has none."""
+    vs = _versions(table_dir)
+    if not vs:
+        raise FileNotFoundError(f"{table_dir} has no committed snapshots")
+    return vs[-1]
 
 
 def _write_data_files(
@@ -902,22 +1031,41 @@ def _next_manifest(
     return m
 
 
-def _drop_sidecar(table_dir: str, rel_dir: str) -> None:
-    """Remove the bloom sidecar paired with an aborted commit's data dir
-    (vacuum would catch it eventually; abort paths drop it eagerly, same
-    discipline as the data delta itself)."""
+def _drop_delta(table_dir: str, rel_dir: str) -> None:
+    """Remove an unpublished commit's data (or sidecar) dir and the bloom
+    sidecar paired with a data dir."""
     from imagingdb_spark.blooms import BLOOM_DIR
 
+    shutil.rmtree(os.path.join(table_dir, rel_dir), ignore_errors=True)
     shutil.rmtree(
         os.path.join(table_dir, BLOOM_DIR, os.path.basename(rel_dir)),
         ignore_errors=True,
     )
 
 
-def _drop_delta(table_dir: str, rel_dir: str) -> None:
-    """Remove an aborted commit's data dir and its bloom sidecar."""
-    shutil.rmtree(os.path.join(table_dir, rel_dir), ignore_errors=True)
-    _drop_sidecar(table_dir, rel_dir)
+def _live_rows(
+    spark: SparkSession, table_dir: str, entries: list[dict], schema
+) -> int:
+    """Live rows of ``entries``: footer row counts minus the positions
+    their deletion vectors record. An unreadable footer, or an
+    equality-delete ref (eq-dead rows are not recorded per file), takes
+    the authoritative slow count instead."""
+    footers = _footers([os.path.join(table_dir, fe["path"]) for fe in entries])
+    if any(n is None for _s, n in footers) or any(
+        fe.get("eq") for fe in entries
+    ):
+        return _read_entries(spark, table_dir, entries, schema).count()
+    return sum(
+        n - (fe.get("dv") or {}).get("n", 0)
+        for fe, (_s, n) in zip(entries, footers)
+    )
+
+
+def _nonempty(table_dir: str, files: list[dict]) -> list[dict]:
+    """The entries of ``files`` that hold rows: empty task outputs stay
+    out of the manifest (the physical files are vacuum debris)."""
+    footers = _footers([os.path.join(table_dir, fe["path"]) for fe in files])
+    return [fe for fe, (_s, n) in zip(files, footers) if n != 0]
 
 
 def _build_blooms(
@@ -1024,17 +1172,13 @@ def _eq_union(
     key = ("eq", table_dir, tuple(sorted(pairs)))
     if scan_cache is not None and key in scan_cache:
         return scan_cache[key]
-    from pyspark.sql import functions as F
-
     by_sc: dict[str, list[str]] = {}
     for p, sc in pairs:
         by_sc.setdefault(sc, []).append(p)
     out = None
     for sc, ps in sorted(by_sc.items()):
         keys = spark.read.parquet(os.path.join(table_dir, sc))
-        paths = spark.createDataFrame(
-            [(p,) for p in sorted(set(ps))], "path string"
-        )
+        paths = values_df(spark, [(p,) for p in sorted(set(ps))], "path string")
         d = keys.crossJoin(paths).select("path", "key")
         out = d if out is None else out.unionByName(d)
     if scan_cache is not None:
@@ -1227,10 +1371,10 @@ def snapshot_commit(
     cluster_cols: list[str] | None = None,
 ) -> int:
     """Commit df to the snapshot table as one atomic version; returns the
-    committed version number. ``append`` adds to the live set and rebases
-    automatically on conflict (data files are written once, only the
-    manifest link retries); ``overwrite`` replaces the live set and raises
-    SnapshotConflict if any commit lands between read and publish.
+    committed version number. ``append`` adds to the live set; its data
+    files are written once, and a lost race links the same files onto
+    the winner's tip. ``overwrite`` replaces the live set and is pinned
+    to the tip it read (``_pinned_commit`` rule 5).
 
     ``merge_schema=True`` lets an append ADD columns (the Delta
     mergeSchema rule): shared fields must keep identical types, the
@@ -1240,14 +1384,12 @@ def snapshot_commit(
     type changes and drops).
 
     ``txn=(app_id, seq)`` makes the commit an exactly-once transaction
-    (the Delta-style idempotent-writer marker, public pattern): each
-    manifest carries the highest seq committed per app_id, and a commit
-    whose seq is <= the tip's recorded seq is a no-op returning the tip —
-    including when the race is discovered only AT the publish link. This
-    is what a Structured Streaming foreachBatch sink needs: a replayed
-    micro-batch (same batch_id after a crash, or a zombie executor's
-    double-fire) lands zero duplicate rows even when rows have no natural
-    key to anti-join on.
+    (the Delta-style idempotent-writer marker, public pattern): a seq
+    the tip already records is a no-op returning the tip. This is what a
+    Structured Streaming foreachBatch sink needs: a replayed micro-batch
+    (same batch_id after a crash, or a zombie executor's double-fire)
+    lands zero duplicate rows even when rows have no natural key to
+    anti-join on.
 
     ``bloom_columns`` sets the table's bloom-index property (see
     imagingdb_spark/blooms.py): this and every LATER commit — any
@@ -1267,48 +1409,24 @@ def snapshot_commit(
     if mode not in ("append", "overwrite"):
         raise ValueError(f"mode must be append|overwrite, got {mode!r}")
     os.makedirs(table_dir, exist_ok=True)
-
-    def _tip_txns() -> dict:
-        vs = _versions(table_dir)
-        return (
-            _read_manifest_raw(table_dir, vs[-1]).get("txns", {})
-            if vs
-            else {}
-        )
-
-    def _already(seen: dict) -> bool:
-        return txn is not None and txn[1] <= seen.get(txn[0], -1)
-
-    if _already(_tip_txns()):
-        return _versions(table_dir)[-1]  # replay: nothing written at all
-    pre_vs = _versions(table_dir)
-    tip_blooms = (
-        _read_manifest_raw(table_dir, pre_vs[-1]).get("blooms")
-        if pre_vs
-        else None
-    )
-    eff_blooms = bloom_columns if bloom_columns is not None else tip_blooms
     # canonicalize (and thereby validate: reserved __dv_* names fail
     # here) BEFORE the data lands — a rejected schema must cost nothing
     # and leave nothing behind
     schema_json = _canon_schema_json(df.schema)
-    new_files, new_rows, rel_dir = _write_data_files(df, table_dir)
-    _build_blooms(
-        spark, table_dir, rel_dir, new_files, eff_blooms, df.schema
-    )
-    created: list[str] = []  # group files this attempt wrote
-    for _ in range(max_retries):
-        vs = _versions(table_dir)
-        parent = vs[-1] if vs else 0
-        # commit paths only need refs/txns/schema/rows — never the
-        # resolved file list, which is the whole point of the tree
-        base = _read_manifest_raw(table_dir, parent) if parent else None
-        if _already(base.get("txns", {}) if base else {}):
-            # another replica committed this txn between our check and
-            # now: drop our identical delta and converge
-            _drop_delta(table_dir, rel_dir)
-            return parent
-        commit_schema = schema_json
+    written: list = []  # (files, rows): landed by the first attempt
+
+    def attempt(parent, base, record):
+        if not written:
+            files, rows, rel_dir = record.data(df, table_dir, relink=True)
+            _build_blooms(
+                spark, table_dir, rel_dir, files,
+                bloom_columns if bloom_columns is not None
+                else (base or {}).get("blooms"),
+                df.schema,
+            )
+            written.append((files, rows))
+        files, rows = written[0]
+        commit_schema, base_groups, delta = schema_json, [], []
         if mode == "append" and base:
             # canonicalize the STORED side too: manifests written by older
             # serializer vintages (compact JSON, strict nullable flags)
@@ -1320,10 +1438,6 @@ def snapshot_commit(
                     else None
                 )
                 if merged is None:
-                    # abort: drop the already-written delta eagerly, like
-                    # every other abort path — a sink retrying a
-                    # mis-schemaed batch must not pile up full copies
-                    _drop_delta(table_dir, rel_dir)
                     raise ValueError(
                         f"append schema differs from {table_dir} tip "
                         f"v{parent}; additive widening needs "
@@ -1331,38 +1445,17 @@ def snapshot_commit(
                         "migrations.py"
                     )
                 commit_schema = merged
-            base_groups, legacy_delta = _base_delta(base)
-            groups = _child_groups(
-                table_dir, base_groups, legacy_delta + new_files, created
-            )
-            rows = base["rows"] + new_rows
-        else:
-            groups = _child_groups(table_dir, [], new_files, created)
-            rows = new_rows
-        manifest = _next_manifest(
+            base_groups, delta = _base_delta(base)
+            rows += base["rows"]
+        groups = _child_groups(table_dir, base_groups, delta + files, record)
+        return _next_manifest(
             base, mode, groups, rows, commit_schema, txn,
             blooms=bloom_columns, cluster=cluster_cols,
-        )
-        try:
-            _publish(table_dir, parent + 1, manifest)
-            return parent + 1
-        except SnapshotConflict:
-            if mode == "overwrite":
-                # a same-txn replica may have won the link race: that is
-                # the documented no-op, not an error — only a FOREIGN
-                # commit makes the overwrite a genuine conflict
-                _drop_groups(table_dir, created)
-                if _already(_tip_txns()):
-                    _drop_delta(table_dir, rel_dir)
-                    return _versions(table_dir)[-1]
-                raise
-            # append rebase: re-read tip, relink the same data files
-            # under fresh groups (the old refs pointed at a lost parent)
-            _drop_groups(table_dir, created)
-            continue
-    raise SnapshotConflict(
-        f"append to {table_dir} lost {max_retries} straight races"
-    )
+        ), None
+
+    return _table_commit(
+        table_dir, attempt, txn, max_retries, pinned=mode == "overwrite"
+    )[0]
 
 
 def snapshot_stream_sink(table_dir: str, app_id: str):
@@ -1401,43 +1494,27 @@ def snapshot_idempotent_append(
     """Serializable idempotent append — the Postgres-grade guarantee an
     anti-join-guarded append to bare parquet cannot give (two concurrent
     writers can both pass the anti-join check and double-insert). Here
-    the anti-join is recomputed against the EXACT tip the commit
-    publishes onto: if another commit wins the version race, the stale
-    delta is dropped, the anti-join re-runs against the new tip, and the
-    delta is rewritten — so concurrent ingests of overlapping batches
-    converge to exactly-once by keys. Returns the tip version (unchanged
-    when the whole batch was already present). The retry rewrites data
-    files, unlike snapshot_commit's append rebase, precisely because
-    idempotence is a READ-dependent claim: relinking files checked
-    against an older tip would reintroduce the double-insert. Rows
-    derived from several tables' state (surrogate ids, parent ids) belong
-    in one snapcatalog.catalog_commit, whose builder re-runs against the
-    exact tip of every table and lands each table through the same
+    the anti-join runs against the EXACT tip the commit publishes onto
+    (``_pinned_commit``): a lost race re-runs it against the winner's
+    tip, so concurrent ingests of overlapping batches converge to
+    exactly-once by keys. Returns the tip version (unchanged when the
+    whole batch was already present). Unlike snapshot_commit's append,
+    a retry rewrites the data files: idempotence is a READ-dependent
+    claim, and relinking files checked against an older tip would
+    reintroduce the double-insert. Rows derived from several tables'
+    state (surrogate ids, parent ids) belong in one
+    snapcatalog.catalog_commit, whose builder re-runs against the exact
+    tip of every table and lands each table through the same
     _land_keyed_append."""
-    for _ in range(max_retries):
-        vs = _versions(table_dir)
-        parent = vs[-1] if vs else 0
-        base = _read_manifest_raw(table_dir, parent) if parent else None
+
+    def attempt(parent, base, record):
         tip = _manifest_read(spark, table_dir, base) if base else None
-        created: list[str] = []
-        datadirs: list[tuple[str, str]] = []
         _, manifest, _ = _land_keyed_append(
-            spark, table_dir, new_rows, key_cols, base, tip, created, datadirs
+            spark, table_dir, new_rows, key_cols, base, tip, record
         )
-        if manifest is None:
-            return parent  # whole batch already present: converged
-        try:
-            _publish(table_dir, parent + 1, manifest)
-            return parent + 1
-        except SnapshotConflict:
-            # stale anti-join: drop this attempt and recompute against
-            # the new tip
-            _drop_groups(table_dir, created)
-            for _, rel_dir in datadirs:
-                _drop_delta(table_dir, rel_dir)
-    raise SnapshotConflict(
-        f"idempotent append to {table_dir} lost {max_retries} straight races"
-    )
+        return manifest, None
+
+    return _table_commit(table_dir, attempt, max_retries=max_retries)[0]
 
 
 def _known_empty(df: DataFrame) -> bool:
@@ -1458,8 +1535,7 @@ def _land_keyed_append(
     key_cols: list[str],
     base: dict | None,
     tip: DataFrame | None,
-    created: list[str],
-    datadirs: list[tuple[str, str]],
+    record: _Attempt,
     blooms: list[str] | None = None,
 ) -> tuple[DataFrame, dict | None, int]:
     """Land one keyed append onto the tip manifest ``base`` (None: the
@@ -1471,9 +1547,8 @@ def _land_keyed_append(
     (nothing when the optimizer already knows the delta is empty), build
     the bloom sidecars (``blooms`` sets the table property, None
     inherits the tip's), write the child group and shape the next
-    manifest. The data dir is recorded in ``datadirs`` and the group
-    files in ``created`` the moment they exist, so the caller can drop
-    an unpublished attempt.
+    manifest. The data dir and group files are recorded in the attempt
+    ``record`` (``_pinned_commit`` drops an unpublished attempt).
 
     Returns (the delta read back from its own files, the next manifest,
     rows landed). An empty delta returns a typed empty frame and no
@@ -1500,11 +1575,10 @@ def _land_keyed_append(
     n = 0
     if not _known_empty(rows_df):
         os.makedirs(table_dir, exist_ok=True)
-        files, n, rel_dir = _write_data_files(rows_df, table_dir)
+        files, n, rel_dir = record.data(rows_df, table_dir)
         if n == 0:
-            shutil.rmtree(os.path.join(table_dir, rel_dir), ignore_errors=True)
-        else:
-            datadirs.append((table_dir, rel_dir))
+            # a catalog commit may still publish other tables' deltas
+            _drop_delta(table_dir, rel_dir)
     if n == 0:
         # typed as the tip stores it (every field nullable), the schema a
         # non-empty delta reads back from its files
@@ -1520,7 +1594,7 @@ def _land_keyed_append(
         rows_df.schema,
     )
     base_groups, legacy_delta = _base_delta(base)
-    groups = _child_groups(table_dir, base_groups, legacy_delta + files, created)
+    groups = _child_groups(table_dir, base_groups, legacy_delta + files, record)
     manifest = _next_manifest(
         base, "append", groups, (base["rows"] if base else 0) + n,
         schema_json, blooms=blooms,
@@ -1842,15 +1916,12 @@ def snapshot_rmw(
     txn: tuple[str, int] | None = None,
 ) -> int:
     """Serializable read-modify-write: ``transform(tip_df) -> new_df``
-    replaces the table, committed as one atomic version PINNED to the
-    tip the transform read. RMW overwrites are where optimistic
-    concurrency bites: publishing against a re-read tip would silently
-    discard any commit that landed between the read and the publish, so
-    the publish here targets exactly read-tip+1 (the snapshot_compact
-    discipline) and a lost race re-reads and re-runs the transform —
-    never a blind retry. The stale rewrite is dropped eagerly, not left
-    to vacuum. MERGE (snapshot_merge) and streaming CDC state
-    maintenance are the two shipped instances.
+    replaces the table, committed as one atomic version pinned to the
+    tip the transform read (``_pinned_commit``): a lost race re-reads
+    and re-runs the transform, never a blind retry, because publishing
+    against a re-read tip would silently discard the winner's commit.
+    MERGE (snapshot_merge) and streaming CDC state maintenance are the
+    two shipped instances.
 
     ``txn=(app_id, seq)`` makes the RMW EXACTLY-ONCE (the same marker
     snapshot_commit carries): a transform whose seq the tip already
@@ -1861,41 +1932,23 @@ def snapshot_rmw(
     happen BEFORE the fold, at the state table itself (the checkpoint
     alone cannot promise it: foreachBatch can fire twice for one
     batch_id around a crash)."""
+    _tip_version(table_dir)
 
-    def _already(m: dict) -> bool:
-        return txn is not None and txn[1] <= m.get("txns", {}).get(txn[0], -1)
-
-    created: list[str] = []
-    for _ in range(max_retries):
-        vs = _versions(table_dir)
-        if not vs:
-            raise FileNotFoundError(f"{table_dir} has no committed snapshots")
-        tip = vs[-1]
-        m = _read_manifest_raw(table_dir, tip)
-        if _already(m):
-            return tip  # replayed txn: the fold already happened
-        out = transform(snapshot_read(spark, table_dir, version=tip))
+    def attempt(parent, m, record):
+        out = transform(snapshot_read(spark, table_dir, version=parent))
         # validate (reserved __dv_* names fail here) before bytes land
         out_schema_json = _canon_schema_json(out.schema)
-        new_files, new_rows, rel_dir = _write_data_files(out, table_dir)
+        new_files, new_rows, rel_dir = record.data(out, table_dir)
         _build_blooms(
             spark, table_dir, rel_dir, new_files, m.get("blooms"),
             out.schema,
         )
-        groups = _child_groups(table_dir, [], new_files, created)
-        manifest = _next_manifest(
+        groups = _child_groups(table_dir, [], new_files, record)
+        return _next_manifest(
             m, mode, groups, new_rows, out_schema_json, txn
-        )
-        try:
-            _publish(table_dir, tip + 1, manifest)
-            return tip + 1
-        except SnapshotConflict:
-            _drop_delta(table_dir, rel_dir)
-            _drop_groups(table_dir, created)
-            continue
-    raise SnapshotConflict(
-        f"{mode} into {table_dir} lost {max_retries} straight races"
-    )
+        ), None
+
+    return _table_commit(table_dir, attempt, txn, max_retries)[0]
 
 
 def snapshot_apply_keyed(
@@ -1934,11 +1987,10 @@ def snapshot_apply_keyed(
     2. Candidate files are read (through any deletion vectors,
        materializing them), transformed with ``source``, and rewritten;
        unmatched source keys land in the same fresh files as inserts.
-    3. Everything else carries by reference in the manifest — the
-       commit publishes pinned to the tip the candidates were resolved
-       from, so a racing commit forces a re-resolve + re-apply (a
-       keyed apply's file set is a read-dependent claim), and a crash
-       anywhere leaves the pre-apply version exactly.
+    3. Everything else carries by reference in the manifest. The
+       commit goes through ``_pinned_commit``: a keyed apply's file set
+       is a read-dependent claim, so a lost race re-resolves and
+       re-applies.
 
     The key set is collected driver-side BOUNDED by ``max_keys`` (the
     ``propagate_deletes`` contract): a batch with more distinct keys
@@ -1951,12 +2003,10 @@ def snapshot_apply_keyed(
     the commit itself now is.
 
     An EMPTY source publishes nothing and returns the tip version.
-    ``txn=(app_id, seq)`` gives the apply the standard exactly-once
-    replay marker. ``plan`` (optional dict) collects the audit:
+    ``txn=(app_id, seq)`` is the exactly-once replay marker of
+    ``_pinned_commit``. ``plan`` (optional dict) collects the audit:
     strategy, n_source_keys, files_total/files_rewritten/files_kept/
     groups_kept_by_ref/files_bloom_cleared, rows_before/rows_after."""
-    from pyspark.sql import functions as F
-
     if plan is None:
         plan = {}
     if key not in source.columns:
@@ -1984,10 +2034,7 @@ def snapshot_apply_keyed(
     plan["n_source_keys"] = len(keys)
     if not sample:
         plan["strategy"] = "noop"
-        vs = _versions(table_dir)
-        if not vs:
-            raise FileNotFoundError(f"{table_dir} has no committed snapshots")
-        return vs[-1]
+        return _tip_version(table_dir)
     if len(keys) > max_keys:
         # wide batch: most files are candidates anyway — full rewrite,
         # zero driver materialization of the key set
@@ -1995,68 +2042,21 @@ def snapshot_apply_keyed(
         return _rewrite_fallback()
     plan["strategy"] = "pruned"
     try:
+        # only NULL keys: an empty predicate, nothing can match
         checked = _check_where([(key, "in", keys)]) if keys else []
     except ValueError:
         # a key type the pruning predicate grammar cannot carry
         # (date/decimal/binary): correctness over pruning — full rewrite
         return _rewrite_fallback()
+    _tip_version(table_dir)
 
-    def _already(m: dict) -> bool:
-        return txn is not None and txn[1] <= m.get("txns", {}).get(txn[0], -1)
-
-    created: list[str] = []
-    for _ in range(max_retries):
-        vs = _versions(table_dir)
-        if not vs:
-            raise FileNotFoundError(f"{table_dir} has no committed snapshots")
-        tip = vs[-1]
-        m = _read_manifest_raw(table_dir, tip)
-        if _already(m):
-            return tip  # replayed txn: the apply already happened
-        if checked:
-            ref_groups, keep, cand, audit = _delete_candidates(
-                table_dir, m, checked
-            )
-        else:  # only NULL keys: pure insert, nothing can match
-            if m["groups"] is None:  # legacy flat manifest: carry entries
-                ref_groups = []
-                keep = list(
-                    _read_manifest(table_dir, m["version"])["files"]
-                    if "files" not in m
-                    else m["files"]
-                )
-            else:
-                ref_groups, keep = list(m["groups"]), []
-            cand = []
-            audit = {
-                "files_total": (
-                    sum(g["n_files"] for g in m["groups"])
-                    if m["groups"] is not None
-                    else len(keep)
-                ),
-                "files_rewritten": 0, "files_kept": len(keep),
-                "groups_kept_by_ref": (
-                    len(m["groups"]) if m["groups"] is not None else None
-                ),
-                "files_bloom_cleared": 0,
-            }
-        schema = StructType.fromJson(json.loads(m["schema"]))
-        cand_footers = _footers(
-            [os.path.join(table_dir, fe["path"]) for fe in cand]
+    def attempt(parent, m, record):
+        ref_groups, keep, cand, audit = _delete_candidates(
+            table_dir, m, checked
         )
-        if any(n is None for _s, n in cand_footers) or any(
-            fe.get("eq") for fe in cand
-        ):
-            # unreadable footer OR equality-delete refs (eq-dead rows
-            # are not per-file recorded): authoritative slow count
-            cand_live = _read_entries(spark, table_dir, cand, schema).count()
-        else:
-            cand_live = sum(
-                n - (fe.get("dv") or {}).get("n", 0)
-                for fe, (_s, n) in zip(cand, cand_footers)
-            )
-        cand_df = _read_entries(spark, table_dir, cand, schema)
-        out = transform(cand_df, source)
+        schema = StructType.fromJson(json.loads(m["schema"]))
+        cand_live = _live_rows(spark, table_dir, cand, schema)
+        out = transform(_read_entries(spark, table_dir, cand, schema), source)
         missing = set(schema.fieldNames()) - set(out.columns)
         if missing:
             raise ValueError(
@@ -2067,44 +2067,25 @@ def snapshot_apply_keyed(
         # manifest column order is strict: realign (a merge emits
         # key-first) without changing the stored schema
         out = out.select(*schema.fieldNames())
-        new_files, new_rows, rel_dir = _write_data_files(out, table_dir)
-        nonempty = [
-            fe
-            for fe, (_s, n) in zip(
-                new_files,
-                _footers(
-                    [os.path.join(table_dir, fe["path"]) for fe in new_files]
-                ),
-            )
-            if n != 0
-        ]
+        new_files, new_rows, rel_dir = record.data(out, table_dir)
+        nonempty = _nonempty(table_dir, new_files)
         _build_blooms(
             spark, table_dir, rel_dir, nonempty, m.get("blooms"),
             out.schema,
         )
-        groups = _child_groups(table_dir, ref_groups, keep + nonempty, created)
-        manifest = _next_manifest(
-            m, mode, groups, m["rows"] - cand_live + new_rows,
-            m["schema"], txn,
+        groups = _child_groups(table_dir, ref_groups, keep + nonempty, record)
+        rows_after = m["rows"] - cand_live + new_rows
+        audit.update(
+            files_rewritten=len(cand), rows_before=m["rows"],
+            rows_after=rows_after,
         )
-        try:
-            _publish(table_dir, tip + 1, manifest)
-            plan.update(audit)
-            plan.update(
-                files_rewritten=len(cand),
-                rows_before=m["rows"],
-                rows_after=m["rows"] - cand_live + new_rows,
-            )
-            return tip + 1
-        except SnapshotConflict:
-            # read-dependent claim: drop this attempt's rewrite eagerly
-            # and re-resolve candidates against the winner's tip
-            _drop_delta(table_dir, rel_dir)
-            _drop_groups(table_dir, created)
-            continue
-    raise SnapshotConflict(
-        f"keyed apply on {table_dir} lost {max_retries} straight races"
-    )
+        return _next_manifest(
+            m, mode, groups, rows_after, m["schema"], txn
+        ), audit
+
+    v, audit = _table_commit(table_dir, attempt, txn, max_retries)
+    plan.update(audit or {})
+    return v
 
 
 def snapshot_merge(
@@ -2243,9 +2224,8 @@ def snapshot_upsert_eq(
     key). Duplicate source keys: all duplicates land (dedupe upstream —
     the CDC sink reduces to the max-seq winner per key first).
 
-    Same commit discipline as every keyed mutation: pinned-tip publish
-    (a racing commit forces re-resolve), crash leaves the pre-upsert
-    version exactly, ``txn`` replays are no-ops, time travel +
+    Same commit discipline as every keyed mutation (``_pinned_commit``):
+    a lost race re-resolves, ``txn`` replays are no-ops, time travel +
     expire/vacuum unchanged. Batches wider than ``max_keys`` distinct
     keys fall back to the full-rewrite replace under ``snapshot_rmw``.
     Returns the committed version; ``plan`` collects the audit."""
@@ -2257,9 +2237,9 @@ def snapshot_upsert_eq(
         raise ValueError(f"source has no key column {key!r}")
     if deletes is not None and len(deletes.columns) != 1:
         raise ValueError("deletes must be a one-column key frame")
-    vs0 = _versions(table_dir)
-    if vs0:
-        m0 = _read_manifest_raw(table_dir, vs0[-1])
+    vs = _versions(table_dir)
+    if vs:
+        m0 = _read_manifest_raw(table_dir, vs[-1])
         table_cols = {f["name"] for f in json.loads(m0["schema"])["fields"]}
         if set(source.columns) != table_cols:
             raise ValueError(
@@ -2276,9 +2256,7 @@ def snapshot_upsert_eq(
     plan["n_keys"] = len(keys)
     if not sample:
         plan["strategy"] = "noop"
-        if not vs0:
-            raise FileNotFoundError(f"{table_dir} has no committed snapshots")
-        return vs0[-1]
+        return _tip_version(table_dir)
 
     def _replace(tip_df: DataFrame) -> DataFrame:
         kf = key_src.distinct().withColumnRenamed("key", "__del_key")
@@ -2296,6 +2274,7 @@ def snapshot_upsert_eq(
         )
     plan["strategy"] = "eq"
     try:
+        # only NULL keys: an empty predicate, nothing can match
         checked = _check_where([(key, "in", keys)]) if keys else []
     except ValueError:
         plan["strategy"] = "rewrite"
@@ -2303,43 +2282,17 @@ def snapshot_upsert_eq(
             spark, table_dir, _replace, mode="eqput",
             max_retries=max_retries, txn=txn,
         )
-
-    def _already(m: dict) -> bool:
-        return txn is not None and txn[1] <= m.get("txns", {}).get(txn[0], -1)
-
-    keys_df = (
-        spark.createDataFrame([(k,) for k in keys], ["__k"]) if keys else None
+    _tip_version(table_dir)
+    keys_df = values_df(
+        spark, [(k,) for k in keys],
+        f"__k {source.schema[key].dataType.simpleString()}",
     )
-    created: list[str] = []
-    for _ in range(max_retries):
-        vs = _versions(table_dir)
-        if not vs:
-            raise FileNotFoundError(f"{table_dir} has no committed snapshots")
-        tip = vs[-1]
-        m = _read_manifest_raw(table_dir, tip)
-        if _already(m):
-            return tip
+
+    def attempt(parent, m, record):
         schema = StructType.fromJson(json.loads(m["schema"]))
-        if checked:
-            ref_groups, keep, cand, audit = _delete_candidates(
-                table_dir, m, checked
-            )
-        else:
-            if m["groups"] is None:
-                ref_groups = []
-                keep = list(
-                    _read_manifest(table_dir, m["version"])["files"]
-                    if "files" not in m
-                    else m["files"]
-                )
-            else:
-                ref_groups, keep = list(m["groups"]), []
-            cand = []
-            audit = {
-                "files_total": None, "files_rewritten": 0,
-                "files_kept": len(keep), "groups_kept_by_ref": None,
-                "files_bloom_cleared": 0,
-            }
+        ref_groups, keep, cand, audit = _delete_candidates(
+            table_dir, m, checked
+        )
         # the one standing read: per-candidate-file live/matched counts,
         # key column only, through every prior dv/eq ref — what keeps
         # the manifest row count exact and finds fully-dead entries
@@ -2394,25 +2347,12 @@ def snapshot_upsert_eq(
         rows_matched = sum(v[1] for v in cnt.values())
         # batch lands as fresh files (column order realigned)
         batch = source.select(*schema.fieldNames())
-        new_files, new_rows, rel_dir = _write_data_files(batch, table_dir)
-        nonempty = [
-            fe
-            for fe, (_s, n) in zip(
-                new_files,
-                _footers(
-                    [os.path.join(table_dir, fe["path"]) for fe in new_files]
-                ),
-            )
-            if n != 0
-        ]
+        new_files, new_rows, rel_dir = record.data(batch, table_dir)
+        nonempty = _nonempty(table_dir, new_files)
         if rows_matched == 0 and not nonempty:
             # nothing deleted, nothing inserted: publish nothing
-            shutil.rmtree(
-                os.path.join(table_dir, rel_dir), ignore_errors=True
-            )
-            plan.update(audit)
-            plan.update(rows_replaced=0, files_eq=0, files_dropped=0)
-            return tip
+            audit.update(rows_replaced=0, files_eq=0, files_dropped=0)
+            return None, audit
         _build_blooms(
             spark, table_dir, rel_dir, nonempty, m.get("blooms"),
             batch.schema,
@@ -2430,9 +2370,9 @@ def snapshot_upsert_eq(
                 dropped += 1  # every live row superseded
                 continue
             if eq_rel is None:
-                eq_rel = _write_eq_sidecar(
+                eq_rel = record.dir(table_dir, _write_eq_sidecar(
                     spark, table_dir, keys_df, len(keys)
-                )
+                ))
             old = fe.get("eq")
             chain = (_eq_scs(old) if old else []) + [eq_rel]
             fe2 = dict(fe)
@@ -2444,7 +2384,7 @@ def snapshot_upsert_eq(
             new_cand.append(fe2)
             files_eq += 1
         groups = _child_groups(
-            table_dir, ref_groups, keep + new_cand + nonempty, created
+            table_dir, ref_groups, keep + new_cand + nonempty, record
         )
         manifest = _next_manifest(
             m, "eqput", groups, m["rows"] - rows_matched + new_rows,
@@ -2454,28 +2394,18 @@ def snapshot_upsert_eq(
         # when no surviving entry carries a ref (a commit that only
         # drops fully-superseded entries and adds batch files)
         manifest["eq_col"] = key
-        try:
-            _publish(table_dir, tip + 1, manifest)
-            plan.update(audit)
-            plan.update(
-                rows_replaced=rows_matched,
-                rows_inserted=new_rows,
-                files_eq=files_eq,
-                files_dropped=dropped,
-                files_rewritten=0,
-            )
-            return tip + 1
-        except SnapshotConflict:
-            _drop_delta(table_dir, rel_dir)
-            if eq_rel is not None:
-                shutil.rmtree(
-                    os.path.join(table_dir, eq_rel), ignore_errors=True
-                )
-            _drop_groups(table_dir, created)
-            continue
-    raise SnapshotConflict(
-        f"eq upsert on {table_dir} lost {max_retries} straight races"
-    )
+        audit.update(
+            rows_replaced=rows_matched,
+            rows_inserted=new_rows,
+            files_eq=files_eq,
+            files_dropped=dropped,
+            files_rewritten=0,
+        )
+        return manifest, audit
+
+    v, audit = _table_commit(table_dir, attempt, txn, max_retries)
+    plan.update(audit or {})
+    return v
 
 
 def snapshot_compact(
@@ -2491,7 +2421,8 @@ def snapshot_compact(
     loses the version race and raises SnapshotConflict instead of silently
     discarding the newcomer's rows, which is precisely the hazard
     layout.compact_parquet documents it cannot close with renames. The
-    caller retries; rewritten-but-unpublished files are vacuum debris.
+    commit is one pinned ``_pinned_commit`` attempt: a lost race drops
+    the rewrite and raises, and the caller retries.
 
     ``cluster_cols`` turns the rewrite into the OPTIMIZE-ZORDER analog:
     one key clusters via range-repartition + in-partition sort (disjoint
@@ -2513,55 +2444,48 @@ def snapshot_compact(
     a side effect)."""
     import math
 
-    vs = _versions(table_dir)
-    if not vs:
-        raise FileNotFoundError(f"{table_dir} has no committed snapshots")
-    tip = vs[-1]
-    m = _read_manifest(table_dir, tip)
-    if cluster_cols is None:
-        cluster_cols = m.get("cluster")
-    if not m["files"]:
-        return tip  # nothing to compact
-    total = sum(f["bytes"] for f in m["files"])
-    n_out = max(1, math.ceil(total / target_file_bytes))
-    df = snapshot_read(spark, table_dir, version=tip)
-    if not cluster_cols:
-        df = df.repartition(n_out)
-    elif len(cluster_cols) == 1:
-        df = df.repartitionByRange(n_out, *cluster_cols).sortWithinPartitions(
-            *cluster_cols
-        )
-    else:
-        from imagingdb_spark.layout import zorder_col
+    _tip_version(table_dir)
 
-        df = (
-            df.withColumn("__z", zorder_col(df, cluster_cols))
-            .repartitionByRange(n_out, "__z")
-            .sortWithinPartitions("__z")
-            .drop("__z")
+    def attempt(parent, m, record):
+        cols = m.get("cluster") if cluster_cols is None else cluster_cols
+        files = _resolve_pruned(table_dir, m, None)
+        if not files:
+            return None, None  # nothing to compact
+        n_out = max(1, math.ceil(
+            sum(f["bytes"] for f in files) / target_file_bytes
+        ))
+        df = snapshot_read(spark, table_dir, version=parent)
+        if not cols:
+            df = df.repartition(n_out)
+        elif len(cols) == 1:
+            df = df.repartitionByRange(n_out, *cols).sortWithinPartitions(
+                *cols
+            )
+        else:
+            from imagingdb_spark.layout import zorder_col
+
+            df = (
+                df.withColumn("__z", zorder_col(df, cols))
+                .repartitionByRange(n_out, "__z")
+                .sortWithinPartitions("__z")
+                .drop("__z")
+            )
+        new_files, new_rows, rel_dir = record.data(df, table_dir)
+        if new_rows != m["rows"]:
+            raise RuntimeError(
+                f"compaction rewrite of {table_dir} changed rows "
+                f"({m['rows']} -> {new_rows}); nothing was published"
+            )
+        _build_blooms(
+            spark, table_dir, rel_dir, new_files, m.get("blooms"), df.schema
         )
-    new_files, new_rows, rel_dir = _write_data_files(df, table_dir)
-    if new_rows != m["rows"]:
-        raise RuntimeError(
-            f"compaction rewrite of {table_dir} changed rows "
-            f"({m['rows']} -> {new_rows}); nothing was published"
-        )
-    _build_blooms(
-        spark, table_dir, rel_dir, new_files, m.get("blooms"), df.schema
-    )
-    created: list[str] = []
-    groups = _child_groups(table_dir, [], new_files, created)
-    manifest = _next_manifest(
-        m, "compact", groups, new_rows, m["schema"],
-        cluster=cluster_cols if declare else None,
-    )
-    try:
-        _publish(table_dir, tip + 1, manifest)  # SnapshotConflict on race
-    except SnapshotConflict:
-        _drop_groups(table_dir, created)
-        _drop_sidecar(table_dir, rel_dir)
-        raise
-    return tip + 1
+        groups = _child_groups(table_dir, [], new_files, record)
+        return _next_manifest(
+            m, "compact", groups, new_rows, m["schema"],
+            cluster=cols if declare else None,
+        ), None
+
+    return _table_commit(table_dir, attempt, max_retries=1, pinned=True)[0]
 
 
 def snapshot_cluster_report(
@@ -2717,10 +2641,7 @@ def snapshot_maintain(
     None. A SnapshotConflict from a racing append propagates — the loop
     just runs again next tick, exactly like the streaming gates'
     compaction discipline."""
-    vs = _versions(table_dir)
-    if not vs:
-        raise FileNotFoundError(f"{table_dir} has no committed snapshots")
-    spec = _read_manifest_raw(table_dir, vs[-1]).get("cluster")
+    spec = _read_manifest_raw(table_dir, _tip_version(table_dir)).get("cluster")
     if cluster_col is None:
         if not spec:
             raise ValueError(
@@ -2827,23 +2748,19 @@ def snapshot_delete(
        the predicate does NOT match, and rewritten; zero-row outputs are
        dropped from the manifest entirely.
 
-    The rewrite publishes as ONE atomic version (mode ``delete``) pinned
-    to the tip the candidates were resolved from: a concurrent commit
-    wins the version race and the delete re-resolves against the new tip
-    (re-running the prune — a delete's file set is a read-dependent
-    claim, so a blind relink would resurrect rows a racing writer just
-    added to a rewritten file's key range). A crash anywhere — data
-    write, sidecar build, group write, or the publish link itself —
-    leaves the pre-delete version exactly; debris is vacuum's.
+    The rewrite publishes as ONE atomic version (mode ``delete``)
+    through ``_pinned_commit``: a lost race re-runs the prune against
+    the winner's tip (a delete's file set is a read-dependent claim, so
+    a blind relink would resurrect rows a racing writer just added to a
+    rewritten file's key range).
 
     Time travel keeps every retained pre-delete version readable (the
     legal-hold window); ``snapshot_expire`` + ``snapshot_vacuum`` make
     the erasure PHYSICAL — after they run, no retained manifest
     references the rewritten files and the bytes are gone.
 
-    ``txn=(app_id, seq)`` gives the delete the same exactly-once replay
-    marker every other writer carries (a replayed seq is a no-op
-    returning the tip).
+    ``txn=(app_id, seq)`` is the exactly-once replay marker of
+    ``_pinned_commit`` (a replayed seq is a no-op returning the tip).
 
     ``mode`` picks the execution strategy, never the semantics (both
     publish one atomic ``delete`` commit with identical surviving rows):
@@ -2887,63 +2804,41 @@ def snapshot_delete(
             "commit an empty overwrite instead"
         )
 
-    def _already(m: dict) -> bool:
-        return txn is not None and txn[1] <= m.get("txns", {}).get(txn[0], -1)
+    _tip_version(table_dir)
 
-    created: list[str] = []
-    for _ in range(max_retries):
-        vs = _versions(table_dir)
-        if not vs:
-            raise FileNotFoundError(f"{table_dir} has no committed snapshots")
-        tip = vs[-1]
-        m = _read_manifest_raw(table_dir, tip)
-        if _already(m):
-            return {
-                "version": tip, "rows_deleted": 0, "files_total": None,
-                "files_rewritten": 0, "files_kept": 0,
-                "groups_kept_by_ref": None, "files_bloom_cleared": 0,
-            }
-        mode_used = mode
+    def attempt(parent, m, record):
         if mode == "dv":
             try:
-                manifest, rel_dir, out = _delete_dv(
-                    spark, table_dir, m, checked, created, txn,
+                manifest, out = _delete_dv(
+                    spark, table_dir, m, checked, record, txn,
                     dv_max_positions=dv_max_positions,
                 )
+                out["mode_used"] = "dv"
+                return manifest, out
             except DVPositionsOverflow:
                 # accumulated-position debt past the cap: the rewrite is
                 # the cheaper physical strategy — same semantics, same
                 # atomic commit, recorded in the audit (nothing landed
-                # before the raise, so there is no debris to drop)
-                manifest, rel_dir, out = _delete_rewrite(
-                    spark, table_dir, m, checked, created, txn
-                )
-                # keep the dv-mode audit contract for callers
-                out.setdefault("files_dv", 0)
-                out.setdefault("files_dropped", 0)
-                mode_used = "cow"
-        else:
-            manifest, rel_dir, out = _delete_rewrite(
-                spark, table_dir, m, checked, created, txn
-            )
-        out["mode_used"] = mode_used
-        if manifest is None:
-            out["version"] = tip
-            return out  # nothing physically matched: no commit published
-        try:
-            _publish(table_dir, tip + 1, manifest)
-            out["version"] = tip + 1
-            return out
-        except SnapshotConflict:
-            # read-dependent claim: re-resolve candidates against the
-            # winner's tip; this attempt's rewrite (CoW data dir or DV
-            # sidecar dir — rel_dir points at whichever) drops eagerly
-            _drop_delta(table_dir, rel_dir)
-            _drop_groups(table_dir, created)
-            continue
-    raise SnapshotConflict(
-        f"delete from {table_dir} lost {max_retries} straight races"
-    )
+                # before the raise)
+                pass
+        manifest, out = _delete_rewrite(
+            spark, table_dir, m, checked, record, txn
+        )
+        if mode == "dv":  # keep the dv-mode audit contract for callers
+            out.setdefault("files_dv", 0)
+            out.setdefault("files_dropped", 0)
+        out["mode_used"] = "cow"
+        return manifest, out
+
+    v, out = _table_commit(table_dir, attempt, txn, max_retries)
+    if out is None:  # replayed txn
+        out = {
+            "rows_deleted": 0, "files_total": None, "files_rewritten": 0,
+            "files_kept": 0, "groups_kept_by_ref": None,
+            "files_bloom_cleared": 0,
+        }
+    out["version"] = v
+    return out
 
 
 def _delete_candidates(
@@ -2953,7 +2848,9 @@ def _delete_candidates(
     per-file footer-stat skip, bloom-sidecar clearing of =/in probes —
     shared by the copy-on-write and deletion-vector paths so the pruning
     semantics cannot drift between them. Returns (groups carried by ref,
-    entries carried through touched groups, candidate entries, audit)."""
+    entries carried through touched groups, candidate entries, audit).
+    An empty ``checked`` matches nothing (a keyed batch of only NULL
+    keys): every group carries by ref."""
     # --- stage 1+2: group-ref skip, then per-file stats skip -----------
     if m["groups"] is None:
         ref_groups: list[dict] = []
@@ -2967,12 +2864,13 @@ def _delete_candidates(
         ref_groups, touched = [], []
         files_total = sum(g["n_files"] for g in m["groups"])
         for g in m["groups"]:
-            if _group_matches(g, checked):
+            if checked and _group_matches(g, checked):
                 touched.extend(_read_group(table_dir, g["name"]))
             else:
                 ref_groups.append(g)
-    keep = [fe for fe in touched if not _file_matches(fe, checked)]
-    cand = [fe for fe in touched if _file_matches(fe, checked)]
+    keep, cand = [], []
+    for fe in touched:
+        (cand if checked and _file_matches(fe, checked) else keep).append(fe)
     # --- stage 3: bloom sidecars clear =/in probes ----------------------
     bloom_cleared = 0
     if cand:
@@ -3002,10 +2900,10 @@ def _delete_dv(
     table_dir: str,
     m: dict,
     checked: list,
-    created: list[str],
+    record: _Attempt,
     txn: tuple[str, int] | None = None,
     dv_max_positions: int | None = DV_MAX_POSITIONS,
-) -> tuple[dict | None, str | None, dict]:
+) -> tuple[dict | None, dict]:
     """The merge-on-read DELETE core (``snapshot_delete(mode="dv")``): the
     same three pruning stages as the CoW path find the candidate files,
     but instead of rewriting their bytes this scans ONLY the candidates
@@ -3029,17 +2927,16 @@ def _delete_dv(
     sidecar lands) — ``snapshot_delete`` catches it and falls back to
     copy-on-write; the catalog path lets it surface.
 
-    Returns ``(child manifest, sidecar rel_dir, audit)`` with the same
-    caller contract as ``_delete_rewrite`` (publication + conflict
-    cleanup are the caller's); the audit adds ``files_dv`` (entries whose
-    dv ref was written/updated) and ``files_dropped`` (fully-dead
-    entries removed)."""
+    Returns ``(child manifest, audit)`` with the same caller contract as
+    ``_delete_rewrite``; the audit adds ``files_dv`` (entries whose dv
+    ref was written/updated) and ``files_dropped`` (fully-dead entries
+    removed)."""
     ref_groups, keep, cand, out = _delete_candidates(table_dir, m, checked)
     out["files_rewritten"] = 0
     out["files_dv"] = 0
     out["files_dropped"] = 0
     if not cand:
-        return None, None, out  # predicate provably touches nothing
+        return None, out  # predicate provably touches nothing
     from pyspark.sql import functions as F
 
     schema = StructType.fromJson(json.loads(m["schema"]))
@@ -3093,7 +2990,7 @@ def _delete_dv(
         if rows_deleted == 0:
             # stats/bloom kept the files but no physical row matched
             out["files_kept"] = len(keep) + len(cand)
-            return None, None, out
+            return None, out
         old_n = sum((fe.get("dv") or {}).get("n", 0) for fe in cand)
         if dv_max_positions is not None and (
             rows_deleted + old_n > dv_max_positions
@@ -3105,7 +3002,9 @@ def _delete_dv(
                 "read tax that size costs more than one copy-on-write "
                 "rewrite — use mode='cow'"
             )
-        rel = _write_dv_sidecar(spark, table_dir, hits, rows_deleted)
+        rel = record.dir(
+            table_dir, _write_dv_sidecar(spark, table_dir, hits, rows_deleted)
+        )
     finally:
         hits.unpersist()
     new_cand: list[dict] = []
@@ -3129,14 +3028,14 @@ def _delete_dv(
                      "n": n_total}
         new_cand.append(fe2)
         files_dv += 1
-    groups = _child_groups(table_dir, ref_groups, keep + new_cand, created)
+    groups = _child_groups(table_dir, ref_groups, keep + new_cand, record)
     manifest = _next_manifest(
         m, "delete", groups, m["rows"] - rows_deleted, m["schema"], txn
     )
     out.update(
         rows_deleted=rows_deleted, files_dv=files_dv, files_dropped=dropped
     )
-    return manifest, rel, out
+    return manifest, out
 
 
 def _delete_rewrite(
@@ -3144,40 +3043,27 @@ def _delete_rewrite(
     table_dir: str,
     m: dict,
     checked: list,
-    created: list[str],
+    record: _Attempt,
     txn: tuple[str, int] | None = None,
-) -> tuple[dict | None, str | None, dict]:
+) -> tuple[dict | None, dict]:
     """The pruning + copy-on-write core shared by ``snapshot_delete`` and
     the catalog-level ``snapcatalog.catalog_delete``: given a resolved
     manifest ``m``, find the files the validated predicate could touch
     (group stats → file stats → bloom sidecars), rewrite only those minus
-    the matching rows, and return ``(child manifest, rewrite rel_dir,
-    audit dict)`` — the caller owns publication (single-table version
-    link vs one atomic multi-table catalog commit) and the conflict
-    cleanup of ``rel_dir`` + ``created``. Manifest is None when no
-    physical row matched (the no-op rewrite is already dropped)."""
+    the matching rows, and return ``(child manifest, audit dict)``. What
+    it writes goes into the attempt ``record``; publication is the
+    caller's (single-table version link vs one atomic multi-table
+    catalog commit). Manifest is None when no physical row matched (the
+    no-op rewrite is already dropped)."""
     ref_groups, keep, cand, out = _delete_candidates(table_dir, m, checked)
     if not cand:
-        return None, None, out  # predicate provably touches nothing
+        return None, out  # predicate provably touches nothing
     # --- stage 4: rewrite ONLY the candidate files ----------------------
     schema = StructType.fromJson(json.loads(m["schema"]))
-    cand_footers = _footers(
-        [os.path.join(table_dir, fe["path"]) for fe in cand]
-    )
-    if any(n is None for _s, n in cand_footers) or any(
-        fe.get("eq") for fe in cand
-    ):
-        # unreadable footer OR equality-delete refs (eq-dead rows are
-        # not per-file recorded): authoritative slow count
-        cand_rows = _read_entries(spark, table_dir, cand, schema).count()
-    else:
-        # LIVE rows only: positions an existing DV already deleted must
-        # not count as candidate rows (the rewrite below reads through
-        # the DVs, so they would otherwise inflate rows_deleted)
-        cand_rows = sum(
-            n - (fe.get("dv") or {}).get("n", 0)
-            for fe, (_s, n) in zip(cand, cand_footers)
-        )
+    # LIVE rows only: positions an existing DV already deleted must not
+    # count as candidate rows (the rewrite below reads through the DVs,
+    # so they would otherwise inflate rows_deleted)
+    cand_rows = _live_rows(spark, table_dir, cand, schema)
     from pyspark.sql import functions as F
 
     cond = _where_column(checked)
@@ -3190,36 +3076,26 @@ def _delete_rewrite(
     survivors_df = _read_entries(spark, table_dir, cand, schema).filter(
         ~F.coalesce(cond, F.lit(False))
     )
-    new_files, new_rows, rel_dir = _write_data_files(survivors_df, table_dir)
+    new_files, new_rows, rel_dir = record.data(survivors_df, table_dir)
     rows_deleted = cand_rows - new_rows
     if rows_deleted == 0:
-        # stats/bloom kept the files but no physical row matched:
-        # drop the no-op rewrite eagerly, publish nothing
-        shutil.rmtree(os.path.join(table_dir, rel_dir), ignore_errors=True)
+        # stats/bloom kept the files but no physical row matched: drop
+        # the no-op rewrite now (a catalog delete may still publish
+        # other tables), publish nothing for this table
+        _drop_delta(table_dir, rel_dir)
         out.update(files_rewritten=0, files_kept=len(keep) + len(cand))
-        return None, None, out
-    # empty task outputs carry no rows — keep them out of the manifest
-    # (the physical files are vacuum debris)
-    nonempty = [
-        fe
-        for fe, (_s, n) in zip(
-            new_files,
-            _footers(
-                [os.path.join(table_dir, fe["path"]) for fe in new_files]
-            ),
-        )
-        if n != 0
-    ]
+        return None, out
+    nonempty = _nonempty(table_dir, new_files)
     _build_blooms(
         spark, table_dir, rel_dir, nonempty, m.get("blooms"),
         survivors_df.schema,
     )
-    groups = _child_groups(table_dir, ref_groups, keep + nonempty, created)
+    groups = _child_groups(table_dir, ref_groups, keep + nonempty, record)
     manifest = _next_manifest(
         m, "delete", groups, m["rows"] - rows_deleted, m["schema"], txn
     )
     out["rows_deleted"] = rows_deleted
-    return manifest, rel_dir, out
+    return manifest, out
 
 
 def snapshot_update(
@@ -3236,10 +3112,8 @@ def snapshot_update(
     sidecars find the candidate files, ONLY those are rewritten with
     ``set_exprs`` applied to predicate-matching rows (non-matching rows
     carried verbatim), and the rewrite publishes as one atomic
-    ``update`` commit pinned to the tip the candidates were resolved
-    from — a racing commit forces a re-resolve, a crash anywhere leaves
-    the pre-update version exactly (the snapshot_delete discipline,
-    row-count-preserving instead of row-removing).
+    ``update`` commit through ``_pinned_commit`` (the snapshot_delete
+    discipline, row-count-preserving instead of row-removing).
 
     ``where`` is the conjunctive triple list every pruned operation
     takes; SQL UPDATE semantics — a NULL predicate leaves the row
@@ -3262,39 +3136,22 @@ def snapshot_update(
     if not set_exprs:
         raise ValueError("snapshot_update needs at least one SET expression")
 
-    def _already(m: dict) -> bool:
-        return txn is not None and txn[1] <= m.get("txns", {}).get(txn[0], -1)
-
-    created: list[str] = []
-    for _ in range(max_retries):
-        vs = _versions(table_dir)
-        if not vs:
-            raise FileNotFoundError(f"{table_dir} has no committed snapshots")
-        tip = vs[-1]
-        m = _read_manifest_raw(table_dir, tip)
-        if _already(m):
-            return {
-                "version": tip, "rows_updated": 0, "files_total": None,
-                "files_rewritten": 0, "files_kept": 0,
-                "groups_kept_by_ref": None, "files_bloom_cleared": 0,
-            }
-        manifest, rel_dir, out = _update_rewrite(
-            spark, table_dir, m, checked, set_exprs, created, txn
-        )
-        if manifest is None:
-            out["version"] = tip
-            return out
-        try:
-            _publish(table_dir, tip + 1, manifest)
-            out["version"] = tip + 1
-            return out
-        except SnapshotConflict:
-            _drop_delta(table_dir, rel_dir)
-            _drop_groups(table_dir, created)
-            continue
-    raise SnapshotConflict(
-        f"update of {table_dir} lost {max_retries} straight races"
+    _tip_version(table_dir)
+    v, out = _table_commit(
+        table_dir,
+        lambda parent, m, record: _update_rewrite(
+            spark, table_dir, m, checked, set_exprs, record, txn
+        ),
+        txn, max_retries,
     )
+    if out is None:  # replayed txn
+        out = {
+            "rows_updated": 0, "files_total": None, "files_rewritten": 0,
+            "files_kept": 0, "groups_kept_by_ref": None,
+            "files_bloom_cleared": 0,
+        }
+    out["version"] = v
+    return out
 
 
 def _update_rewrite(
@@ -3303,46 +3160,34 @@ def _update_rewrite(
     m: dict,
     checked: list,
     set_exprs: dict,
-    created: list[str],
+    record: _Attempt,
     txn: tuple[str, int] | None = None,
-) -> tuple[dict | None, str | None, dict]:
+) -> tuple[dict | None, dict]:
     """The UPDATE core: shared candidate pruning, then a row-count-
     preserving rewrite of only the candidate files with the SET
     expressions applied to matching rows. Caller contract identical to
-    ``_delete_rewrite`` (publication + conflict cleanup are the
-    caller's)."""
+    ``_delete_rewrite``."""
     from pyspark.sql import Column
     from pyspark.sql import functions as F
 
     ref_groups, keep, cand, out = _delete_candidates(table_dir, m, checked)
     out["rows_updated"] = out.pop("rows_deleted")
     if not cand:
-        return None, None, out
+        return None, out
     schema = StructType.fromJson(json.loads(m["schema"]))
     bad = set(set_exprs) - set(schema.fieldNames())
     if bad:
         raise ValueError(
             f"SET names columns {sorted(bad)} absent from {table_dir}"
         )
-    upd_footers = _footers(
-        [os.path.join(table_dir, fe["path"]) for fe in cand]
-    )
-    if any(n is None for _s, n in upd_footers) or any(
-        fe.get("eq") for fe in cand
-    ):
-        cand_rows = _read_entries(spark, table_dir, cand, schema).count()
-    else:
-        cand_rows = sum(
-            n - (fe.get("dv") or {}).get("n", 0)
-            for fe, (_s, n) in zip(cand, upd_footers)
-        )
+    cand_rows = _live_rows(spark, table_dir, cand, schema)
     cond = _where_column(checked)
     upd = F.coalesce(cond, F.lit(False))  # NULL predicate: row untouched
     src = _read_entries(spark, table_dir, cand, schema)
     n_match = src.filter(upd).count()
     if n_match == 0:
         out.update(files_rewritten=0, files_kept=len(keep) + len(cand))
-        return None, None, out
+        return None, out
     by_type = {f.name: f.dataType for f in schema.fields}
     cols = []
     for f in schema.fields:
@@ -3357,34 +3202,24 @@ def _update_rewrite(
         else:
             cols.append(F.col(f.name))
     updated = src.select(*cols)
-    new_files, new_rows, rel_dir = _write_data_files(updated, table_dir)
+    new_files, new_rows, rel_dir = record.data(updated, table_dir)
     if new_rows != cand_rows:
         # row-count-preserving invariant: publish nothing, surface loudly
-        shutil.rmtree(os.path.join(table_dir, rel_dir), ignore_errors=True)
         raise RuntimeError(
             f"update rewrite of {table_dir} changed candidate rows "
             f"({cand_rows} -> {new_rows}); nothing was published"
         )
-    nonempty = [
-        fe
-        for fe, (_s, n) in zip(
-            new_files,
-            _footers(
-                [os.path.join(table_dir, fe["path"]) for fe in new_files]
-            ),
-        )
-        if n != 0
-    ]
+    nonempty = _nonempty(table_dir, new_files)
     _build_blooms(
         spark, table_dir, rel_dir, nonempty, m.get("blooms"),
         updated.schema,
     )
-    groups = _child_groups(table_dir, ref_groups, keep + nonempty, created)
+    groups = _child_groups(table_dir, ref_groups, keep + nonempty, record)
     manifest = _next_manifest(
         m, "update", groups, m["rows"], m["schema"], txn
     )
     out["rows_updated"] = n_match
-    return manifest, rel_dir, out
+    return manifest, out
 
 
 def _added_entries(table_dir: str, prev: dict, cur: dict) -> list[dict]:

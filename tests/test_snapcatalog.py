@@ -1055,11 +1055,12 @@ class TestUploadIdAllocation:
         assert C.catalog_versions(cat) == [1, 2]
 
     def test_commit_jobs_stay_in_caller_group(self, spark, tmp_path):
-        """Every job a new upload and its replay submit, from the caller's
-        thread or a table's landing thread, runs in the caller's job
-        group: the job ids strictly between two marker jobs are exactly
-        the group's. A job escaping the group lowers the counts above, so
-        their bounds cannot catch it."""
+        """Every job a new upload, its replay and a multi-table
+        catalog_delete of the dataset submit, from the caller's thread or
+        a table's landing thread, runs in the caller's job group: the job
+        ids strictly between two marker jobs are exactly the group's. A
+        job escaping the group lowers the counts above, so their bounds
+        cannot catch it."""
         cat = str(tmp_path / "cat")
         inputs = TestInsertFramesAtomic._inputs
         new, replay = inputs(spark, [self.S0]), inputs(spark, [self.S0])
@@ -1072,10 +1073,13 @@ class TestUploadIdAllocation:
                 *new, cat, bloom_columns={"frames": ["sha256"]}
             )
             flows.insert_frames_atomic(*replay, cat)
+            out = C.catalog_delete_dataset(spark, cat, self.S0)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         hi = _marker_job(spark)
-        assert C.catalog_versions(cat) == [1]
+        assert C.catalog_versions(cat) == [1, 2]
+        assert sorted(out["tables"]) == ["data_set", "frames", "frames_global"]
+        assert out["tables"]["frames"]["rows_deleted"] == 6
         in_group = set(sc.statusTracker().getJobIdsForGroup(gid))
         assert in_group and set(range(lo + 1, hi)) == in_group
 

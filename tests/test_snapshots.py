@@ -177,9 +177,9 @@ class TestConcurrency:
         with pytest.raises(S.SnapshotConflict):
             S.snapshot_commit(spark, t, _mk(spark, [(9, "z")]), mode="overwrite")
         monkeypatch.setattr(S, "_publish", real)
-        # the loser published NOTHING: its rewrite is invisible debris
+        # the loser published NOTHING and dropped its rewrite whole
         assert _rows(S.snapshot_read(spark, t)) == [(1, "a")]
-        assert S.snapshot_vacuum(spark, t), "the lost overwrite left debris"
+        assert S.snapshot_vacuum(spark, t) == []
         assert _rows(S.snapshot_read(spark, t)) == [(1, "a")]
 
 
@@ -758,9 +758,9 @@ class TestMaintenance:
         monkeypatch.setattr(S, "_publish", racing_publish)
         with pytest.raises(S.SnapshotConflict):
             S.snapshot_compact(spark, t)
-        # the interleaved append survived; compaction debris is vacuumable
+        # the interleaved append survived; the lost rewrite was dropped
         assert _rows(S.snapshot_read(spark, t)) == [(1, "a"), (2, "b"), (3, "c")]
-        assert S.snapshot_vacuum(spark, t)
+        assert S.snapshot_vacuum(spark, t) == []
         assert _rows(S.snapshot_read(spark, t)) == [(1, "a"), (2, "b"), (3, "c")]
 
 
@@ -3943,3 +3943,260 @@ class TestScanCacheKeysCarryTableDir:
         assert rows(b, cache) == want_b
         assert {k[0] for k in cache} == {"scan", "dv", "eq"}
         assert {k[1] for k in cache} == {a, b}
+
+
+class TestDropRule:
+    """One drop rule for every snapshot and catalog writer
+    (snapshots._pinned_commit): when a call returns or raises, every path
+    its attempts wrote is referenced by a retained version or gone, and
+    so is the bloom sidecar of every data dir written. An append's data
+    dir is written once and relinked after a lost race, so it stays,
+    referenced."""
+
+    KEYS = {"ta": ["k"], "tb": ["k"]}
+
+    @staticmethod
+    def _kv(spark, rows):
+        return spark.createDataFrame(rows, "k long, w long").coalesce(1)
+
+    def _table(self, spark, t):
+        for lo in (0, 5):
+            S.snapshot_commit(
+                spark, t,
+                _mk(spark, [(i, f"v{i}") for i in range(lo, lo + 5)])
+                .coalesce(1),
+                bloom_columns=["v"],
+            )
+
+    def _catalog(self, spark, cat):
+        from imagingdb_spark import snapcatalog as C
+
+        C.catalog_commit(
+            spark, cat,
+            lambda views: {
+                "ta": _mk(spark, [(i, f"v{i}") for i in range(5)])
+                .coalesce(1),
+                "tb": self._kv(spark, [(i, i) for i in range(5)]),
+            },
+            keys=self.KEYS, bloom_columns={"ta": ["v"]},
+        )
+
+    def _writers(self, spark, d):
+        from imagingdb_spark import snapcatalog as C
+
+        where = {"ta": [("k", "=", 3)], "tb": [("k", "=", 3)]}
+        return {
+            "commit_append": lambda: S.snapshot_commit(
+                spark, d, _mk(spark, [(20, "n")])),
+            "commit_overwrite": lambda: S.snapshot_commit(
+                spark, d, _mk(spark, [(20, "n")]), mode="overwrite"),
+            "idempotent_append": lambda: S.snapshot_idempotent_append(
+                spark, d, _mk(spark, [(20, "n")]), ["k"]),
+            "rmw": lambda: S.snapshot_rmw(
+                spark, d, lambda df: df.filter("k != 3")),
+            "apply_keyed": lambda: S.snapshot_merge(
+                spark, d, _mk(spark, [(3, "U"), (20, "n")]), "k"),
+            "upsert_eq": lambda: S.snapshot_upsert_eq(
+                spark, d, _mk(spark, [(3, "U"), (20, "n")]), "k"),
+            "delete_cow": lambda: S.snapshot_delete(
+                spark, d, [("k", "=", 3)]),
+            "delete_dv": lambda: S.snapshot_delete(
+                spark, d, [("k", "=", 3)], mode="dv"),
+            "update": lambda: S.snapshot_update(
+                spark, d, [("k", "=", 3)], {"v": "'z'"}),
+            "compact": lambda: S.snapshot_compact(spark, d),
+            "catalog_commit": lambda: C.catalog_commit(
+                spark, d, lambda views: {"ta": _mk(spark, [(20, "n")])},
+                keys=self.KEYS),
+            "catalog_delete_cow": lambda: C.catalog_delete(spark, d, where),
+            "catalog_delete_dv": lambda: C.catalog_delete(
+                spark, d, where, mode="dv"),
+        }
+
+    @staticmethod
+    def _live(table_dir):
+        from imagingdb_spark import snapcatalog as C
+
+        if S.snapshot_exists(table_dir):
+            ms = S._chain_retained(S._mdir(table_dir))
+        else:
+            cat, name = os.path.split(table_dir)
+            ms = [
+                c["tables"][name]
+                for c in S._chain_retained(os.path.join(cat, C.COMMITS_DIR))
+                if name in c["tables"]
+            ]
+        return S._live_paths(table_dir, ms)
+
+    def _assert_no_debris(self, written):
+        from imagingdb_spark.blooms import BLOOM_DIR
+
+        assert written, "the attempt wrote nothing to check"
+        for table_dir, rel in written:
+            paths = [rel]
+            if rel.startswith(S.DATA_DIR + os.sep):
+                paths.append(os.path.join(BLOOM_DIR, os.path.basename(rel)))
+            live = self._live(table_dir)
+            for p in paths:
+                referenced = p in live or any(
+                    q.startswith(p + os.sep) for q in live
+                )
+                assert referenced or not os.path.exists(
+                    os.path.join(table_dir, p)
+                ), f"{p} of {table_dir} is neither referenced nor gone"
+
+    def _record_writes(self, monkeypatch):
+        written: list[tuple[str, str]] = []
+
+        def wrap(name, where):
+            real = getattr(S, name)
+
+            def recording(*a, **kw):
+                out = real(*a, **kw)
+                written.append(where(a, out))
+                return out
+
+            monkeypatch.setattr(S, name, recording)
+
+        wrap("_write_data_files", lambda a, out: (a[1], out[2]))
+        wrap("_write_group", lambda a, out: (
+            a[0], os.path.join(S.MANIFEST_DIR, S.GROUPS_DIR, out["name"])))
+        wrap("_write_dv_sidecar", lambda a, out: (a[1], out))
+        wrap("_write_eq_sidecar", lambda a, out: (a[1], out))
+        return written
+
+    def test_record_shared_by_many_threads(self, tmp_path):
+        """The landing threads of one catalog attempt share its record:
+        16 threads writing group files and sidecar dirs into four tables
+        under a short switch interval lose no path, and one drop removes
+        every one of them."""
+        import sys
+        import threading
+
+        record = S._Attempt()
+        tables = [str(tmp_path / f"t{i}") for i in range(4)]
+
+        def work(i):
+            td = tables[i % 4]
+            for j in range(10):
+                record.group(td, [{"path": f"data/x/{i}-{j}.parquet",
+                                   "bytes": 1}])
+                rel = os.path.join(S.DELETES_DIR, f"{i}-{j}")
+                os.makedirs(os.path.join(td, rel))
+                record.dir(td, rel)
+
+        threads = [
+            threading.Thread(target=work, args=(i,)) for i in range(16)
+        ]
+        old = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            for th in threads:
+                th.start()
+            for th in threads:
+                th.join(timeout=60)
+        finally:
+            sys.setswitchinterval(old)
+        assert not any(th.is_alive() for th in threads)
+        assert len(record.paths) == 16 * 10 * 2
+        record.drop()
+        for td in tables:
+            assert os.listdir(os.path.join(td, S.MANIFEST_DIR, S.GROUPS_DIR)) == []
+            assert os.listdir(os.path.join(td, S.DELETES_DIR)) == []
+
+    CASES = [
+        "commit_append", "commit_overwrite", "idempotent_append", "rmw",
+        "apply_keyed", "upsert_eq", "delete_cow", "delete_dv", "update",
+        "compact", "catalog_commit", "catalog_delete_cow",
+        "catalog_delete_dv", "catalog_delete_dv_core_raises",
+    ]
+
+    @pytest.mark.parametrize("case", CASES)
+    def test_unpublished_attempt_leaves_no_files(
+        self, spark, tmp_path, monkeypatch, case
+    ):
+        from imagingdb_spark import snapcatalog as C
+
+        d = str(tmp_path / "d")
+        on_catalog = case.startswith("catalog_")
+        if on_catalog:
+            self._catalog(spark, d)
+            seam, mod = "_publish_commit", C
+
+            def interloper():
+                C.catalog_commit(
+                    spark, d,
+                    lambda views: {"tb": self._kv(spark, [(100, 100)])},
+                    keys=self.KEYS,
+                )
+        else:
+            self._table(spark, d)
+            seam, mod = "_publish", S
+
+            def interloper():
+                S.snapshot_commit(spark, d, _mk(spark, [(100, "race")]))
+        written = self._record_writes(monkeypatch)
+        if case == "catalog_delete_dv_core_raises":
+            # table tb overflows its position cap after ta has landed
+            real_dv = S._delete_dv
+
+            def overflowing(spark_, table_dir, *a, **kw):
+                if table_dir.endswith("tb"):
+                    kw["dv_max_positions"] = 0
+                return real_dv(spark_, table_dir, *a, **kw)
+
+            monkeypatch.setattr(S, "_delete_dv", overflowing)
+            call = self._writers(spark, d)["catalog_delete_dv"]
+            tip = C.catalog_versions(d)
+            with pytest.raises(S.DVPositionsOverflow):
+                call()
+            assert C.catalog_versions(d) == tip
+            self._assert_no_debris(written)
+            return
+        real = getattr(mod, seam)
+
+        def racing(*a):
+            monkeypatch.setattr(mod, seam, real)
+            interloper()
+            return real(*a)
+
+        monkeypatch.setattr(mod, seam, racing)
+        call = self._writers(spark, d)[case]
+        versions = C.catalog_versions if on_catalog else S._versions
+        tip = versions(d)[-1]
+        if case in ("commit_overwrite", "compact"):
+            with pytest.raises(S.SnapshotConflict):
+                call()
+            assert versions(d)[-1] == tip + 1  # only the interloper landed
+        else:
+            call()
+            assert versions(d)[-1] == tip + 2  # the interloper, the retry
+        self._assert_no_debris(written)
+
+
+class TestOnlyNullKeys:
+    @pytest.mark.parametrize("writer", ["merge", "upsert_eq"])
+    def test_only_null_keys_carry_every_group_by_ref(
+        self, spark, tmp_path, writer
+    ):
+        """A keyed batch whose keys are all NULL can match no stored row:
+        its empty predicate carries every group by ref, and the batch
+        lands as inserts."""
+        t = str(tmp_path / "t")
+        for lo in (0, 5):
+            S.snapshot_commit(
+                spark, t, _mk(spark, [(i, f"v{i}") for i in range(lo, lo + 5)])
+            )
+        groups = S._read_manifest_raw(t, 2)["groups"]
+        batch = spark.createDataFrame([(None, "nullk")], "k long, v string")
+        fn = S.snapshot_merge if writer == "merge" else S.snapshot_upsert_eq
+        plan: dict = {}
+        assert fn(spark, t, batch, "k", plan=plan) == 3
+        assert S._read_manifest_raw(t, 3)["groups"][: len(groups)] == groups
+        assert plan["files_rewritten"] == 0
+        assert plan["groups_kept_by_ref"] == len(groups)
+        got = sorted(
+            (-1 if r["k"] is None else r["k"], r["v"])
+            for r in S.snapshot_read(spark, t).collect()
+        )
+        assert got == [(-1, "nullk")] + [(i, f"v{i}") for i in range(10)]

@@ -19,6 +19,7 @@ import os
 import subprocess
 import sys
 import tempfile
+from pathlib import Path
 
 RUNNER = r"""
 import json, sys, time
@@ -74,7 +75,9 @@ def run_side(root: str, names: list[str], sf: str, cpus: str) -> dict:
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--b-root", required=True)
-    ap.add_argument("--a-root", default="/root/repo")
+    ap.add_argument(
+        "--a-root", default=str(Path(__file__).resolve().parents[1])
+    )
     ap.add_argument("--laps", type=int, default=3)
     ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "32"))
     ap.add_argument("--sf", default="/root/testdata/sf0.1")

@@ -11,7 +11,8 @@ import sys
 import time
 from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 import duckdb
 
@@ -92,7 +93,7 @@ def main() -> None:
         f"(oracle-checked only) | | single process, local[32], warm |"
     )
 
-    path = Path("/root/repo/BASELINE.md")
+    path = ROOT / "BASELINE.md"
     text = path.read_text()
     head = text.split(MARKER)[0]
     table = MARKER + "\n|---|---|---|---|---|---|\n" + "\n".join(lines) + "\n"

@@ -16,7 +16,8 @@ import re
 import sys
 from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from imagingdb_spark import registry
 from imagingdb_spark.session import get_spark
@@ -163,7 +164,7 @@ def main() -> None:
     registry.load_all()
     names = args[1:] or sorted(registry.QUERIES)
     spark = get_spark()
-    outdir = Path("/root/repo/tools/plans")
+    outdir = ROOT / "tools/plans"
     outdir.mkdir(exist_ok=True)
 
     flagged = 0

@@ -11,14 +11,15 @@ import re
 import sys
 from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
+sys.path.insert(0, str(ROOT / "tools"))
 
 from explain_audit import plan_node_counts  # one owner for node counting
 
 from imagingdb_spark import registry
 
-PLANS = Path("/root/repo/tools/plans")
+PLANS = ROOT / "tools/plans"
 
 
 def first_sentence(doc: str | None) -> str:
@@ -71,7 +72,7 @@ def main() -> None:
         "reference-twin unit tests).**",
         "",
     ]
-    Path("/root/repo/QUERIES.md").write_text("\n".join(lines))
+    (ROOT / "QUERIES.md").write_text("\n".join(lines))
     print(f"QUERIES.md: {n} rows")
 
 

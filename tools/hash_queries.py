@@ -9,12 +9,14 @@ from __future__ import annotations
 
 import hashlib
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from imagingdb_spark import registry
 from imagingdb_spark.session import get_spark
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, str(ROOT / "tools"))
 from selfcheck import normalize  # noqa: E402
 
 
@@ -34,5 +36,5 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, str(ROOT / "tools"))
     main()

@@ -21,8 +21,10 @@ import argparse
 import json
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from bench import HEADLINE
 from imagingdb_spark import registry

@@ -72,8 +72,7 @@ def _seed_synthetic(spark, t: str, n_entries: int, schema_json: str) -> None:
         {"path": f"data/seed/f{i:07d}.parquet", "bytes": 1 << 20}
         for i in range(n_entries)
     ]
-    created: list[str] = []
-    groups = S._child_groups(t, [], files, created)
+    groups = S._child_groups(t, [], files, S._Attempt())
     manifest = S._next_manifest(
         None, "append", groups, n_entries, S._canon_schema_json(schema_json)
     )

@@ -15,8 +15,10 @@ import os
 import sys
 import tempfile
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from imagingdb_spark import registry
 from imagingdb_spark.session import get_spark

@@ -20,7 +20,8 @@ import tempfile
 import time
 from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from pyspark.sql import functions as F
 
@@ -96,7 +97,7 @@ def main() -> None:
         }
         line = json.dumps(out)
         print(line)
-        Path("/root/repo/tools/STREAM_BENCH.json").write_text(line + "\n")
+        (ROOT / "tools/STREAM_BENCH.json").write_text(line + "\n")
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
