@@ -2237,15 +2237,16 @@ def snapshot_upsert_eq(
         raise ValueError(f"source has no key column {key!r}")
     if deletes is not None and len(deletes.columns) != 1:
         raise ValueError("deletes must be a one-column key frame")
-    vs = _versions(table_dir)
-    if vs:
-        m0 = _read_manifest_raw(table_dir, vs[-1])
-        table_cols = {f["name"] for f in json.loads(m0["schema"])["fields"]}
-        if set(source.columns) != table_cols:
-            raise ValueError(
-                f"upsert source columns {sorted(source.columns)} != "
-                f"table columns {sorted(table_cols)}"
-            )
+    vs0 = _versions(table_dir)
+    if not vs0:
+        raise FileNotFoundError(f"{table_dir} has no committed snapshots")
+    m0 = _read_manifest_raw(table_dir, vs0[-1])
+    table_cols = {f["name"] for f in json.loads(m0["schema"])["fields"]}
+    if set(source.columns) != table_cols:
+        raise ValueError(
+            f"upsert source columns {sorted(source.columns)} != "
+            f"table columns {sorted(table_cols)}"
+        )
     key_src = source.select(F.col(key).alias("key"))
     if deletes is not None:
         key_src = key_src.unionByName(
@@ -2256,7 +2257,7 @@ def snapshot_upsert_eq(
     plan["n_keys"] = len(keys)
     if not sample:
         plan["strategy"] = "noop"
-        return _tip_version(table_dir)
+        return vs0[-1]
 
     def _replace(tip_df: DataFrame) -> DataFrame:
         kf = key_src.distinct().withColumnRenamed("key", "__del_key")
@@ -2282,10 +2283,8 @@ def snapshot_upsert_eq(
             spark, table_dir, _replace, mode="eqput",
             max_retries=max_retries, txn=txn,
         )
-    _tip_version(table_dir)
-    keys_df = values_df(
-        spark, [(k,) for k in keys],
-        f"__k {source.schema[key].dataType.simpleString()}",
+    keys_df = (
+        spark.createDataFrame([(k,) for k in keys], ["__k"]) if keys else None
     )
 
     def attempt(parent, m, record):

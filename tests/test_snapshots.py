@@ -4005,8 +4005,13 @@ class TestDropRule:
             "update": lambda: S.snapshot_update(
                 spark, d, [("k", "=", 3)], {"v": "'z'"}),
             "compact": lambda: S.snapshot_compact(spark, d),
+            # both tables land on driver threads sharing one record
             "catalog_commit": lambda: C.catalog_commit(
-                spark, d, lambda views: {"ta": _mk(spark, [(20, "n")])},
+                spark, d,
+                lambda views: {
+                    "ta": _mk(spark, [(20, "n")]),
+                    "tb": self._kv(spark, [(20, 20)]),
+                },
                 keys=self.KEYS),
             "catalog_delete_cow": lambda: C.catalog_delete(spark, d, where),
             "catalog_delete_dv": lambda: C.catalog_delete(
@@ -4064,45 +4069,6 @@ class TestDropRule:
         wrap("_write_dv_sidecar", lambda a, out: (a[1], out))
         wrap("_write_eq_sidecar", lambda a, out: (a[1], out))
         return written
-
-    def test_record_shared_by_many_threads(self, tmp_path):
-        """The landing threads of one catalog attempt share its record:
-        16 threads writing group files and sidecar dirs into four tables
-        under a short switch interval lose no path, and one drop removes
-        every one of them."""
-        import sys
-        import threading
-
-        record = S._Attempt()
-        tables = [str(tmp_path / f"t{i}") for i in range(4)]
-
-        def work(i):
-            td = tables[i % 4]
-            for j in range(10):
-                record.group(td, [{"path": f"data/x/{i}-{j}.parquet",
-                                   "bytes": 1}])
-                rel = os.path.join(S.DELETES_DIR, f"{i}-{j}")
-                os.makedirs(os.path.join(td, rel))
-                record.dir(td, rel)
-
-        threads = [
-            threading.Thread(target=work, args=(i,)) for i in range(16)
-        ]
-        old = sys.getswitchinterval()
-        sys.setswitchinterval(1e-6)
-        try:
-            for th in threads:
-                th.start()
-            for th in threads:
-                th.join(timeout=60)
-        finally:
-            sys.setswitchinterval(old)
-        assert not any(th.is_alive() for th in threads)
-        assert len(record.paths) == 16 * 10 * 2
-        record.drop()
-        for td in tables:
-            assert os.listdir(os.path.join(td, S.MANIFEST_DIR, S.GROUPS_DIR)) == []
-            assert os.listdir(os.path.join(td, S.DELETES_DIR)) == []
 
     CASES = [
         "commit_append", "commit_overwrite", "idempotent_append", "rmw",
